@@ -198,6 +198,26 @@ object Bench {
     }
   }
 
+  /** Runs `tasks` on `threads` daemon threads (a hung task cannot pin
+    * the JVM at exit) and waits at most `timeout` for all of them. On
+    * timeout the queued tasks are dropped and the running ones
+    * interrupted BEFORE `onTimeout` runs, so no task starts new work
+    * after it. */
+  private[graft] def runBounded(tasks: Seq[() => Unit], threads: Int,
+                                timeout: scala.concurrent.duration.FiniteDuration)
+                               (onTimeout: => Unit): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,
+      (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val futs = tasks.map(t => Future(t()))
+    try Await.result(Future.sequence(futs), timeout)
+    catch { case _: java.util.concurrent.TimeoutException =>
+      pool.shutdownNow()
+      onTimeout
+    } finally pool.shutdown()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -367,28 +387,21 @@ object Bench {
       // the r10 driver window recorded warmup task_s 5651 vs cpu_s 96
       // (tasks descheduled 59:1 under oversubscription). A few jobs in
       // flight fill the executor tail just as well (guide §2.6).
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      val warmPool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      implicit val warmEc: ExecutionContext =
-        ExecutionContext.fromExecutor(warmPool)
       // a failed warm-up is a diagnostic (its first real execution lands
       // in the timed number), and a hung one must not stall the bench —
       // log and bound, degrade to proceeding without full warm-up
-      val futs = selected.toSeq.map { case (name, fn) =>
-        Future {
-          try { fn(spark, warmDir).count() } catch { case e: Throwable =>
-            System.err.println(s"[bench] warm-up $name failed: $e")
-          }
+      val tasks = selected.toSeq.map { case (name, fn) => () =>
+        try { fn(spark, warmDir).count(); () } catch { case e: Throwable =>
+          System.err.println(s"[bench] warm-up $name failed: $e")
         }
       }
-      try Await.result(Future.sequence(futs), 10.minutes)
-      catch { case _: java.util.concurrent.TimeoutException =>
+      import scala.concurrent.duration._
+      runBounded(tasks, 8, 10.minutes) {
         // kill the hung warm-up jobs too — left running they'd contend
         // with the timed pass and skew every recorded number
         spark.sparkContext.cancelAllJobs()
         System.err.println("[bench] warm-up timed out; proceeding unwarmed")
-      } finally warmPool.shutdown()
+      }
       val w = (System.nanoTime() - w0) / 1e9
       lap("warmup")
       w

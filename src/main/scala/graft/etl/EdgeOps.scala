@@ -116,8 +116,12 @@ object EdgeOps {
     val bitsetBudget = clean.sparkSession.conf
       .getOption("spark.graft.twoHopBitsetMaxBits")
       .flatMap(_.toLongOption).getOrElse(1L << 31)
+    // k·(mv+1) ≤ budget, with each hub's maxBits capped at the 2^36
+    // BitsetDistinct accepts; divided, not multiplied, so a huge
+    // configured budget or mv cannot overflow its way past the gate
     val reach = maxVertex match {
-      case Some(mv) if (mv + 1) * k.toLong <= bitsetBudget && mv >= 0 =>
+      case Some(mv) if mv >= 0 && k > 0 &&
+          mv < math.min(1L << 36, bitsetBudget / k) =>
         wedges.groupBy("h").agg(
           graft.functions.BitsetDistinct.of(col("v"), mv + 1)
             .as("reach_2hop"))

@@ -171,8 +171,11 @@ object Dedup {
     * paid — plus the doc-keyed join re-attaching `source` — is gone;
     * the ONLY occurrence-sized data movement left is the map-side
     * hash-agg insert. Input must carry (source, text). */
-  def sourceShingleSimilarity(docs: DataFrame): DataFrame = {
+  def sourceShingleSimilarity(corpus: DataFrame): DataFrame = {
     val n = 3
+    // a null source belongs to no source set (collect_set drops nulls),
+    // and a null dictionary entry would break the sorted code order
+    val docs = corpus.where(col("source").isNotNull)
     // Source names are O(100) whatever the corpus size: encode them as
     // INTEGER codes up front (codes assigned in sorted-string order, so
     // code order ≡ string order and every a < b comparison below is

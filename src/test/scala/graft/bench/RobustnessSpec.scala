@@ -21,6 +21,34 @@ class RobustnessSpec extends SparkSpec {
     assert(graft.Bench.finite(0.0) === 0.0)
   }
 
+  test("runBounded: on timeout queued warm-up tasks never start") {
+    import scala.concurrent.duration._
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val daemon = new java.util.concurrent.atomic.AtomicBoolean
+    var timedOut = false
+    // one thread: the first task hangs, the other three wait in the queue
+    val hung: () => Unit = () => {
+      started.incrementAndGet()
+      daemon.set(Thread.currentThread.isDaemon)
+      release.await()
+    }
+    val queued: () => Unit = () => { started.incrementAndGet(); () }
+    graft.Bench.runBounded(Seq(hung, queued, queued, queued), 1,
+      200.millis) { timedOut = true }
+    assert(timedOut)
+    // free the hung task too: had the queue survived the timeout, the
+    // queued tasks would run now
+    release.countDown()
+    Thread.sleep(300)
+    assert(started.get === 1)
+    assert(daemon.get, "warm-up threads must not pin the JVM at exit")
+    // and on success every task runs
+    started.set(0)
+    graft.Bench.runBounded(Seq(queued, queued), 2, 10.seconds)(fail())
+    assert(started.get === 2)
+  }
+
   test("stats: single run reports stddev 0, not NaN") {
     val st = Main.stats(Seq(0.125))
     assert(!st.exists(_.isNaN))

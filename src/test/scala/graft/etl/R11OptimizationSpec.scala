@@ -74,6 +74,29 @@ class R11OptimizationSpec extends SparkSpec {
     }
   }
 
+  test("twoHopReach: a huge bitset budget cannot pick a maxBits above 2^36") {
+    val implicits = spark.implicits
+    import implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 5L)).toDF("src", "dst")
+    val clean = EdgeOps.cleanEdges(edges)
+    val want = EdgeOps.twoHopReach(clean, 2, None, None).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).sortBy(_._1)
+    val prev = spark.conf.getOption("spark.graft.twoHopBitsetMaxBits")
+    spark.conf.set("spark.graft.twoHopBitsetMaxBits", Long.MaxValue.toString)
+    try {
+      // (mv+1)·k exceeds 2^36·k (the old gate passed and BitsetDistinct
+      // threw), and at Long.MaxValue the product overflows
+      for (mv <- Seq(1L << 40, Long.MaxValue)) {
+        val r = EdgeOps.twoHopReach(clean, 2, None, Some(mv)).collect()
+          .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).sortBy(_._1)
+        assert(r.toSeq === want.toSeq, s"maxVertex=$mv")
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.graft.twoHopBitsetMaxBits", v)
+      case None => spark.conf.unset("spark.graft.twoHopBitsetMaxBits")
+    }
+  }
+
   test("selectRanksWithStats: stats ≡ naive per-key n/min/max/sum, " +
     "ranks ≡ selectRanks") {
     val rnd = new scala.util.Random(20260820L)

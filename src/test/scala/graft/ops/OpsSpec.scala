@@ -306,6 +306,18 @@ class OpsSpec extends SparkSpec {
       ("s1", "s2") -> ((1L, 2L, 2L, graft.ops.LocalDedup.round6(1.0 / 3)))))
   }
 
+  test("sourceShingleSimilarity: a null-source row is dropped, not an NPE") {
+    val s = spark; import s.implicits._
+    val docs = Seq[(Long, String, String)](
+      (1L, "a b c d", "s1"), (2L, "a b c", "s2"), (3L, "x y z", "s2"))
+    // the null-source doc shares a shingle with s1 and s2
+    val withNull = docs :+ ((4L, "a b c", null))
+    def run(rows: Seq[(Long, String, String)]) =
+      Dedup.sourceShingleSimilarity(rows.toDF("doc_id", "text", "source"))
+        .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    assert(run(withNull) === run(docs))
+  }
+
   test("sourceOverlap: cross-source cluster matrix, diagonal needs ≥2") {
     val s = spark; import s.implicits._
     // cluster 1: docs in srcA (×2) + srcB → diagonal (A,A) and (A,B)

@@ -2,8 +2,9 @@ package graft.validate
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.bfs.Bfs
+import graft.bfs.{Bfs, LocalCsr}
 import graft.etl.EdgeOps
+import graft.gen.Kronecker
 
 /** The local validation kernel must produce the exact counters of the
   * DataFrame validator — on valid kernel trees AND on corrupted ones
@@ -86,6 +87,78 @@ class LocalValidatorSpec extends SparkSpec {
       }
       raw.unpersist()
     }
+  }
+
+  test("striped kernel equals the relational plan on a Kronecker list, " +
+    "corruptions in the first and last stripe and at the row-index edges") {
+    // SCALE 11 raw list as the benchmark uses it: loops and duplicates kept
+    val raw = Kronecker.generate(spark, 11).persist()
+    try {
+      val flat = LocalCsr.collectPairs(raw)
+      val nE = flat.length / 2
+      assert((0 until nE).exists(i => flat(2 * i) == flat(2 * i + 1)), "no loops")
+      assert((0 until nE).map(i => (flat(2 * i), flat(2 * i + 1))).distinct.size < nE,
+        "no duplicates")
+      val csr = LocalCsr.buildFromRawPairs(flat)
+      val nV = csr.nVerts
+      val nStripes = Runtime.getRuntime.availableProcessors() * 4
+      assume(nV >= nStripes, s"$nV vertices cannot fill $nStripes stripes")
+      def nbrs(v: Int) = (csr.rowStarts(v) until csr.rowStarts(v + 1)).map(csr.nbrs)
+      val rootDense = (0 until nV).maxBy(v => csr.rowStarts(v + 1) - csr.rowStarts(v))
+      val root = csr.ids(rootDense)
+      val (pred, depth, _) = csr.bfs(root)
+      val maxV = flat.max
+      val lv = new LocalValidator(csr.ids, flat)
+
+      def compare(p: Array[Int], d: Array[Int], label: String): Seq[Long] = {
+        val local = lv.validate(p, d, rootDense, maxV + 1).toSeq
+        assert(lv.validate(p, d, rootDense, maxV + 1).toSeq === local,
+          s"$label: a second call on the same arrays differs")
+        spark.conf.set("spark.graft.localBfsMaxEdges", "0")
+        val row = try Validator.validate(spark, raw,
+          denseTreeDf(csr.ids, p, d), root, maxV + 1).head()
+        finally spark.conf.unset("spark.graft.localBfsMaxEdges")
+        assert(local === (0 until row.length).map(row.getLong), label)
+        local
+      }
+      def rewired(v: Int, p: Int) = { val a = pred.clone(); a(v) = p; a }
+
+      val valid = compare(pred, depth, "valid tree")
+      assert(valid.init.forall(_ == 0L) && valid.last > 0L)
+
+      // reached non-root vertices inside the first and the last stripe
+      def reached(v: Int) = v != rootDense && pred(v) >= 0
+      val first = (0 until nV / nStripes).find(reached).get
+      val last = (nV - 1 to (nV.toLong * (nStripes - 1) / nStripes).toInt by -1)
+        .find(reached).get
+      for ((v, where) <- Seq(first -> "first", last -> "last")) {
+        val d = depth.clone(); d(v) += 5
+        compare(pred, d, s"wrong depth, $where stripe")
+        val d2 = depth.clone(); d2(v) = -1
+        compare(pred, d2, s"presence mismatch, $where stripe")
+        compare(rewired(v, v), depth, s"self parent, $where stripe")
+      }
+
+      // the row of lo holds the neighbors of lo above it
+      def row(lo: Int) = nbrs(lo).filter(_ > lo).toSet
+      val lastRow = (0 until nV).filter(row(_).nonEmpty).max
+      // a pred edge in the last non-empty row is found...
+      val hiIn = row(lastRow).max
+      if (hiIn != rootDense) {
+        val c = compare(rewired(hiIn, lastRow), depth, "pred edge in the last row")
+        assert(c(5) === 0L)
+      }
+      // ...one that is absent from it is missing
+      val hiOut = (lastRow + 1 until nV).find(h => h != rootDense && !row(lastRow)(h)).get
+      assert(compare(rewired(hiOut, lastRow), depth, "missing edge, last row")(5) === 1L)
+      // an empty row inside the index, and the row of the last vertex
+      // (reachable only as a self parent)
+      val empty = (0 until nV - 1).find(v => row(v).isEmpty).get
+      val hi = (empty + 1 until nV).find(_ != rootDense).get
+      assert(compare(rewired(hi, empty), depth, "missing edge, empty row")(5) === 1L)
+      if (nV - 1 != rootDense)
+        assert(compare(rewired(nV - 1, nV - 1), depth, "self parent, last vertex")(5) === 1L)
+    } finally raw.unpersist()
   }
 
   test("gated validate falls back for preds outside the vertex universe") {
