@@ -39,6 +39,17 @@ object Bench {
         s""""shuf_read_gb":${r(shufRead / 1e9)}}"""
   }
 
+  /** Core count of the main run (SPARK_GRAFT_CPUS unset). */
+  val DefaultCpus = "32"
+
+  /** Whether this run also copies its record to the legacy fixed name
+    * `BENCH_FULL.json`, which old consumers read as the MAIN run's
+    * record: only a run at [[DefaultCpus]] does, so the same code benched
+    * again at another core count (the scaling re-run) never overwrites
+    * it. */
+  private[graft] def writesLegacyCopy(outPath: String, cpus: String): Boolean =
+    outPath != "BENCH_FULL.json" && cpus == DefaultCpus
+
   /** NaN/Infinity → 0.0 (bare non-finite literals are invalid JSON). */
   private[graft] def finite(x: Double): Double =
     if (x.isNaN || x.isInfinite) 0.0 else x
@@ -220,7 +231,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "18").toInt
     val nRoots = sys.env.getOrElse("SPARK_GRAFT_ROOTS", "16").toInt
     val g500On = sys.env.getOrElse("SPARK_GRAFT_G500", "1") != "0"
@@ -241,7 +252,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    localMax.foreach(v => spark.conf.set("spark.graft.localBfsMaxEdges", v))
+    localMax.foreach(v => Gates.localBfsMaxEdges.set(spark, v.toLong))
     // SPARK_GRAFT_FORCE_DISTRIBUTED=1: zero every hybrid gate (see Verify)
     if (sys.env.getOrElse("SPARK_GRAFT_FORCE_DISTRIBUTED", "0") == "1")
       Gates.forceDistributed(spark)
@@ -647,7 +658,7 @@ object Bench {
     // code at two core counts back-to-back, and a fixed name lets the
     // second (scaling) run overwrite the first run's per-query record —
     // r10's scaling diff came back empty for exactly that reason. The
-    // legacy fixed name is still written as a copy for old consumers;
+    // legacy fixed name is a copy of the main run only (writesLegacyCopy);
     // the compact tail line's "full" key names the authoritative file.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"BENCH_FULL_c$cpus.json")
@@ -655,7 +666,7 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       System.err.println(s"[bench] full result written to $outPath")
-      if (outPath != "BENCH_FULL.json")
+      if (writesLegacyCopy(outPath, cpus))
         java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
           fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case e: Throwable =>

@@ -23,13 +23,11 @@ object Explain {
     // Force every hybrid gate to the DISTRIBUTED path: this audit exists
     // to review the plans that run at cluster scale — the driver-local
     // kernels have no relational plan to review.
+    // That includes the embedding strategy switch: the hyperplane-LSH
+    // path is the corpus-scale plan (the broadcast-block path under the
+    // limit has no relational plan worth auditing).
     Gates.forceDistributed(spark)
-    // also force the strategy picks that aren't hybrid gates: the
-    // hyperplane-LSH embedding-dedup path is the corpus-scale plan (the
-    // broadcast-block path under the limit has no relational plan worth
-    // auditing)
-    spark.conf.set("spark.graft.embeddingBlockMaxVecs", "0")
-    // ...and the PageRank/k-core shuffle loops (below the cap the
+    // also force the PageRank/k-core shuffle loops (below the cap the
     // |V|-sized round state rides the driver and the output is a
     // broadcast range-lookup — no relational plan worth auditing)
     spark.conf.set("spark.graft.iterBroadcastVerts", "0")

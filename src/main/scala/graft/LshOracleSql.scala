@@ -140,15 +140,14 @@ object LshOracleSql {
       |  FROM scored)
       |WHERE rank <= 5""".stripMargin
 
-  /** True iff the active session pins the embedding strategy switch to
-    * 0 — the same conf `knnGraph`/`embeddingDedup`/`topKForQueryStream`
-    * dispatch on, so the dumped oracle always describes the plan that
-    * actually ran. */
+  /** True iff the active session pins the embedding strategy switch at
+    * or below 0 — the same gate `knnGraph`/`embeddingDedup`/
+    * `topKForQueryStream` dispatch on, so the dumped oracle always
+    * describes the plan that actually ran. */
   private def lshForced: Boolean =
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .exists(_.conf.getOption("spark.graft.embeddingBlockMaxVecs")
-        .exists(v => v.trim == "0"))
+      .exists(Gates.embeddingBlockMaxVecs.limit(_) <= 0)
 
   /** The four oracle swaps, active only in forced-LSH sessions. */
   def overrides: Map[String, String] =

@@ -768,7 +768,7 @@ object SparkEntry {
     "sim_brute" -> ((s, dir) => ops.Similarity.bruteForceTopK(emb(s, dir), 5, 10)),
 
     // k-NN graph: exact top-3 neighbors of EVERY vector (broadcast-block
-    // exact under the EmbeddingBlockLimit strategy knob, hyperplane-LSH
+    // exact under the embeddingBlockMaxVecs strategy gate, hyperplane-LSH
     // candidates above it).
     "sim_knn" -> ((s, dir) => ops.Similarity.knnGraph(emb(s, dir), 3)),
 
@@ -1416,10 +1416,10 @@ object SparkEntry {
       graft.bfs.Triangles.TriangleTables]]
   private def coPurchaseGraph(s: SparkSession, dir: String)
       : Either[graft.bfs.LocalCsr, graft.bfs.Triangles.TriangleTables] = {
-    val gate = s.conf.get("spark.graft.localBfsMaxEdges", "default")
+    val gate = Gates.localBfsMaxEdges.limit(s)
     coPurchaseCache.get(s, s"$dir/copurchase/gate=$gate") {
       val gm = orderPartPairs(s, dir)
-      graft.bfs.Triangles.coPurchasePairFlat(s, gm) match {
+      graft.bfs.Triangles.coPurchasePairFlat(gm) match {
         case Some(flat) =>
           Left(graft.bfs.LocalCsr.buildFromRawPairs(flat))
         case None =>

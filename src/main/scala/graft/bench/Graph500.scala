@@ -145,7 +145,7 @@ object Graph500 {
     // loop, mpi/main.cc:63-66). Above the gate: distributed BFS +
     // DataFrame validation with the canonical undirected edge set shared
     // across runs.
-    val localMode = g.totalEdges <= Bfs.localBfsMaxEdges(spark)
+    val localMode = g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark)
     // Resume state first: a pure-resume invocation (checkpoint already has
     // all nRoots runs) needs neither a validator nor a warm-up.
     val prior = checkpointPath
@@ -323,7 +323,7 @@ object Graph500 {
         (mv, Kronecker.sampleRootsDistributed(g.all.toDF("vertex"),
           "vertex", nRoots, mv + 1))
     }
-    val localMode = g.totalEdges <= Bfs.localBfsMaxEdges(spark)
+    val localMode = g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark)
 
     val (bfsWall, valWall, nedges, errors) =
       if (localMode) {

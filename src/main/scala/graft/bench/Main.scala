@@ -119,12 +119,8 @@ object Main {
         // (construction shuffle+sort+window, level-loop joins,
         // DataFrame validation) — at a small warm scale the hybrid
         // gate would otherwise route everything to the local kernel.
-        val prior = spark.conf.getOption("spark.graft.localBfsMaxEdges")
-        spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-        Graph500.run(spark, ws, 1, validate = true, edgeFactor = edgeFactor)
-        prior match {
-          case Some(v) => spark.conf.set("spark.graft.localBfsMaxEdges", v)
-          case None => spark.conf.unset("spark.graft.localBfsMaxEdges")
+        graft.Gates.localBfsMaxEdges.withLimit(spark, 0L) {
+          Graph500.run(spark, ws, 1, validate = true, edgeFactor = edgeFactor)
         }
         spark.sharedState.cacheManager.clearCache()
         System.gc()

@@ -315,14 +315,14 @@ object Profile {
       .localCheckpoint(eager = true)
     println(s"queries = ${queries.count()}")
     for (i <- 1 to 2) {
-      spark.conf.set("spark.graft.embeddingBlockMaxVecs", "0")
+      graft.Gates.embeddingBlockMaxVecs.set(spark, 0L)
       val lsh = t(s"#$i LSH band-join serve") {
         val r = graft.ops.Similarity
           .topKForQueryStream(queries, corpus, k)
           .localCheckpoint(eager = true)
         r.count(); r
       }
-      spark.conf.set("spark.graft.embeddingBlockMaxVecs", (n + 1).toString)
+      graft.Gates.embeddingBlockMaxVecs.set(spark, n + 1L)
       val exact = t(s"#$i broadcast exact serve") {
         val r = graft.ops.Similarity
           .topKForQueryStream(queries, corpus, k)

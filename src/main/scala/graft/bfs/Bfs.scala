@@ -7,9 +7,10 @@ import org.apache.spark.storage.StorageLevel
 /**
  * Direction-optimizing min-parent BFS — the core query of the reference
  * (mpi/bfs.hpp:2651-2940) — as a HYBRID executor: graphs at or under
- * [[Bfs.localBfsMaxEdges]] run on the in-memory parallel CSR kernel
- * ([[LocalCsr]] — what the single-node reference itself is at such
- * sizes); larger graphs run the iterative DataFrame level loop below.
+ * [[graft.Gates.localBfsMaxEdges]] run on the in-memory parallel CSR
+ * kernel ([[LocalCsr]] — what the single-node reference itself is at
+ * such sizes); larger graphs run the iterative DataFrame level loop
+ * below.
  * Both paths produce the identical canonical tree (LocalCsrSpec).
  *
  * The distributed loop, relationally:
@@ -59,17 +60,6 @@ object Bfs {
   val GcPerLevelEdgeThreshold = 1L << 30
 
   final case class Result(tree: DataFrame, levelSizes: Seq[(Int, Long)])
-
-  /** Edge-row count at or below which BFS runs on the in-memory CSR
-    * kernel ([[LocalCsr]]) instead of the distributed level loop —
-    * ~1.3 GB of primitive arrays at the limit (SCALE 20 included).
-    * Override with spark.graft.localBfsMaxEdges (0 disables the local
-    * path). */
-  val LocalBfsMaxEdgesDefault = 64000000L
-
-  def localBfsMaxEdges(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.localBfsMaxEdges")
-      .map(_.toLong).getOrElse(LocalBfsMaxEdgesDefault)
 
   /** Optional 2D edge-grid layout for the distributed loop — the Spark
     * analogue of the reference's EdgePartition2D
@@ -137,7 +127,7 @@ object Bfs {
     val spark = clean.sparkSession
     val cached = clean.persist(StorageLevel.MEMORY_AND_DISK)
     val nE = cached.count()
-    val local = nE <= localBfsMaxEdges(spark)
+    val local = nE <= graft.Gates.localBfsMaxEdges.limit(spark)
     // Local path skips the src-hash shuffle + second cache: the CSR is the
     // physical layout there, so pre-partitioning the DataFrame buys nothing.
     val edges =
@@ -215,7 +205,7 @@ object Bfs {
                                  knownCount: Long = -1L)
       : (PreparedGraph, Option[Long]) = {
     val spark = raw.sparkSession
-    val gate = localBfsMaxEdges(spark)
+    val gate = graft.Gates.localBfsMaxEdges.limit(spark)
     // Gate probe WITHOUT a dedicated count job where possible: callers
     // that already counted (benchmark stage 1 counts the persisted raw
     // list) pass the count; otherwise a Catalyst stats estimate small
@@ -317,7 +307,7 @@ object Bfs {
   def bfsMinParentWithArrays(spark: SparkSession, g: PreparedGraph,
                              root: Long)
       : (Result, Option[(Array[Int], Array[Int])]) =
-    if (g.totalEdges <= localBfsMaxEdges(spark)) {
+    if (g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark)) {
       val csr = g.csr
       if (java.util.Arrays.binarySearch(csr.ids, root) < 0) {
         // Root absent from the CLEANED graph (e.g. its only edges were
@@ -520,7 +510,7 @@ object Bfs {
    */
   def bfsMinParentMulti(spark: SparkSession, g: PreparedGraph,
                         roots: Seq[Long]): DataFrame =
-    if (g.totalEdges <= localBfsMaxEdges(spark) &&
+    if (g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark) &&
         // run-major flat arrays must fit Int indexing, and every root must
         // exist in the cleaned graph (kernel precondition); otherwise use
         // the distributed loop, which handles both

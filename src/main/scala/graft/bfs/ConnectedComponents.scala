@@ -37,7 +37,7 @@ object ConnectedComponents {
       // Materialize (checkpoint) the small result BEFORE the input cache
       // is dropped — otherwise the caller's first action recomputes the
       // whole upstream query.
-      if (cached.count() <= Bfs.localBfsMaxEdges(spark))
+      if (cached.count() <= graft.Gates.localBfsMaxEdges.limit(spark))
         componentsLocal(spark, cached).localCheckpoint(eager = true)
       else componentsDistributed(spark, cached)
     } finally cached.unpersist(blocking = false)
@@ -64,7 +64,7 @@ object ConnectedComponents {
   def componentsRaw(spark: SparkSession, raw: DataFrame): DataFrame = {
     val cached = raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (cached.count() * 2 <= Bfs.localBfsMaxEdges(spark)) {
+      if (cached.count() * 2 <= graft.Gates.localBfsMaxEdges.limit(spark)) {
         val noLoops = cached.filter(col("src") =!= col("dst"))
         val sym = noLoops.union(
           noLoops.select(col("dst").as("src"), col("src").as("dst")))

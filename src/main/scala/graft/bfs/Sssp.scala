@@ -44,7 +44,7 @@ object Sssp {
     try {
       // checkpoint the (small) result while the input cache is alive —
       // see ConnectedComponents.components
-      if (cached.count() <= Bfs.localBfsMaxEdges(spark))
+      if (cached.count() <= graft.Gates.localBfsMaxEdges.limit(spark))
         ssspLocal(spark, cached, root).localCheckpoint(eager = true)
       else ssspDistributed(spark, cached, root)
     } finally cached.unpersist(blocking = false)
@@ -57,7 +57,7 @@ object Sssp {
   def ssspFromMin(spark: SparkSession, wedges: DataFrame): DataFrame = {
     val cached = wedges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val local = cached.count() <= Bfs.localBfsMaxEdges(spark)
+      val local = cached.count() <= graft.Gates.localBfsMaxEdges.limit(spark)
       val root = cached.agg(min(col("src"))).head().getLong(0)
       if (local) ssspLocal(spark, cached, root).localCheckpoint(eager = true)
       else ssspDistributed(spark, cached, root)
@@ -68,24 +68,13 @@ object Sssp {
     * duplicate edges allowed): under the gate, loop-drop, symmetrization
     * and min-weight duplicate merge happen in-kernel from ONE collected
     * triple array — no groupBy shuffle, no separate root agg (the
-    * reference's construction order, like [[Bfs.prepareRaw]]). */
-  /** Above this raw size the in-kernel min-weight merge (a comparator
-    * sort over (pair, w)) stops paying; the groupBy construction +
+    * reference's construction order, like [[Bfs.prepareRaw]]). Above
+    * [[graft.Gates.localSsspMaxEdges]] the groupBy construction +
     * gate-dispatched relaxation take over. */
-  val RawKernelMaxEdges = 4000000L
-
-  /** Conf-controlled raw-kernel gate (`spark.graft.localSsspMaxEdges`,
-    * 0 = always distributed) so whole-suite forced-distributed runs
-    * (Bench/Verify/Explain zero every `spark.graft.local*` gate) actually
-    * exercise the distributed SSSP path too. */
-  def localSsspMaxEdges(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.localSsspMaxEdges")
-      .map(_.toLong).getOrElse(RawKernelMaxEdges)
-
   def ssspFromMinRaw(spark: SparkSession, raw: DataFrame): DataFrame = {
     val cached = raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (cached.count() > localSsspMaxEdges(spark))
+      if (cached.count() > graft.Gates.localSsspMaxEdges.limit(spark))
         ssspFromMin(spark, weightedEdges(cached))
       else {
         val flat = collectTriples(cached)
@@ -334,17 +323,5 @@ object Sssp {
     }
     edges.unpersist(blocking = false)
     dist
-  }
-
-  /** Deterministic weighted subgraph from lineitem (first `limit` lines
-    * by (orderkey, linenumber)); w = min l_quantity per undirected edge. */
-  def weightedEdgesFromLineitem(spark: SparkSession, sfDir: String,
-                                limit: Int = 2000): DataFrame = {
-    val sub = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .orderBy("l_orderkey", "l_linenumber").limit(limit)
-    weightedEdges(sub.select(
-      (col("l_orderkey") * 2).as("src"),
-      (col("l_partkey") * 2 + 1).as("dst"),
-      col("l_quantity").cast("long").as("w")))
   }
 }

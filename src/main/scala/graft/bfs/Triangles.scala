@@ -46,10 +46,6 @@ object Triangles {
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       deg.persist(lvl); ori.persist(lvl); tri.persist(lvl); this
     }
-    def unpersistAll(): Unit = {
-      deg.unpersist(blocking = false); ori.unpersist(blocking = false)
-      tri.unpersist(blocking = false); ()
-    }
   }
 
   /** Build the family tables from a cleaned symmetric loop-free edge
@@ -233,7 +229,7 @@ object Triangles {
     * pack-range / builder-size recheck and falls back to distributed. */
   def runCoPurchase(spark: SparkSession, groupMember: DataFrame): DataFrame = {
     val gm = groupMember.select(col("src"), col("dst"))
-    coPurchasePairFlat(spark, gm) match {
+    coPurchasePairFlat(gm) match {
       case Some(pairFlat) =>
         val (w, t) = countCsr(LocalCsr.buildFromRawPairs(pairFlat))
         import spark.implicits._
@@ -309,12 +305,8 @@ object Triangles {
     * gate probes the INPUT row count (one cheap scan-count), not the
     * pair count; pair blow-up beyond the gate is caught by the
     * pack-range / builder-size recheck. */
-  private[graft] def coPurchasePairFlat(spark: SparkSession,
-                                        gm: DataFrame): Option[Array[Long]] = {
-    val gate = spark.conf.get("spark.graft.localBfsMaxEdges",
-      (64L << 20).toString).toLong
-    if (gate <= 0 || gm.limit((math.min(gate, Int.MaxValue - 1L) + 1).toInt)
-          .count() > gate) None
+  private[graft] def coPurchasePairFlat(gm: DataFrame): Option[Array[Long]] = {
+    if (!graft.Gates.localBfsMaxEdges.fits(gm)) None
     else {
       val flat = LocalCsr.collectPairs(gm)
       val nIn = flat.length / 2
@@ -550,26 +542,12 @@ object Triangles {
       .toDF("vertex_a", "vertex_b", "common", "deg_a", "deg_b", "jaccard")
   }
 
-  /** Gate-dispatched edge-Jaccard over the co-purchase projection
-    * (same dispatch as [[runCoPurchase]]). */
-  def jaccardCoPurchase(spark: SparkSession, groupMember: DataFrame,
-                        k: Int): DataFrame = {
-    val gm = groupMember.select(col("src"), col("dst"))
-    coPurchasePairFlat(spark, gm) match {
-      case Some(pairFlat) =>
-        jaccardTopCsr(spark, LocalCsr.buildFromRawPairs(pairFlat), k)
-      case None =>
-        jaccardTop(
-          graft.etl.EdgeOps.cleanEdges(coPurchaseSelfJoin(gm)), k)
-    }
-  }
-
   /** Gate-dispatched per-vertex local-cc over the co-purchase
     * projection (same dispatch as [[runCoPurchase]]). */
   def localCcCoPurchase(spark: SparkSession, groupMember: DataFrame,
                         k: Int): DataFrame = {
     val gm = groupMember.select(col("src"), col("dst"))
-    coPurchasePairFlat(spark, gm) match {
+    coPurchasePairFlat(gm) match {
       case Some(pairFlat) =>
         localCcTopCsr(spark, LocalCsr.buildFromRawPairs(pairFlat), k)
       case None =>
@@ -578,21 +556,15 @@ object Triangles {
     }
   }
 
-  /** Gate-dispatched entry: in-kernel under `spark.graft.localBfsMaxEdges`
-    * (the CSR build collects the pairs it would count), distributed
-    * above. `edges` is a RAW undirected pair list (one direction per
-    * unordered pair is fine; loops and duplicates tolerated). */
+  /** Gate-dispatched entry: in-kernel under
+    * [[graft.Gates.localBfsMaxEdges]] (the CSR build collects the pairs
+    * it would count), distributed above. `edges` is a RAW undirected
+    * pair list (one direction per unordered pair is fine; loops and
+    * duplicates tolerated). */
   def run(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val gate = spark.conf.get("spark.graft.localBfsMaxEdges",
-      (64L << 20).toString).toLong
-    val flat =
-      if (gate <= 0) null
-      else {
-        val cnt = edges.select(col("src")).limit((gate + 1).toInt).count()
-        if (cnt > gate) null else LocalCsr.collectPairs(edges)
-      }
-    if (flat != null) {
-      val (w, t) = countCsr(LocalCsr.buildFromRawPairs(flat))
+    if (graft.Gates.localBfsMaxEdges.fits(edges.select(col("src")))) {
+      val (w, t) = countCsr(LocalCsr.buildFromRawPairs(
+        LocalCsr.collectPairs(edges)))
       import spark.implicits._
       Seq((w, t)).toDF("n_wedges", "n_triangles")
     } else {

@@ -87,8 +87,9 @@ object EdgeOps {
     * cost of the exact answer, spread across the cluster by the join
     * key. The dedup+count is, when the vertex-id domain is bounded
     * (`maxVertex` known and k·(maxVertex+1) ≤
-    * `spark.graft.twoHopBitsetMaxBits`, default 2^31 total bits = 256 MB
-    * of bitset per whole task), ONE hub-keyed `bitset_distinct`
+    * `spark.graft.twoHopBitsetMaxBits` / defaultParallelism — the
+    * budget, default 2^31 total bits = 256 MB, covers every task that
+    * holds its k buffers at once), ONE hub-keyed `bitset_distinct`
     * aggregation — the distributed twin of the CSR kernel's per-hub
     * BitSet: partial aggregation collapses each map partition's wedge
     * mass into k fixed-width buffers, so the exchange carries
@@ -116,12 +117,15 @@ object EdgeOps {
     val bitsetBudget = clean.sparkSession.conf
       .getOption("spark.graft.twoHopBitsetMaxBits")
       .flatMap(_.toLongOption).getOrElse(1L << 31)
-    // k·(mv+1) ≤ budget, with each hub's maxBits capped at the 2^36
-    // BitsetDistinct accepts; divided, not multiplied, so a huge
-    // configured budget or mv cannot overflow its way past the gate
+    // k·(mv+1) ≤ budget / concurrent tasks, with each hub's maxBits
+    // capped at the 2^36 BitsetDistinct accepts; divided, not
+    // multiplied, so a huge configured budget or mv cannot overflow its
+    // way past the gate
+    val taskBudget =
+      bitsetBudget / clean.sparkSession.sparkContext.defaultParallelism
     val reach = maxVertex match {
       case Some(mv) if mv >= 0 && k > 0 &&
-          mv < math.min(1L << 36, bitsetBudget / k) =>
+          mv < math.min(1L << 36, taskBudget / k) =>
         wedges.groupBy("h").agg(
           graft.functions.BitsetDistinct.of(col("v"), mv + 1)
             .as("reach_2hop"))

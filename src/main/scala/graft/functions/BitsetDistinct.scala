@@ -24,9 +24,11 @@ import org.apache.spark.sql.types._
  * so results are bit-identical to the distinct() formulation.
  *
  * Memory contract: the caller must bound (#groups in one task ×
- * maxBits/8). The 2-hop caller gates on
- * `spark.graft.twoHopBitsetMaxBits` ≥ k·maxBits and falls back to the
- * distinct() plan above it (EdgeOps.twoHopReach).
+ * maxBits/8 × concurrent tasks) — the buffers are plain heap objects
+ * outside Spark's memory accounting. The 2-hop caller gates on
+ * `spark.graft.twoHopBitsetMaxBits` / defaultParallelism ≥ k·maxBits
+ * and falls back to the distinct() plan above it
+ * (EdgeOps.twoHopReach).
  *
  * Serialization trims trailing zero words, so a buffer whose populated
  * prefix is small ships small; merge ORs the shorter buffer into the

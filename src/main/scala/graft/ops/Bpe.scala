@@ -29,8 +29,6 @@ import org.apache.spark.sql.functions._
  */
 object Bpe {
 
-  val DefaultMaxTypes = 1000000L
-
   /** Public: the typed-Dataset encoder codegen needs access. */
   case class WordFreq(syms: Seq[String], freq: Long)
 
@@ -40,12 +38,7 @@ object Bpe {
     val words = TextOps.tokenized(docs)
       .select(explode(col("tk")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    val gate = spark.conf.getOption("spark.graft.localBpeMaxTypes")
-      .map(_.toLong).getOrElse(DefaultMaxTypes)
-    val local = gate > 0 &&
-      words.limit((math.min(gate, Int.MaxValue - 1L) + 1).toInt)
-        .count() <= gate
-    if (local) {
+    if (graft.Gates.localBpeMaxTypes.fits(words)) {
       val rows = words.collect().map(r => (r.getString(0), r.getLong(1)))
       val merges = learnLocal(rows, nMerges)
       graft.functions.Ship.df(spark,

@@ -33,49 +33,20 @@ object Dedup {
   val BandRows = 4
   val HashMod = 2147483647L // 2^31-1: keeps (2k+1)*x + c*k inside Long
 
-  /** Hybrid-executor gate: corpora at or under this many documents run on
-    * the driver-local [[LocalDedup]] kernels (identical output — see
-    * LocalDedupSpec); larger corpora take the distributed shuffle
-    * pipelines below, which are the only shape that survives 100 TB.
-    * Override with `spark.graft.localDedupMaxDocs` (0 = always
-    * distributed). */
-  val LocalDedupDefaultMaxDocs = 100000L
-
-  /** Collected corpora keyed weakly on the DataFrame instance — the five
-    * dedup kernels consume the same per-dir cached docs table; identity
-    * hits skip the count probe and collect entirely (immutable
-    * DataFrames ⇒ never stale; gate re-checked against the cached length,
-    * so 0 still forces distributed). */
-  private val docsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, (Array[Long], Array[String])]())
-
-  /** Collect (doc_id, text) when the corpus is under the local gate. The
-    * count probe scans only the `doc_id` column, so probing a huge corpus
-    * never touches its text bytes. */
-  private[ops] def localDocs(docs: DataFrame): Option[(Array[Long], Array[String])] = {
-    if (docs.isStreaming) return None
-    val spark = docs.sparkSession
-    val gate = spark.conf.getOption("spark.graft.localDedupMaxDocs")
-      .map(_.toLong).getOrElse(LocalDedupDefaultMaxDocs)
-    if (gate <= 0) return None
-    val cached = docsCache.get(docs)
-    if (cached != null)
-      return if (cached._1.length <= gate) Some(cached) else None
-    if (docs.select("doc_id").count() > gate) None
-    else {
+  /** (doc_id, text) collected when the corpus is under
+    * [[graft.Gates.localDedupMaxDocs]] — the driver-local [[LocalDedup]]
+    * kernels (identical output — see LocalDedupSpec); larger corpora
+    * take the distributed shuffle pipelines below, the only shape that
+    * survives 100 TB. The five dedup kernels share one collect of the
+    * per-dir cached docs table, and the count probe scans only the
+    * `doc_id` column, so probing a huge corpus never touches its text
+    * bytes. */
+  private[ops] val localDocs: DataFrame => Option[(Array[Long], Array[String])] =
+    graft.Gates.localDedupMaxDocs.memo("doc_id",
+      (c: (Array[Long], Array[String])) => c._1.length) { docs =>
       val rows = docs.select(col("doc_id"), col("text")).collect()
-      val ids = new Array[Long](rows.length)
-      val texts = new Array[String](rows.length)
-      var i = 0
-      while (i < rows.length) {
-        ids(i) = rows(i).getLong(0)
-        texts(i) = rows(i).getString(1)
-        i += 1
-      }
-      docsCache.put(docs, (ids, texts))
-      Some((ids, texts))
+      (rows.map(_.getLong(0)), rows.map(_.getString(1)))
     }
-  }
 
   /** Gate + kernel dispatch: run `f` on the collected corpus when it fits
     * under the local gate; fall back to the distributed pipeline when the
@@ -146,6 +117,10 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
   }
 
+  /** Distinct sources [[sourceShingleSimilarity]] encodes on the driver;
+    * a corpus with more fails up front rather than collecting them. */
+  val MaxSources = 100000
+
   /** Corpus-level similarity matrix between sources: Jaccard over each
     * source's distinct 3-token shingle TYPE set — the dataset-overlap
     * measure a mix designer reads before weighting two crawls (high
@@ -188,8 +163,13 @@ object Dedup {
     // narrow column scan with partial aggregation (≪ the shingle scan
     // that follows), and the decode is a literal array lookup on the
     // final rollup only.
-    val srcNames = docs.select(col("source")).distinct()
+    val distinctSources = docs.select(col("source")).distinct()
+    val srcNames = distinctSources.limit(MaxSources + 1)
       .collect().map(_.getString(0)).sorted
+    if (srcNames.length > MaxSources)
+      throw new IllegalArgumentException(
+        s"sourceShingleSimilarity: ${distinctSources.count()} distinct " +
+          s"sources exceed the driver-side dictionary limit of $MaxSources")
     val codeOf = typedLit(srcNames.zipWithIndex.toMap)
     val nameOf = typedLit(srcNames.toSeq)
     // two consumers (sizes + pairs) — materialize the per-shingle
@@ -611,12 +591,6 @@ object Dedup {
       .drop("dedup_key")
   }
 
-  /** Corpora up to this many vectors use the broadcast block-scoring path.
-    * Override with `spark.graft.embeddingBlockMaxVecs` (0 = always the
-    * hyperplane-LSH path). NOT a hybrid-executor gate: it picks between
-    * two distributed strategies, exact-block vs approximate-LSH. */
-  val EmbeddingBlockLimit = 200000L
-
   /** Signed-random-projection (hyperplane) LSH banding for the
     * above-block-limit path: [[HyperplaneBands]] bands of
     * [[HyperplaneBandBits]] sign bits each. A sign bit is
@@ -690,10 +664,10 @@ object Dedup {
     * All-pairs exact scoring is inherently O(n²); the efficient physical
     * shape is a block nested loop over PRIMITIVE vectors, not a join that
     * materializes both arrays into every pair row. When the corpus fits
-    * in a broadcast ([[EmbeddingBlockLimit]]), each partition streams its
-    * vectors against the broadcast block in a tight fused loop — no
-    * shuffle, no per-pair array copies; pairs above (threshold − ε) are
-    * the only rows ever materialized.
+    * in a broadcast ([[graft.Gates.embeddingBlockMaxVecs]]), each
+    * partition streams its vectors against the broadcast block in a
+    * tight fused loop — no shuffle, no per-pair array copies; pairs
+    * above (threshold − ε) are the only rows ever materialized.
     *
     * Beyond the block limit (or on a stream), candidates come from
     * hyperplane-LSH banding ([[hyperplaneBandKeys]]): a narrow map emits
@@ -712,8 +686,7 @@ object Dedup {
     }
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val blockLimit = spark.conf.getOption("spark.graft.embeddingBlockMaxVecs")
-      .map(_.toLong).getOrElse(EmbeddingBlockLimit)
+    val blockLimit = graft.Gates.embeddingBlockMaxVecs.limit(spark)
     val n = Similarity.withNorm(embeddings)
     if (embeddings.isStreaming || n.count() > blockLimit) {
       val bandKeysUdf = udf((v: Seq[Double]) => hyperplaneBandKeys(v))

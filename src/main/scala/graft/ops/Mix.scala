@@ -25,12 +25,6 @@ object Mix {
     * thousandths-of-10 (bucket space 0..9999). */
   val Buckets = 10000L
 
-  /** Hybrid gate for [[pack]]'s driver-local cumsum kernel: row count of
-    * the (stratum, doc_id, n_tokens) projection. Conf
-    * `spark.graft.localMixMaxRows`; 0 forces the distributed prefix
-    * sum. */
-  val LocalMixDefaultMaxRows = 1000000L
-
   /** Per-stratum keep decision: bucket = polyhash(doc_id ":" stratum)
     * mod 10000, kept iff bucket < rate(stratum) * 10000. Emits every
     * row with its bucket and 0/1 keep flag — the caller filters
@@ -203,10 +197,6 @@ object Mix {
     * `coalesce(1)`) silently rebinds — the index that keys the base-
     * offset table must be the DATA partition's, bound at plan time.
     *
-    * Hybrid: under `spark.graft.localMixMaxRows` (default 1M; 0 forces
-    * distributed) the three small columns collect, the cumsum runs on
-    * the driver, and the result ships back broadcast — equality
-    * against the distributed prefix sum is spec'd.
     * Output: (stratum, doc_id, n_tokens, start_offset, shard). */
   def pack(docsWithTokens: DataFrame, stratum: Column,
            budget: Long): DataFrame = {
@@ -217,40 +207,6 @@ object Mix {
       .select(stratum.cast("string").as("stratum"),
         col("doc_id").cast("long").as("doc_id"),
         col("n_tokens").cast("long").as("n_tokens"))
-    val gate = spark.conf.getOption("spark.graft.localMixMaxRows")
-      .map(_.toLong).getOrElse(LocalMixDefaultMaxRows)
-    val localRows: Option[Array[org.apache.spark.sql.Row]] =
-      if (docsWithTokens.isStreaming || gate <= 0) None
-      else if (src.count() > gate) None
-      else {
-        val rows = src.collect()
-        // null strata/ids would NPE the kernel's tuple sort; the
-        // distributed twin handles them, so route nulls there
-        if (rows.exists(_.anyNull)) None else Some(rows)
-      }
-    if (localRows.isDefined) {
-      val rows = localRows.get
-      // per-stratum cumsum in (stratum, doc_id) order; stratum collation
-      // is irrelevant (offsets never cross strata)
-      val sorted0 = rows.sortBy(r => (r.getString(0), r.getLong(1)))
-      val nR = sorted0.length
-      val sArr = new Array[String](nR); val idArr = new Array[Long](nR)
-      val tkArr = new Array[Long](nR); val offArr = new Array[Long](nR)
-      val shArr = new Array[Long](nR)
-      var cur: String = null; var acc = 0L; var i = 0
-      while (i < nR) {
-        val r = sorted0(i)
-        val st = r.getString(0)
-        if (st != cur) { cur = st; acc = 0L }
-        sArr(i) = st; idArr(i) = r.getLong(1); tkArr(i) = r.getLong(2)
-        offArr(i) = acc; shArr(i) = acc / budget
-        acc += tkArr(i)
-        i += 1
-      }
-      return graft.functions.Ship.df(spark,
-        "stratum" -> sArr, "doc_id" -> idArr, "n_tokens" -> tkArr,
-        "start_offset" -> offArr, "shard" -> shArr)
-    }
     val sorted = src
       .as[(String, Long, Long)]
       .repartitionByRange(col("stratum"), col("doc_id"))

@@ -46,40 +46,21 @@ object Similarity {
   private def cosine(av: Column, an: Column, bv: Column, bn: Column): Column =
     round(dot(av, bv) / (an * bn), 6)
 
-  /** Hybrid-executor gate: corpora at or under this many vectors run on
-    * the driver-local [[LocalSimilarity]] kernels (identical output —
-    * LocalSimilaritySpec); larger corpora take the distributed pipelines.
-    * Override with `spark.graft.localAnnMaxVecs` (0 = always
-    * distributed). */
-  val LocalAnnDefaultMaxVecs = 100000L
-
-  /** Collected corpora keyed weakly on the DataFrame instance — the ANN
-    * and embedding-dedup kernels share the per-dir cached embeddings
-    * table; identity hits skip the count probe and collect (immutable
-    * DataFrames ⇒ never stale; gate re-checked against the cached size). */
-  private val corpusCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, LocalSimilarity.Corpus]())
-
-  private[ops] def localCorpus(embeddings: DataFrame): Option[LocalSimilarity.Corpus] = {
-    if (embeddings.isStreaming) return None
-    val spark = embeddings.sparkSession
-    val gate = spark.conf.getOption("spark.graft.localAnnMaxVecs")
-      .map(_.toLong).getOrElse(LocalAnnDefaultMaxVecs)
-    if (gate <= 0) return None
-    val cached = corpusCache.get(embeddings)
-    if (cached != null)
-      return if (cached.size <= gate) Some(cached) else None
-    if (embeddings.select("vec_id").count() > gate) None
-    else {
+  /** The corpus collected when it is under
+    * [[graft.Gates.localAnnMaxVecs]] — the driver-local
+    * [[LocalSimilarity]] kernels (identical output —
+    * LocalSimilaritySpec); larger corpora take the distributed
+    * pipelines. The ANN and embedding-dedup kernels share one collect of
+    * the per-dir cached embeddings table. */
+  private[ops] val localCorpus: DataFrame => Option[LocalSimilarity.Corpus] =
+    graft.Gates.localAnnMaxVecs.memo("vec_id",
+      (c: LocalSimilarity.Corpus) => c.size) { embeddings =>
       val rows = embeddings.select(col("vec_id"), col("embedding")).collect()
       val ids = rows.map(_.getLong(0))
       // float→double per element, exactly the transform(...cast) column
       val vecs = rows.map(_.getSeq[Float](1).toArray.map(_.toDouble))
-      val c = new LocalSimilarity.Corpus(ids, vecs)
-      corpusCache.put(embeddings, c)
-      Some(c)
+      new LocalSimilarity.Corpus(ids, vecs)
     }
-  }
 
   private def shipTopK(spark: org.apache.spark.sql.SparkSession,
                        rows: Seq[(Long, Long, Long, Double)]): DataFrame =
@@ -112,13 +93,13 @@ object Similarity {
     * the adjacency list SemDeDup, label propagation over embeddings,
     * and kNN-classifier features all start from.
     *
-    * Strategy (the [[graft.ops.Dedup.EmbeddingBlockLimit]] convention —
-    * two DISTRIBUTED strategies, not a driver-kernel gate): corpora at
-    * or under `spark.graft.embeddingBlockMaxVecs` take the exact
-    * broadcast-block path — the corpus ships once as a broadcast of
-    * primitive vectors and every partition scores its rows against it
-    * in a narrow map with a per-row bounded heap (zero shuffles; the
-    * same arithmetic as the kernel, so exact). Larger corpora take the
+    * Strategy (the [[graft.Gates.embeddingBlockMaxVecs]] switch — two
+    * DISTRIBUTED strategies, not a driver-kernel gate): corpora at or
+    * under it take the exact broadcast-block path — the corpus ships
+    * once as a broadcast of primitive vectors and every partition
+    * scores its rows against it in a narrow map with a per-row bounded
+    * heap (zero shuffles; the same arithmetic as the kernel, so exact).
+    * Larger corpora take the
     * hyperplane-LSH path: banded sign-bit candidates (an equi-join on
     * the band key, never all-pairs), exact scoring of candidates only,
     * then the bounded-heap [[topK]] — approximate for genuinely
@@ -132,9 +113,7 @@ object Similarity {
         LocalSimilarity.knnGraph(c, k))
       case None =>
         val spark = embeddings.sparkSession
-        val blockLimit = spark.conf
-          .getOption("spark.graft.embeddingBlockMaxVecs")
-          .map(_.toLong).getOrElse(Dedup.EmbeddingBlockLimit)
+        val blockLimit = graft.Gates.embeddingBlockMaxVecs.limit(spark)
         if (blockLimit > 0 &&
           embeddings.select("vec_id").count() <= blockLimit)
           topKBroadcastBlock(embeddings, embeddings, k)
@@ -330,9 +309,8 @@ object Similarity {
 
   /** STREAMING-safe ANN serving: score each incoming query row against
     * a static corpus and emit its top-k. Two paths behind the
-    * [[graft.ops.Dedup.EmbeddingBlockLimit]] strategy switch (the
-    * `spark.graft.embeddingBlockMaxVecs` convention — two DISTRIBUTED
-    * strategies, not a driver-kernel gate):
+    * [[graft.Gates.embeddingBlockMaxVecs]] strategy switch (two
+    * DISTRIBUTED strategies, not a driver-kernel gate):
     *
     *  - corpora at or under the limit take [[topKBroadcastBlock]]: the
     *    corpus ships once as a broadcast of primitive vectors and every
@@ -365,9 +343,7 @@ object Similarity {
                          k: Int = 5): DataFrame = {
     require(!corpus.isStreaming, "corpus must be a static table")
     val spark = corpus.sparkSession
-    val blockLimit = spark.conf
-      .getOption("spark.graft.embeddingBlockMaxVecs")
-      .map(_.toLong).getOrElse(Dedup.EmbeddingBlockLimit)
+    val blockLimit = graft.Gates.embeddingBlockMaxVecs.limit(spark)
     if (blockLimit > 0 && corpus.select("vec_id").count() <= blockLimit)
       topKBroadcastBlock(queries, corpus, k)
     else topKForQueryStreamLsh(queries, corpus, k)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
  * Driver-local kernels for the BATCH event-analytics transforms — the
  * small-input path of the hybrid executor for [[Events]], following the
  * LocalDedup/LocalSimilarity pattern. Streaming inputs and tables above
- * `spark.graft.localEventsMaxRows` (default 1M; 0 disables) always take
+ * [[graft.Gates.localEventsMaxRows]] (default 1M; 0 disables) always take
  * the distributed transforms, whose shuffle-per-key shapes are the
  * 100 TB path.
  *
@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
  */
 object LocalEvents {
 
-  val LocalEventsDefaultMaxRows = 1000000L
-
   private def round6(x: Double) = graft.ops.LocalDedup.round6(x)
   private def shipDf(spark: SparkSession, cols: (String, Array[_])*) =
     graft.functions.Ship.df(spark, cols: _*)
@@ -28,32 +26,14 @@ object LocalEvents {
     (Array[Long], Array[Long], Array[Long], Array[String], Array[Double],
      Array[String])
 
-  /** Collected rows keyed on the DataFrame INSTANCE (weakly — entries
-    * die with the DataFrame): the three batch kernels all consume the
-    * same per-dir cached events table, and without this each query paid
-    * its own count probe + 100k-row collect (~0.3 s each at sf0.1) for
-    * byte-identical arrays. DataFrames are immutable, so an identity hit
-    * can never serve stale data; the gate is re-checked per call against
-    * the cached length (no job), so flipping
-    * `spark.graft.localEventsMaxRows` to 0 still forces the distributed
-    * path. */
-  private val rowsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Rows]())
-
   /** Collected (event_id, us, user_id, event_type, value, props) under
-    * the gate (props all-null when the column is absent — unit-test DFs
-    * predate the sidecar); None → take the distributed transform. */
-  private def localRows(events: DataFrame): Option[Rows] = {
-    if (events.isStreaming) return None
-    val spark = events.sparkSession
-    val gate = spark.conf.getOption("spark.graft.localEventsMaxRows")
-      .map(_.toLong).getOrElse(LocalEventsDefaultMaxRows)
-    if (gate <= 0) return None
-    val cached = rowsCache.get(events)
-    if (cached != null)
-      return if (cached._1.length <= gate) Some(cached) else None
-    if (events.select("event_id").count() > gate) None
-    else {
+    * [[graft.Gates.localEventsMaxRows]] (props all-null when the column
+    * is absent — unit-test DFs predate the sidecar); None → take the
+    * distributed transform. The batch kernels all consume the same
+    * per-dir cached events table and share one collect. */
+  private val localRows: DataFrame => Option[Rows] =
+    graft.Gates.localEventsMaxRows.memo("event_id",
+      (r: Rows) => r._1.length) { events =>
       val propsCol =
         if (events.columns.contains("props")) col("props")
         else lit(null).cast("string").as("props")
@@ -74,11 +54,8 @@ object LocalEvents {
         props(i) = if (r.isNullAt(5)) null else r.getString(5)
         i += 1
       }
-      val out = (eid, us, uid, et, v, props)
-      rowsCache.put(events, out)
-      Some(out)
+      (eid, us, uid, et, v, props)
     }
-  }
 
   /** ≡ Events.windowedCounts (batch): tumbling 1-hour counts + rounded
     * value sums per event_type. */

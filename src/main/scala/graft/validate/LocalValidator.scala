@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /**
  * In-memory validation kernel — the hybrid fast path of [[Validator]]
  * for benchmark loops whose graphs fit under the local-kernel gate
- * (graft.bfs.Bfs.localBfsMaxEdges).
+ * ([[graft.Gates.localBfsMaxEdges]]).
  *
  * The reference validates each BFS run with five checks over the RAW
  * edge list, each a scan that runs in parallel on every rank

@@ -123,7 +123,7 @@ object Validator {
     // values escape the tree's own vertex universe (only such degenerate
     // trees need the general relational plan).
     if (!rawEdges.isStreaming && !tree.isStreaming && undirectedRaw.isEmpty) {
-      val gate = graft.bfs.Bfs.localBfsMaxEdges(spark)
+      val gate = graft.Gates.localBfsMaxEdges.limit(spark)
       if (gate > 0 && rawEdges.count() <= gate) {
         validateLocal(spark, rawEdges, tree, root, nGlobalVerts) match {
           case Some(df) => return df

@@ -157,7 +157,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(annPlan.contains("Generate"), annPlan)
       assert(!annPlan.contains("CartesianProduct"), annPlan)
       assert(!annPlan.contains("BroadcastNestedLoopJoin"), annPlan)
-    } finally Gates.all.foreach(g => spark.conf.unset(s"spark.graft.$g"))
+    } finally Gates.all.foreach(g => spark.conf.unset(g.conf))
   }
 
   test("oracleSql swaps in the LSH-replay oracles exactly when the " +
@@ -293,17 +293,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("distributed pack plans exactly one range exchange") {
     val s = spark; import s.implicits._
-    spark.conf.set("spark.graft.localMixMaxRows", "0")
-    try {
-      val d = (0L until 100L).map(i => (i, s"s${i % 2}", i % 7 + 1))
-        .toDF("doc_id", "source", "n_tokens")
-      val q = ops.Mix.pack(d, col("source"), 10L)
-      q.count()
-      // the output plan scans the prefix-sum RDD; the single range
-      // exchange lives in the persisted upstream — assert the OUTPUT
-      // adds no further shuffle
-      val plan = q.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), plan)
-    } finally spark.conf.unset("spark.graft.localMixMaxRows")
+    val d = (0L until 100L).map(i => (i, s"s${i % 2}", i % 7 + 1))
+      .toDF("doc_id", "source", "n_tokens")
+    val q = ops.Mix.pack(d, col("source"), 10L)
+    q.count()
+    // the output plan scans the prefix-sum RDD; the single range
+    // exchange lives in the persisted upstream — assert the OUTPUT
+    // adds no further shuffle
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
   }
 }

@@ -21,6 +21,16 @@ class RobustnessSpec extends SparkSpec {
     assert(graft.Bench.finite(0.0) === 0.0)
   }
 
+  test("BENCH_FULL.json is written only by the main (default-cpus) run") {
+    import graft.Bench.{DefaultCpus, writesLegacyCopy}
+    assert(writesLegacyCopy(s"BENCH_FULL_c$DefaultCpus.json", DefaultCpus))
+    // the scaling re-run at another core count leaves the main record be
+    assert(!writesLegacyCopy("BENCH_FULL_c8.json", "8"))
+    assert(!writesLegacyCopy("custom.json", "8"))
+    // a run already writing the fixed name does not copy it onto itself
+    assert(!writesLegacyCopy("BENCH_FULL.json", DefaultCpus))
+  }
+
   test("runBounded: on timeout queued warm-up tasks never start") {
     import scala.concurrent.duration._
     val release = new java.util.concurrent.CountDownLatch(1)

@@ -17,7 +17,7 @@ class LocalCsrSpec extends SparkSpec {
     try {
       val local = Bfs.bfsMinParent(spark, g, root)
       val dist = Bfs.bfsMinParentDistributed(spark, g, root)
-      assert(g.totalEdges <= Bfs.localBfsMaxEdges(spark),
+      assert(g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark),
         "test graph should take the local path")
       assert(local.levelSizes === dist.levelSizes)
       assert(local.tree.exceptAll(dist.tree).isEmpty &&

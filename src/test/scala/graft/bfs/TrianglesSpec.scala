@@ -248,4 +248,22 @@ class TrianglesSpec extends SparkSpec {
     val r2 = Triangles.runCoPurchase(spark, gm2).as[(Long, Long)].head()
     assert(r2 == ((1L, 1L))) // one oriented wedge at the min-rank vertex
   }
+
+  test("run: a gate past Int range (3000000000) equals the unset gate") {
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(31L)
+    val pairs = Seq.fill(200)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+    val gate = graft.Gates.localBfsMaxEdges
+    val prior = spark.conf.getOption(gate.conf)
+    spark.conf.unset(gate.conf)
+    try {
+      val unset = Triangles.run(spark, asDf(pairs)).as[(Long, Long)].head()
+      // (gate + 1).toInt wrapped negative here and Spark rejected the limit
+      val huge = gate.withLimit(spark, 3000000000L) {
+        Triangles.run(spark, asDf(pairs)).as[(Long, Long)].head()
+      }
+      assert(huge == unset)
+      assert(unset == brute(pairs))
+    } finally prior.foreach(spark.conf.set(gate.conf, _))
+  }
 }

@@ -74,6 +74,33 @@ class R11OptimizationSpec extends SparkSpec {
     }
   }
 
+  test("twoHopReach: the bitset budget is shared by concurrent tasks") {
+    val implicits = spark.implicits
+    import implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 5L)).toDF("src", "dst")
+    val clean = EdgeOps.cleanEdges(edges)
+    // k·(mv+1) = 12 bits per task; the budget covers every task at once
+    val tasks = spark.sparkContext.defaultParallelism
+    def plan(budget: Long): (Boolean, Seq[(Long, Long, Long)]) = {
+      val prev = spark.conf.getOption("spark.graft.twoHopBitsetMaxBits")
+      spark.conf.set("spark.graft.twoHopBitsetMaxBits", budget.toString)
+      try {
+        val r = EdgeOps.twoHopReach(clean, 2, None, Some(5L))
+        (r.queryExecution.optimizedPlan.toString.contains("bitset_distinct"),
+          r.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+            .sortBy(_._1).toSeq)
+      } finally prev match {
+        case Some(v) => spark.conf.set("spark.graft.twoHopBitsetMaxBits", v)
+        case None => spark.conf.unset("spark.graft.twoHopBitsetMaxBits")
+      }
+    }
+    val want = Seq((2L, 3L, 4L), (3L, 2L, 4L))
+    // one bit short of 12 per task: the distinct() plan, though the
+    // whole budget is 12·tasks − 1 ≥ 12
+    assert(plan(12L * tasks - 1) === ((false, want)))
+    assert(plan(12L * tasks) === ((true, want)))
+  }
+
   test("twoHopReach: a huge bitset budget cannot pick a maxBits above 2^36") {
     val implicits = spark.implicits
     import implicits._

@@ -97,7 +97,7 @@ class KernelFuzzSpec extends SparkSpec {
     assert(l === dist)
   }
 
-  test("pack kernel ≡ distributed prefix sum on random strata (8 seeds)") {
+  test("pack: distributed prefix sum ≡ reference cumsum on random strata (8 seeds)") {
     val s = spark; import s.implicits._
     for (seed <- 0L until 8L) {
       val rnd = new scala.util.Random(seed)
@@ -106,13 +106,19 @@ class KernelFuzzSpec extends SparkSpec {
         (i.toLong, s"s${rnd.nextInt(nStrata)}", rnd.nextInt(200).toLong)
       }
       val d = rows.toDF("doc_id", "source", "n_tokens")
-        .repartition(1 + rnd.nextInt(19)).persist()
-      try {
-        val budget = 1L + rnd.nextInt(500)
-        val (l, dist) = bothWays("spark.graft.localMixMaxRows")(
-          Mix.pack(d, org.apache.spark.sql.functions.col("source"), budget))
-        assert(l === dist, s"seed=$seed pack budget=$budget")
-      } finally d.unpersist()
+        .repartition(1 + rnd.nextInt(19))
+      val budget = 1L + rnd.nextInt(500)
+      // reference: per-stratum exclusive cumsum in doc_id order
+      val want = rows.groupBy(_._2).values.flatMap { st =>
+        val byId = st.sortBy(_._1)
+        val offs = byId.scanLeft(0L)(_ + _._3)
+        byId.zip(offs).map { case ((id, s, t), off) =>
+          Vector(s, id, t, off, off / budget)
+        }
+      }.toSeq.sortBy(_.mkString("|"))
+      val got = sorted(
+        Mix.pack(d, org.apache.spark.sql.functions.col("source"), budget))
+      assert(got === want, s"seed=$seed pack budget=$budget")
     }
   }
 

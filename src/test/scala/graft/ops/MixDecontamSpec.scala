@@ -327,24 +327,15 @@ class MixDecontamSpec extends SparkSpec {
     assert(order === Seq("en", "en", "de", "xx", "en", "en"))
   }
 
-  test("pack: kernel ≡ two-phase prefix sum ≡ window cumsum") {
+  test("pack: two-phase prefix sum ≡ window cumsum, also under coalesce(1)") {
     val s = spark; import s.implicits._
     val d = (0L until 2000L)
       .map(i => (i, s"s${i % 3}", i % 37 + 1))
       .toDF("doc_id", "source", "n_tokens")
       .repartition(17) // force stratum runs to straddle range partitions
-    // default gate → driver-local cumsum kernel
-    val kernel = Mix.pack(d, col("source"), 100L).collect()
+    val got = Mix.pack(d, col("source"), 100L).collect()
       .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3), x.getLong(4)))
       .toSet
-    // gate 0 → distributed two-phase prefix sum
-    spark.conf.set("spark.graft.localMixMaxRows", "0")
-    val got = try {
-      Mix.pack(d, col("source"), 100L).collect()
-        .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3), x.getLong(4)))
-        .toSet
-    } finally spark.conf.unset("spark.graft.localMixMaxRows")
-    assert(kernel == got)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("stratum").orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -356,15 +347,11 @@ class MixDecontamSpec extends SparkSpec {
       .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3), x.getLong(4)))
       .toSet
     assert(got == want)
-    // regression (distributed path): a downstream coalesce(1) (Verify's
-    // writer) must not rebind the partition index the base-offset table
-    // is keyed on
-    spark.conf.set("spark.graft.localMixMaxRows", "0")
-    val viaCoalesce = try {
-      Mix.pack(d, col("source"), 100L).coalesce(1).collect()
-        .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3), x.getLong(4)))
-        .toSet
-    } finally spark.conf.unset("spark.graft.localMixMaxRows")
+    // regression: a downstream coalesce(1) (Verify's writer) must not
+    // rebind the partition index the base-offset table is keyed on
+    val viaCoalesce = Mix.pack(d, col("source"), 100L).coalesce(1).collect()
+      .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3), x.getLong(4)))
+      .toSet
     assert(viaCoalesce == want)
   }
 }

@@ -318,6 +318,15 @@ class OpsSpec extends SparkSpec {
     assert(run(withNull) === run(docs))
   }
 
+  test("sourceShingleSimilarity: more than 100000 sources fail, stating the count") {
+    val d = spark.range(Dedup.MaxSources + 1L)
+      .select(col("id").as("doc_id"), lit("a b c").as("text"),
+        col("id").cast("string").as("source"))
+    val e = intercept[IllegalArgumentException](Dedup.sourceShingleSimilarity(d))
+    assert(e.getMessage.contains("100001 distinct sources"), e.getMessage)
+    assert(e.getMessage.contains("limit of 100000"), e.getMessage)
+  }
+
   test("sourceOverlap: cross-source cluster matrix, diagonal needs ≥2") {
     val s = spark; import s.implicits._
     // cluster 1: docs in srcA (×2) + srcB → diagonal (A,A) and (A,B)
