@@ -137,7 +137,9 @@ object Profile {
 
   /** `runMain graft.bench.Profile batched [scale]`: per-run times inside
     * the batched kernel loop vs the sequential protocol's interleaved
-    * bfs/validate pattern — attributes the batched-throughput gap. */
+    * bfs/validate pattern — attributes the batched-throughput gap — then
+    * per root the kernel's level trace: (level, direction, frontier
+    * size, frontier out-edges m_f, unvisited edges m_u). */
   def profileBatched(args: Array[String]): Unit = {
     val scale = if (args.length > 1) args(1).toInt else 18
     val spark = SparkSession.builder().master("local[32]")
@@ -182,6 +184,13 @@ object Profile {
       val sw = (System.nanoTime() - s0) / 1e9
       println(f"  drop-out  wall $sw%.3f s; per-run ms: " +
         times2.map(t => f"$t%.1f").mkString(" "))
+    }
+    println("== level trace: (level, direction, frontier, m_f, m_u) ==")
+    roots.foreach { r =>
+      val (_, depth, _) = csr.bfs(r)
+      println(s"  root $r: " + csr.levelTrace(depth).map { t =>
+        s"(${t.level}, ${if (t.bottomUp) "BU" else "TD"}, ${t.nf}, ${t.mf}, ${t.mu})"
+      }.mkString(" "))
     }
     spark.stop()
   }

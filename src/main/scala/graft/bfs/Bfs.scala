@@ -47,8 +47,11 @@ object Bfs {
   /** Max rows we are willing to broadcast (frontier or unvisited side). */
   val BroadcastLimit = 4000000L
 
-  /** Switch to bottom-up when |frontier| > |unvisited| / Beta — the
-    * reference's DEMON_BOTTOMUP_TO_TOPDOWN-style ratio (parameters.h:88). */
+  /** The distributed level loops switch to bottom-up when |frontier| >
+    * |unvisited| / Beta — the reference's DEMON_BOTTOMUP_TO_TOPDOWN-style
+    * ratio (parameters.h:88). Only the DataFrame loops use it: the
+    * [[LocalCsr]] kernel switches on edge counts
+    * ([[LocalCsr.nextBottomUp]]). */
   val Beta = 8L
 
   /** Edge count above which the multi-root level loop GCs the driver

@@ -9,8 +9,9 @@ import org.apache.spark.sql.DataFrame
  * This is the same physical design as the reference's compressed graph +
  * level loop (Graph2DCSR, mpi/graph_constructor.hpp:24-143; top-down /
  * bottom-up kernels, mpi/bfs.hpp:962-1137, 1839-1967) reduced to one
- * node: a sorted-id CSR with sorted adjacency rows, a Beamer direction
- * switch, and a predecessor/depth array per run. Rationale: a BFS level
+ * node: a sorted-id CSR with sorted adjacency rows, Beamer's edge-count
+ * direction switch, a frontier bitmap for bottom-up, and a
+ * predecessor/depth array per run. Rationale: a BFS level
  * on a graph this small is microseconds of work, while ANY distributed
  * level costs a fixed multi-job scheduling overhead; the reference's
  * single-node numbers are only matchable by doing what the reference
@@ -224,26 +225,43 @@ final class LocalCsr(val ids: Array[Long], val rowStarts: Array[Int],
       .toDF("n_edges", "sum_d", "sum_d2", "sum_dxdy")
   }
 
-  /** Work (frontier out-edges / unvisited rows) above which a level runs
-    * on the common ForkJoin pool instead of one thread. Fork/join +
-    * CAS overhead beats the speedup below ~1M edge-work per level
-    * (measured at SCALE 18). Test-visible so specs can force the
-    * parallel kernels on tiny graphs. */
+  /** Unvisited-vertex edges (`m_u`) above which a bottom-up level runs
+    * on the common ForkJoin pool instead of one thread. Fork/join
+    * overhead beats the speedup below ~1M edge-work per level (measured
+    * at SCALE 18). Test-visible so specs can force the parallel kernel
+    * on tiny graphs. */
   private[bfs] var parallelWork = 1L << 20
 
   /** Min-parent BFS from `root` (original vertex id). Returns dense
     * (pred, depth) arrays (−1 = unset/unreached) + per-level sizes.
     *
-    * Big levels run PARALLEL across the common pool (the reference's
-    * OpenMP sections, bfs.hpp:977,2225): top-down claims vertices with a
-    * depth CAS and folds parents with a CAS-min (min commutes ⇒ the
-    * parallel tree equals the sequential min-parent tree); bottom-up
-    * partitions the unvisited range, each vertex written by exactly one
-    * thread. Small levels stay sequential — no fork/join overhead.
+    * Direction per level is Beamer's edge-count rule
+    * ([[LocalCsr.nextBottomUp]]): top-down until the frontier's
+    * out-edges `m_f` exceed 1/14 of the unvisited vertices' edges `m_u`
+    * (`m_f·14 > m_u`), then bottom-up until the frontier is shrinking
+    * and holds fewer than 1/24 of the vertices (`n_f·24 < nV`). `m_u`
+    * starts at |nbrs| − deg(root) and drops by each new frontier's
+    * out-edges. A bottom-up level tests frontier membership against a
+    * `long[]` bitmap of nV/64 words built from the frontier array (the
+    * reference's in-queue bitmap, bfs.hpp:1839-1967), and runs PARALLEL
+    * across the common pool above 1M edge-work ([[parallelWork]], the
+    * reference's OpenMP sections, bfs.hpp:2225): contiguous vertex
+    * ranges, each vertex written by exactly one thread. Top-down levels
+    * stay sequential (see [[topDown]]).
     */
   def bfs(root: Long): (Array[Int], Array[Int], Seq[(Int, Long)]) = {
     val nV = ids.length
     bfsInto(root, new Array[Int](nV), new Array[Int](nV))
+  }
+
+  private def degree(v: Int): Int = rowStarts(v + 1) - rowStarts(v)
+
+  /** Σ degree over `vs` — a frontier's out-edge count `m_f`. */
+  private def edgesOf(vs: Array[Int]): Long = {
+    var m = 0L
+    var i = 0
+    while (i < vs.length) { m += degree(vs(i)); i += 1 }
+    m
   }
 
   /** [[bfs]] into caller-provided work arrays (benchmark loops reuse
@@ -259,44 +277,84 @@ final class LocalCsr(val ids: Array[Long], val rowStarts: Array[Int],
     pred(v0) = v0
     depth(v0) = 0
     var frontier = Array(v0)
+    var mf = degree(v0).toLong
+    var mu = nbrs.length.toLong - mf
+    var prevNf = 0
+    var bottomUp = false
+    var bits: Array[Long] = null
     var level = 0
-    var visited = 1L
     val sizes = scala.collection.mutable.ArrayBuffer((0, 1L))
 
     while (frontier.nonEmpty) {
       level += 1
-      val bottomUp = frontier.length.toLong * Bfs.Beta > (nV - visited)
+      bottomUp = LocalCsr.nextBottomUp(bottomUp, mf, mu, frontier.length,
+        prevNf, nV)
       val next: Array[Int] =
         if (bottomUp) {
-          val unvisited = nV - visited
-          if (unvisited > parallelWork)
-            bottomUpParallel(pred, depth, level)
-          else bottomUpSeq(pred, depth, level)
-        } else {
-          var work = 0L
+          if (bits == null) bits = new Array[Long]((nV + 63) >>> 6)
+          else java.util.Arrays.fill(bits, 0L)
           var fi = 0
           while (fi < frontier.length) {
             val u = frontier(fi)
-            work += rowStarts(u + 1) - rowStarts(u)
+            bits(u >>> 6) |= 1L << u
             fi += 1
           }
-          if (work > parallelWork) topDownParallel(frontier, pred, depth, level)
-          else topDownSeq(frontier, pred, depth, level)
+          bottomUpLevel(bits, pred, depth, level, parallel = mu > parallelWork)
+        } else {
+          val next = topDown(frontier, pred, depth, level)
+          java.util.Arrays.sort(next)
+          next
         }
-      java.util.Arrays.sort(next)
+      prevNf = frontier.length
       frontier = next
-      if (frontier.nonEmpty) {
-        sizes += ((level, frontier.length.toLong))
-        visited += frontier.length
-      }
+      mf = edgesOf(next)
+      mu -= mf
+      if (frontier.nonEmpty) sizes += ((level, frontier.length.toLong))
     }
     (pred, depth, sizes.toSeq)
   }
 
-  /** Sequential top-down: frontier ascending ⇒ first writer = min parent
-    * (reference top-down, bfs.hpp:962-1137). */
-  private def topDownSeq(frontier: Array[Int], pred: Array[Int],
-                         depth: Array[Int], level: Int): Array[Int] = {
+  /** The kernel's per-level trace of one run, derived afterwards from its
+    * depth array by replaying [[LocalCsr.nextBottomUp]] — the kernel
+    * itself records nothing. One step per expanded frontier, the last
+    * one finding no new vertex. */
+  def levelTrace(depth: Array[Int]): Seq[LocalCsr.LevelStep] = {
+    val nV = ids.length
+    var maxD = -1
+    var v = 0
+    while (v < nV) { if (depth(v) > maxD) maxD = depth(v); v += 1 }
+    val nfAt = new Array[Long](maxD + 2)
+    val mfAt = new Array[Long](maxD + 2)
+    v = 0
+    while (v < nV) {
+      val d = depth(v)
+      if (d >= 0) { nfAt(d) += 1; mfAt(d) += degree(v) }
+      v += 1
+    }
+    val steps = scala.collection.mutable.ArrayBuffer.empty[LocalCsr.LevelStep]
+    var mu = nbrs.length.toLong - mfAt(0)
+    var bottomUp = false
+    var prevNf = 0L
+    var level = 1
+    while (level <= maxD + 1) {
+      val nf = nfAt(level - 1)
+      val mf = mfAt(level - 1)
+      bottomUp = LocalCsr.nextBottomUp(bottomUp, mf, mu, nf, prevNf, nV)
+      steps += LocalCsr.LevelStep(level, bottomUp, nf, mf, mu)
+      prevNf = nf
+      mu -= mfAt(level)
+      level += 1
+    }
+    steps.toSeq
+  }
+
+  /** Top-down, always sequential: frontier ascending ⇒ first writer = min
+    * parent (reference top-down, bfs.hpp:962-1137). Under the edge-count
+    * switch the heavy levels go bottom-up, and no top-down level of a
+    * Kronecker graph up to SCALE 20 (the largest under the kernel gate)
+    * reaches [[parallelWork]] edges. */
+  private def topDown(frontier: Array[Int], pred: Array[Int],
+                      depth: Array[Int], level: Int): Array[Int] = {
     val next = new scala.collection.mutable.ArrayBuilder.ofInt
     var fi = 0
     while (fi < frontier.length) {
@@ -313,105 +371,49 @@ final class LocalCsr(val ids: Array[Long], val rowStarts: Array[Int],
     next.result()
   }
 
-  /** Sequential bottom-up: scan unvisited rows ascending; first (= min,
-    * rows sorted) previous-level neighbor adopts the vertex (reference
-    * bottom-up, bfs.hpp:1839-1967). */
-  private def bottomUpSeq(pred: Array[Int], depth: Array[Int],
-                          level: Int): Array[Int] = {
-    val next = new scala.collection.mutable.ArrayBuilder.ofInt
+  /** One bottom-up level, on the common pool when `parallel`. The chunks
+    * are contiguous ascending vertex ranges, so their concatenation is
+    * ascending — the next frontier needs no sort. */
+  private def bottomUpLevel(bits: Array[Long], pred: Array[Int],
+                            depth: Array[Int], level: Int,
+                            parallel: Boolean): Array[Int] = {
     val nV = ids.length
-    var v = 0
-    while (v < nV) {
+    if (!parallel) bottomUpRange(bits, pred, depth, level, 0, nV)
+    else {
+      val nChunks = LocalCsr.Threads * 4
+      val buffers = new Array[Array[Int]](nChunks)
+      java.util.stream.IntStream.range(0, nChunks).parallel().forEach { c =>
+        buffers(c) = bottomUpRange(bits, pred, depth, level,
+          (nV.toLong * c / nChunks).toInt, (nV.toLong * (c + 1) / nChunks).toInt)
+      }
+      concat(buffers)
+    }
+  }
+
+  /** Bottom-up over unvisited vertices in [from, to): scan each row
+    * ascending; the first (= min, rows sorted) neighbor in the frontier
+    * bitmap adopts the vertex (reference bottom-up, bfs.hpp:1839-1967).
+    * Each vertex is written only by the thread that owns its range and
+    * the bitmap is read-only, so concurrent ranges are race-free. */
+  private def bottomUpRange(bits: Array[Long], pred: Array[Int],
+                            depth: Array[Int], level: Int,
+                            from: Int, to: Int): Array[Int] = {
+    val next = new scala.collection.mutable.ArrayBuilder.ofInt
+    var v = from
+    while (v < to) {
       if (depth(v) < 0) {
         var k = rowStarts(v)
         val end = rowStarts(v + 1)
-        var hit = false
-        while (k < end && !hit) {
+        while (k < end) {
           val u = nbrs(k)
-          if (depth(u) == level - 1) {
-            pred(v) = u; depth(v) = level; next += v; hit = true
-          }
-          k += 1
+          if ((bits(u >>> 6) & (1L << u)) != 0L) {
+            pred(v) = u; depth(v) = level; next += v; k = end
+          } else k += 1
         }
       }
       v += 1
     }
     next.result()
-  }
-
-  private def topDownParallel(frontier: Array[Int], pred: Array[Int],
-                              depth: Array[Int], level: Int): Array[Int] = {
-    val h = LocalCsr.IntArr
-    val nChunks = math.min(LocalCsr.Threads * 4, frontier.length)
-    val buffers = new Array[Array[Int]](nChunks)
-    java.util.stream.IntStream.range(0, nChunks).parallel().forEach { c =>
-      val b = new scala.collection.mutable.ArrayBuilder.ofInt
-      val from = (frontier.length.toLong * c / nChunks).toInt
-      val to = (frontier.length.toLong * (c + 1) / nChunks).toInt
-      var fi = from
-      while (fi < to) {
-        val u = frontier(fi)
-        var k = rowStarts(u)
-        val end = rowStarts(u + 1)
-        while (k < end) {
-          val v = nbrs(k)
-          // depth is monotonic (written once), so a plain read of a SET
-          // value is definitive; only the −1 case needs the CAS. Claim
-          // with a depth CAS (one winner buffers v), then CAS-min the
-          // parent: min commutes, so the result equals the sequential
-          // first-writer-ascending tree.
-          var dv = depth(v)
-          if (dv == -1) {
-            if (h.compareAndSet(depth, v, -1, level)) b += v
-            dv = h.getVolatile(depth, v).asInstanceOf[Int]
-          }
-          if (dv == level) {
-            var cur = h.getVolatile(pred, v).asInstanceOf[Int]
-            while ((cur == -1 || u < cur) &&
-              !h.compareAndSet(pred, v, cur, u)) {
-              cur = h.getVolatile(pred, v).asInstanceOf[Int]
-            }
-          }
-          k += 1
-        }
-        fi += 1
-      }
-      buffers(c) = b.result()
-    }
-    concat(buffers)
-  }
-
-  private def bottomUpParallel(pred: Array[Int], depth: Array[Int],
-                               level: Int): Array[Int] = {
-    val nV = ids.length
-    val nChunks = LocalCsr.Threads * 4
-    val buffers = new Array[Array[Int]](nChunks)
-    java.util.stream.IntStream.range(0, nChunks).parallel().forEach { c =>
-      val b = new scala.collection.mutable.ArrayBuilder.ofInt
-      val from = (nV.toLong * c / nChunks).toInt
-      val to = (nV.toLong * (c + 1) / nChunks).toInt
-      var v = from
-      while (v < to) {
-        // each v is written by exactly this thread; concurrent writes to
-        // OTHER vertices flip −1→level, never to level−1, so the frontier
-        // test is race-free
-        if (depth(v) < 0) {
-          var k = rowStarts(v)
-          val end = rowStarts(v + 1)
-          var hit = false
-          while (k < end && !hit) {
-            val u = nbrs(k)
-            if (depth(u) == level - 1) {
-              pred(v) = u; depth(v) = level; b += v; hit = true
-            }
-            k += 1
-          }
-        }
-        v += 1
-      }
-      buffers(c) = b.result()
-    }
-    concat(buffers)
   }
 
   private def concat(buffers: Array[Array[Int]]): Array[Int] = {
@@ -431,9 +433,27 @@ object LocalCsr {
   private[bfs] val Threads: Int =
     math.max(2, Runtime.getRuntime.availableProcessors())
 
-  /** VarHandle over Array[Int] elements for the parallel kernels' CAS. */
-  private[bfs] val IntArr: java.lang.invoke.VarHandle =
-    java.lang.invoke.MethodHandles.arrayElementVarHandle(classOf[Array[Int]])
+  /** One level of [[LocalCsr.levelTrace]]: the level it produced, its
+    * direction, and the frontier size / out-edges / unvisited edges the
+    * switch decided on. */
+  final case class LevelStep(level: Int, bottomUp: Boolean, nf: Long,
+                             mf: Long, mu: Long)
+
+  /** Top-down → bottom-up once the frontier's out-edges exceed 1/Alpha of
+    * the unvisited vertices' edges (Beamer et al., SC'12, α = 14). */
+  private[bfs] val Alpha = 14L
+
+  /** Bottom-up → top-down once the frontier is shrinking and holds fewer
+    * than 1/BetaVerts of the vertices (Beamer's β = 24). */
+  private[bfs] val BetaVerts = 24L
+
+  /** The kernel's direction for the next level: `mf` = frontier
+    * out-edges, `mu` = edges of the unvisited vertices, `nf` / `prevNf`
+    * = this and the previous frontier's size, `nV` = vertex count. */
+  private[bfs] def nextBottomUp(wasBottomUp: Boolean, mf: Long, mu: Long,
+                                nf: Long, prevNf: Long, nV: Long): Boolean =
+    if (!wasBottomUp) mf * Alpha > mu
+    else !(nf * BetaVerts < nV && nf < prevNf)
 
   /** Build from a symmetric loop-free edge DataFrame. One collect of the
     * edge pairs; dense ids assigned by sorted original id; adjacency rows

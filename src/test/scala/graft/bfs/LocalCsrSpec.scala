@@ -106,6 +106,7 @@ class LocalCsrSpec extends SparkSpec {
     val csr = LocalCsr.build(clean)
     val root = csr.ids(0)
     val (pSeq, dSeq, sSeq) = csr.bfs(root)
+    val saved = csr.parallelWork
     csr.parallelWork = 0L // force every level through the parallel path
     try {
       for (_ <- 1 to 3) { // racy code: repeat for confidence
@@ -114,7 +115,86 @@ class LocalCsrSpec extends SparkSpec {
         assert(dPar.toSeq === dSeq.toSeq)
         assert(sPar === sSeq)
       }
-    } finally csr.parallelWork = 65536L
+    } finally csr.parallelWork = saved
+  }
+
+  test("direction switch: Beamer's edge-count rule at its thresholds") {
+    // (case, wasBottomUp, m_f, m_u, n_f, prev n_f, nV, expected bottomUp)
+    val nV = 2400L
+    val table = Seq(
+      ("m_f·14 == m_u stays top-down", false, 10L, 140L, 5L, 1L, nV, false),
+      ("m_f·14 one above m_u goes bottom-up", false, 10L, 139L, 5L, 1L, nV, true),
+      ("top-down ignores frontier sizes", false, 1L, 100L, 2000L, 1L, nV, false),
+      ("n_f·24 == nV, shrinking, stays bottom-up", true, 0L, 0L, 100L, 200L, nV, true),
+      ("n_f·24 < nV, shrinking, returns top-down", true, 0L, 0L, 99L, 200L, nV, false),
+      ("n_f·24 < nV, growing, stays bottom-up", true, 0L, 0L, 99L, 50L, nV, true),
+      ("n_f·24 < nV, flat, stays bottom-up", true, 0L, 0L, 99L, 99L, nV, true),
+      ("bottom-up ignores edge counts", true, 1L, 1000L, 2000L, 1L, nV, true))
+    for ((label, was, mf, mu, nf, prevNf, n, want) <- table)
+      assert(LocalCsr.nextBottomUp(was, mf, mu, nf, prevNf, n) === want, label)
+  }
+
+  test("kernel equals the distributed loop on Kronecker graphs (SCALE 10, 12)") {
+    for (scale <- Seq(10, 12)) {
+      val raw = graft.gen.Kronecker.generate(spark, scale).persist()
+      try {
+        val csr = LocalCsr.buildFromRawPairs(LocalCsr.collectPairs(raw))
+        val nV = csr.nVerts
+        def dense(r: Long) = java.util.Arrays.binarySearch(csr.ids, r)
+        // the giant component is the one holding the max-degree vertex
+        val hub = (0 until nV).maxBy(v => csr.rowStarts(v + 1) - csr.rowStarts(v))
+        val (_, giant, _) = csr.bfs(csr.ids(hub))
+        val sampled = graft.gen.Kronecker.sampleRoots(16, csr.ids.last + 1,
+          v => dense(v) >= 0).toSeq
+        val outside = (0 until nV).find(giant(_) < 0).map(csr.ids(_))
+        val roots =
+          if (outside.isEmpty || sampled.exists(r => giant(dense(r)) < 0)) sampled
+          else sampled.init :+ outside.get
+        assert(roots.size === 16)
+        // the multi-root distributed loop: one level loop for all 16
+        // roots, per run the same tree as bfsMinParentDistributed (see
+        // "multi-root distributed loop" above)
+        val g = Bfs.prepare(EdgeOps.cleanEdges(raw))
+        val dist = try {
+          Bfs.bfsMinParentMultiDistributed(spark, g, roots).collect()
+            .groupBy(_.getLong(0)).map { case (run, rows) =>
+              run.toInt -> rows.map(r => (r.getLong(1), r.getLong(2),
+                if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
+            }
+        } finally g.unpersist()
+        val pred = new Array[Int](nV)
+        val depth = new Array[Int](nV)
+        val saved = csr.parallelWork
+        roots.zipWithIndex.foreach { case (r, run) =>
+          val label = s"SCALE $scale root $r"
+          val (p, d, sizes) = csr.bfs(r)
+          val rows = (0 until nV).map { v =>
+            (csr.ids(v), if (p(v) < 0) -1L else csr.ids(p(v)), d(v).toLong)
+          }.toSet
+          assert(rows === dist(run), s"$label: tree")
+          val distSizes = dist(run).toSeq.filter(_._3 >= 0)
+            .groupBy(_._3.toInt).map { case (l, vs) => (l, vs.size.toLong) }
+            .toSeq.sorted
+          assert(sizes === distSizes, s"$label: levelSizes")
+          csr.parallelWork = 0L
+          val (pPar, dPar, sPar) = try csr.bfs(r) finally csr.parallelWork = saved
+          assert(pPar.toSeq === p.toSeq && dPar.toSeq === d.toSeq &&
+            sPar === sizes, s"$label: parallel kernels")
+          // reused work arrays: the second run must not see the first
+          for (_ <- 1 to 2) {
+            val (pIn, dIn, sIn) = csr.bfsInto(r, pred, depth)
+            assert(pIn.toSeq === p.toSeq && dIn.toSeq === d.toSeq &&
+              sIn === sizes, s"$label: bfsInto on reused arrays")
+          }
+          val trace = csr.levelTrace(d)
+          assert(trace.map(t => (t.level - 1, t.nf)) === sizes,
+            s"$label: levelTrace frontiers")
+        }
+        if (outside.nonEmpty)
+          assert(roots.exists(r => giant(dense(r)) < 0),
+            s"SCALE $scale: a root outside the giant component")
+      } finally raw.unpersist()
+    }
   }
 
   test("csr-derived relational views equal the distributed operators") {

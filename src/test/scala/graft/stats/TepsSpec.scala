@@ -25,6 +25,30 @@ class TepsSpec extends SparkSpec {
     assert(r.getAs[Double]("nedge_mean") === 100.0)
   }
 
+  test("stat block aggregates in one stage: no Exchange, hand-computed row") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val implicits = spark.implicits
+    import implicits._
+    // four input partitions: a plain global aggregate would plan partial
+    // → Exchange SinglePartition → final
+    val rs = spark.sparkContext.parallelize(Seq(
+      (0L, 1.0, 0.0, 100.0), (1L, 2.0, 0.0, 400.0),
+      (2L, 3.0, 0.0, 300.0), (3L, 4.0, 0.0, 200.0)), 4)
+      .toDF("run", "bfs_time", "validate_time", "nedge")
+    val block = Teps.statBlock(rs)
+    val row = block.head()
+    val plan = block.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.isEmpty, plan.toString)
+    // times 1..4 and nedge 100..400 (as sorted) share the quartile
+    // formula; TEPS = 1 / mean(.01, .005, .01, .02) = 1 / .01125
+    val expected = Seq(1.0, 1.75, 2.5, 3.25, 4.0, 2.5, 1.290994,
+      100.0, 175.0, 250.0, 325.0, 400.0, 250.0, 129.099445, 88.888889)
+    assert(row.toSeq === expected)
+  }
+
   test("CLI result block mirrors the reference logfile format") {
     // reference get_statistics on [1,2,3,4]: quartiles use the
     // (x[(n-1)/4]+x[n/4])/2 indexing (mpi/logfile.h:36-40)
