@@ -195,6 +195,43 @@ object Profile {
     spark.stop()
   }
 
+  /** `runMain graft.bench.Profile gen [scale]`: the Kronecker generator
+    * three ways, 3 rounds each — alone on one thread (edges/s), as
+    * `generate().count()`, and as `generate().persist().count()` — so
+    * that generator CPU and the cache build inside a protocol's
+    * generation stage can be told apart. */
+  def profileGen(args: Array[String]): Unit = {
+    val scale = if (args.length > 1) args(1).toInt else 16
+    val nEdges = Kronecker.DefaultEdgeFactor << scale
+    val cores = Runtime.getRuntime.availableProcessors()
+    val (v0, v1) = Kronecker.scrambleVals(Kronecker.DefaultSeed1, Kronecker.DefaultSeed2)
+    for (round <- 1 to 3) {
+      val src = new Kronecker.Source(scale, Kronecker.DefaultSeed1,
+        Kronecker.DefaultSeed2, v0, v1)
+      val t0 = System.nanoTime()
+      var check = 0L
+      var i = 0L
+      while (i < nEdges) { val (a, b) = src.edge(i); check += a ^ b; i += 1 }
+      val s = (System.nanoTime() - t0) / 1e9
+      println(f"[profile] gen one thread #$round%-12s $s%.3f s " +
+        f"${nEdges / s / 1e6}%.2f M edges/s (checksum $check)")
+    }
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    for (round <- 1 to 3)
+      t(s"generate().count() #$round")(Kronecker.generate(spark, scale).count())
+    for (round <- 1 to 3) {
+      val df = Kronecker.generate(spark, scale)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      t(s"persist().count() #$round")(df.count())
+      df.unpersist(blocking = true)
+    }
+    spark.stop()
+  }
+
   /** `runMain graft.bench.Profile pagerank <sfDir>`: per-variant timing
     * of the distributed PageRank loop — attributes the FD floor to AQE
     * scheduling vs checkpoint cadence vs partition count. */
@@ -575,6 +612,7 @@ object Profile {
     if (args.headOption.contains("triangles")) { profileTriangles(args); return }
     if (args.headOption.contains("batched")) { profileBatched(args); return }
     if (args.headOption.contains("relscale")) { profileRelScale(args); return }
+    if (args.headOption.contains("gen")) { profileGen(args); return }
     val scale = if (args.nonEmpty) args(0).toInt else 18
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")

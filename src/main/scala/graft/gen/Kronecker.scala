@@ -14,14 +14,20 @@ import graft.rng.Mrg
  * skipped to offset i·2^64 (mid word = i) and the 4-way Bernoulli descent
  * consumes draws from there. That makes generation an embarrassingly
  * parallel scan — `spark.range(numEdges).mapPartitions(...)` — with no
- * shuffle, no state, and linear scaling in the number of executors.
+ * shuffle and linear scaling in the number of executors. Within a
+ * partition the scan's indices are consecutive, so [[Source]] steps one
+ * base state from edge i's stream to edge i+1's instead of re-skipping
+ * from the seed per edge.
  */
 object Kronecker {
-  val ANumerator = 5700
-  val BCNumerator = 1900
-  val Denominator = 10000
-  // Rejection threshold for modulo-bias-free sampling: 0xFFFFFFFF % 10000.
-  private val RejectLimit: Long = 0xFFFFFFFFL % Denominator
+  final val ANumerator = 5700
+  final val BCNumerator = 1900
+  final val Denominator = 10000
+  // Draws below 0xFFFFFFFF % 10000 are rejected. This is the reference's
+  // constant, derived for 32-bit draws; over the MRG's [0, 2^31-1) it does
+  // NOT remove the modulo bias (2^31-1-7295 is no multiple of 10000). It
+  // is kept for bit-compatibility with the reference's edge stream.
+  private final val RejectLimit = 0xFFFFFFFFL % Denominator
 
   val DefaultSeed1 = 2L
   val DefaultSeed2 = 3L
@@ -49,15 +55,14 @@ object Kronecker {
     v
   }
 
-  /** One draw in [0, 10000) without modulo bias, mapped to a quadrant:
-    * 1 = B, 2 = C, 0 = A, 3 = D (order per reference generate_4way_bernoulli,
-    * graph_generator.hpp:651-677). */
+  /** One draw in [0, 10000) above the rejection threshold, mapped to a
+    * quadrant: 1 = B, 2 = C, 0 = A, 3 = D (order per reference
+    * generate_4way_bernoulli, graph_generator.hpp:651-677). */
   private def quadrant(st: Mrg.State): Int = {
     var v = st.nextUint()
-    if (v < RejectLimit) {
-      while (v < RejectLimit) v = st.nextUint()
-    }
-    var r = (v % Denominator).toInt
+    while (v < RejectLimit) v = st.nextUint()
+    // v < 2^31-1: an Int remainder by a literal compiles to a multiply
+    var r = v.toInt % Denominator
     if (r < BCNumerator) return 1
     r -= BCNumerator
     if (r < BCNumerator) return 2
@@ -65,11 +70,10 @@ object Kronecker {
     if (r < ANumerator) 0 else 3
   }
 
-  /** R-MAT descent for edge `edgeIndex`; returns scrambled (src, dst). */
-  def makeEdge(scale: Int, edgeIndex: Long, seed1: Long, seed2: Long,
-               val0: Long, val1: Long): (Long, Long) = {
-    val st = Mrg.makeSeed(seed1, seed2)
-    st.skip(0L, edgeIndex, 0L)
+  /** R-MAT descent from `st` (positioned at the start of an edge's
+    * stream); returns the scrambled (src, dst). */
+  private def descend(st: Mrg.State, scale: Int,
+                      val0: Long, val1: Long): (Long, Long) = {
     var nverts = 1L << scale
     var baseSrc = 0L
     var baseTgt = 0L
@@ -87,11 +91,42 @@ object Kronecker {
     (scramble(baseSrc, scale, val0, val1), scramble(baseTgt, scale, val0, val1))
   }
 
+  /** R-MAT descent for edge `edgeIndex`; returns scrambled (src, dst). */
+  def makeEdge(scale: Int, edgeIndex: Long, seed1: Long, seed2: Long,
+               val0: Long, val1: Long): (Long, Long) = {
+    val st = Mrg.makeSeed(seed1, seed2)
+    st.skip(0L, edgeIndex, 0L)
+    descend(st, scale, val0, val1)
+  }
+
+  /** Edges for one scan: [[edge]] `(i)` equals [[makeEdge]] for any `i`.
+    * A base state sits at the start of the next index's stream; a call at
+    * that index draws from a copy and steps the base by one A^(2^64)
+    * application, and any other index re-skips the base from the seed. */
+  final class Source(scale: Int, seed1: Long, seed2: Long,
+                     val0: Long, val1: Long) {
+    private val base = Mrg.makeSeed(seed1, seed2)
+    private val st = base.copy()
+    private var next = 0L
+
+    def edge(i: Long): (Long, Long) = {
+      if (i != next) {
+        base.set(Mrg.makeSeed(seed1, seed2))
+        base.skip(0L, i, 0L)
+      }
+      st.set(base)
+      base.nextEdge()
+      next = i + 1
+      descend(st, scale, val0, val1)
+    }
+  }
+
   /**
    * Distributed generation: `edgefactor * 2^scale` edges as DataFrame
    * (src BIGINT, dst BIGINT). Pure narrow scan — partitions of the index
    * range generate independently; at cluster scale this saturates all cores
-   * with zero communication.
+   * with zero communication. Each partition streams its consecutive
+   * indices through one [[Source]].
    */
   def generate(spark: SparkSession, scale: Int,
                edgeFactor: Long = DefaultEdgeFactor,
@@ -101,7 +136,8 @@ object Kronecker {
     val (val0, val1) = scrambleVals(seed1, seed2)
     spark.range(0L, numEdges)
       .mapPartitions { iter =>
-        iter.map { i => makeEdge(scale, i, seed1, seed2, val0, val1) }
+        val src = new Source(scale, seed1, seed2, val0, val1)
+        iter.map(i => src.edge(i))
       }
       .toDF("src", "dst")
   }

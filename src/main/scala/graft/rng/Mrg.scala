@@ -22,11 +22,27 @@ package graft.rng
  * instead compute the same powers at class-load time by plain 5×5 modular
  * matrix exponentiation — a few hundred thousand mulmods, microseconds of JVM
  * time, and bit-identical results.
+ *
+ * Every product is reduced by Mersenne folding ([[mod]]), never by a
+ * 64-bit `%`: m = 2^31-1 makes 2^31 ≡ 1, so a division is two
+ * shift-and-adds and one conditional subtract. A scan over consecutive
+ * per-edge streams (offsets i·2^64, (i+1)·2^64, ...) steps from one
+ * edge's state to the next with one application of A^(2^64)
+ * ([[State.nextEdge]]) instead of re-skipping from the seed.
  */
 object Mrg {
-  val Mod: Long = 0x7FFFFFFFL // 2^31 - 1
-  val X: Long = 107374182L
-  val Y: Long = 104480L
+  final val Mod = 0x7FFFFFFFL // 2^31 - 1
+  final val X = 107374182L
+  final val Y = 104480L
+
+  /** x mod (2^31-1) for 0 ≤ x < 2^62, without a division: each fold
+    * (x & m) + (x >>> 31) keeps x's residue (2^31 ≡ 1) and two of them
+    * bring x under m + 2; one conditional subtract finishes. */
+  @inline def mod(x: Long): Long = {
+    var r = (x & Mod) + (x >>> 31)
+    r = (r & Mod) + (r >>> 31)
+    if (r >= Mod) r - Mod else r
+  }
 
   /** Dense 5×5 matrix over GF(2^31-1), row-major. */
   private type Mat = Array[Long]
@@ -54,7 +70,7 @@ object Mrg {
         var acc = 0L
         var k = 0
         while (k < 5) {
-          acc = (acc + a(i * 5 + k) * b(k * 5 + j)) % Mod
+          acc = mod(acc + mod(a(i * 5 + k) * b(k * 5 + j)))
           k += 1
         }
         r(i * 5 + j) = acc
@@ -87,14 +103,22 @@ object Mrg {
     table
   }
 
+  /** A^(2^64): the distance between consecutive per-edge streams. */
+  private lazy val edgeStride: Mat = skipMatrices(8)(1)
+
   /** Mutable 5-word PRNG state (values in [0, 2^31-1)). */
   final class State(
       var z1: Long, var z2: Long, var z3: Long, var z4: Long, var z5: Long) {
     def copy(): State = new State(z1, z2, z3, z4, z5)
 
+    /** Overwrites this state with `o`'s words. */
+    def set(o: State): Unit = {
+      z1 = o.z1; z2 = o.z2; z3 = o.z3; z4 = o.z4; z5 = o.z5
+    }
+
     /** One step of the raw recurrence; returns nothing (use nextUint). */
     private[Mrg] def step(): Unit = {
-      val zNew = (X * z1 + Y * z5) % Mod
+      val zNew = mod(X * z1 + Y * z5)
       z5 = z4; z4 = z3; z3 = z2; z2 = z1; z1 = zNew
     }
 
@@ -110,11 +134,15 @@ object Mrg {
     private def applyMat(m: Mat): Unit = {
       val v0 = z1; val v1 = z2; val v2 = z3; val v3 = z4; val v4 = z5
       def row(r: Int): Long =
-        (((m(r * 5) * v0) % Mod + (m(r * 5 + 1) * v1) % Mod + (m(r * 5 + 2) * v2) % Mod) % Mod +
-          ((m(r * 5 + 3) * v3) % Mod + (m(r * 5 + 4) * v4) % Mod) % Mod) % Mod
+        mod(mod(m(r * 5) * v0) + mod(m(r * 5 + 1) * v1) + mod(m(r * 5 + 2) * v2) +
+          mod(m(r * 5 + 3) * v3) + mod(m(r * 5 + 4) * v4))
       val n0 = row(0); val n1 = row(1); val n2 = row(2); val n3 = row(3); val n4 = row(4)
       z1 = n0; z2 = n1; z3 = n2; z4 = n3; z5 = n4
     }
+
+    /** Advance by 2^64 steps — from the start of edge i's stream
+      * (offset i·2^64) to edge i+1's; equals skip(0, 1, 0). */
+    def nextEdge(): Unit = applyMat(edgeStride)
 
     /** Advance the stream by the 192-bit count (high‖mid‖low). */
     def skip(high: Long, mid: Long, low: Long): Unit = {

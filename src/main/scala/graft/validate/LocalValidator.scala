@@ -11,23 +11,25 @@ import org.apache.spark.sql.DataFrame
  * edge list, each a scan that runs in parallel on every rank
  * (mpi/validate.hpp:507-802); at benchmark scales that list lives in
  * memory, and a DataFrame validation pass costs ~1.5 s of fixed job
- * overhead per run. This kernel collects the raw list ONCE (primitive
- * chunks), precomputes each edge's dense endpoints against the graph's
- * sorted vertex ids, and then validates a run's dense (pred, depth)
- * arrays in one pass over `availableProcessors() * 4` stripes on the
- * common pool, as [[graft.bfs.LocalCsr]]'s kernels do: each stripe
- * covers a slice of the vertices AND a slice of the raw edges and keeps
- * its own eight counters, which the caller's thread then sums. Long
- * addition is associative, so the counters are exactly those of a
+ * overhead per run. This kernel reduces the raw list ONCE, against the
+ * graph's sorted vertex ids, to its distinct undirected edges: rows
+ * `loStart` (nV+1 offsets) holding, per dense endpoint lo, its his above
+ * lo with each edge's raw multiplicity (both directions and repeats
+ * counted), plus one list of the single-vertex edges — self-loops, and
+ * edges whose other endpoint is outside the graph — with their counts
+ * per vertex. The raw list itself is not kept. The rows are derived from
+ * the raw list, never from the BFS's CSR, so validation stays
+ * independent of what it checks.
+ *
+ * A run's dense (pred, depth) arrays are then validated in one pass over
+ * the rows, in `availableProcessors() * 4` stripes on the common pool,
+ * as [[graft.bfs.LocalCsr]]'s kernels do: each stripe covers a range of
+ * lo (balanced by edges plus vertices) and a slice of the single-vertex
+ * list and keeps its own counters, which the caller's thread then sums.
+ * Long addition is associative, so the counters are exactly those of a
  * sequential pass — identical to [[Validator.validate]]
  * (LocalValidatorSpec proves equality on multi-stripe Kronecker lists,
  * including the SQL null-propagation corner cases).
- *
- * The pred-edge check looks (lo, hi) up in the distinct undirected raw
- * edges, kept as rows: `loStart` (nV+1 offsets) indexes the his of each
- * lo endpoint, sorted, so a lookup binary-searches one row, not the
- * whole edge set. The rows are derived from the raw list, never from
- * the BFS's CSR, so validation stays independent of what it checks.
  *
  * Counter semantics replicated exactly from the DataFrame queries:
  *  - root_errors:   error iff (pred ≠ root) OR (depth set AND ≠ 0) —
@@ -35,106 +37,52 @@ import org.apache.spark.sql.DataFrame
  *                   `when` treats as no-count.
  *  - depth_chain:   for reached non-root v: error iff parent depth NULL,
  *                   or v's depth set and ≠ parent depth + 1.
+ *  - pred_edge_missing: reached non-root vertices minus those whose
+ *                   (v, pred(v)) is a row edge; the row pass counts
+ *                   the latter, pred(hi) = lo or pred(lo) = hi, each
+ *                   endpoint only when it is not the root. A vertex's
+ *                   pred pair is unique, so it matches at most once.
  *  - edge checks:   per raw edge WITH multiplicity (self-loops included);
  *                   endpoint depth is NULL if the vertex is isolated
- *                   (absent from the cleaned graph) or unreached.
+ *                   (absent from the cleaned graph) or unreached. So a
+ *                   self-loop is a visit iff its vertex is reached, and an
+ *                   edge to outside the graph an error iff its other
+ *                   endpoint is.
  */
-final class LocalValidator(clean_ids: Array[Long], rawPairs: Array[Long]) {
+final class LocalValidator private (clean_ids: Array[Long],
+                                    rows: LocalValidator.Rows) {
 
-  /** Collects the raw list itself (primitive chunks). Prefer the primary
-    * constructor when the flat pair array already exists (e.g. from the
-    * construction stage) — the list then ships from the executors ONCE. */
+  /** Reduces the raw pair list (src, dst interleaved) to the rows; the
+    * array is not referenced after construction. */
+  def this(clean_ids: Array[Long], rawPairs: Array[Long]) =
+    this(clean_ids, LocalValidator.rowsOf(clean_ids, rawPairs))
+
+  /** Collects the raw list itself (primitive chunks). Prefer the
+    * pair-array constructor when the flat array already exists (e.g.
+    * from the construction stage) — the list then ships from the
+    * executors ONCE. */
   def this(clean_ids: Array[Long], rawEdges: DataFrame) =
     this(clean_ids, graft.bfs.LocalCsr.collectPairs(rawEdges))
 
-  private val nStripes = Runtime.getRuntime.availableProcessors() * 4
+  private val nStripes = LocalValidator.nStripes
   private val NCounters = 8
 
-  /** Start of stripe `st` of [0, n), which spans
-    * [bound(n, st), bound(n, st + 1)). */
-  private def bound(n: Int, st: Int): Int = (n.toLong * st / nStripes).toInt
-
-  /** Runs `body(stripe, from, to)` over the `nStripes` stripes of
-    * [0, n), in parallel on the common pool. */
-  private def forStripes(n: Int)(body: (Int, Int, Int) => Unit): Unit =
-    java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
-      body(st, bound(n, st), bound(n, st + 1))
-    }
-
-  // dense endpoint per raw edge; -1 = endpoint not in the cleaned graph
-  private val (edgeU, edgeV) = {
-    val nE = rawPairs.length / 2
-    val u = new Array[Int](nE)
-    val v = new Array[Int](nE)
-    // two binary searches per edge dominate construction otherwise
-    forStripes(nE) { (_, from, to) =>
-      var i = from
-      while (i < to) {
-        val s = java.util.Arrays.binarySearch(clean_ids, rawPairs(2 * i))
-        val d = java.util.Arrays.binarySearch(clean_ids, rawPairs(2 * i + 1))
-        u(i) = if (s < 0) -1 else s
-        v(i) = if (d < 0) -1 else d
-        i += 1
-      }
-    }
-    (u, v)
-  }
-
-  /** Distinct undirected raw edges (loops and endpoints outside the
-    * cleaned graph dropped) as rows — membership oracle for the
-    * pred-edge check: the his of lo sit sorted in
-    * `undirectedHi(loStart(lo) until loStart(lo + 1))`. */
-  private val (loStart, undirectedHi) = {
-    def kept(i: Int): Boolean = {
-      val a = edgeU(i); val c = edgeV(i)
-      a >= 0 && c >= 0 && a != c
-    }
-    // per-stripe counts → offsets → parallel fill of packed (lo, hi)
-    val nE = edgeU.length
-    val counts = new Array[Int](nStripes)
-    forStripes(nE) { (st, from, to) =>
-      var c = 0
-      var i = from
-      while (i < to) { if (kept(i)) c += 1; i += 1 }
-      counts(st) = c
-    }
-    val offs = counts.scanLeft(0)(_ + _)
-    val packed = new Array[Long](offs(nStripes))
-    forStripes(nE) { (st, from, to) =>
-      var w = offs(st)
-      var i = from
-      while (i < to) {
-        if (kept(i)) {
-          val a = edgeU(i); val c = edgeV(i)
-          packed(w) = (math.min(a, c).toLong << 32) | math.max(a, c)
-          w += 1
-        }
-        i += 1
-      }
-    }
-    java.util.Arrays.parallelSort(packed)
-    // in-place dedup, then split into row offsets + his
-    var n = 0
-    var j = 0
-    while (j < packed.length) {
-      if (n == 0 || packed(n - 1) != packed(j)) { packed(n) = packed(j); n += 1 }
-      j += 1
-    }
+  /** Stripe `st` covers lo ∈ [loBound(st), loBound(st + 1)): the cuts
+    * split loStart(v) + v, edges plus vertices before v, evenly. A row
+    * is never split, so one hub row can fill a stripe on its own. */
+  private val loBound: Array[Int] = {
     val nV = clean_ids.length
-    val start = new Array[Int](nV + 1)
-    val hi = new Array[Int](n)
-    j = 0
-    while (j < n) {
-      hi(j) = packed(j).toInt
-      start((packed(j) >>> 32).toInt + 1) += 1
-      j += 1
+    val total = rows.loStart(nV).toLong + nV
+    Array.tabulate(nStripes + 1) { st =>
+      val target = total * st / nStripes
+      var lo = 0; var hi = nV // smallest v with loStart(v) + v >= target
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (rows.loStart(mid).toLong + mid < target) lo = mid + 1 else hi = mid
+      }
+      lo
     }
-    var v = 0
-    while (v < nV) { start(v + 1) += start(v); v += 1 }
-    (start, hi)
   }
-
-  def nRawEdges: Int = edgeU.length
 
   /** Error counters + traversed-edge count for one run's dense kernel
     * output — same order as [[Validator.validate]]'s output row:
@@ -142,51 +90,122 @@ final class LocalValidator(clean_ids: Array[Long], rawPairs: Array[Long]) {
     *  pred_edge_missing, edge_depth, edge_visit_count). */
   def validate(pred: Array[Int], depth: Array[Int], rootDense: Int,
                nGlobalVerts: Long): Array[Long] = {
-    val nV = clean_ids.length
-    val nE = edgeU.length
+    val loStart = rows.loStart; val his = rows.hi; val mult = rows.mult
+    val single = rows.single; val nLoops = rows.nLoops; val nOut = rows.nOut
+    val nSingle = single.length
     val perStripe = new Array[Long](nStripes * NCounters)
-    forStripes(nV) { (st, vFrom, vTo) =>
+    java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
       var range = 0L; var rootE = 0L; var selfPar = 0L; var presence = 0L
-      var chain = 0L; var missing = 0L
-      var v = vFrom
+      var chain = 0L; var reached = 0L; var matched = 0L
+      var edgeDepth = 0L; var visits = 0L
+      var v = loBound(st)
+      val vTo = loBound(st + 1)
       while (v < vTo) {
         val p = pred(v)
+        val dv = depth(v)
         val pOrig = if (p < 0) -1L else clean_ids(p)
         if (pOrig < -1 || pOrig >= nGlobalVerts) range += 1
-        if (v == rootDense &&
-          (p != rootDense || (depth(v) != -1 && depth(v) != 0))) rootE += 1
+        if (v == rootDense && (p != rootDense || (dv != -1 && dv != 0))) rootE += 1
         if (v != rootDense && p == v) selfPar += 1
-        if ((p < 0) != (depth(v) == -1)) presence += 1
+        if ((p < 0) != (dv == -1)) presence += 1
         if (p >= 0 && v != rootDense) {
+          reached += 1
           val pd = depth(p)
-          if (pd == -1 || (depth(v) != -1 && depth(v) != pd + 1)) chain += 1
-          val lo = math.min(v, p)
-          if (java.util.Arrays.binarySearch(undirectedHi, loStart(lo),
-            loStart(lo + 1), math.max(v, p)) < 0) missing += 1
+          if (pd == -1 || (dv != -1 && dv != pd + 1)) chain += 1
+        }
+        var k = loStart(v)
+        val kTo = loStart(v + 1)
+        while (k < kTo) {
+          val h = his(k)
+          val dh = depth(h)
+          if (dv != -1 && dh != -1) {
+            if (math.abs(dv - dh) > 1) edgeDepth += mult(k) else visits += mult(k)
+          } else if ((dv == -1) != (dh == -1)) edgeDepth += mult(k)
+          if (pred(h) == v && h != rootDense) matched += 1
+          if (p == h && v != rootDense) matched += 1
+          k += 1
         }
         v += 1
       }
-      var edgeDepth = 0L; var visits = 0L
-      var i = bound(nE, st)
-      val eTo = bound(nE, st + 1)
-      while (i < eTo) {
-        val a = edgeU(i); val c = edgeV(i)
-        val da = if (a < 0) -1 else depth(a)
-        val dc = if (c < 0) -1 else depth(c)
-        if (da != -1 && dc != -1) {
-          if (math.abs(da - dc) > 1) edgeDepth += 1 else visits += 1
-        } else if ((da == -1) != (dc == -1)) edgeDepth += 1
+      var i = (nSingle.toLong * st / nStripes).toInt
+      val iTo = (nSingle.toLong * (st + 1) / nStripes).toInt
+      while (i < iTo) {
+        if (depth(single(i)) != -1) { visits += nLoops(i); edgeDepth += nOut(i) }
         i += 1
       }
       val o = st * NCounters
       perStripe(o) = range; perStripe(o + 1) = rootE
       perStripe(o + 2) = selfPar; perStripe(o + 3) = presence
-      perStripe(o + 4) = chain; perStripe(o + 5) = missing
+      perStripe(o + 4) = chain; perStripe(o + 5) = reached - matched
       perStripe(o + 6) = edgeDepth; perStripe(o + 7) = visits
     }
     val out = new Array[Long](NCounters)
     var k = 0
     while (k < perStripe.length) { out(k % NCounters) += perStripe(k); k += 1 }
     out
+  }
+}
+
+object LocalValidator {
+
+  private val nStripes = Runtime.getRuntime.availableProcessors() * 4
+
+  /** The distinct undirected edges between graph vertices as rows — the
+    * his of lo, ascending, in `hi(loStart(lo) until loStart(lo + 1))`,
+    * each with its raw multiplicity in `mult` — and the single-vertex
+    * edges as (vertex `single(i)`, self-loop count `nLoops(i)`, count of
+    * edges to outside the graph `nOut(i)`), one of the two counts zero —
+    * a vertex with both kinds has two entries. */
+  private final class Rows(val loStart: Array[Int], val hi: Array[Int],
+                           val mult: Array[Int], val single: Array[Int],
+                           val nLoops: Array[Int], val nOut: Array[Int])
+
+  private def rowsOf(ids: Array[Long], raw: Array[Long]): Rows = {
+    val nE = raw.length / 2
+    // one key per raw edge: lo << 32 | hi for an edge between graph
+    // vertices, v << 32 | v for a self-loop, v << 32 | 0xFFFFFFFF for an
+    // edge from v to outside the graph, and -1 for one with neither end
+    // in it; sorted, equal keys are one edge with its multiplicity
+    val keys = new Array[Long](nE)
+    java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
+      var i = (nE.toLong * st / nStripes).toInt
+      val to = (nE.toLong * (st + 1) / nStripes).toInt
+      while (i < to) {
+        val a = java.util.Arrays.binarySearch(ids, raw(2 * i))
+        val c = java.util.Arrays.binarySearch(ids, raw(2 * i + 1))
+        keys(i) =
+          if (a >= 0 && c >= 0) (math.min(a, c).toLong << 32) | math.max(a, c)
+          else if (a >= 0 || c >= 0) (math.max(a, c).toLong << 32) | 0xFFFFFFFFL
+          else -1L
+        i += 1
+      }
+    }
+    java.util.Arrays.parallelSort(keys)
+    val nV = ids.length
+    val loStart = new Array[Int](nV + 1)
+    val hi = Array.newBuilder[Int]; val mult = Array.newBuilder[Int]
+    val single = Array.newBuilder[Int]
+    val nLoops = Array.newBuilder[Int]; val nOut = Array.newBuilder[Int]
+    var j = 0
+    while (j < nE) {
+      val key = keys(j)
+      var m = 1
+      while (j + m < nE && keys(j + m) == key) m += 1
+      if (key >= 0) {
+        val lo = (key >>> 32).toInt
+        val h = key.toInt
+        if (h != lo && h != -1) {
+          hi += h; mult += m; loStart(lo + 1) += 1
+        } else {
+          val isLoop = h == lo
+          single += lo; nLoops += (if (isLoop) m else 0); nOut += (if (isLoop) 0 else m)
+        }
+      }
+      j += m
+    }
+    var v = 0
+    while (v < nV) { loStart(v + 1) += loStart(v); v += 1 }
+    new Rows(loStart, hi.result(), mult.result(), single.result(),
+      nLoops.result(), nOut.result())
   }
 }

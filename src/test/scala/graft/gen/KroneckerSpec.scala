@@ -63,4 +63,33 @@ class KroneckerSpec extends SparkSpec {
     val eTiny = Kronecker.sampleRoots(16, 8, Set(1L, 2L, 4L))
     assert(dTiny.sameElements(eTiny))
   }
+
+  test("generate equals makeEdge at every index, across 7 partitions") {
+    val (v0, v1) = Kronecker.scrambleVals(2, 3)
+    val session = spark.newSession()
+    session.conf.set("spark.sql.leafNodeDefaultParallelism", "7")
+    for (scale <- Seq(10, 12)) {
+      val df = Kronecker.generate(session, scale)
+      assert(df.rdd.getNumPartitions === 7)
+      val edges = df.collect()
+      assert(edges.length === 16 << scale)
+      for (i <- edges.indices) {
+        val e = (edges(i).getLong(0), edges(i).getLong(1))
+        if (e != Kronecker.makeEdge(scale, i, 2, 3, v0, v1))
+          fail(s"scale $scale edge $i: $e")
+      }
+    }
+  }
+
+  test("the streamed source equals makeEdge on random-order indices") {
+    val (v0, v1) = Kronecker.scrambleVals(7, 9)
+    val src = new Kronecker.Source(14, 7, 9, v0, v1)
+    val rnd = new scala.util.Random(14)
+    // jumps, repeats, runs of consecutive indices, and index 0 after others
+    val idx = Seq.fill(300)(rnd.nextInt(1 << 18).toLong).flatMap { i =>
+      if (rnd.nextInt(4) == 0) (i until i + 1 + rnd.nextInt(5)) else Seq(i)
+    } ++ Seq(0L, 0L, 1L, 5L, 5L)
+    for (i <- idx)
+      assert(src.edge(i) === Kronecker.makeEdge(14, i, 7, 9, v0, v1), s"i=$i")
+  }
 }

@@ -1,5 +1,6 @@
 package graft.validate
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.bfs.{Bfs, LocalCsr}
@@ -18,6 +19,130 @@ class LocalValidatorSpec extends SparkSpec {
       (ids(i), if (pred(i) < 0) -1L else ids(pred(i)),
         if (depth(i) < 0) None else Some(depth(i).toLong))
     }.toDF("vertex", "pred", "depth")
+  }
+
+  /** The relational plan's counters, forced past the kernel gate. */
+  private def relational(raw: DataFrame, ids: Array[Long], p: Array[Int],
+                         d: Array[Int], root: Long, nGlobal: Long): Seq[Long] = {
+    spark.conf.set("spark.graft.localBfsMaxEdges", "0")
+    val row = try Validator.validate(spark, raw, denseTreeDf(ids, p, d), root,
+      nGlobal).head()
+    finally spark.conf.unset("spark.graft.localBfsMaxEdges")
+    (0 until row.length).map(row.getLong)
+  }
+
+  /** A small raw list (loops and repeats as given), its CSR, the kernel
+    * validator, and a check of the kernel's counters against the
+    * relational plan's on any (pred, depth) over the CSR's vertices. */
+  private final class Case(pairs: Seq[(Long, Long)]) {
+    val raw: DataFrame = {
+      val s = spark; import s.implicits._
+      pairs.toDF("src", "dst")
+    }
+    val flat: Array[Long] = pairs.flatMap { case (a, b) => Seq(a, b) }.toArray
+    val csr: LocalCsr = LocalCsr.buildFromRawPairs(flat)
+    val lv = new LocalValidator(csr.ids, flat)
+    val nGlobal: Long = flat.max + 1
+    def dense(v: Long): Int = java.util.Arrays.binarySearch(csr.ids, v)
+    def bfs(root: Long): (Array[Int], Array[Int]) = {
+      val (p, d, _) = csr.bfs(root); (p, d)
+    }
+    def check(p: Array[Int], d: Array[Int], root: Long, label: String): Seq[Long] = {
+      val local = lv.validate(p, d, dense(root), nGlobal).toSeq
+      assert(local === relational(raw, csr.ids, p, d, root, nGlobal), label)
+      local
+    }
+  }
+
+  test("repeated edges count with their multiplicity, in both directions") {
+    // 0-1 three times each way, 1-2 once, 2-3 three times one way
+    val c = new Case(Seq.fill(3)(Seq((0L, 1L), (1L, 0L))).flatten ++
+      Seq((1L, 2L)) ++ Seq.fill(3)((3L, 2L)))
+    val (p, d) = c.bfs(0L)
+    assert(c.check(p, d, 0L, "valid tree") === Seq(0, 0, 0, 0, 0, 0, 0, 10))
+    val d2 = d.clone(); d2(c.dense(3)) += 2
+    assert(c.check(p, d2, 0L, "wrong depth on a repeated edge")(6) === 3L)
+  }
+
+  test("self-loops: on a reached, an unreached and a loop-only vertex") {
+    // component {0, 1, 2} with a loop on 1, component {5, 6} with a loop
+    // on 5, and vertex 9 whose only edge is its loop (not in the graph)
+    val c = new Case(Seq((0L, 1L), (1L, 2L), (2L, 0L), (1L, 1L), (1L, 1L),
+      (5L, 6L), (5L, 5L), (9L, 9L)))
+    assert(c.dense(9L) < 0)
+    val (p, d) = c.bfs(0L)
+    val valid = c.check(p, d, 0L, "valid tree")
+    assert(valid === Seq(0, 0, 0, 0, 0, 0, 0, 5))
+    // a self-parent on the looped vertex is still a missing pred edge
+    val p2 = p.clone(); p2(c.dense(1L)) = c.dense(1L)
+    assert(c.check(p2, d, 0L, "self parent on a looped vertex")(5) === 1L)
+    // reaching the looped vertex 5 without its component: its loop
+    // becomes a visit, its edge to 6 a depth error
+    val p3 = p.clone(); val d3 = d.clone()
+    p3(c.dense(5L)) = c.dense(0L); d3(c.dense(5L)) = 1
+    c.check(p3, d3, 0L, "unreached loop reached")
+  }
+
+  test("a 2-cycle pred corruption matches the relational plan") {
+    val c = new Case(Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)))
+    val (p, d) = c.bfs(0L)
+    val (a, b) = (c.dense(2L), c.dense(3L))
+    val p2 = p.clone(); p2(a) = b; p2(b) = a
+    val out = c.check(p2, d, 0L, "2-cycle")
+    assert(out(5) === 0L && out(4) > 0L, out) // 2-3 is an edge: chain errors only
+    val (x, y) = (c.dense(2L), c.dense(4L)) // no 2-4 edge
+    val p3 = p.clone(); p3(x) = y; p3(y) = x
+    assert(c.check(p3, d, 0L, "2-cycle on a non-edge")(5) === 2L)
+  }
+
+  test("a hub row longer than one stripe's share of the edges") {
+    val nStripes = Runtime.getRuntime.availableProcessors() * 4
+    // vertex 0 holds the row of every spoke: more than half the edges
+    val spokes = (1L to 40L * nStripes).map(v => (0L, v))
+    val tail = (1L until 10L * nStripes).map(v => (v, v + 1))
+    val c = new Case(spokes ++ tail ++ Seq((7L, 7L)))
+    val (p, d) = c.bfs(0L)
+    assert(c.check(p, d, 0L, "valid tree").init.forall(_ == 0L))
+    val far = c.dense(40L * nStripes)
+    val d2 = d.clone(); d2(far) = 3
+    c.check(p, d2, 0L, "wrong depth on a spoke")
+    val p2 = p.clone(); p2(far) = c.dense(5L) // 5 is no neighbour of far
+    assert(c.check(p2, d, 0L, "missing edge into the hub's stripe")(5) === 1L)
+    // the root's pred moved onto a neighbour in its own row, then onto
+    // one whose row holds the root: never a matched pred edge
+    val p3 = p.clone(); p3(c.dense(0L)) = c.dense(1L)
+    c.check(p3, d, 0L, "root pred moved up")
+    // rooted inside the tail: the hub is reached at depth > 0
+    val (pt, dt) = c.bfs(5L)
+    c.check(pt, dt, 5L, "valid tree from the tail")
+    val pt2 = pt.clone(); pt2(c.dense(5L)) = c.dense(4L)
+    c.check(pt2, dt, 5L, "root pred moved down")
+  }
+
+  test("an edge to a vertex outside the tree counts as the plan counts it") {
+    val s = spark; import s.implicits._
+    val raw = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 3L), (4L, 5L)).toDF("src", "dst")
+    // vertex 3 is left out of the tree: 2-3 has one NULL-depth side
+    val tree = Seq((0L, 0L, Some(0L)), (1L, 0L, Some(1L)), (2L, 1L, Some(2L)),
+      (4L, -1L, None), (5L, -1L, None)).toDF("vertex", "pred", "depth")
+    val gated = Validator.validate(spark, raw, tree, 0L, 6L).head()
+    spark.conf.set("spark.graft.localBfsMaxEdges", "0")
+    val dist = try Validator.validate(spark, raw, tree, 0L, 6L).head()
+    finally spark.conf.unset("spark.graft.localBfsMaxEdges")
+    assert((0 until gated.length).map(gated.getLong) ===
+      (0 until dist.length).map(dist.getLong))
+    assert(gated.getLong(6) === 1L)
+  }
+
+  test("the validator holds no reference to the raw pair array") {
+    val flat = Array(0L, 1L, 1L, 2L, 2L, 0L, 1L, 1L)
+    val lv = new LocalValidator(LocalCsr.buildFromRawPairs(flat).ids, flat)
+    val held = classOf[LocalValidator].getDeclaredFields.toSeq.map { f =>
+      f.setAccessible(true); f.getName -> f.get(lv)
+    }
+    assert(held.nonEmpty)
+    for ((name, value) <- held)
+      assert(!(value.asInstanceOf[AnyRef] eq flat), s"field $name holds the raw pairs")
   }
 
   test("local validator equals DataFrame validator on kernel trees and corruptions") {
