@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.bench.{Json, Recorder, Work}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * then runs the full Graph500 protocol (generate → construct → N
@@ -9,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * stdout and parses a JSON line out of that tail):
   *  1. the COMPLETE result object — per-query map, cold pass, every
   *     protocol block, per-phase WORK metrics (spill/shuffle/CPU/GC
-  *     from a task-metrics listener; on a steal-prone box wall time is
-  *     the noisy channel, work metrics are a property of the plan) —
+  *     from the span recorder, bench.Trace; on a steal-prone box wall
+  *     time is the noisy channel, work metrics are a property of the
+  *     plan) —
   *     is written to BENCH_FULL.json (SPARK_GRAFT_BENCH_OUT) and also
   *     printed in full for the log;
   *  2. the LAST line printed is a compact (<1900 char) summary — total,
@@ -19,25 +23,6 @@ import org.apache.spark.sql.SparkSession
   * The reference's result block is likewise a complete machine-readable
   * record (mpi/logfile.h:46-107). */
 object Bench {
-
-  /** Cumulative task-metrics counters (cluster-wide totals since
-    * registration). Wall clock on a shared box swings run-to-run; these
-    * are a property of the executed plan. */
-  final case class Work(tasks: Long, taskMs: Long, cpuNs: Long, gcMs: Long,
-                        spillMem: Long, spillDisk: Long,
-                        shufWrite: Long, shufRead: Long) {
-    def -(o: Work): Work = Work(tasks - o.tasks, taskMs - o.taskMs,
-      cpuNs - o.cpuNs, gcMs - o.gcMs, spillMem - o.spillMem,
-      spillDisk - o.spillDisk, shufWrite - o.shufWrite, shufRead - o.shufRead)
-    private def r(x: Double) = math.rint(x * 1000) / 1000
-    def json: String =
-      s"""{"tasks":$tasks,"task_s":${r(taskMs / 1e3)},""" +
-        s""""cpu_s":${r(cpuNs / 1e9)},"gc_s":${r(gcMs / 1e3)},""" +
-        s""""spill_mem_gb":${r(spillMem / 1e9)},""" +
-        s""""spill_disk_gb":${r(spillDisk / 1e9)},""" +
-        s""""shuf_write_gb":${r(shufWrite / 1e9)},""" +
-        s""""shuf_read_gb":${r(shufRead / 1e9)}}"""
-  }
 
   /** Core count of the main run (SPARK_GRAFT_CPUS unset). */
   val DefaultCpus = "32"
@@ -49,10 +34,6 @@ object Bench {
     * it. */
   private[graft] def writesLegacyCopy(outPath: String, cpus: String): Boolean =
     outPath != "BENCH_FULL.json" && cpus == DefaultCpus
-
-  /** NaN/Infinity → 0.0 (bare non-finite literals are invalid JSON). */
-  private[graft] def finite(x: Double): Double =
-    if (x.isNaN || x.isInfinite) 0.0 else x
 
   /** Host /proc/stat cpu counters (ticks): (busy = user+nice+system,
     * steal, total incl. idle/iowait). The STEAL channel is the one that
@@ -120,95 +101,6 @@ object Bench {
     } finally pool.shutdown()
   }
 
-  final class WorkMeter(sc: org.apache.spark.SparkContext) {
-    private val a = Array.fill(8)(new java.util.concurrent.atomic.AtomicLong)
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          a(0).incrementAndGet(); a(1).addAndGet(m.executorRunTime)
-          a(2).addAndGet(m.executorCpuTime); a(3).addAndGet(m.jvmGCTime)
-          a(4).addAndGet(m.memoryBytesSpilled); a(5).addAndGet(m.diskBytesSpilled)
-          a(6).addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          a(7).addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        }
-      }
-    })
-    /** Drain the async listener bus, then read the counters. */
-    def read(): Work = {
-      Thread.sleep(1200)
-      Work(a(0).get, a(1).get, a(2).get, a(3).get,
-        a(4).get, a(5).get, a(6).get, a(7).get)
-    }
-  }
-
-  /** Per-JOB-GROUP work attribution (the per-QUERY channel the per-phase
-    * [[WorkMeter]] cannot give): the timed pass wraps each query in
-    * `setJobGroup(tag, …)`; every job started under the group maps its
-    * stages here, and task-end metrics accumulate per tag. Wall clock on
-    * a contended box attributes scheduler WAIT to whichever query was
-    * running; task/CPU/shuffle per query are properties of the executed
-    * plan, so an r→r+1 regression is decidable per query even inside a
-    * noisy window (the reference likewise times every run individually —
-    * mpi/main.cc:39, mpi/logfile.h:109-124). Caveats: a stage shared
-    * with (and executed by) an earlier un-grouped job is attributed to
-    * that earlier job; shared lazy intermediates land on their first
-    * consumer, exactly as wall time does. */
-  final class GroupMeter(sc: org.apache.spark.SparkContext) {
-    private val stageToGroup =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    private val acc = new java.util.concurrent.ConcurrentHashMap[
-      String, Array[java.util.concurrent.atomic.AtomicLong]]()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(j.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null && g.nonEmpty)
-          j.stageIds.foreach(sid => stageToGroup.put(sid, g))
-      }
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val g = stageToGroup.get(e.stageId)
-        val m = e.taskMetrics
-        if (g != null && m != null) {
-          val a = acc.computeIfAbsent(g, _ =>
-            Array.fill(8)(new java.util.concurrent.atomic.AtomicLong))
-          a(0).incrementAndGet(); a(1).addAndGet(m.executorRunTime)
-          a(2).addAndGet(m.executorCpuTime); a(3).addAndGet(m.jvmGCTime)
-          a(4).addAndGet(m.memoryBytesSpilled); a(5).addAndGet(m.diskBytesSpilled)
-          a(6).addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          a(7).addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        }
-      }
-    })
-    /** Drain the async listener bus, then snapshot every group: poll
-      * until two consecutive snapshots agree (bounded ~6 s) — a loaded
-      * box can lag the bus past any fixed sleep, silently
-      * under-attributing work. KNOWN GAP: broadcast-exchange jobs run
-      * on Spark's shared exchange thread pool, whose threads may not
-      * carry the caller's job group — those stages (small scalar
-      * broadcast builds) attribute to no group. */
-    def read(): Map[String, Work] = {
-      import scala.jdk.CollectionConverters._
-      def snap(): Map[String, Work] = acc.asScala.map { case (g, a) =>
-        g -> Work(a(0).get, a(1).get, a(2).get, a(3).get,
-          a(4).get, a(5).get, a(6).get, a(7).get)
-      }.toMap
-      var prev = snap()
-      var polls = 0
-      while (polls < 20) {
-        Thread.sleep(300)
-        val cur = snap()
-        if (cur == prev) return cur
-        prev = cur
-        polls += 1
-      }
-      prev
-    }
-  }
-
   /** Runs `tasks` on `threads` daemon threads (a hung task cannot pin
     * the JVM at exit) and waits at most `timeout` for all of them. On
     * timeout the queued tasks are dropped and the running ones
@@ -229,6 +121,125 @@ object Bench {
     } finally pool.shutdown()
   }
 
+  /** One Graph500 block of the artifact: its full record and the summary
+    * the compact line carries. */
+  private[graft] final case class Block(full: ListMap[String, Any],
+                                        compact: ListMap[String, Any])
+
+  /** Everything a bench run measured; [[artifact]] and [[compactLine]]
+    * render it. `queries` is the steady state (min over `passes`) and
+    * `queriesCold` pass 1; a query that threw in any pass is only in
+    * `failed` (name → `Class: message`). `work` is per phase in run order;
+    * `host` is the /proc/stat (busy, steal, total) ticks over the run. */
+  private[graft] final case class Outcome(
+      sfDir: String, outPath: String, passes: Int,
+      queries: ListMap[String, Double], queriesCold: ListMap[String, Double],
+      streaming: ListMap[String, Double], failed: ListMap[String, String],
+      warmup: Option[(String, Double)], blocks: Seq[(String, Block)],
+      work: Seq[(String, Work)], queriesWork: Map[String, Work],
+      queriesWorkCold: Map[String, Work], streamingWork: Map[String, Work],
+      calPre: (Double, Double), calPost: (Double, Double), calThreads: Int,
+      host: Option[(Long, Long, Long)])
+
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+
+  private def stealPct(busy: Long, steal: Long): Double =
+    r3(100.0 * steal / math.max(busy, 1L))
+
+  private def when(c: Boolean)(kv: (String, Any)*): ListMap[String, Any] =
+    if (c) ListMap(kv: _*) else ListMap.empty
+
+  /** The complete result object written to the artifact file. */
+  private[graft] def artifact(o: Outcome): ListMap[String, Any] = {
+    def works(m: Map[String, Work]) =
+      ListMap(m.toSeq.sortBy(_._1).map { case (k, w) => k -> w.fields }: _*)
+    ListMap[String, Any]("metric" -> "total", "value" -> o.queries.values.sum,
+      "unit" -> "sec", "queries" -> o.queries, "sf" -> o.sfDir) ++
+      when(o.passes > 1 && o.queriesCold.nonEmpty)(
+        "queries_cold" -> o.queriesCold, "passes" -> o.passes) ++
+      when(o.streaming.nonEmpty)("queries_streaming" -> o.streaming,
+        "streaming_total_sec" -> o.streaming.values.sum) ++
+      ListMap("queries_failed" -> o.failed) ++
+      o.warmup.toSeq.flatMap { case (dir, sec) =>
+        Seq("warmup_sf" -> dir, "warmup_sec" -> sec) } ++
+      o.blocks.map { case (k, b) => k -> b.full } ++
+      when(o.work.nonEmpty)("work" ->
+        ListMap(o.work.map { case (t, w) => t -> w.fields }: _*)) ++
+      when(o.queriesWork.nonEmpty)("queries_work" -> works(o.queriesWork)) ++
+      when(o.queriesWorkCold.nonEmpty)(
+        "queries_work_cold" -> works(o.queriesWorkCold)) ++
+      when(o.streamingWork.nonEmpty)(
+        "queries_streaming_work" -> works(o.streamingWork)) ++
+      ListMap("calibration" -> ListMap(
+        "pre" -> ListMap("wall_s" -> r3(o.calPre._1), "cpu_s" -> r3(o.calPre._2)),
+        "post" -> ListMap("wall_s" -> r3(o.calPost._1), "cpu_s" -> r3(o.calPost._2)),
+        "threads" -> o.calThreads, "kernel" -> "xorshift-fill+sort 2M longs x2")) ++
+      // host steal over the WHOLE bench window: the decisive regime gauge
+      // (see procStat) — steal_pct_of_busy ≳ 2-3% marks an inflated
+      // window whose per-query cpu diffs must not be trusted
+      o.host.map { case (busy, steal, total) =>
+        "host" -> ListMap("busy_ticks" -> busy, "steal_ticks" -> steal,
+          "total_ticks" -> total, "steal_pct_of_busy" -> stealPct(busy, steal))
+      }
+  }
+
+  /** The compact tail line (< ~1950 chars), printed LAST so that a
+    * capture keeping only the last ~2000 chars of stdout still parses it:
+    * headline total, the slowest queries, each block's key numbers,
+    * per-phase work. Everything else is in the artifact file ("full"
+    * key). */
+  private[graft] def compactLine(o: Outcome): ListMap[String, Any] =
+    ListMap[String, Any]("metric" -> "total", "value" -> r3(o.queries.values.sum),
+      "unit" -> "sec", "sf" -> o.sfDir, "full" -> o.outPath,
+      "n_queries" -> o.queries.size, "n_failed" -> o.failed.size,
+      "slowest" -> ListMap(o.queries.toSeq.sortBy(-_._2).take(10)
+        .map { case (k, v) => k -> r3(v) }: _*)) ++
+      when(o.streaming.nonEmpty)(
+        "streaming_total_sec" -> r3(o.streaming.values.sum)) ++
+      o.warmup.map { case (_, sec) => "warmup_sec" -> r3(sec) } ++
+      ListMap("cal_cpu_s" -> Seq(r3(o.calPre._2), r3(o.calPost._2))) ++
+      o.host.map { case (busy, steal, _) => "steal_pct" -> stealPct(busy, steal) } ++
+      o.blocks.map { case (k, b) => k -> b.compact } ++
+      when(o.work.nonEmpty)("work" -> ListMap(o.work.map { case (t, w) =>
+        t -> ListMap("task_s" -> r3(w.taskMs / 1e3), "cpu_s" -> r3(w.cpuNs / 1e9),
+          "spill_gb" -> r3((w.spillMem + w.spillDisk) / 1e9),
+          "shw_gb" -> r3(w.shufWrite / 1e9))
+      }: _*))
+
+  /** Times each query of `sel` once, each in a child span
+    * `<tag>:<name>`. A query that throws is a failure, never a result:
+    * its first error (`Class: message`) goes to `failed` and it gets no
+    * time. */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      rec: Recorder, tag: String,
+      sel: Map[String, (SparkSession, String) => DataFrame],
+      failed: mutable.Map[String, String]): ListMap[String, Double] =
+    ListMap.from(sel.flatMap { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        rec.span(s"$tag:$name")(fn(spark, sfDir).count())
+        Some(name -> (System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        failed.getOrElseUpdate(name, s"${e.getClass.getSimpleName}: " +
+          String.valueOf(e.getMessage).take(300))
+        None
+      }
+    })
+
+  /** (steady state, cold) per-query times over the timed passes: the min
+    * over passes, and pass 1 (shared-intermediate builds land on their
+    * first consumer) — recorded both, so the warm-cache min is never
+    * silently compared against cold baselines. A query that failed in
+    * any pass is in neither. */
+  private[graft] def steadyAndCold(passes: Seq[ListMap[String, Double]],
+      failed: scala.collection.Map[String, String])
+      : (ListMap[String, Double], ListMap[String, Double]) = {
+    val cold = passes.headOption.getOrElse(ListMap.empty[String, Double])
+      .filter(kv => !failed.contains(kv._1))
+    (cold.map { case (q, t) => q -> passes.tail.map(_(q)).foldLeft(t)(math.min) },
+      cold)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
@@ -236,42 +247,29 @@ object Bench {
     val nRoots = sys.env.getOrElse("SPARK_GRAFT_ROOTS", "16").toInt
     val g500On = sys.env.getOrElse("SPARK_GRAFT_G500", "1") != "0"
     val queriesOn = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "1") != "0"
-    val adaptive = sys.env.getOrElse("SPARK_GRAFT_ADAPTIVE", "1") != "0"
-    // hybrid-executor gate override (0 = force the distributed paths)
-    val localMax = sys.env.get("SPARK_GRAFT_LOCAL_MAX")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // NOTE measured, not guessed: forcing size-based AQE coalescing
+      // AQE and the broadcast threshold stay at Spark's defaults. NOTE
+      // measured, not guessed: forcing size-based AQE coalescing
       // (parallelismFirst=false) or a 64 MB auto-broadcast threshold both
       // LOSE here — mid-size (~100 MB) join stages collapse to one task /
       // pay repeated broadcast builds. Defaults win; keep them.
-      .config("spark.sql.adaptive.enabled", adaptive)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    localMax.foreach(v => Gates.localBfsMaxEdges.set(spark, v.toLong))
     // SPARK_GRAFT_FORCE_DISTRIBUTED=1: zero every hybrid gate (see Verify)
     if (sys.env.getOrElse("SPARK_GRAFT_FORCE_DISTRIBUTED", "0") == "1")
       Gates.forceDistributed(spark)
-    // SPARK_GRAFT_BFS2D=RxC: time the 2D-grid distributed BFS layout
-    sys.env.get("SPARK_GRAFT_BFS2D")
-      .foreach(g => spark.conf.set("spark.graft.bfs2dGrid", g))
     // SPARK_GRAFT_CONF="k=v;k=v": arbitrary session-conf overrides
     bench.Main.applyConfOverrides(spark)
 
-    // Per-phase work metrics (spill/shuffle/CPU/GC): `lap(tag)` closes
-    // the phase that just ran and opens the next one.
-    val meter = new WorkMeter(spark.sparkContext)
-    val work = scala.collection.mutable.LinkedHashMap.empty[String, Work]
-    var lastWork = meter.read()
-    def lap(tag: String): Unit = {
-      val now = meter.read()
-      work(tag) = now - lastWork
-      lastWork = now
-    }
+    // Every phase is a top-level span, every timed query or replay a
+    // child span (p<pass>:<query>, st:<query>); work is read from the
+    // span totals after one bus drain at the end of the run.
+    val rec = new Recorder(spark.sparkContext)
 
     // dev knob: SPARK_GRAFT_ONLY=q7_bfs,dd_minhash times just those queries
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -287,17 +285,19 @@ object Bench {
       System.gc(); Thread.sleep(400); System.gc(); Thread.sleep(100)
     }
 
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
-    def g4(x: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4g", Double.box(x))
-    // headline TEPS fields must stay valid JSON even when a degenerate
-    // protocol run yields NaN/Infinity (bare NaN is not JSON, and the
-    // tail line is exactly what the driver parses) — same
-    // non-finite-to-0.0 rule the stat_block fields already get
-    def fin(x: Double): Double = Bench.finite(x)
+    def g4(x: Double): Double =
+      BigDecimal(Json.finite(x)).round(new java.math.MathContext(4)).toDouble
 
-    // One sequential (protocol-exact) Graph500 block: (full JSON object,
-    // compact summary object for the tail-parseable line).
+    // full Graph500 result block (reference key set, mpi/logfile.h:59-100);
+    // stddev_samp is NULL for a single run
+    def statFields(s: bench.Graph500.Summary): ListMap[String, Any] = {
+      val row = bench.Graph500.statBlock(spark, s).head()
+      ListMap(row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
+        f -> (if (row.isNullAt(i)) 0.0 else row.getDouble(i))
+      }: _*)
+    }
+
+    // One sequential (protocol-exact) Graph500 block.
     // SPARK_GRAFT_CHECKPOINT=<path>: per-run resume file for the MAIN
     // sequential block only (S8 resume semantics, bench/Graph500.scala) —
     // long multi-root blocks at high SCALE (hours) survive a kill: a
@@ -306,42 +306,65 @@ object Bench {
     // smaller block. The isolated/spec64 blocks never checkpoint (they
     // exist to be timed whole).
     val checkpointEnv = sys.env.get("SPARK_GRAFT_CHECKPOINT").filter(_.nonEmpty)
-    def seqProtocol(roots: Int, atScale: Int = scale,
-                    checkpoint: Option[String] = None): (String, String) = {
+    def seqBlock(roots: Int, atScale: Int = scale,
+                 checkpoint: Option[String] = None): Block = {
       val t0 = System.nanoTime()
-      try {
-        val s = bench.Graph500.run(spark, atScale, roots,
-          checkpointPath = checkpoint)
-        val wall = (System.nanoTime() - t0) / 1e9
-        val bfsTotal = s.runs.map(_.bfs_time).sum
-        val valTotal = s.runs.map(_.validate_time).sum
-        // full Graph500 result block (reference key set, mpi/logfile.h:59-100)
-        val sb = bench.Graph500.statBlock(spark, s).head()
-        val stat = sb.schema.fieldNames.zipWithIndex.map { case (f, i) =>
-          // stddev_samp is NULL for a single run; NaN is not valid JSON
-          val v = if (sb.isNullAt(i)) 0.0 else sb.getDouble(i)
-          val safe = if (v.isNaN || v.isInfinite) 0.0 else v
-          s""""$f":$safe"""
-        }.mkString("{", ",", "}")
-        val errs = s.runs.map(_.errors).sum
-        val full = s"""{"scale":$atScale,"n_roots":$roots,"wall_sec":$wall,""" +
-          s""""generation_sec":${s.generationTime},""" +
-          s""""construction_sec":${s.constructionTime},""" +
-          s""""bfs_total_sec":$bfsTotal,"validate_total_sec":$valTotal,""" +
-          s""""harmonic_mean_teps":${fin(s.harmonicMeanTeps)},""" +
-          s""""max_nedge":${s.runs.map(_.nedge.toLong).max},""" +
-          s""""nedge_golden_ok":${s.nedgeGoldenOk},""" +
-          s""""validation_errors":$errs,""" +
-          s""""stat_block":$stat}"""
-        val compact = s"""{"scale":$atScale,"hm_teps":${g4(fin(s.harmonicMeanTeps))},""" +
-          s""""con_s":${r3(s.constructionTime)},"wall_s":${r3(wall)},""" +
-          s""""ok":${s.nedgeGoldenOk},"err":$errs}"""
-        (full, compact)
-      } catch { case e: Throwable =>
-        val err = s"""{"error":"${e.getClass.getSimpleName}"}"""
-        (err, err)
-      }
+      val s = bench.Graph500.run(spark, atScale, roots,
+        checkpointPath = checkpoint)
+      val wall = (System.nanoTime() - t0) / 1e9
+      val errs = s.runs.map(_.errors).sum
+      Block(ListMap("scale" -> atScale, "n_roots" -> roots, "wall_sec" -> wall,
+        "generation_sec" -> s.generationTime,
+        "construction_sec" -> s.constructionTime,
+        "bfs_total_sec" -> s.runs.map(_.bfs_time).sum,
+        "validate_total_sec" -> s.runs.map(_.validate_time).sum,
+        "harmonic_mean_teps" -> s.harmonicMeanTeps,
+        "max_nedge" -> s.runs.map(_.nedge.toLong).max,
+        "nedge_golden_ok" -> s.nedgeGoldenOk, "validation_errors" -> errs,
+        "stat_block" -> statFields(s)),
+        ListMap("scale" -> atScale, "hm_teps" -> g4(s.harmonicMeanTeps),
+          "con_s" -> r3(s.constructionTime), "wall_s" -> r3(wall),
+          "ok" -> s.nedgeGoldenOk, "err" -> errs))
     }
+    def batchedBlock(): Block = {
+      val b = bench.Graph500.runBatched(spark, scale, nRoots)
+      // Per-root stat block from the batched run: nedge is EXACT per
+      // root (validateMulti); time is the amortized wall/nRoots — the
+      // batched loop shares one level loop across roots, so no honest
+      // per-root time exists (field names follow the reference key
+      // set, mpi/logfile.h:59-100, like the sequential block's).
+      val amort = b.bfsWall / b.nRoots
+      val perRoot = if (b.perRootNedge.isEmpty) ListMap.empty[String, Any]
+        else ListMap("per_root_nedge" -> b.perRootNedge,
+          "bfs_amortized_sec_per_root" -> amort,
+          "stat_block_amortized" -> statFields(bench.Graph500.Summary(scale,
+            b.nRoots, b.generationTime, b.constructionTime,
+            b.roots.zip(b.perRootNedge).zipWithIndex.map {
+              case ((root, ne), i) => bench.Graph500.RunStat(i.toLong,
+                root, amort, b.validateWall / b.nRoots, ne.toDouble, 0L)
+            }, 0.0, b.nedgeGoldenOk)))
+      Block(ListMap[String, Any]("scale" -> scale, "n_roots" -> nRoots,
+        "generation_sec" -> b.generationTime,
+        "construction_sec" -> b.constructionTime,
+        "bfs_wall_sec" -> b.bfsWall, "validate_wall_sec" -> b.validateWall,
+        "total_nedge" -> b.totalNedge, "throughput_teps" -> b.throughputTeps,
+        "nedge_golden_ok" -> b.nedgeGoldenOk,
+        "validation_errors" -> b.errors) ++ perRoot,
+        ListMap("scale" -> scale, "teps" -> g4(b.throughputTeps),
+          "ok" -> b.nedgeGoldenOk, "err" -> b.errors))
+    }
+    // Each Graph500 block runs inside its own phase span; a throwing
+    // block is recorded as its error class.
+    def runBlocks(blocks: Seq[Option[(String, String, () => Block)]])
+        : Seq[(String, Block)] =
+      blocks.flatten.map { case (key, phase, body) =>
+        key -> rec.span(phase) {
+          try body() catch { case e: Throwable =>
+            val err = ListMap[String, Any]("error" -> e.getClass.getSimpleName)
+            Block(err, err)
+          }
+        }
+      }
 
     // Calibration sentinel PRE: fixed micro-kernel timed before any
     // Spark work — per-query cpu diffs across windows normalize by it
@@ -363,18 +386,16 @@ object Bench {
     // settles and the timed protocol runs.
     val isolatedOn = g500On &&
       sys.env.getOrElse("SPARK_GRAFT_ISOLATED", "1") != "0"
-    val g500iso = if (!isolatedOn) None else {
+    if (isolatedOn) rec.span("g500_iso_warm") {
       // a failed throwaway warm run means the timed "isolated" block is
       // actually a cold-JVM number — surface that instead of hiding it
       try bench.Graph500.run(spark, scale, 8)
       catch { case e: Throwable =>
         System.err.println(s"[bench] isolated warm run failed: $e") }
       gcSettle()
-      lap("g500_iso_warm")
-      val r = Some(seqProtocol(nRoots))
-      lap("g500_isolated")
-      r
     }
+    val isolated = runBlocks(Seq(Option.when(isolatedOn)(
+      ("graph500_isolated", "g500_isolated", () => seqBlock(nRoots)))))
     // PRE_EXEC-style warm-up (the reference warms the full pipeline before
     // its timed runs, mpi/main.cc:91-103): run every query once at the
     // smallest SF first. This JIT-compiles the whole Catalyst/codegen
@@ -387,7 +408,7 @@ object Bench {
     val warmupOn = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0" &&
       queriesOn && warmDir != sfDir &&
       java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmDir))
-    val warmupSec = if (!warmupOn) 0.0 else {
+    val warmup = Option.when(warmupOn)(warmDir -> rec.span("warmup") {
       val w0 = System.nanoTime()
       // warm-up queries run CONCURRENTLY — they are independent, the
       // SparkSession is thread-safe, the shared per-dir caches are
@@ -413,10 +434,8 @@ object Bench {
         spark.sparkContext.cancelAllJobs()
         System.err.println("[bench] warm-up timed out; proceeding unwarmed")
       }
-      val w = (System.nanoTime() - w0) / 1e9
-      lap("warmup")
-      w
-    }
+      (System.nanoTime() - w0) / 1e9
+    })
     // Per-query time = min over SPARK_GRAFT_PASSES (default 2) timed
     // passes. One pass inherits whatever host-noise burst lands in it
     // (measured on a shared box: the same 0.25 s query recording 9 s when
@@ -432,65 +451,18 @@ object Bench {
     // into the headline would make `value` incomparable with the batch
     // surface band, so they are timed ONCE into their own field.
     val (streamSel, batchSel) = selected.partition(_._1.startsWith("st_"))
-    // per-query work attribution rides job groups around each timed
-    // query (tag = p<pass>:<query>); the timed passes are sequential on
-    // this thread, so the group covers exactly that query's jobs
-    val qMeter = new GroupMeter(spark.sparkContext)
-    def grouped[A](tag: String)(body: => A): A = {
-      spark.sparkContext.setJobGroup(tag, tag, interruptOnCancel = false)
-      try body finally spark.sparkContext.clearJobGroup()
-    }
-    val passResults: Seq[Map[String, Double]] =
+    val failed = mutable.LinkedHashMap.empty[String, String]
+    val passResults: Seq[ListMap[String, Double]] =
       if (!queriesOn) Seq.empty
-      else (1 to passes).map { p =>
-        val r = batchSel.map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          grouped(s"p$p:$name") {
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          }
-          name -> (System.nanoTime() - t0) / 1e9
-        }
-        lap(s"queries_pass$p")
-        r
-      }
+      else (1 to passes).map(p => rec.span(s"queries_pass$p")(
+        timeQueries(spark, sfDir, rec, s"p$p", batchSel, failed)))
     val streamOn = queriesOn && streamSel.nonEmpty &&
       sys.env.getOrElse("SPARK_GRAFT_STREAMING", "1") != "0"
-    val streamResults: Map[String, Double] =
-      if (!streamOn) Map.empty
-      else {
-        val r = streamSel.map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          grouped(s"st:$name") {
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          }
-          name -> (System.nanoTime() - t0) / 1e9
-        }
-        lap("streaming")
-        r
-      }
-    // Per-query WORK snapshot (one bus drain for all groups): the
-    // steady-state channel is the LAST pass (shared intermediates
-    // already built), the cold channel is pass 1 — same convention as
-    // the wall-clock queries/queries_cold pair.
-    val groupWork: Map[String, Work] =
-      if (queriesOn) qMeter.read() else Map.empty
-    def groupSlice(prefix: String): Map[String, Work] =
-      groupWork.collect { case (tag, w) if tag.startsWith(prefix) =>
-        tag.stripPrefix(prefix) -> w
-      }
-    val qWork = groupSlice(s"p$passes:")
-    val qWorkCold = if (passes > 1) groupSlice("p1:") else Map.empty[String, Work]
-    val stWork = groupSlice("st:")
-    // Record BOTH the pass-1 (cold: shared-intermediate builds land on
-    // their first consumer) and the min (steady-state) — so the
-    // warm-cache min is never silently compared against cold baselines.
-    val resultsCold =
-      if (passResults.isEmpty) Map.empty[String, Double] else passResults.head
-    val results =
-      if (passResults.isEmpty) Map.empty[String, Double]
-      else passResults.reduce { (a, b) =>
-        a.map { case (k, v) => k -> math.min(v, b(k)) }
-      }
+    val streaming =
+      if (!streamOn) ListMap.empty[String, Double]
+      else rec.span("streaming")(
+        timeQueries(spark, sfDir, rec, "st", streamSel, failed))
+    val (results, resultsCold) = steadyAndCold(passResults, failed)
     // Phase boundary: the query surface leaves persisted tables,
     // broadcasts and kernel arrays behind; at SCALE 18+ the protocol
     // phase then allocates multi-hundred-MB primitive arrays into a
@@ -505,155 +477,53 @@ object Bench {
     }
     // SPARK_GRAFT_SEQ=0 skips the sequential protocol block alone — at
     // SCALE 26 a 12+-root sequential run disk-fills the 252 GB scratch
-    // volume (~1 root/JVM of transients); the batched loop below is the
+    // volume (~1 root/JVM of transients); the batched loop is the
     // disk-safe multi-root plan there (all roots share one level loop's
-    // shuffle files).
-    val seqOn = g500On && sys.env.getOrElse("SPARK_GRAFT_SEQ", "1") != "0"
-    val g500 = if (seqOn) {
-      val r = Some(seqProtocol(nRoots, checkpoint = checkpointEnv))
-      lap("g500_seq")
-      r
-    } else None
-    // SPARK_GRAFT_BATCHED=0 skips the batched block alone — a pure-resume
-    // finalize of a high-SCALE seq block has no use for a full batched
-    // re-run of the same protocol (it re-generates and re-constructs).
-    val batchedOn = g500On &&
-      sys.env.getOrElse("SPARK_GRAFT_BATCHED", "1") != "0"
-    val g500b: Option[(String, String)] = if (batchedOn) {
-      val r = try {
-        val b = bench.Graph500.runBatched(spark, scale, nRoots)
-        // Per-root stat block from the batched run: nedge is EXACT per
-        // root (validateMulti); time is the amortized wall/nRoots — the
-        // batched loop shares one level loop across roots, so no honest
-        // per-root time exists (field names follow the reference key
-        // set, mpi/logfile.h:59-100, like the sequential block's).
-        val perRoot = if (b.perRootNedge.isEmpty) "" else {
-          val amort = b.bfsWall / b.nRoots
-          val stats = bench.Graph500.statBlock(spark,
-            bench.Graph500.Summary(scale, b.nRoots, b.generationTime,
-              b.constructionTime,
-              b.roots.zip(b.perRootNedge).zipWithIndex.map {
-                case ((root, ne), i) => bench.Graph500.RunStat(i.toLong,
-                  root, amort, b.validateWall / b.nRoots, ne.toDouble, 0L)
-              },
-              0.0, b.nedgeGoldenOk)).head()
-          val stat = stats.schema.fieldNames.zipWithIndex.map { case (f, i) =>
-            val v = if (stats.isNullAt(i)) 0.0 else stats.getDouble(i)
-            s""""$f":${fin(v)}"""
-          }.mkString("{", ",", "}")
-          s""","per_root_nedge":${b.perRootNedge.mkString("[", ",", "]")},""" +
-            s""""bfs_amortized_sec_per_root":${fin(b.bfsWall / b.nRoots)},""" +
-            s""""stat_block_amortized":$stat"""
-        }
-        val full = s"""{"scale":$scale,"n_roots":$nRoots,""" +
-          s""""generation_sec":${b.generationTime},""" +
-          s""""construction_sec":${b.constructionTime},""" +
-          s""""bfs_wall_sec":${b.bfsWall},""" +
-          s""""validate_wall_sec":${b.validateWall},""" +
-          s""""total_nedge":${b.totalNedge},""" +
-          s""""throughput_teps":${fin(b.throughputTeps)},""" +
-          s""""nedge_golden_ok":${b.nedgeGoldenOk},""" +
-          s""""validation_errors":${b.errors}$perRoot}"""
-        val compact = s"""{"scale":$scale,"teps":${g4(fin(b.throughputTeps))},""" +
-          s""""ok":${b.nedgeGoldenOk},"err":${b.errors}}"""
-        Some((full, compact))
-      } catch { case e: Throwable =>
-        val err = s"""{"error":"${e.getClass.getSimpleName}"}"""
-        Some((err, err))
-      }
-      lap("g500_batched")
-      r
-    } else None
+    // shuffle files). SPARK_GRAFT_BATCHED=0 skips the batched block alone
+    // — a pure-resume finalize of a high-SCALE seq block has no use for a
+    // full batched re-run of the same protocol.
     // Spec-mode parity: the reference's published protocol validates 64
     // roots (REAL_BENCHMARK, mpi/parameters.h:156-161); record one
-    // 64-root sequential run alongside the 16-root blocks.
+    // 64-root sequential run alongside the 16-root blocks, and the same
+    // 64-root block at a second scale (SPARK_GRAFT_SPEC64_SCALE2, default
+    // 20: 4× the default's edge count; 0 skips it) so the artifact
+    // carries spec64 at TWO scales every round.
+    val seqOn = g500On && sys.env.getOrElse("SPARK_GRAFT_SEQ", "1") != "0"
+    val batchedOn = g500On &&
+      sys.env.getOrElse("SPARK_GRAFT_BATCHED", "1") != "0"
     val spec64On = g500On &&
       sys.env.getOrElse("SPARK_GRAFT_SPEC64", "1") != "0"
-    val g500spec = if (!spec64On) None else {
-      gcSettle()
-      val r = Some(seqProtocol(64))
-      lap(s"g500_spec64_s$scale")
-      r
-    }
-    // Second scale point for round-over-round comparison: the same
-    // 64-root spec block at SCALE 20 (4× the default's edge count),
-    // so the artifact carries spec64 at TWO scales every round. NOTE:
-    // this is a complete extra protocol run (gen + construction + 64
-    // BFS + validation, ~10-15 s at scale 20 on this box) on every
-    // default bench invocation; set SPARK_GRAFT_SPEC64_SCALE2=0 to
-    // skip it.
     val spec20Scale = {
       val s = sys.env.getOrElse("SPARK_GRAFT_SPEC64_SCALE2", "20")
       s.toIntOption.getOrElse(throw new IllegalArgumentException(
         s"SPARK_GRAFT_SPEC64_SCALE2: '$s' is not an integer"))
     }
     val spec20On = spec64On && spec20Scale > 0 && spec20Scale != scale
-    val g500spec20 = if (!spec20On) None else {
-      gcSettle()
-      val r = Some(seqProtocol(64, spec20Scale))
-      lap(s"g500_spec64_s$spec20Scale")
-      r
-    }
+    val protocol = runBlocks(Seq(
+      Option.when(seqOn)(("graph500", "g500_seq",
+        () => seqBlock(nRoots, checkpoint = checkpointEnv))),
+      Option.when(batchedOn)(("graph500_batched", "g500_batched",
+        () => batchedBlock())),
+      Option.when(spec64On)(("graph500_spec64", s"g500_spec64_s$scale",
+        () => { gcSettle(); seqBlock(64) })),
+      Option.when(spec20On)((s"graph500_spec64_s$spec20Scale",
+        s"g500_spec64_s$spec20Scale",
+        () => { gcSettle(); seqBlock(64, spec20Scale) }))))
     // Calibration sentinel POST: same kernel after the last timed block.
     val calPost = Bench.calibrate(calThreads)
     val statPost = Bench.procStat()
     System.err.println(f"[bench] calibration post: wall ${calPost._1}%.3f s" +
       f" cpu ${calPost._2}%.3f s")
-    def jmap(m: Map[String, Double]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = jmap(results)
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val coldField = if (passes > 1 && resultsCold.nonEmpty)
-      s""","queries_cold":${jmap(resultsCold)},"passes":$passes""" else ""
-    val streamField = if (streamResults.nonEmpty)
-      s""","queries_streaming":${jmap(streamResults)}""" +
-        s""","streaming_total_sec":${streamResults.values.sum}""" else ""
-    def blocks(pick: ((String, String)) => String): String =
-      g500iso.map(j => s""","graph500_isolated":${pick(j)}""").getOrElse("") +
-      g500.map(j => s""","graph500":${pick(j)}""").getOrElse("") +
-      g500b.map(j => s""","graph500_batched":${pick(j)}""").getOrElse("") +
-      g500spec.map(j => s""","graph500_spec64":${pick(j)}""").getOrElse("") +
-      g500spec20.map(j =>
-        s""","graph500_spec64_s$spec20Scale":${pick(j)}""").getOrElse("")
-    val warmField = if (warmupOn) s""","warmup_sf":"$warmDir","warmup_sec":$warmupSec""" else ""
-    val workField = if (work.isEmpty) "" else
-      s""","work":${work.map { case (t, w) => s""""$t":${w.json}""" }
-        .mkString("{", ",", "}")}"""
-    def jwork(m: Map[String, Work]): String =
-      m.toSeq.sortBy(_._1).map { case (k, w) => s""""$k":${w.json}""" }
-        .mkString("{", ",", "}")
-    val qWorkField =
-      (if (qWork.nonEmpty) s""","queries_work":${jwork(qWork)}""" else "") +
-      (if (qWorkCold.nonEmpty)
-        s""","queries_work_cold":${jwork(qWorkCold)}""" else "") +
-      (if (stWork.nonEmpty)
-        s""","queries_streaming_work":${jwork(stWork)}""" else "")
 
-    // 1. The COMPLETE result object: full per-query map, cold pass,
-    //    streaming, every protocol block's stat record, per-phase work
-    //    metrics. Printed for the log AND persisted to a file the round
-    //    artifacts can carry (the driver's stdout capture truncates to
-    //    the last ~2000 chars — a full 163-query record cannot fit).
-    // host steal over the WHOLE bench window: the decisive regime gauge
-    // (see Bench.procStat scaladoc) — steal_pct_of_busy ≳ 2-3% marks an
-    // inflated window whose per-query cpu diffs must not be trusted
-    val hostField = (statPre, statPost) match {
-      case (Some((b0, s0, t0)), Some((b1, s1, t1))) =>
-        val busy = b1 - b0; val steal = s1 - s0
-        s""","host":{"busy_ticks":$busy,"steal_ticks":$steal,""" +
-          s""""total_ticks":${t1 - t0},""" +
-          s""""steal_pct_of_busy":${r3(100.0 * steal / math.max(busy, 1L))}}"""
-      case _ => ""
-    }
-    val calField =
-      s""","calibration":{"pre":{"wall_s":${r3(calPre._1)},"cpu_s":${r3(calPre._2)}},""" +
-        s""""post":{"wall_s":${r3(calPost._1)},"cpu_s":${r3(calPost._2)}},""" +
-        s""""threads":$calThreads,"kernel":"xorshift-fill+sort 2M longs x2"}""" +
-        hostField
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":$qs,"sf":"$sfDir"$coldField$streamField$warmField""" +
-      blocks(_._1) + workField + qWorkField + calField + "}"
-    println(fullJson)
+    rec.finish()
+    val spans = rec.spans
+    // steady-state work is the LAST pass (shared intermediates already
+    // built), cold work pass 1 — the queries/queries_cold convention
+    def spanWork(prefix: String): Map[String, Work] = spans.collect {
+      case s if s.name.startsWith(prefix) &&
+          !failed.contains(s.name.stripPrefix(prefix)) =>
+        s.name.stripPrefix(prefix) -> rec.work(s)
+    }.toMap
     // Default output name is PER-CORE-COUNT: the driver benches the same
     // code at two core counts back-to-back, and a fixed name lets the
     // second (scaling) run overwrite the first run's per-query record —
@@ -662,42 +532,31 @@ object Bench {
     // the compact tail line's "full" key names the authoritative file.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"BENCH_FULL_c$cpus.json")
+    val outcome = Outcome(sfDir, outPath, passes, results, resultsCold, streaming,
+      ListMap(failed.toSeq: _*), warmup, isolated ++ protocol,
+      spans.filter(_.parent < 0).map(s => s.name -> rec.work(s)),
+      spanWork(s"p$passes:"),
+      if (passes > 1) spanWork("p1:") else Map.empty, spanWork("st:"),
+      calPre, calPost, calThreads,
+      for ((b0, s0, t0) <- statPre; (b1, s1, t1) <- statPost)
+        yield (b1 - b0, s1 - s0, t1 - t0))
+
+    // 1. The COMPLETE result object, printed for the log AND persisted
+    //    (a stdout capture that keeps the last ~2000 chars cannot hold a
+    //    full 163-query record).
+    val fullJson = Json.string(artifact(outcome))
+    println(fullJson)
     try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), fullJson)
       System.err.println(s"[bench] full result written to $outPath")
       if (writesLegacyCopy(outPath, cpus))
-        java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-          fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get("BENCH_FULL.json"), fullJson)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: $e")
     }
-
-    // 2. Compact tail line (< ~1900 chars), printed LAST so the driver's
-    //    truncated capture parses: headline total, the slowest queries,
-    //    each block's key numbers, per-phase work. Everything else is in
-    //    BENCH_FULL.json ("full" key).
-    val slowest = results.toSeq.sortBy(-_._2).take(10)
-      .map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
-    val compactWork = if (work.isEmpty) "" else
-      s""","work":${work.map { case (t, w) =>
-        s""""$t":{"task_s":${r3(w.taskMs / 1e3)},"cpu_s":${r3(w.cpuNs / 1e9)},""" +
-          s""""spill_gb":${r3((w.spillMem + w.spillDisk) / 1e9)},""" +
-          s""""shw_gb":${r3(w.shufWrite / 1e9)}}"""
-      }.mkString("{", ",", "}")}"""
-    val compactStream = if (streamResults.isEmpty) ""
-      else s""","streaming_total_sec":${r3(streamResults.values.sum)}"""
-    val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""sf":"$sfDir","full":"$outPath","n_queries":${results.size},""" +
-      s""""slowest":$slowest$compactStream""" +
-      (if (warmupOn) s""","warmup_sec":${r3(warmupSec)}""" else "") +
-      s""","cal_cpu_s":[${r3(calPre._2)},${r3(calPost._2)}]""" +
-      ((statPre, statPost) match {
-        case (Some((b0, s0, _)), Some((b1, s1, _))) =>
-          s""","steal_pct":${r3(100.0 * (s1 - s0) / math.max(b1 - b0, 1L))}"""
-        case _ => ""
-      }) +
-      blocks(_._2) + compactWork + "}"
+    // 2. The compact tail line, LAST.
+    val compact = Json.string(compactLine(outcome))
     if (compact.length > 1950)
       System.err.println(s"[bench] WARNING compact line ${compact.length} chars" +
         " — may exceed the driver's tail capture")

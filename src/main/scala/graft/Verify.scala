@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json (the oracles of the same queries), for the
+  * DuckDB oracle compare (tools/check.py). Exits 1 after dumping every query it could
+  * if any query threw, so a failure never passes as a missing dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -20,9 +21,6 @@ object Verify {
     // instead of the driver-local kernels.
     if (sys.env.getOrElse("SPARK_GRAFT_FORCE_DISTRIBUTED", "0") == "1")
       Gates.forceDistributed(spark)
-    // SPARK_GRAFT_BFS2D=RxC: audit the 2D-grid distributed BFS layout
-    sys.env.get("SPARK_GRAFT_BFS2D")
-      .foreach(g => spark.conf.set("spark.graft.bfs2dGrid", g))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c: builder-side iteration filter (unset in
     // driver runs — all queries dump as always).
@@ -32,28 +30,26 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.toSeq.filter { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        false
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        true
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracles(s"$outDir/oracle_sql.json", selected.keySet)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.map(_._1).mkString(", "))
+      sys.exit(1)
+    }
   }
+
+  /** The oracle SQL of the named queries, as one JSON object. */
+  private[graft] def writeOracles(path: String, names: Set[String]): Unit =
+    bench.Json.write(path, SparkEntry.oracleSql.filter(kv => names(kv._1)))
 }

@@ -342,7 +342,6 @@ object Graph500 {
             java.util.Arrays.binarySearch(g.csr.ids, roots.head), maxV + 1)
         }
         System.gc()
-        val debug = sys.env.get("SPARK_GRAFT_BATCH_DEBUG").contains("1")
         // Two timed passes, better wall wins: the whole batch is a ~0.2 s
         // wall at SCALE 18, so a single measurement inherits whatever
         // host-noise burst lands in it (measured 2× swings on a shared
@@ -351,13 +350,7 @@ object Graph500 {
         // (mpi/main.cc:91-103); validation consumes the last pass.
         def timedPass() = {
           val b0 = System.nanoTime()
-          val outs = roots.map { r =>
-            val t0 = System.nanoTime()
-            val o = g.csr.bfs(r)
-            if (debug) System.err.println(
-              f"[batched] root $r run ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-            o
-          }
+          val outs = roots.map(g.csr.bfs)
           ((System.nanoTime() - b0) / 1e9, outs)
         }
         val w1 = timedPass()._1

@@ -64,33 +64,6 @@ object Bfs {
 
   final case class Result(tree: DataFrame, levelSizes: Seq[(Int, Long)])
 
-  /** Optional 2D edge-grid layout for the distributed loop — the Spark
-    * analogue of the reference's EdgePartition2D
-    * (mpi/graph_constructor.hpp:18-22). `spark.graft.bfs2dGrid = "RxC"`
-    * partitions edges by (src-block, dst-block); each top-down level then
-    * replicates the frontier C ways (the row allgather) instead of
-    * broadcasting it everywhere, and the edge table never re-shuffles.
-    * Wins when frontiers exceed the broadcast cap on wide clusters —
-    * replication cost C·|frontier| vs executors·|frontier|; at local[32]
-    * scale the 1D broadcast path is faster, which is why this is a
-    * toggle, not the default. */
-  def grid2d(spark: SparkSession): Option[(Int, Int)] =
-    spark.conf.getOption("spark.graft.bfs2dGrid").flatMap { s =>
-      val parsed = scala.util.Try {
-        s.split("x") match {
-          case Array(r, c) if r.trim.toInt > 0 && c.trim.toInt > 0 =>
-            Some((r.trim.toInt, c.trim.toInt))
-          case _ => None
-        }
-      }.toOption.flatten
-      // warn instead of silently running 1D — an operator who set the
-      // knob must not read 1D numbers believing they measured 2D
-      if (parsed.isEmpty)
-        System.err.println(s"[graft] ignoring unparseable " +
-          s"spark.graft.bfs2dGrid='$s' (want RxC, e.g. 4x8); running 1D")
-      parsed
-    }
-
   /** The reference's cached CSR analogue: the big table shuffled ONCE
     * (hash-partitioned by src) + the vertex set, both persisted and shared
     * by every BFS run of a benchmark (reference builds Graph2DCSR once,
@@ -135,25 +108,12 @@ object Bfs {
     // physical layout there, so pre-partitioning the DataFrame buys nothing.
     val edges =
       if (local) cached
-      else grid2d(spark) match {
-        case Some((r, c)) =>
-          // 2D grid layout (see grid2d): one shuffle onto (src-block,
-          // dst-block); the level loop joins on the block keys + src, so
-          // this exchange is the only one the edge table ever pays.
-          cached
-            .withColumn("sb", pmod(hash(col("src")), lit(r)))
-            .withColumn("db", pmod(hash(col("dst")), lit(c)))
-            .repartition(r * c, col("sb"), col("db"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        case None if bySrc =>
-          // Caller guarantees `clean` is already hash-partitioned by src
-          // (EdgeOps.cleanEdges' output layout): reuse the one cache —
-          // re-exchanging 2·nE rows into the identical layout is the
-          // single most expensive no-op in the construction stage.
-          cached
-        case None =>
-          cached.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-      }
+      // Caller guarantees `clean` is already hash-partitioned by src
+      // (EdgeOps.cleanEdges' output layout): reuse the one cache —
+      // re-exchanging 2·nE rows into the identical layout is the single
+      // most expensive no-op in the construction stage.
+      else if (bySrc) cached
+      else cached.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
     if (local) {
       // Hybrid-executor construction: build the local CSR up front (like
       // the reference's construction stage) so per-run timings measure BFS
@@ -420,36 +380,13 @@ object Bfs {
                 broadcast(frontier.select(col("vertex").as("f")))
               else frontier.select(col("vertex").as("f")),
               col("pred") === col("f"), "left_semi")
-        } else grid2d(spark)
-          // the 2D branch needs the grid LAYOUT, not just the conf — a
-          // graph prepared under the local gate (or before the conf was
-          // set) has no block columns and takes the 1D join
-          .filter(_ => edges.columns.contains("sb") &&
-            edges.columns.contains("db")) match {
-          case Some((r, c)) =>
-            // 2D top-down: replicate each frontier vertex to the C
-            // dst-blocks of its src-row (the row-wise allgather,
-            // replication factor C — not one copy per executor as
-            // broadcast would), then equi-join on (sb, db, src): the
-            // grid-partitioned edge table satisfies the join's
-            // distribution on its (sb, db) subset, so it never
-            // re-shuffles; only the C·|frontier| replica set moves.
-            val fRep = frontier
-              .withColumn("sb", pmod(hash(col("vertex")), lit(r)))
-              .select(col("vertex"), col("sb"),
-                explode(sequence(lit(0), lit(c - 1))).as("db"))
-            edges
-              .join(fRep, Seq("sb", "db").map(k => edges(k) === fRep(k))
-                .reduce(_ && _) && edges("src") === fRep("vertex"))
-              .select(edges("dst").as("vertex"), edges("src").as("pred"))
-              .join(recentSide("v"), col("vertex") === col("v"), "left_anti")
-          case None =>
-            val frontierSide =
-              if (frontierSize <= BroadcastLimit) broadcast(frontier) else frontier
-            edges
-              .join(frontierSide, edges("src") === frontierSide("vertex"))
-              .select(edges("dst").as("vertex"), edges("src").as("pred"))
-              .join(recentSide("v"), col("vertex") === col("v"), "left_anti")
+        } else {
+          val frontierSide =
+            if (frontierSize <= BroadcastLimit) broadcast(frontier) else frontier
+          edges
+            .join(frontierSide, edges("src") === frontierSide("vertex"))
+            .select(edges("dst").as("vertex"), edges("src").as("pred"))
+            .join(recentSide("v"), col("vertex") === col("v"), "left_anti")
         }
 
       // LAZY checkpoint + count = ONE job per level: the count is the

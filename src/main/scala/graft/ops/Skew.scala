@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -8,27 +8,10 @@ import org.apache.spark.sql.functions._
  * (`spark.sql.adaptive.skewJoin.enabled`, on by default) is the first
  * line of defense — the runtime analogue of the reference's hand-rolled
  * `top_down_send_large` (mpi/bfs.hpp:932-960). Salting is the explicit
- * fallback for aggregations/joins whose skew AQE can't see (e.g. a
+ * fallback for aggregations whose skew AQE can't see (e.g. a
  * non-shuffle-boundary hot key, or pre-Spark-3 clusters).
  */
 object Skew {
-
-  /**
-   * Salted inner equi-join of a skewed `large` table against `small` on
-   * `key`: the large side gets a deterministic salt in [0, factor) from
-   * a hash of its whole row (spreading one hot key over `factor`
-   * reducers), the small side is replicated `factor`× with every salt.
-   * Result rows are identical to `large.join(small, key)` — only the
-   * shuffle distribution changes.
-   */
-  def saltedJoin(large: DataFrame, small: DataFrame, key: String,
-                 factor: Int = 8): DataFrame = {
-    val salted = large.withColumn("_salt",
-      pmod(hash(large.columns.map(col): _*), lit(factor)))
-    val replicated = small
-      .withColumn("_salt", explode(sequence(lit(0), lit(factor - 1))))
-    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
-  }
 
   /**
    * Two-phase (salted partial) aggregation: count per `key` with the

@@ -17,6 +17,24 @@ class ContractSpec extends SparkSpec {
     assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
   }
 
+  test("oracle_sql.json parses back to exactly oracleSql") {
+    val f = java.nio.file.Files.createTempFile("oracle_sql", ".json")
+    try {
+      Verify.writeOracles(f.toString, SparkEntry.queries.keySet)
+      val back = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(f.toFile, classOf[java.util.Map[String, String]])
+      import scala.jdk.CollectionConverters._
+      assert(back.asScala.toMap === SparkEntry.oracleSql)
+      // the BPE oracles carry the U+001F token separator
+      assert(back.get("tx_bpe").contains("\u001f"))
+      // restricted to the selected queries
+      Verify.writeOracles(f.toString, Set("tx_bpe", "q1_generate"))
+      assert(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(f.toFile, classOf[java.util.Map[String, String]])
+        .keySet.asScala === Set("tx_bpe", "q1_generate"))
+    } finally java.nio.file.Files.deleteIfExists(f)
+  }
+
   test("every query runs on sf0.001 and keeps stable column names") {
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (name, fn) =>

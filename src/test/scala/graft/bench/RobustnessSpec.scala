@@ -14,11 +14,13 @@ class RobustnessSpec extends SparkSpec {
   test("finite: non-finite TEPS sanitize to 0.0 so the tail JSON stays parseable") {
     // bare NaN/Infinity literals are invalid JSON, and the compact tail
     // line is exactly what the driver parses
-    assert(graft.Bench.finite(Double.NaN) === 0.0)
-    assert(graft.Bench.finite(Double.PositiveInfinity) === 0.0)
-    assert(graft.Bench.finite(Double.NegativeInfinity) === 0.0)
-    assert(graft.Bench.finite(123.5) === 123.5)
-    assert(graft.Bench.finite(0.0) === 0.0)
+    assert(Json.finite(Double.NaN) === 0.0)
+    assert(Json.finite(Double.PositiveInfinity) === 0.0)
+    assert(Json.finite(Double.NegativeInfinity) === 0.0)
+    assert(Json.finite(123.5) === 123.5)
+    assert(Json.finite(0.0) === 0.0)
+    assert(Json.string(Map("hm_teps" -> Double.NaN, "teps" -> Seq(
+      Double.NegativeInfinity, 2.5))) === """{"hm_teps":0.0,"teps":[0.0,2.5]}""")
   }
 
   test("BENCH_FULL.json is written only by the main (default-cpus) run") {

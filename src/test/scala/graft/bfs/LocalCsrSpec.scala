@@ -52,35 +52,6 @@ class LocalCsrSpec extends SparkSpec {
     }
   }
 
-  test("2D-grid distributed BFS equals 1D distributed BFS (toggle on)") {
-    val clean = EdgeOps.cleanEdges(
-      EdgeOps.edgesFromLineitem(spark, "/root/testdata/sf0.001"))
-      .persist()
-    try {
-      val root = clean.agg(min(col("src"))).head().getLong(0)
-      // force prepare's DISTRIBUTED branch so both layouts are the real
-      // cluster-scale ones (the local gate skips pre-partitioning)
-      spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-      try {
-        val g1 = Bfs.prepare(clean)
-        val oneD = Bfs.bfsMinParentDistributed(spark, g1, root)
-        val oneDRows = oneD.tree.collect().map(_.toSeq).toSet
-        val oneDSizes = oneD.levelSizes
-        g1.unpersist()
-        spark.conf.set("spark.graft.bfs2dGrid", "3x4")
-        try {
-          val g2 = Bfs.prepare(clean)
-          try {
-            assert(g2.edges.columns.contains("sb"), "2D layout expected")
-            val twoD = Bfs.bfsMinParentDistributed(spark, g2, root)
-            assert(twoD.levelSizes === oneDSizes)
-            assert(twoD.tree.collect().map(_.toSeq).toSet === oneDRows)
-          } finally g2.unpersist()
-        } finally spark.conf.unset("spark.graft.bfs2dGrid")
-      } finally spark.conf.unset("spark.graft.localBfsMaxEdges")
-    } finally clean.unpersist()
-  }
-
   test("in-kernel dedup CSR equals CSR from DataFrame-distinct edges") {
     val s = spark
     import s.implicits._

@@ -4,19 +4,6 @@ import graft.SparkSpec
 
 class SkewSpec extends SparkSpec {
 
-  test("saltedJoin equals plain join on skewed data") {
-    val s = spark; import s.implicits._
-    // 1000 rows of one hot key + a tail
-    val large = ((1 to 1000).map(i => (1L, i.toLong)) ++
-      (1 to 50).map(i => (i.toLong + 1, i.toLong))).toDF("k", "payload")
-    val small = (1L to 20L).map(k => (k, s"dim$k")).toDF("k", "name")
-    val plain = large.join(small, "k").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    val salted = Skew.saltedJoin(large, small, "k").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    assert(salted.toSeq === plain.toSeq)
-  }
-
   test("saltedCount equals plain groupBy count") {
     val s = spark; import s.implicits._
     val df = ((1 to 500).map(_ => 7L) ++ (1 to 30).map(_.toLong))

@@ -35,7 +35,10 @@ def main():
         name = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    results = {}
+    # an oracle key without a dump is a query that threw or never ran
+    results = {name: "MISSING (no dump for an oracle-checked query)"
+               for name in oracle
+               if not os.path.isdir(os.path.join(out_dir, name))}
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
@@ -80,9 +83,9 @@ def main():
             results[name] = f"VALUE_MISMATCH {bad} cells; first={first}"
         else:
             results[name] = f"OK rows={len(got)}"
-    width = max(len(k) for k in results)
+    width = max((len(k) for k in results), default=0)
     fails = 0
-    for k, v in results.items():
+    for k, v in sorted(results.items()):
         status = "PASS" if v.startswith(("OK", "ROWS_ONLY")) else "FAIL"
         if status == "FAIL":
             fails += 1
