@@ -417,8 +417,9 @@ object Bench {
       // BOUNDED pool (not the global EC): launching all 163 queries at
       // once floods the scheduler with hundreds of concurrent jobs —
       // the r10 driver window recorded warmup task_s 5651 vs cpu_s 96
-      // (tasks descheduled 59:1 under oversubscription). A few jobs in
-      // flight fill the executor tail just as well (guide §2.6).
+      // (tasks descheduled 59:1 under oversubscription). One query in
+      // flight per configured core fills the executor tail just as well
+      // (guide §2.6); a fixed 8 oversubscribed a local[4] run 6.4:1.
       // a failed warm-up is a diagnostic (its first real execution lands
       // in the timed number), and a hung one must not stall the bench —
       // log and bound, degrade to proceeding without full warm-up
@@ -428,7 +429,7 @@ object Bench {
         }
       }
       import scala.concurrent.duration._
-      runBounded(tasks, 8, 10.minutes) {
+      runBounded(tasks, calThreads, 10.minutes) {
         // kill the hung warm-up jobs too — left running they'd contend
         // with the timed pass and skew every recorded number
         spark.sparkContext.cancelAllJobs()

@@ -151,7 +151,7 @@ object SparkEntry {
       // the hybrid executor (in-kernel under the gate); root = min raw
       // src, from the same collected array
       val (g, root) = Bfs.prepareRawWithRoot(raw)
-      val (r, dense) = Bfs.bfsMinParentWithArrays(s, g, root)
+      val r = Bfs.bfsMinParent(s, g, root)
       val csr = g.csrIfBuilt
       // Local-path trees are a range + broadcast-lookup plan — cheaper to
       // rescan than to checkpoint. Distributed trees carry the iterative
@@ -167,7 +167,7 @@ object SparkEntry {
           preparedCache.put(s, dir, g)
           t
         }
-      GraphHandle(root, tree, csr, r.levelSizes, g.takeRawPairs(), dense)
+      GraphHandle(root, tree, csr, r.levelSizes, g.takeRawPairs(), r.dense)
     }
 
   /** Cleaned edge set, one per sfDir. Local-path graphs emit it straight
@@ -318,15 +318,12 @@ object SparkEntry {
     "q9_teps" -> ((s, dir) => Teps.statBlock(runStats(s, dir))),
 
     // Q10 — per-level frontier sizes. The BFS result already carries
-    // them (the loop's per-level NQ telemetry) — aggregating the tree
-    // again would redo the count the traversal made.
+    // them on either path (the search's per-level NQ telemetry) —
+    // aggregating the tree again would redo the count the traversal made.
     "q10_level_sizes" -> ((s, dir) => {
       import s.implicits._
-      val h = handle(s, dir)
-      if (h.csr.isDefined)
-        h.levelSizes.map { case (l, n) => (l.toLong, n) }
-          .toDF("level", "frontier_size")
-      else Bfs.levelSizes(h.tree)
+      handle(s, dir).levelSizes.map { case (l, n) => (l.toLong, n) }
+        .toDF("level", "frontier_size")
     }),
 
     // SSSP — weighted shortest-path distances on the deterministic

@@ -102,12 +102,23 @@ object Graph500 {
         f(4).toDouble, f(5).toLong)
     }
 
-  def run(spark: SparkSession, scale: Int, nRoots: Int = 16,
-          validate: Boolean = true,
-          checkpointPath: Option[String] = None,
-          edgeFactor: Long = Kronecker.DefaultEdgeFactor): Summary = {
-    import spark.implicits._
+  /** The stages both protocols share: generation, construction and the
+    * root sample. `localMode` is the kernel gate's verdict on the
+    * constructed graph. */
+  private final case class SetUp(raw: DataFrame, g: Bfs.PreparedGraph,
+                                 tGen: Double, tCon: Double, maxV: Long,
+                                 roots: Array[Long], localMode: Boolean) {
+    /** The kernel-path validator, built on the construction stage's
+      * collected pair array when it kept one — the raw list then ships
+      * from the executors once, not twice. */
+    def localValidator(): LocalValidator = g.takeRawPairs() match {
+      case Some(flat) => new LocalValidator(g.csr.ids, flat)
+      case None => new LocalValidator(g.csr.ids, raw)
+    }
+  }
 
+  private def setUp(spark: SparkSession, scale: Int, nRoots: Int,
+                    edgeFactor: Long): SetUp = {
     val t0 = System.nanoTime()
     // Stage 1: generation (narrow scan). Persist the RAW list — validation
     // scans it with duplicates/self-loops retained (validate.hpp:703-721).
@@ -137,6 +148,16 @@ object Graph500 {
         (mv, Kronecker.sampleRootsDistributed(g.all.toDF("vertex"),
           "vertex", nRoots, mv + 1))
     }
+    SetUp(raw, g, tGen, tCon, maxV, roots,
+      g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark))
+  }
+
+  def run(spark: SparkSession, scale: Int, nRoots: Int = 16,
+          validate: Boolean = true,
+          checkpointPath: Option[String] = None,
+          edgeFactor: Long = Kronecker.DefaultEdgeFactor): Summary = {
+    val su = setUp(spark, scale, nRoots, edgeFactor)
+    import su.{g, localMode, maxV, raw, roots}
 
     // Hybrid benchmark path mirroring the BFS executor's gate: under the
     // local-kernel size limit, each run is the in-memory CSR kernel and
@@ -145,7 +166,6 @@ object Graph500 {
     // loop, mpi/main.cc:63-66). Above the gate: distributed BFS +
     // DataFrame validation with the canonical undirected edge set shared
     // across runs.
-    val localMode = g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark)
     // Resume state first: a pure-resume invocation (checkpoint already has
     // all nRoots runs) needs neither a validator nor a warm-up.
     val prior = checkpointPath
@@ -154,13 +174,7 @@ object Graph500 {
       .take(nRoots)
     val nRemaining = nRoots - prior.size
     val localV =
-      if (localMode && validate && nRemaining > 0)
-        // reuse the construction stage's collected pair array — the raw
-        // list ships from the executors once, not twice
-        Some(g.takeRawPairs() match {
-          case Some(flat) => new LocalValidator(g.csr.ids, flat)
-          case None => new LocalValidator(g.csr.ids, raw)
-        })
+      if (localMode && validate && nRemaining > 0) Some(su.localValidator())
       else None
     val undirected =
       if (!localMode && validate && nRemaining > 0) {
@@ -278,7 +292,7 @@ object Graph500 {
     // golden counts are defined for edgefactor 16 only
     val goldenOk = edgeFactor != Kronecker.DefaultEdgeFactor ||
       PfNedge.get(scale).forall(exp => runs.map(_.nedge.toLong).max == exp)
-    Summary(scale, nRoots, tGen, tCon, runs, hm, goldenOk, edgeFactor)
+    Summary(scale, nRoots, su.tGen, su.tCon, runs, hm, goldenOk, edgeFactor)
   }
 
   final case class BatchedSummary(scale: Int, nRoots: Int,
@@ -304,36 +318,15 @@ object Graph500 {
   def runBatched(spark: SparkSession, scale: Int,
                  nRoots: Int = 16): BatchedSummary = {
     import spark.implicits._
-    val t0 = System.nanoTime()
-    val raw = Kronecker.generate(spark, scale)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRaw = raw.count()
-    val tGen = (System.nanoTime() - t0) / 1e9
-
-    val t1 = System.nanoTime()
-    val g = Bfs.prepareRaw(raw, knownCount = nRaw)
-    val tCon = (System.nanoTime() - t1) / 1e9
-
-    val (maxV, roots): (Long, Array[Long]) = g.csrIfBuilt match {
-      case Some(csr) if csr.nVerts > 0 =>
-        (csr.ids.last, Kronecker.sampleRoots(nRoots, csr.ids.last + 1,
-          v => java.util.Arrays.binarySearch(csr.ids, v) >= 0))
-      case _ =>
-        val mv = g.all.agg(max(col("vertex"))).head().getLong(0)
-        (mv, Kronecker.sampleRootsDistributed(g.all.toDF("vertex"),
-          "vertex", nRoots, mv + 1))
-    }
-    val localMode = g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark)
+    val su = setUp(spark, scale, nRoots, Kronecker.DefaultEdgeFactor)
+    import su.{g, localMode, maxV, raw, roots}
 
     val (bfsWall, valWall, nedges, errors) =
       if (localMode) {
         // all kernels back-to-back, then all validations (amortized raw
         // endpoint precompute), timed as walls; untimed warm-up first
         // (reference PRE_EXEC, mpi/main.cc:91-103), validator included
-        val lv = g.takeRawPairs() match {
-          case Some(flat) => new LocalValidator(g.csr.ids, flat)
-          case None => new LocalValidator(g.csr.ids, raw)
-        }
+        val lv = su.localValidator()
         val w0 = System.nanoTime()
         var wi = 0
         while (wi < 8 && System.nanoTime() - w0 < 1000000000L) {
@@ -428,7 +421,7 @@ object Graph500 {
     g.unpersist()
 
     val totalNedge = nedges.sum
-    BatchedSummary(scale, nRoots, tGen, tCon, bfsWall, valWall, totalNedge,
+    BatchedSummary(scale, nRoots, su.tGen, su.tCon, bfsWall, valWall, totalNedge,
       if (bfsWall > 0) totalNedge / bfsWall else 0.0, errors,
       PfNedge.get(scale).forall(exp => nedges.max == exp),
       roots.toSeq, nedges)

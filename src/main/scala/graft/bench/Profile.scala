@@ -342,7 +342,7 @@ object Profile {
       val flat2 = t("collectPairs")(LocalCsr.collectPairs(raw2))
       val csr2 = t("buildFromRawPairs")(LocalCsr.buildFromRawPairs(flat2))
       val (g2, root) = t("prepareRawWithRoot")(Bfs.prepareRawWithRoot(raw2))
-      t("bfsMinParentWithArrays")(Bfs.bfsMinParentWithArrays(spark, g2, root))
+      t("bfsMinParent")(Bfs.bfsMinParent(spark, g2, root))
       println(s"  nV=${csr2.nVerts}")
       g2.unpersist()
     }

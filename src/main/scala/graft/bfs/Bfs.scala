@@ -9,25 +9,28 @@ import org.apache.spark.storage.StorageLevel
  * (mpi/bfs.hpp:2651-2940) — as a HYBRID executor: graphs at or under
  * [[graft.Gates.localBfsMaxEdges]] run on the in-memory parallel CSR
  * kernel ([[LocalCsr]] — what the single-node reference itself is at
- * such sizes); larger graphs run the iterative DataFrame level loop
- * below.
- * Both paths produce the identical canonical tree (LocalCsrSpec).
+ * such sizes); larger graphs run ONE iterative DataFrame level loop.
+ * A single-source search is the batched search ([[bfsMinParentMulti]])
+ * at one run, so both entry points share the gate, the kernel path and
+ * the loop. Both paths produce the identical canonical tree
+ * (LocalCsrSpec).
  *
- * The distributed loop, relationally:
+ * The level loop, relationally, over state keyed by (run, vertex):
  *
- *   top-down:   frontier ⋈ edges ON vertex = src → anti-join visited
- *               (reference J1/J2, bfs.hpp:962-1364)
- *   bottom-up:  unvisited ⋈ edges ON vertex = dst → semi-join frontier
- *               (reference J3/J4, bfs.hpp:1839-2157)
+ *   top-down:   frontier ⋈ edges ON vertex = src → anti-join the last
+ *               two levels   (reference J1/J2, bfs.hpp:962-1364)
+ *   bottom-up:  unvisited ⋈ edges ON vertex = src → semi-join frontier
+ *               on pred = dst (reference J3/J4, bfs.hpp:1839-2157)
  *
  * Both produce the same rows (min parent among frontier neighbors of each
  * newly reached vertex); the Beamer-style switch (reference C1,
- * bfs.hpp:2799-2829) picks the formulation whose small side can be
- * BROADCAST. The edge table is shuffled ONCE up front (hash-partitioned by
- * src) and every top-down level reuses that layout; in the bottom-up phase
- * the unvisited set is small by construction, so it broadcasts and the edge
- * scan stays narrow. This mirrors the reference's bitmap-frontier switch:
- * what it bought with bitmaps we buy by never reshuffling the big table.
+ * bfs.hpp:2799-2829) goes bottom-up once the frontier outweighs the
+ * unvisited set by [[Beta]]. The edge table is shuffled ONCE up front
+ * (hash-partitioned by src) and both directions join on src, so every
+ * level reuses that layout: top-down broadcasts the frontier, bottom-up
+ * moves only the unvisited side. This mirrors the reference's
+ * bitmap-frontier switch: what it bought with bitmaps we buy by never
+ * reshuffling the big table.
  *
  * Parent selection is min(parent) — deterministic, canonical, oracle-
  * checkable. The reference's tree is any-parent (CAS race, bfs.hpp:1232);
@@ -44,17 +47,17 @@ import org.apache.spark.storage.StorageLevel
  */
 object Bfs {
 
-  /** Max rows we are willing to broadcast (frontier or unvisited side). */
+  /** Max rows the level loop broadcasts (frontier or visited side). */
   val BroadcastLimit = 4000000L
 
-  /** The distributed level loops switch to bottom-up when |frontier| >
+  /** The distributed level loop switches to bottom-up when |frontier| >
     * |unvisited| / Beta — the reference's DEMON_BOTTOMUP_TO_TOPDOWN-style
-    * ratio (parameters.h:88). Only the DataFrame loops use it: the
+    * ratio (parameters.h:88). Only the DataFrame loop uses it: the
     * [[LocalCsr]] kernel switches on edge counts
     * ([[LocalCsr.nextBottomUp]]). */
   val Beta = 8L
 
-  /** Edge count above which the multi-root level loop GCs the driver
+  /** Edge count above which the level loop GCs the driver
     * after each level so the ContextCleaner can delete the previous
     * level's (lineage-truncated) shuffle files before the next level
     * writes its own — a peak SCALE-26 level's shuffle is tens of GB
@@ -62,7 +65,12 @@ object Bfs {
     * volume. Below this the per-level GC is pure overhead. */
   val GcPerLevelEdgeThreshold = 1L << 30
 
-  final case class Result(tree: DataFrame, levelSizes: Seq[(Int, Long)])
+  /** A search's tree, its per-level frontier sizes (summed over runs)
+    * and, when the kernel ran, its run-major dense (pred, depth) arrays —
+    * downstream consumers (e.g. one-shot validation) can then work on the
+    * arrays without collecting the tree DataFrame. */
+  final case class Result(tree: DataFrame, levelSizes: Seq[(Int, Long)],
+                          dense: Option[(Array[Int], Array[Int])] = None)
 
   /** The reference's cached CSR analogue: the big table shuffled ONCE
     * (hash-partitioned by src) + the vertex set, both persisted and shared
@@ -243,178 +251,17 @@ object Bfs {
       val r = bfsMinParent(spark, g, root)
       // checkpoint the tree while the prepared caches are alive — the
       // caller's first action would otherwise recompute clean + vertex set
-      Result(r.tree.localCheckpoint(eager = true), r.levelSizes)
-    } finally g.unpersist()
-  }
-
-  /** One-shot BFS from a RAW edge list (loops/duplicates allowed) —
-    * [[prepareRaw]]'s in-kernel construction under the gate. */
-  def bfsMinParentRaw(spark: SparkSession, raw: DataFrame, root: Long): Result = {
-    val g = prepareRaw(raw)
-    try {
-      val r = bfsMinParent(spark, g, root)
-      Result(r.tree.localCheckpoint(eager = true), r.levelSizes)
+      r.copy(tree = r.tree.localCheckpoint(eager = true))
     } finally g.unpersist()
   }
 
   /** Hybrid gate: in-memory CSR kernel when the graph fits, distributed
-    * level loop otherwise. Identical min-parent trees either way. */
-  def bfsMinParent(spark: SparkSession, g: PreparedGraph, root: Long): Result =
-    bfsMinParentWithArrays(spark, g, root)._1
-
-  /** [[bfsMinParent]] also returning the kernel's dense (pred, depth)
-    * arrays when the local path ran them — downstream consumers (e.g.
-    * one-shot validation) can then work on the arrays without collecting
-    * the tree DataFrame. None on the distributed path and on the
-    * absent-root fallback. */
-  def bfsMinParentWithArrays(spark: SparkSession, g: PreparedGraph,
-                             root: Long)
-      : (Result, Option[(Array[Int], Array[Int])]) =
-    if (g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark)) {
-      val csr = g.csr
-      if (java.util.Arrays.binarySearch(csr.ids, root) < 0) {
-        // Root absent from the CLEANED graph (e.g. its only edges were
-        // self-loops). The distributed loop discovers nothing from such a
-        // root and reports every non-isolated vertex unreached — return
-        // exactly that instead of letting the kernel throw, so the gate
-        // never changes behavior.
-        val tree = g.all.select(col("vertex"), lit(-1L).as("pred"),
-          lit(null).cast("long").as("depth"))
-        (Result(tree, Seq((0, 1L))), None)
-      } else {
-        val (pred, depth, sizes) = csr.bfs(root)
-        (Result(localTreeDf(spark, g, pred, depth), sizes),
-          Some((pred, depth)))
-      }
-    } else (bfsMinParentDistributed(spark, g, root), None)
-
-  /** Dense kernel output → (vertex, pred, depth BIGINT) DataFrame, same
-    * contract as the distributed loop. The kernel's arrays ship to
-    * executors as ONE compact broadcast and the rows materialize
-    * DISTRIBUTED, from the cached vertex table — never a driver-side
-    * row collection (a parallelize of millions of boxed rows costs
-    * seconds per downstream scan). */
-  private def localTreeDf(spark: SparkSession, g: PreparedGraph,
-                          pred: Array[Int], depth: Array[Int]): DataFrame = {
-    val csr = g.csr
-    val bcIds = spark.sparkContext.broadcast(csr.ids)
-    val bcPred = spark.sparkContext.broadcast(pred)
-    val bcDepth = spark.sparkContext.broadcast(depth)
-    val predOf = udf { (vertex: Long) =>
-      val i = java.util.Arrays.binarySearch(bcIds.value, vertex)
-      val p = bcPred.value(i)
-      if (p < 0) -1L else bcIds.value(p)
-    }
-    val depthOf = udf { (vertex: Long) =>
-      val i = java.util.Arrays.binarySearch(bcIds.value, vertex)
-      val d = bcDepth.value(i)
-      if (d < 0) null.asInstanceOf[java.lang.Long]
-      else java.lang.Long.valueOf(d.toLong)
-    }
-    g.all.select(col("vertex"), predOf(col("vertex")).as("pred"),
-      depthOf(col("vertex")).as("depth"))
-  }
-
-  /** The distributed level loop (the scale path of the hybrid executor). */
-  def bfsMinParentDistributed(spark: SparkSession, g: PreparedGraph,
-                              root: Long): Result = {
-    import spark.implicits._
-    val edges = g.edges
-    val all = g.all
-    val totalVerts = g.totalVerts
-
-    // Visited state = the list of per-level frontiers, each a small
-    // localCheckpoint()ed DataFrame. Anti-joins read their lazy union —
-    // same data volume as a materialized visited table, but without
-    // re-caching O(|visited|) rows every level.
-    val levels0 = Seq((root, root, 0)).toDF("vertex", "pred", "depth")
-      .localCheckpoint(eager = true)
-    val levelDfs = scala.collection.mutable.ArrayBuffer(levels0)
-    def visited: DataFrame = levelDfs.reduce(_ union _)
-    var visitedCount = 1L
-    var frontier = levels0.select("vertex")
-    var frontierSize = 1L
-    var level = 0
-    val sizes = scala.collection.mutable.ArrayBuffer((0, 1L))
-
-    while (frontierSize > 0) {
-      level += 1
-      val unvisitedCount = totalVerts - visitedCount
-      val bottomUp =
-        frontierSize * Beta > unvisitedCount && unvisitedCount <= BroadcastLimit
-      // Visited-check build sides, broadcast while they fit so the
-      // anti-join is a map-side hash probe (the reference's
-      // shared_visited bitmap, bfs.hpp:2584-2615); past the limit, fall
-      // back to a shuffle anti-join — the same bitmap↔list switch.
-      //
-      // Top-down needs only the LAST TWO levels: on an undirected graph a
-      // neighbor of a depth-(l−1) vertex sits at depth l−2, l−1, or l, so
-      // older levels can never reappear among candidates. This is the
-      // relational form of the reference's new/old-visited double buffer
-      // (bfs.hpp:1411-1439) — the anti-join build side is O(two
-      // frontiers), not O(|visited|).
-      val recentTwo = levelDfs.takeRight(2)
-      val recentCount = sizes.takeRight(2).map(_._2).sum
-      def recentSide(name: String): DataFrame = {
-        val v = recentTwo.map(_.select(col("vertex").as(name)))
-          .reduce(_ union _)
-        if (recentCount <= BroadcastLimit) broadcast(v) else v
-      }
-      def visitedSide(name: String): DataFrame = {
-        val v = visited.select(col("vertex").as(name))
-        if (visitedCount <= BroadcastLimit) broadcast(v) else v
-      }
-
-      val discovered =
-        if (bottomUp) {
-          // Small unvisited side: broadcast it, scan edges once, keep only
-          // parents that are in the current frontier. (Unvisited = all
-          // minus FULL visited — only this rare branch touches the whole
-          // set.)
-          val unvisited = all.join(visitedSide("vertex"), Seq("vertex"), "left_anti")
-          edges
-            .join(broadcast(unvisited), edges("dst") === unvisited("vertex"))
-            .select(edges("dst").as("vertex"), edges("src").as("pred"))
-            .join(
-              if (frontierSize <= BroadcastLimit)
-                broadcast(frontier.select(col("vertex").as("f")))
-              else frontier.select(col("vertex").as("f")),
-              col("pred") === col("f"), "left_semi")
-        } else {
-          val frontierSide =
-            if (frontierSize <= BroadcastLimit) broadcast(frontier) else frontier
-          edges
-            .join(frontierSide, edges("src") === frontierSide("vertex"))
-            .select(edges("dst").as("vertex"), edges("src").as("pred"))
-            .join(recentSide("v"), col("vertex") === col("v"), "left_anti")
-        }
-
-      // LAZY checkpoint + count = ONE job per level: the count is the
-      // materializing action (it computes and caches every partition at
-      // the checkpoint's storage level), after which the post-job
-      // LocalRDDCheckpointData pass finds nothing left to recompute. An
-      // eager checkpoint would submit a separate materialization job and
-      // the count a second one — at high SCALE the loop's floor is this
-      // fixed per-job latency × levels, not data volume.
-      val next = discovered
-        .groupBy("vertex").agg(min("pred").as("pred"))
-        .withColumn("depth", lit(level))
-        .localCheckpoint(eager = false)
-      frontierSize = next.count()
-      if (frontierSize > 0) {
-        sizes += ((level, frontierSize))
-        visitedCount += frontierSize
-        levelDfs += next
-        frontier = next.select("vertex")
-      }
-    }
-
-    val tree = all.join(visited, Seq("vertex"), "left_outer")
-      .select(
-        col("vertex"),
-        coalesce(col("pred"), lit(-1L)).as("pred"),
-        col("depth").cast("long").as("depth"))
-    Result(tree, sizes.toSeq)
+    * level loop otherwise — the batched search ([[bfsMinParentMulti]])
+    * at one run, with `run` dropped. Identical min-parent trees either
+    * way; `levelSizes` are the search's per-level frontier counts. */
+  def bfsMinParent(spark: SparkSession, g: PreparedGraph, root: Long): Result = {
+    val r = search(spark, g, Seq(root))
+    r.copy(tree = r.tree.drop("run"))
   }
 
   /** Byte-compat packed predecessor view (reference P5: depth in the high
@@ -429,12 +276,6 @@ object Bfs {
         .otherwise(shiftleft(col("depth"), 48).bitwiseOR(col("pred")))
         .as("packed"))
 
-  /** Per-level frontier sizes (reference Q10 — the per-level NQ telemetry,
-    * mpi/bfs.hpp:2836-2882) as a DataFrame, computed from a finished tree. */
-  def levelSizes(tree: DataFrame): DataFrame =
-    tree.filter(col("depth").isNotNull)
-      .groupBy(col("depth").as("level")).agg(count(lit(1)).as("frontier_size"))
-
   /**
    * Multi-source batched BFS: all `roots` traversed in ONE level-
    * synchronous loop over state keyed by (run, vertex). Each level's
@@ -445,54 +286,77 @@ object Bfs {
    * run until ALL runs are exhausted; total level count is the max depth
    * over runs, not the sum.
    *
-   * Returns (run, vertex, pred, depth) — per run, the same tree
-   * bfsMinParent produces.
+   * Returns (run, vertex, pred, depth) — per run, the tree
+   * [[bfsMinParent]] returns for that root.
    */
   def bfsMinParentMulti(spark: SparkSession, g: PreparedGraph,
                         roots: Seq[Long]): DataFrame =
-    if (g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark) &&
-        // run-major flat arrays must fit Int indexing, and every root must
-        // exist in the cleaned graph (kernel precondition); otherwise use
-        // the distributed loop, which handles both
-        roots.size.toLong * g.csr.nVerts <= Int.MaxValue &&
-        roots.forall(r => java.util.Arrays.binarySearch(g.csr.ids, r) >= 0)) {
-      val csr = g.csr
-      val nV = csr.nVerts
-      val nRuns = roots.size
-      // run-major packed kernel outputs, shipped once as broadcasts
-      val predFlat = new Array[Int](nRuns * nV)
-      val depthFlat = new Array[Int](nRuns * nV)
-      roots.zipWithIndex.foreach { case (root, run) =>
-        val (pred, depth, _) = csr.bfs(root)
-        System.arraycopy(pred, 0, predFlat, run * nV, nV)
-        System.arraycopy(depth, 0, depthFlat, run * nV, nV)
-      }
-      val bcIds = spark.sparkContext.broadcast(csr.ids)
-      val bcPred = spark.sparkContext.broadcast(predFlat)
-      val bcDepth = spark.sparkContext.broadcast(depthFlat)
-      val predOf = udf { (run: Long, vertex: Long) =>
-        val i = java.util.Arrays.binarySearch(bcIds.value, vertex)
-        val p = bcPred.value(run.toInt * nV + i)
-        if (p < 0) -1L else bcIds.value(p)
-      }
-      val depthOf = udf { (run: Long, vertex: Long) =>
-        val d = bcDepth.value(run.toInt * nV +
-          java.util.Arrays.binarySearch(bcIds.value, vertex))
-        if (d < 0) null.asInstanceOf[java.lang.Long]
-        else java.lang.Long.valueOf(d.toLong)
-      }
-      val runsDf = spark.range(nRuns).toDF("run")
-      g.all.crossJoin(broadcast(runsDf))
-        .select(col("run"), col("vertex"),
-          predOf(col("run"), col("vertex")).as("pred"),
-          depthOf(col("run"), col("vertex")).as("depth"))
-    } else bfsMinParentMultiDistributed(spark, g, roots)
+    search(spark, g, roots).tree
 
-  /** Distributed multi-source loop (see [[bfsMinParentMulti]]). */
-  def bfsMinParentMultiDistributed(spark: SparkSession, g: PreparedGraph,
-                                   roots: Seq[Long]): DataFrame = {
+  /** The hybrid gate: the kernel when the graph fits and the run-major
+    * arrays fit Int indexing, the level loop otherwise. The tree has a
+    * leading `run` column. */
+  private def search(spark: SparkSession, g: PreparedGraph,
+                     roots: Seq[Long]): Result =
+    if (g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark) &&
+        roots.size.toLong * g.csr.nVerts <= Int.MaxValue) kernelSearch(spark, g, roots)
+    else levelLoop(spark, g, roots)
+
+  /** `df` with a leading `run` column: each row once per run, by a
+    * projection (one generator above one run) — no join, no Spark job. */
+  private def withRuns(df: DataFrame, nRuns: Int): DataFrame = {
+    val run =
+      if (nRuns == 1) lit(0L)
+      else explode(sequence(lit(0L), lit(nRuns - 1L)))
+    df.select(run.as("run"), col("*"))
+  }
+
+  /** Every root through the CSR kernel. A root absent from the cleaned
+    * graph (its only edges were self-loops) reaches nothing, exactly as
+    * in the level loop: every vertex unreached, sizes (0, 1). The dense
+    * outputs ship to executors as ONE compact broadcast each and the
+    * rows materialize DISTRIBUTED, from the cached vertex table — never
+    * a driver-side row collection (a parallelize of millions of boxed
+    * rows costs seconds per downstream scan). */
+  private def kernelSearch(spark: SparkSession, g: PreparedGraph,
+                           roots: Seq[Long]): Result = {
+    val csr = g.csr
+    val nV = csr.nVerts
+    val runs = roots.map { root =>
+      if (java.util.Arrays.binarySearch(csr.ids, root) >= 0) csr.bfs(root)
+      else (Array.fill(nV)(-1), Array.fill(nV)(-1), Seq((0, 1L)))
+    }
+    // run-major
+    val predFlat = Array.concat(runs.map(_._1): _*)
+    val depthFlat = Array.concat(runs.map(_._2): _*)
+    val bcIds = spark.sparkContext.broadcast(csr.ids)
+    val bcPred = spark.sparkContext.broadcast(predFlat)
+    val bcDepth = spark.sparkContext.broadcast(depthFlat)
+    val predOf = udf { (run: Long, vertex: Long) =>
+      val p = bcPred.value(run.toInt * nV +
+        java.util.Arrays.binarySearch(bcIds.value, vertex))
+      if (p < 0) -1L else bcIds.value(p)
+    }
+    val depthOf = udf { (run: Long, vertex: Long) =>
+      val d = bcDepth.value(run.toInt * nV +
+        java.util.Arrays.binarySearch(bcIds.value, vertex))
+      if (d < 0) null.asInstanceOf[java.lang.Long]
+      else java.lang.Long.valueOf(d.toLong)
+    }
+    val trees = withRuns(g.all, roots.size)
+      .select(col("run"), col("vertex"),
+        predOf(col("run"), col("vertex")).as("pred"),
+        depthOf(col("run"), col("vertex")).as("depth"))
+    val sizes = runs.flatMap(_._3).groupMapReduce(_._1)(_._2)(_ + _)
+    Result(trees, sizes.toSeq.sorted, Some((predFlat, depthFlat)))
+  }
+
+  /** The distributed level loop (the scale path of the hybrid executor). */
+  private def levelLoop(spark: SparkSession, g: PreparedGraph,
+                        roots: Seq[Long]): Result = {
     import spark.implicits._
     val edges = g.edges
+    val nRuns = roots.size
 
     // Per-level checkpoints store SERIALIZED (MEMORY_AND_DISK_SER):
     // the default deserialized level keeps every level's UnsafeRow
@@ -501,24 +365,24 @@ object Bfs {
     // 32-task deserialized unroll of a peak level OOMed an 80 GB heap
     // (GCLocker retry storm → exit 52) while 422 GB spilled. Serialized
     // blocks unroll incrementally as compact buffers, evict to disk
-    // cleanly, and the ser/deser cost is per-level-linear — the
-    // multi-root loop is the capacity protocol, so it takes the
-    // capacity-safe storage; the single-source loop keeps the
-    // deserialized default that its S26 sequential runs are proven on.
-    val levelStorage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val runsDf0 = roots.indices.map(_.toLong).toDF("run")
+    // cleanly, and the ser/deser cost is per-level-linear.
+    //
+    // Visited state = the list of per-level frontiers, each a
+    // checkpointed DataFrame. Anti-joins read their lazy union — same
+    // data volume as a materialized visited table, but without
+    // re-caching O(|visited|) rows every level.
+    val levelStorage = StorageLevel.MEMORY_AND_DISK_SER
     val levels0 = roots.zipWithIndex
       .map { case (r, i) => (i.toLong, r, r, 0) }
       .toDF("run", "vertex", "pred", "depth")
       .localCheckpoint(true, levelStorage)
     val levelDfs = scala.collection.mutable.ArrayBuffer(levels0)
-    val levelCounts = scala.collection.mutable.ArrayBuffer(roots.size.toLong)
+    val sizes = scala.collection.mutable.ArrayBuffer((0, nRuns.toLong))
     def visited: DataFrame = levelDfs.reduce(_ union _)
-    def recentSizes: Seq[Long] = levelCounts.takeRight(2).toSeq
     var frontier = levels0.select("run", "vertex")
-    var frontierSize = roots.size.toLong
+    var frontierSize = nRuns.toLong
     var visitedTotal = frontierSize
-    val stateTotal = roots.size.toLong * g.totalVerts
+    val stateTotal = nRuns.toLong * g.totalVerts
     var level = 0
 
     while (frontierSize > 0) {
@@ -528,17 +392,23 @@ object Bfs {
       // the unvisited side (symmetric edges ⇒ the same src-partitioned
       // cached layout serves both directions — no second shuffle of the
       // big table, the reference's CSR/CSC duality for free).
-      val unvisitedTotal = stateTotal - visitedTotal
-      val bottomUp = frontierSize * Beta > unvisitedTotal
-      // Visited-check build sides (see bfsMinParent): top-down anti-joins
-      // only the last two levels (undirected depth property, per run);
-      // the rare bottom-up branch uses the full set.
-      val recentTwo = levelDfs.takeRight(2)
-      val recentCount = recentSizes.sum
+      val bottomUp = frontierSize * Beta > stateTotal - visitedTotal
+      // Visited-check build sides, broadcast while they fit so the
+      // anti-join is a map-side hash probe (the reference's
+      // shared_visited bitmap, bfs.hpp:2584-2615); past the limit, fall
+      // back to a shuffle anti-join — the same bitmap↔list switch.
+      //
+      // Top-down needs only the LAST TWO levels: on an undirected graph a
+      // neighbor of a depth-(l−1) vertex sits at depth l−2, l−1, or l, so
+      // older levels can never reappear among candidates. This is the
+      // relational form of the reference's new/old-visited double buffer
+      // (bfs.hpp:1411-1439) — the anti-join build side is O(two
+      // frontiers), not O(|visited|). The bottom-up branch uses the full
+      // set.
       def recentSide: DataFrame = {
-        val v = recentTwo.map(_.select(col("run"), col("vertex")))
+        val v = levelDfs.takeRight(2).map(_.select(col("run"), col("vertex")))
           .reduce(_ union _)
-        if (recentCount <= BroadcastLimit) broadcast(v) else v
+        if (sizes.takeRight(2).map(_._2).sum <= BroadcastLimit) broadcast(v) else v
       }
       def visitedSide: DataFrame = {
         val v = visited.select("run", "vertex")
@@ -547,7 +417,9 @@ object Bfs {
 
       val discovered =
         if (bottomUp) {
-          val unvisited = g.all.crossJoin(broadcast(runsDf0))
+          // unvisited ⋈ edges ON vertex = src: only the unvisited side
+          // moves, the edges stay in their src layout
+          val unvisited = withRuns(g.all, nRuns)
             .join(visitedSide, Seq("run", "vertex"), "left_anti")
           edges
             .join(unvisited, edges("src") === unvisited("vertex"))
@@ -567,17 +439,22 @@ object Bfs {
             .join(recentSide, Seq("run", "vertex"), "left_anti")
         }
 
-      // Lazy checkpoint + count = one job per level (see the
-      // single-source loop above for why this halves the latency floor).
+      // LAZY checkpoint + count = ONE job per level: the count is the
+      // materializing action (it computes and caches every partition at
+      // the checkpoint's storage level), after which the post-job
+      // LocalRDDCheckpointData pass finds nothing left to recompute. An
+      // eager checkpoint would submit a separate materialization job and
+      // the count a second one — at high SCALE the loop's floor is this
+      // fixed per-job latency × levels, not data volume.
       val next = discovered
         .groupBy("run", "vertex").agg(min("pred").as("pred"))
         .withColumn("depth", lit(level))
         .localCheckpoint(false, levelStorage)
       frontierSize = next.count()
       if (frontierSize > 0) {
+        sizes += ((level, frontierSize))
         visitedTotal += frontierSize
         levelDfs += next
-        levelCounts += frontierSize
         frontier = next.select("run", "vertex")
       }
       // Capacity-scale disk lifecycle: the count() above truncates the
@@ -592,11 +469,11 @@ object Bfs {
       if (g.totalEdges > GcPerLevelEdgeThreshold) System.gc()
     }
 
-    val runsDf = runsDf0
-    g.all.crossJoin(broadcast(runsDf))
+    val trees = withRuns(g.all, nRuns)
       .join(visited, Seq("run", "vertex"), "left_outer")
       .select(col("run"), col("vertex"),
         coalesce(col("pred"), lit(-1L)).as("pred"),
         col("depth").cast("long").as("depth"))
+    Result(trees, sizes.toSeq)
   }
 }

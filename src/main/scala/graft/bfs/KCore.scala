@@ -171,13 +171,13 @@ object KCore {
       alive = next
       r += 1
     }
-    val nOut = {
+    val nAlive = {
       var c = 0; var v = 0
       while (v < n) { if (alive(v)) c += 1; v += 1 }
       c
     }
-    val ids = new Array[Long](nOut)
-    val degs = new Array[Long](nOut)
+    val ids = new Array[Long](nAlive)
+    val degs = new Array[Long](nAlive)
     var v = 0; var o = 0
     while (v < n) {
       if (alive(v)) { ids(o) = csr.ids(v); degs(o) = deg(v).toLong; o += 1 }

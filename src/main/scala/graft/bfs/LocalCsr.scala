@@ -16,8 +16,8 @@ import org.apache.spark.sql.DataFrame
  * level costs a fixed multi-job scheduling overhead; the reference's
  * single-node numbers are only matchable by doing what the reference
  * does when the data fits — run the kernel where the data is. The
- * distributed DataFrame loop ([[Bfs.bfsMinParentDistributed]]) is the
- * general path and takes over past [[Bfs]]'s size gate.
+ * distributed DataFrame level loop behind [[Bfs.bfsMinParentMulti]] is
+ * the general path and takes over past [[Bfs]]'s size gate.
  *
  * Determinism contract (shared with the distributed loop): ids sorted,
  * adjacency rows sorted, top-down processes the frontier in ascending id

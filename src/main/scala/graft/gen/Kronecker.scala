@@ -109,7 +109,9 @@ object Kronecker {
     private val st = base.copy()
     private var next = 0L
 
-    def edge(i: Long): (Long, Long) = {
+    /** The state at the start of edge i's stream (offset i·2^64), as
+      * `makeSeed` + `skip(0, i, 0)` gives it; the next call reuses it. */
+    private def stream(i: Long): Mrg.State = {
       if (i != next) {
         base.set(Mrg.makeSeed(seed1, seed2))
         base.skip(0L, i, 0L)
@@ -117,7 +119,18 @@ object Kronecker {
       st.set(base)
       base.nextEdge()
       next = i + 1
-      descend(st, scale, val0, val1)
+      st
+    }
+
+    def edge(i: Long): (Long, Long) = descend(stream(i), scale, val0, val1)
+
+    /** [[generateUniform]]'s edge i: two draws from edge i's stream,
+      * masked to [0, 2^scale) and scrambled. */
+    def uniformEdge(i: Long): (Long, Long) = {
+      val st = stream(i)
+      val mask = (1L << scale) - 1
+      (scramble(st.nextUint() & mask, scale, val0, val1),
+        scramble(st.nextUint() & mask, scale, val0, val1))
     }
   }
 
@@ -183,21 +196,19 @@ object Kronecker {
   /** Uniform random generator (reference S5, RandomGraphGenerator,
     * graph_generator.hpp:571-600): endpoints = scramble(uint & (n−1)) from
     * the per-edge MRG state at offset i·2^64. Same embarrassingly parallel
-    * scan shape as the Kronecker path. */
+    * scan shape as the Kronecker path, streamed the same way: each
+    * partition steps one [[Source]] ([[Source.uniformEdge]]). */
   def generateUniform(spark: SparkSession, scale: Int,
                       edgeFactor: Long = DefaultEdgeFactor,
                       seed1: Long = DefaultSeed1,
                       seed2: Long = DefaultSeed2): DataFrame = {
     import spark.implicits._
     val (val0, val1) = scrambleVals(seed1, seed2)
-    val mask = (1L << scale) - 1
     spark.range(0L, edgeFactor << scale)
-      .mapPartitions(_.map { i =>
-        val st = Mrg.makeSeed(seed1, seed2)
-        st.skip(0L, i, 0L)
-        (scramble(st.nextUint() & mask, scale, val0, val1),
-          scramble(st.nextUint() & mask, scale, val0, val1))
-      })
+      .mapPartitions { iter =>
+        val src = new Source(scale, seed1, seed2, val0, val1)
+        iter.map(i => src.uniformEdge(i))
+      }
       .toDF("src", "dst")
   }
 
@@ -205,7 +216,11 @@ object Kronecker {
     * intended per-edge-addressable weight stream at MRG offset
     * 30·2^128 + 46·2^64 + i, weight = (uint mod maxWeight) + 1. (The
     * reference ships with a debug 0xBEEF constant, `#if 1` at 499-501;
-    * we implement the real stream its SSSP path was built for.) */
+    * we implement the real stream its SSSP path was built for.) Each
+    * partition streams its edges through one [[Source]]; the weight
+    * offsets of consecutive indices are consecutive draws, so its
+    * weights step one state, re-skipping from the seed only at an index
+    * that does not follow the previous one. */
   def generateWeighted(spark: SparkSession, scale: Int,
                        maxWeight: Int = 255,
                        edgeFactor: Long = DefaultEdgeFactor,
@@ -214,12 +229,17 @@ object Kronecker {
     import spark.implicits._
     val (val0, val1) = scrambleVals(seed1, seed2)
     spark.range(0L, edgeFactor << scale)
-      .mapPartitions(_.map { i =>
-        val (s, d) = makeEdge(scale, i, seed1, seed2, val0, val1)
-        val st = Mrg.makeSeed(seed1, seed2)
-        st.skip(30L, 46L, i)
-        (s, d, ((st.nextUint() % maxWeight) + 1).toInt)
-      })
+      .mapPartitions { iter =>
+        val src = new Source(scale, seed1, seed2, val0, val1)
+        val w = Mrg.makeSeed(seed1, seed2)
+        var next = -1L
+        iter.map { i =>
+          if (i != next) { w.set(Mrg.makeSeed(seed1, seed2)); w.skip(30L, 46L, i) }
+          next = i + 1
+          val (s, d) = src.edge(i)
+          (s, d, ((w.nextUint() % maxWeight) + 1).toInt)
+        }
+      }
       .toDF("src", "dst", "weight")
   }
 

@@ -3,9 +3,10 @@ package graft.validate
 import org.apache.spark.sql.DataFrame
 
 /**
- * In-memory validation kernel — the hybrid fast path of [[Validator]]
- * for benchmark loops whose graphs fit under the local-kernel gate
- * ([[graft.Gates.localBfsMaxEdges]]).
+ * In-memory validation kernel — [[Validator]]'s five checks on the BFS
+ * kernel's dense (pred, depth) arrays, for callers whose graphs fit
+ * under the local-kernel gate ([[graft.Gates.localBfsMaxEdges]]): every
+ * Graph500 protocol's run loop and `q8_validate`.
  *
  * The reference validates each BFS run with five checks over the RAW
  * edge list, each a scan that runs in parallel on every rank
@@ -15,16 +16,19 @@ import org.apache.spark.sql.DataFrame
  * graph's sorted vertex ids, to its distinct undirected edges: rows
  * `loStart` (nV+1 offsets) holding, per dense endpoint lo, its his above
  * lo with each edge's raw multiplicity (both directions and repeats
- * counted), plus one list of the single-vertex edges — self-loops, and
- * edges whose other endpoint is outside the graph — with their counts
- * per vertex. The raw list itself is not kept. The rows are derived from
+ * counted), plus one list of the self-loops with their counts per
+ * vertex. The raw list itself is not kept. `clean_ids` must be the ids
+ * of the graph built from that raw list: a non-loop endpoint missing
+ * from them is a construction fault and fails the constructor, naming
+ * the vertex; a loop on a vertex absent from them (construction drops
+ * loop-only vertices) is skipped. The rows are derived from
  * the raw list, never from the BFS's CSR, so validation stays
  * independent of what it checks.
  *
  * A run's dense (pred, depth) arrays are then validated in one pass over
  * the rows, in `availableProcessors() * 4` stripes on the common pool,
  * as [[graft.bfs.LocalCsr]]'s kernels do: each stripe covers a range of
- * lo (balanced by edges plus vertices) and a slice of the single-vertex
+ * lo (balanced by edges plus vertices) and a slice of the self-loop
  * list and keeps its own counters, which the caller's thread then sums.
  * Long addition is associative, so the counters are exactly those of a
  * sequential pass — identical to [[Validator.validate]]
@@ -45,15 +49,15 @@ import org.apache.spark.sql.DataFrame
  *  - edge checks:   per raw edge WITH multiplicity (self-loops included);
  *                   endpoint depth is NULL if the vertex is isolated
  *                   (absent from the cleaned graph) or unreached. So a
- *                   self-loop is a visit iff its vertex is reached, and an
- *                   edge to outside the graph an error iff its other
- *                   endpoint is.
+ *                   self-loop is a visit iff its vertex is reached.
  */
 final class LocalValidator private (clean_ids: Array[Long],
                                     rows: LocalValidator.Rows) {
 
   /** Reduces the raw pair list (src, dst interleaved) to the rows; the
-    * array is not referenced after construction. */
+    * array is not referenced after construction. Throws
+    * IllegalArgumentException naming a non-loop endpoint missing from
+    * `clean_ids`. */
   def this(clean_ids: Array[Long], rawPairs: Array[Long]) =
     this(clean_ids, LocalValidator.rowsOf(clean_ids, rawPairs))
 
@@ -91,8 +95,8 @@ final class LocalValidator private (clean_ids: Array[Long],
   def validate(pred: Array[Int], depth: Array[Int], rootDense: Int,
                nGlobalVerts: Long): Array[Long] = {
     val loStart = rows.loStart; val his = rows.hi; val mult = rows.mult
-    val single = rows.single; val nLoops = rows.nLoops; val nOut = rows.nOut
-    val nSingle = single.length
+    val loopV = rows.loopV; val nLoops = rows.nLoops
+    val nLoopV = loopV.length
     val perStripe = new Array[Long](nStripes * NCounters)
     java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
       var range = 0L; var rootE = 0L; var selfPar = 0L; var presence = 0L
@@ -127,10 +131,10 @@ final class LocalValidator private (clean_ids: Array[Long],
         }
         v += 1
       }
-      var i = (nSingle.toLong * st / nStripes).toInt
-      val iTo = (nSingle.toLong * (st + 1) / nStripes).toInt
+      var i = (nLoopV.toLong * st / nStripes).toInt
+      val iTo = (nLoopV.toLong * (st + 1) / nStripes).toInt
       while (i < iTo) {
-        if (depth(single(i)) != -1) { visits += nLoops(i); edgeDepth += nOut(i) }
+        if (depth(loopV(i)) != -1) visits += nLoops(i)
         i += 1
       }
       val o = st * NCounters
@@ -152,30 +156,32 @@ object LocalValidator {
 
   /** The distinct undirected edges between graph vertices as rows — the
     * his of lo, ascending, in `hi(loStart(lo) until loStart(lo + 1))`,
-    * each with its raw multiplicity in `mult` — and the single-vertex
-    * edges as (vertex `single(i)`, self-loop count `nLoops(i)`, count of
-    * edges to outside the graph `nOut(i)`), one of the two counts zero —
-    * a vertex with both kinds has two entries. */
+    * each with its raw multiplicity in `mult` — and the self-loops as
+    * (vertex `loopV(i)`, loop count `nLoops(i)`). */
   private final class Rows(val loStart: Array[Int], val hi: Array[Int],
-                           val mult: Array[Int], val single: Array[Int],
-                           val nLoops: Array[Int], val nOut: Array[Int])
+                           val mult: Array[Int], val loopV: Array[Int],
+                           val nLoops: Array[Int])
 
   private def rowsOf(ids: Array[Long], raw: Array[Long]): Rows = {
     val nE = raw.length / 2
     // one key per raw edge: lo << 32 | hi for an edge between graph
-    // vertices, v << 32 | v for a self-loop, v << 32 | 0xFFFFFFFF for an
-    // edge from v to outside the graph, and -1 for one with neither end
-    // in it; sorted, equal keys are one edge with its multiplicity
+    // vertices, v << 32 | v for a self-loop, and -1 for a loop on a
+    // vertex outside the graph; sorted, equal keys are one edge with its
+    // multiplicity
     val keys = new Array[Long](nE)
     java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
       var i = (nE.toLong * st / nStripes).toInt
       val to = (nE.toLong * (st + 1) / nStripes).toInt
       while (i < to) {
-        val a = java.util.Arrays.binarySearch(ids, raw(2 * i))
-        val c = java.util.Arrays.binarySearch(ids, raw(2 * i + 1))
+        val s = raw(2 * i); val d = raw(2 * i + 1)
+        val a = java.util.Arrays.binarySearch(ids, s)
+        val c = if (d == s) a else java.util.Arrays.binarySearch(ids, d)
+        if (d != s && (a < 0 || c < 0))
+          throw new IllegalArgumentException(
+            s"raw edge ($s, $d): vertex ${if (a < 0) s else d} is not in " +
+              "the graph's ids — the ids must come from this raw list")
         keys(i) =
-          if (a >= 0 && c >= 0) (math.min(a, c).toLong << 32) | math.max(a, c)
-          else if (a >= 0 || c >= 0) (math.max(a, c).toLong << 32) | 0xFFFFFFFFL
+          if (a >= 0) (math.min(a, c).toLong << 32) | math.max(a, c)
           else -1L
         i += 1
       }
@@ -184,8 +190,7 @@ object LocalValidator {
     val nV = ids.length
     val loStart = new Array[Int](nV + 1)
     val hi = Array.newBuilder[Int]; val mult = Array.newBuilder[Int]
-    val single = Array.newBuilder[Int]
-    val nLoops = Array.newBuilder[Int]; val nOut = Array.newBuilder[Int]
+    val loopV = Array.newBuilder[Int]; val nLoops = Array.newBuilder[Int]
     var j = 0
     while (j < nE) {
       val key = keys(j)
@@ -194,18 +199,14 @@ object LocalValidator {
       if (key >= 0) {
         val lo = (key >>> 32).toInt
         val h = key.toInt
-        if (h != lo && h != -1) {
-          hi += h; mult += m; loStart(lo + 1) += 1
-        } else {
-          val isLoop = h == lo
-          single += lo; nLoops += (if (isLoop) m else 0); nOut += (if (isLoop) 0 else m)
-        }
+        if (h != lo) { hi += h; mult += m; loStart(lo + 1) += 1 }
+        else { loopV += lo; nLoops += m }
       }
       j += m
     }
     var v = 0
     while (v < nV) { loStart(v + 1) += loStart(v); v += 1 }
-    new Rows(loStart, hi.result(), mult.result(), single.result(),
-      nLoops.result(), nOut.result())
+    new Rows(loStart, hi.result(), mult.result(), loopV.result(),
+      nLoops.result())
   }
 }

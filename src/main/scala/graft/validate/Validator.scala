@@ -25,6 +25,12 @@ import org.apache.spark.sql.functions._
  * scale the raw-edge scan dominates exactly as in the reference (SURVEY §7.4).
  * Both tree joins are plain equi-joins on vertex id: Catalyst broadcasts the
  * tree when it is small, otherwise shuffles both sides once.
+ *
+ * A tree given as a DataFrame always takes this relational plan. Callers
+ * that hold the BFS kernel's dense (pred, depth) arrays — every Graph500
+ * protocol under the kernel gate, and `q8_validate` — hand them to
+ * [[LocalValidator]] instead, whose counters equal this plan's
+ * (LocalValidatorSpec); [[countersDf]] gives them this plan's row shape.
  */
 object Validator {
 
@@ -116,21 +122,6 @@ object Validator {
   def validate(spark: SparkSession, rawEdges: DataFrame, tree: DataFrame,
                root: Long, nGlobalVerts: Long,
                undirectedRaw: Option[DataFrame] = None): DataFrame = {
-    // Hybrid gate (same limit as the BFS executor): a raw list under
-    // spark.graft.localBfsMaxEdges validates in one in-memory pass via
-    // [[LocalValidator]] instead of ~8 join/aggregate stages. Falls back
-    // to the DataFrame path for streams, big lists, or trees whose pred
-    // values escape the tree's own vertex universe (only such degenerate
-    // trees need the general relational plan).
-    if (!rawEdges.isStreaming && !tree.isStreaming && undirectedRaw.isEmpty) {
-      val gate = graft.Gates.localBfsMaxEdges.limit(spark)
-      if (gate > 0 && rawEdges.count() <= gate) {
-        validateLocal(spark, rawEdges, tree, root, nGlobalVerts) match {
-          case Some(df) => return df
-          case None =>
-        }
-      }
-    }
     val t = tree.select("vertex", "pred", "depth")
     // One tree row per vertex: when the vertex universe fits, broadcast
     // the tree-side BUILD inputs (parentDepth, du, dv below) — the
@@ -198,46 +189,6 @@ object Validator {
       .crossJoin(depthErrors)
       .crossJoin(predEdgeMissing)
       .crossJoin(edgeChecks)
-  }
-
-  /** One-shot local validation: dense-map the tree, run the
-    * [[LocalValidator]] kernel, and wrap its counters as the same
-    * single-row DataFrame the relational plan produces. None when the
-    * tree's pred values cannot be dense-mapped (pred ∉ vertices ∪ {−1})
-    * or the root is absent — the caller then takes the DataFrame path. */
-  private def validateLocal(spark: SparkSession, rawEdges: DataFrame,
-                            tree: DataFrame, root: Long,
-                            nGlobalVerts: Long): Option[DataFrame] = {
-    val rows = tree.select("vertex", "pred", "depth").collect()
-    val n = rows.length
-    val order = (0 until n).sortBy(i => rows(i).getLong(0)).toArray
-    val ids = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      ids(i) = rows(order(i)).getLong(0)
-      if (i > 0 && ids(i) == ids(i - 1)) return None // duplicate vertex row
-      i += 1
-    }
-    val rootDense = java.util.Arrays.binarySearch(ids, root)
-    if (rootDense < 0) return None
-    val pred = new Array[Int](n)
-    val depth = new Array[Int](n)
-    i = 0
-    while (i < n) {
-      val r = rows(order(i))
-      val p = r.getLong(1)
-      if (p == -1L) pred(i) = -1
-      else {
-        val d = java.util.Arrays.binarySearch(ids, p)
-        if (d < 0) return None // pred outside the vertex universe
-        pred(i) = d
-      }
-      depth(i) = if (r.isNullAt(2)) -1 else r.getLong(2).toInt
-      i += 1
-    }
-    val c = new LocalValidator(ids, rawEdges)
-      .validate(pred, depth, rootDense, nGlobalVerts)
-    Some(countersDf(spark, c))
   }
 
   /** The LocalValidator counter array as the single-row DataFrame the

@@ -49,9 +49,11 @@ class Graph500GoldenSpec extends SparkSpec {
     val result = Bfs.bfsMinParent(spark, clean, root)
     val reached = result.tree.filter(col("depth").isNotNull).count()
     assert(result.levelSizes.map(_._2).sum === reached)
-    val fromTree = Bfs.levelSizes(result.tree)
-      .agg(sum("frontier_size")).head().getLong(0)
-    assert(fromTree === reached)
+    // the search's per-level counts are the tree's depth histogram
+    val fromTree = result.tree.filter(col("depth").isNotNull)
+      .groupBy("depth").count().collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1))).sortBy(_._1).toSeq
+    assert(result.levelSizes === fromTree)
     clean.unpersist()
   }
 }

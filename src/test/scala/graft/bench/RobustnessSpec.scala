@@ -3,7 +3,6 @@ package graft.bench
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.bfs.Bfs
-import graft.etl.EdgeOps
 
 /** Edge-case behavior of the benchmark drivers and the hybrid BFS gate
   * (round-2 advice items): degenerate inputs must degrade gracefully,
@@ -92,10 +91,15 @@ class RobustnessSpec extends SparkSpec {
     // raw min(src) = 0, but 0's only edge is a self-loop → absent from the
     // cleaned graph
     val raw = Seq((0L, 0L), (2L, 3L), (3L, 4L), (4L, 2L)).toDF("src", "dst")
-    val local = Bfs.bfsMinParentRaw(spark, raw, 0L)
-    val g = Bfs.prepare(EdgeOps.cleanEdges(raw))
+    val g = Bfs.prepareRaw(raw)
     try {
-      val dist = Bfs.bfsMinParentDistributed(spark, g, 0L)
+      // the kernel handles the absent root itself: all unreached
+      val local = Bfs.bfsMinParent(spark, g, 0L)
+      assert(local.dense.exists { case (p, d) => p.forall(_ == -1) && d.forall(_ == -1) })
+      assert(local.levelSizes === Seq((0, 1L)))
+      val dist = graft.Gates.localBfsMaxEdges.withLimit(spark, 0L) {
+        Bfs.bfsMinParent(spark, g, 0L)
+      }
       assert(local.tree.exceptAll(dist.tree).isEmpty &&
         dist.tree.exceptAll(local.tree).isEmpty,
         "missing-root local tree must equal the distributed loop's")
@@ -103,19 +107,23 @@ class RobustnessSpec extends SparkSpec {
     } finally g.unpersist()
   }
 
-  test("multi-root local gate falls back when a root is missing") {
+  test("multi-root kernel: a missing root reaches nothing, the others traverse") {
     val s = spark
     import s.implicits._
     val raw = Seq((0L, 0L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val g = Bfs.prepareRaw(raw)
     try {
-      // root 0 absent from the cleaned graph → distributed fallback, which
-      // reports it all-unreached; root 2 traverses normally
+      // root 0 is absent from the cleaned graph: the kernel reports it
+      // all-unreached, as the level loop does; root 2 traverses normally
       val multi = Bfs.bfsMinParentMulti(spark, g, Seq(0L, 2L))
       val run0 = multi.filter(col("run") === 0L)
       assert(run0.filter(col("pred") =!= -1L).count() === 0L)
       val run1 = multi.filter(col("run") === 1L && col("depth").isNotNull)
       assert(run1.count() === 3L)
+      val dist = graft.Gates.localBfsMaxEdges.withLimit(spark, 0L) {
+        Bfs.bfsMinParentMulti(spark, g, Seq(0L, 2L))
+      }
+      assert(multi.exceptAll(dist).isEmpty && dist.exceptAll(multi).isEmpty)
     } finally g.unpersist()
   }
 

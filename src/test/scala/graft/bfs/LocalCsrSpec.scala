@@ -6,24 +6,33 @@ import graft.etl.EdgeOps
 
 /** The hybrid executor's two paths must produce identical canonical
   * min-parent trees — the local CSR kernel is an optimization, never a
-  * semantics change. */
+  * semantics change. The distributed side is the same entry point with
+  * the kernel gate at 0. */
 class LocalCsrSpec extends SparkSpec {
+
+  /** Kernel vs level loop from `root`: equal trees and `levelSizes`. */
+  private def kernelEqualsLoop(g: Bfs.PreparedGraph, root: Long,
+                               label: String): Unit = {
+    assert(g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark),
+      s"$label: test graph should take the local path")
+    val local = Bfs.bfsMinParent(spark, g, root)
+    assert(local.dense.isDefined, s"$label: the kernel ran")
+    val dist = graft.Gates.localBfsMaxEdges.withLimit(spark, 0L) {
+      Bfs.bfsMinParent(spark, g, root)
+    }
+    assert(local.levelSizes === dist.levelSizes, s"$label: levelSizes")
+    assert(local.tree.exceptAll(dist.tree).isEmpty &&
+      dist.tree.exceptAll(local.tree).isEmpty,
+      s"$label: local CSR tree must equal the distributed loop's tree")
+  }
 
   private def treesEqual(scale: String): Unit = {
     val clean = EdgeOps.cleanEdges(
       EdgeOps.edgesFromLineitem(spark, s"/root/testdata/$scale"))
     val root = clean.agg(min(col("src"))).head().getLong(0)
     val g = Bfs.prepare(clean)
-    try {
-      val local = Bfs.bfsMinParent(spark, g, root)
-      val dist = Bfs.bfsMinParentDistributed(spark, g, root)
-      assert(g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark),
-        "test graph should take the local path")
-      assert(local.levelSizes === dist.levelSizes)
-      assert(local.tree.exceptAll(dist.tree).isEmpty &&
-        dist.tree.exceptAll(local.tree).isEmpty,
-        "local CSR tree must equal the distributed loop's tree")
-    } finally g.unpersist()
+    try kernelEqualsLoop(g, root, scale)
+    finally g.unpersist()
   }
 
   test("local CSR BFS equals distributed BFS on sf0.001 lineitem graph") {
@@ -42,12 +51,8 @@ class LocalCsrSpec extends SparkSpec {
       if (clean.count() > 0) {
         val root = clean.agg(min(col("src"))).head().getLong(0)
         val g = Bfs.prepare(clean)
-        try {
-          val local = Bfs.bfsMinParent(spark, g, root)
-          val dist = Bfs.bfsMinParentDistributed(spark, g, root)
-          assert(local.tree.exceptAll(dist.tree).isEmpty &&
-            dist.tree.exceptAll(local.tree).isEmpty, s"seed $seed")
-        } finally g.unpersist()
+        try kernelEqualsLoop(g, root, s"seed $seed")
+        finally g.unpersist()
       }
     }
   }
@@ -122,16 +127,19 @@ class LocalCsrSpec extends SparkSpec {
           if (outside.isEmpty || sampled.exists(r => giant(dense(r)) < 0)) sampled
           else sampled.init :+ outside.get
         assert(roots.size === 16)
-        // the multi-root distributed loop: one level loop for all 16
-        // roots, per run the same tree as bfsMinParentDistributed (see
-        // "multi-root distributed loop" above)
+        // the distributed level loop: one loop for all 16 roots, and at
+        // SCALE 10 the single-source search from the root outside the
+        // giant component (trees and levelSizes against the kernel's)
         val g = Bfs.prepare(EdgeOps.cleanEdges(raw))
         val dist = try {
-          Bfs.bfsMinParentMultiDistributed(spark, g, roots).collect()
-            .groupBy(_.getLong(0)).map { case (run, rows) =>
-              run.toInt -> rows.map(r => (r.getLong(1), r.getLong(2),
-                if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-            }
+          if (scale == 10) outside.foreach(r => kernelEqualsLoop(g, r,
+            s"SCALE 10 root $r outside the giant component"))
+          graft.Gates.localBfsMaxEdges.withLimit(spark, 0L) {
+            Bfs.bfsMinParentMulti(spark, g, roots).collect()
+          }.groupBy(_.getLong(0)).map { case (run, rows) =>
+            run.toInt -> rows.map(r => (r.getLong(1), r.getLong(2),
+              if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
+          }
         } finally g.unpersist()
         val pred = new Array[Int](nV)
         val depth = new Array[Int](nV)
@@ -202,7 +210,9 @@ class LocalCsrSpec extends SparkSpec {
       val roots = clean.select("src").distinct().orderBy("src")
         .limit(2).collect().map(_.getLong(0)).toSeq
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val multi = Bfs.bfsMinParentMultiDistributed(spark, g, roots)
+      val multi = graft.Gates.localBfsMaxEdges.withLimit(spark, 0L) {
+        Bfs.bfsMinParentMulti(spark, g, roots)
+      }
       multi.count()
       // the per-level checkpoints must store SERIALIZED — the
       // deserialized default OOMed the 16-root SCALE-26 capacity run

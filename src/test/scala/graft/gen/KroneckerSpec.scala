@@ -81,6 +81,48 @@ class KroneckerSpec extends SparkSpec {
     }
   }
 
+  test("uniform and weighted generators equal their per-index streams, across 7 partitions") {
+    import graft.rng.Mrg
+    val (v0, v1) = Kronecker.scrambleVals(2, 3)
+    val session = spark.newSession()
+    session.conf.set("spark.sql.leafNodeDefaultParallelism", "7")
+    val scale = 10
+    val mask = (1L << scale) - 1
+    // each row's streams skipped from the seed, as the generators did
+    // before they streamed
+    def uniform(i: Long): (Long, Long) = {
+      val st = Mrg.makeSeed(2, 3)
+      st.skip(0L, i, 0L)
+      (Kronecker.scramble(st.nextUint() & mask, scale, v0, v1),
+        Kronecker.scramble(st.nextUint() & mask, scale, v0, v1))
+    }
+    def weight(i: Long, maxWeight: Int): Int = {
+      val st = Mrg.makeSeed(2, 3)
+      st.skip(30L, 46L, i)
+      ((st.nextUint() % maxWeight) + 1).toInt
+    }
+    val u = Kronecker.generateUniform(session, scale)
+    assert(u.rdd.getNumPartitions === 7)
+    val us = u.collect()
+    assert(us.length === 16 << scale)
+    for (i <- us.indices) {
+      val e = (us(i).getLong(0), us(i).getLong(1))
+      if (e != uniform(i)) fail(s"uniform edge $i: $e")
+    }
+    for (maxWeight <- Seq(255, 7)) {
+      val w = Kronecker.generateWeighted(session, scale, maxWeight)
+      assert(w.rdd.getNumPartitions === 7)
+      val ws = w.collect()
+      assert(ws.length === 16 << scale)
+      for (i <- ws.indices) {
+        val e = (ws(i).getLong(0), ws(i).getLong(1), ws(i).getInt(2))
+        val (s, d) = Kronecker.makeEdge(scale, i, 2, 3, v0, v1)
+        if (e != ((s, d, weight(i, maxWeight))))
+          fail(s"weighted edge $i (maxWeight $maxWeight): $e")
+      }
+    }
+  }
+
   test("the streamed source equals makeEdge on random-order indices") {
     val (v0, v1) = Kronecker.scrambleVals(7, 9)
     val src = new Kronecker.Source(14, 7, 9, v0, v1)

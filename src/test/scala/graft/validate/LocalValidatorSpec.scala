@@ -21,13 +21,11 @@ class LocalValidatorSpec extends SparkSpec {
     }.toDF("vertex", "pred", "depth")
   }
 
-  /** The relational plan's counters, forced past the kernel gate. */
+  /** The relational plan's counters on a dense tree. */
   private def relational(raw: DataFrame, ids: Array[Long], p: Array[Int],
                          d: Array[Int], root: Long, nGlobal: Long): Seq[Long] = {
-    spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-    val row = try Validator.validate(spark, raw, denseTreeDf(ids, p, d), root,
+    val row = Validator.validate(spark, raw, denseTreeDf(ids, p, d), root,
       nGlobal).head()
-    finally spark.conf.unset("spark.graft.localBfsMaxEdges")
     (0 until row.length).map(row.getLong)
   }
 
@@ -122,16 +120,35 @@ class LocalValidatorSpec extends SparkSpec {
   test("an edge to a vertex outside the tree counts as the plan counts it") {
     val s = spark; import s.implicits._
     val raw = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 3L), (4L, 5L)).toDF("src", "dst")
-    // vertex 3 is left out of the tree: 2-3 has one NULL-depth side
+    // vertex 3 is left out of the tree: 2-3 has one NULL-depth side, one
+    // edge depth error; the loop on 3 has two NULL sides, no error
     val tree = Seq((0L, 0L, Some(0L)), (1L, 0L, Some(1L)), (2L, 1L, Some(2L)),
       (4L, -1L, None), (5L, -1L, None)).toDF("vertex", "pred", "depth")
-    val gated = Validator.validate(spark, raw, tree, 0L, 6L).head()
-    spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-    val dist = try Validator.validate(spark, raw, tree, 0L, 6L).head()
-    finally spark.conf.unset("spark.graft.localBfsMaxEdges")
-    assert((0 until gated.length).map(gated.getLong) ===
-      (0 until dist.length).map(dist.getLong))
-    assert(gated.getLong(6) === 1L)
+    val row = Validator.validate(spark, raw, tree, 0L, 6L).head()
+    assert((0 until row.length).map(row.getLong) === Seq(0, 0, 0, 0, 0, 0, 1, 2))
+    // the kernel takes no such tree: ids without 3 fail its construction
+    val e = intercept[IllegalArgumentException](
+      new LocalValidator(Array(0L, 1L, 2L, 4L, 5L), raw))
+    assert(e.getMessage.contains("vertex 3 "), e.getMessage)
+  }
+
+  test("ids missing a raw endpoint: construction throws naming the vertex") {
+    val flat = Array(0L, 1L, 1L, 2L, 7L, 7L, 2L, 3L)
+    val ids = LocalCsr.buildFromRawPairs(flat).ids
+    // the loop-only vertex 7 is not in the graph, and that is fine
+    assert(ids.toSeq === Seq(0L, 1L, 2L, 3L))
+    new LocalValidator(ids, flat)
+    // an endpoint missing on the dst side, then on the src side
+    for ((missing, at) <- Seq(3L -> "dst", 0L -> "src")) {
+      val e = intercept[IllegalArgumentException](
+        new LocalValidator(ids.filter(_ != missing), flat))
+      assert(e.getMessage.contains(s"vertex $missing "), s"$at: ${e.getMessage}")
+    }
+    // one vertex of a large list, found by whichever stripe holds it
+    val big = (0L until 10000L).flatMap(v => Seq(v, v + 1)).toArray
+    val e = intercept[IllegalArgumentException](
+      new LocalValidator((0L to 10000L).filter(_ != 6543L).toArray, big))
+    assert(e.getMessage.contains("vertex 6543 "), e.getMessage)
   }
 
   test("the validator holds no reference to the raw pair array") {
@@ -166,22 +183,8 @@ class LocalValidatorSpec extends SparkSpec {
 
           def compare(p: Array[Int], d: Array[Int], label: String): Unit = {
             val local = lv.validate(p, d, 0, maxV + 1)
-            // force the relational plan — Validator.validate itself now
-            // routes small inputs to this kernel, which would make the
-            // comparison vacuous
-            spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-            val row = try Validator.validate(spark, raw,
-              denseTreeDf(csr.ids, p, d), root, maxV + 1).head()
-            finally spark.conf.unset("spark.graft.localBfsMaxEdges")
-            val df = (0 until row.length).map(row.getLong)
+            val df = relational(raw, csr.ids, p, d, root, maxV + 1)
             assert(local.toSeq === df, s"seed=$seed $label: $local vs $df")
-            // and the gated entry point must agree with both, whichever
-            // path it picks (kernel for dense-mappable trees, relational
-            // fallback for corrupted ones)
-            val gatedRow = Validator.validate(spark, raw,
-              denseTreeDf(csr.ids, p, d), root, maxV + 1).head()
-            val gated = (0 until gatedRow.length).map(gatedRow.getLong)
-            assert(gated === df, s"seed=$seed $label gated: $gated vs $df")
           }
 
           compare(pred, depth, "valid tree")
@@ -239,11 +242,7 @@ class LocalValidatorSpec extends SparkSpec {
         val local = lv.validate(p, d, rootDense, maxV + 1).toSeq
         assert(lv.validate(p, d, rootDense, maxV + 1).toSeq === local,
           s"$label: a second call on the same arrays differs")
-        spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-        val row = try Validator.validate(spark, raw,
-          denseTreeDf(csr.ids, p, d), root, maxV + 1).head()
-        finally spark.conf.unset("spark.graft.localBfsMaxEdges")
-        assert(local === (0 until row.length).map(row.getLong), label)
+        assert(local === relational(raw, csr.ids, p, d, root, maxV + 1), label)
         local
       }
       def rewired(v: Int, p: Int) = { val a = pred.clone(); a(v) = p; a }
@@ -286,20 +285,16 @@ class LocalValidatorSpec extends SparkSpec {
     } finally raw.unpersist()
   }
 
-  test("gated validate falls back for preds outside the vertex universe") {
+  test("the relational plan counts a pred outside the vertex universe") {
     val s = spark; import s.implicits._
     val raw = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
-    // pred(2) = 99 is in [−1, nGlobalVerts) numerically impossible to
-    // dense-map — the kernel must decline and the relational plan count it
+    // pred(2) = 99 is in [−1, nGlobalVerts) but no vertex of the tree:
+    // no dense (pred, depth) array can hold it, so only the relational
+    // plan sees such a tree
     val tree = Seq((0L, 0L, Some(0L)), (1L, 0L, Some(1L)), (2L, 99L, Some(1L)))
       .toDF("vertex", "pred", "depth")
-    val gated = Validator.validate(spark, raw, tree, 0L, 100L).head()
-    spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-    val dist = try Validator.validate(spark, raw, tree, 0L, 100L).head()
-    finally spark.conf.unset("spark.graft.localBfsMaxEdges")
-    assert((0 until gated.length).map(gated.getLong) ===
-      (0 until dist.length).map(dist.getLong))
-    // the bogus pred shows up as chain + missing-edge errors either way
-    assert(gated.getLong(4) === 1L && gated.getLong(5) === 1L)
+    val row = Validator.validate(spark, raw, tree, 0L, 100L).head()
+    // the bogus pred shows up as chain + missing-edge errors
+    assert((0 until row.length).map(row.getLong) === Seq(0, 0, 0, 0, 1, 1, 0, 3))
   }
 }
