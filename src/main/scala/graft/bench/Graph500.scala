@@ -1,10 +1,10 @@
 package graft.bench
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.bfs.Bfs
-import graft.etl.EdgeOps
 import graft.gen.Kronecker
 import graft.stats.Teps
 import graft.validate.{LocalValidator, Validator}
@@ -115,7 +115,33 @@ object Graph500 {
       case Some(flat) => new LocalValidator(g.csr.ids, flat)
       case None => new LocalValidator(g.csr.ids, raw)
     }
+
+    private var built: Option[DataFrame] = None
+
+    /** The relational validator's canonical undirected raw pair set
+      * ([[Validator.undirectedRawOf]]), deduplicated and persisted on
+      * first use and shared by every validation of the protocol (the
+      * reference redistributes its edge list once, mpi/main.cc:63-66). */
+    def undirected: DataFrame = built.getOrElse {
+      val u = Validator.undirectedRawOf(raw).persist(StorageLevel.MEMORY_AND_DISK)
+      u.count()
+      built = Some(u)
+      u
+    }
+
+    def release(): Unit = {
+      built.foreach(_.unpersist(blocking = false))
+      raw.unpersist(blocking = false)
+      g.unpersist()
+    }
   }
+
+  /** (nedge, errors) of one relational validation row, by column name:
+    * nedge is `edge_visit_count`, errors the sum of every other counter. */
+  private def nedgeAndErrors(r: Row): (Long, Long) =
+    (r.getAs[Long]("edge_visit_count"), r.schema.fieldNames
+      .filter(n => n != "run" && n != "edge_visit_count")
+      .map(r.getAs[Long](_)).sum)
 
   private def setUp(spark: SparkSession, scale: Int, nRoots: Int,
                     edgeFactor: Long): SetUp = {
@@ -123,7 +149,7 @@ object Graph500 {
     // Stage 1: generation (narrow scan). Persist the RAW list — validation
     // scans it with duplicates/self-loops retained (validate.hpp:703-721).
     val raw = Kronecker.generate(spark, scale, edgeFactor)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nRaw = raw.count()
     val tGen = (System.nanoTime() - t0) / 1e9
 
@@ -164,8 +190,8 @@ object Graph500 {
     // validation runs on the in-memory raw list (built ONCE — the
     // reference likewise redistributes the raw list once before the run
     // loop, mpi/main.cc:63-66). Above the gate: distributed BFS +
-    // DataFrame validation with the canonical undirected edge set shared
-    // across runs.
+    // DataFrame validation with the canonical undirected edge set
+    // (`su.undirected`) shared across runs, built before the timed loop.
     // Resume state first: a pure-resume invocation (checkpoint already has
     // all nRoots runs) needs neither a validator nor a warm-up.
     val prior = checkpointPath
@@ -176,13 +202,7 @@ object Graph500 {
     val localV =
       if (localMode && validate && nRemaining > 0) Some(su.localValidator())
       else None
-    val undirected =
-      if (!localMode && validate && nRemaining > 0) {
-        val u = Validator.undirectedRawOf(raw)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        u.count()
-        Some(u)
-      } else None
+    if (!localMode && validate && nRemaining > 0) su.undirected
     // Validation-off fallback nedge: the golden table covers edgefactor 16
     // only — for any other edgefactor use the measured undirected edge
     // count, never 0 (0 would make per-run TEPS infinite and the harmonic
@@ -215,18 +235,14 @@ object Graph500 {
       } else {
         val b0 = System.nanoTime()
         val res = Bfs.bfsMinParent(spark, g, root)
-        val tree = res.tree.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val tree = res.tree.persist(StorageLevel.MEMORY_AND_DISK)
         tree.count()
         val bfsTime = (System.nanoTime() - b0) / 1e9
         val v0 = System.nanoTime()
         val (nedge, errors) =
-          if (validate) {
-            val row = Validator.validate(spark, raw, tree, root, maxV + 1,
-              undirectedRaw = undirected).head()
-            val errs = (0 until row.length - 1).map(row.getLong).sum
-            (row.getLong(row.length - 1), errs)
-          } else (fallbackNedge, 0L)
+          if (validate) nedgeAndErrors(Validator.validate(spark, raw, tree,
+            root, maxV + 1, Some(su.undirected)).head())
+          else (fallbackNedge, 0L)
         val valTime = (System.nanoTime() - v0) / 1e9
         tree.unpersist(blocking = false)
         (bfsTime, valTime, nedge, errors)
@@ -281,9 +297,7 @@ object Graph500 {
       stat
     }.toSeq
 
-    undirected.foreach(_.unpersist(blocking = false))
-    raw.unpersist(blocking = false)
-    g.unpersist()
+    su.release()
 
     val hm = runs.map(r => r.bfs_time / r.nedge).sum match {
       case s if s > 0 => runs.size / s
@@ -359,66 +373,32 @@ object Graph500 {
       } else {
         val b0 = System.nanoTime()
         val trees = Bfs.bfsMinParentMulti(spark, g, roots.toSeq)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(StorageLevel.MEMORY_AND_DISK)
         trees.count()
         val bw = (System.nanoTime() - b0) / 1e9
 
         val v0 = System.nanoTime()
-        // Validate in bounded ROOT CHUNKS, not all runs at once: the
-        // multi-run validation joins (trees ⋈ raw endpoints, tree
-        // self-join) carry transients proportional to the run count,
-        // and at SCALE 26 an 8-run single-shot validation disk-filled
-        // the 252 GB scratch volume AFTER the batched BFS itself
-        // completed (round-10 finding; 3 runs at a time is the volume's
-        // proven size from the r9 SPEC3 block). Chunking changes no
-        // result — every validation predicate is per-run — and between
-        // chunks a (concurrent) GC lets the ContextCleaner release the
-        // previous chunk's shuffle files before the next one writes.
-        // (toIntOption: a malformed override must not throw AFTER the
-        // batched BFS has already completed — fall back to the
-        // edge-count-derived default instead)
-        val valChunk = math.max(1,
-          spark.conf.getOption("spark.graft.validateRunsPerChunk")
-            .flatMap(_.toIntOption).getOrElse(
-              if (g.totalEdges > graft.bfs.Bfs.GcPerLevelEdgeThreshold) 3
-              else Int.MaxValue))
-        // Each chunk's runs are REMAPPED to 0..k-1 for the validation
-        // call (validateMulti derives per-run array positions from
-        // collect_list order, so run ids must be dense from 0) and the
-        // per-root rows are re-aligned by emitting chunks in root order
-        // with a chunk-local sort — collect() order follows the
-        // shuffle, not the run index.
-        val rows = roots.indices.grouped(valChunk).flatMap { chunk =>
-          val base = chunk.head
-          val rootsDf = chunk
-            .map(i => ((i - base).toLong, roots(i))).toDF("run", "root")
-          val sub =
-            if (chunk.size == roots.length) trees
-            else trees
-              .filter(col("run") >= base.toLong && col("run") <= chunk.last.toLong)
-              .withColumn("run", col("run") - base.toLong)
-          // run ids in the returned rows are GLOBAL (chunk-local ids are
-          // mapped back to base+local here) so any field-wise consumer of
-          // `rows` sees the true run index, not a chunk offset
-          val part = Validator
-            .validateMulti(spark, raw, sub, rootsDf, maxV + 1)
-            .withColumn("run", col("run") + base.toLong).collect()
-            .sortBy(r => r.getLong(r.fieldIndex("run")))
-          if (chunk.size != roots.length) System.gc()
-          part
-        }.toArray
+        // Validate in passes of as many runs as keep the tree side under
+        // the broadcast cap (16 roots take one pass through SCALE 20), so
+        // no pass shuffles |E| × runs raw-edge rows (at SCALE 26 an 8-run
+        // single-shot validation disk-filled the 252 GB scratch volume
+        // after the batched BFS itself completed). Every predicate is
+        // per-run, so passing changes no result; a (concurrent) GC
+        // between passes lets the ContextCleaner release the previous
+        // pass's shuffle files before the next one writes.
+        val perPass = Validator.runsPerPass(Validator.broadcastVerts(spark), maxV + 1)
+        val rows = roots.indices.grouped(perPass).flatMap { pass =>
+          if (pass.head > 0) System.gc()
+          Validator.validateMulti(spark, raw, trees,
+            pass.map(i => (i.toLong, roots(i))).toDF("run", "root"), maxV + 1,
+            Some(su.undirected)).collect()
+        }.toSeq.sortBy(_.getAs[Long]("run")).map(nedgeAndErrors)
         val vw = (System.nanoTime() - v0) / 1e9
 
-        val ne = rows.map(r => r.getLong(r.fieldIndex("edge_visit_count")))
-        val er = rows.map { r =>
-          (1 until r.length).map(r.getLong).sum -
-            r.getLong(r.fieldIndex("edge_visit_count"))
-        }.sum
         trees.unpersist(blocking = false)
-        (bw, vw, ne.toSeq, er)
+        (bw, vw, rows.map(_._1), rows.map(_._2).sum)
       }
-    raw.unpersist(blocking = false)
-    g.unpersist()
+    su.release()
 
     val totalNedge = nedges.sum
     BatchedSummary(scale, nRoots, su.tGen, su.tCon, bfsWall, valWall, totalNedge,

@@ -23,8 +23,15 @@ import org.apache.spark.sql.functions._
  *
  * Designed as a separate batch job, not part of the BFS loop — at target
  * scale the raw-edge scan dominates exactly as in the reference (SURVEY §7.4).
- * Both tree joins are plain equi-joins on vertex id: Catalyst broadcasts the
- * tree when it is small, otherwise shuffles both sides once.
+ *
+ * One plan validates one run or many (GraphX's shape, OSDI 2014): state
+ * is keyed by (run, vertex) and reaches the edges through plain
+ * equi-joins — a tree pass and an edge pass, each one groupBy(run), then
+ * the run list joined to both, a run without rows reading 0.
+ * [[validate]] is this plan at one run. The tree-side build inputs are
+ * broadcast while nGlobalVerts · runs ≤ [[broadcastVerts]], so the
+ * |E|-sized raw scan needs no shuffle; [[runsPerPass]] sizes batches
+ * that stay under it.
  *
  * A tree given as a DataFrame always takes this relational plan. Callers
  * that hold the BFS kernel's dense (pred, depth) arrays — every Graph500
@@ -53,11 +60,11 @@ object Validator {
     * failure. 6 GB leaves headroom for map load factor variance. */
   val BroadcastRelationByteCeil = 6L * 1024 * 1024 * 1024
 
-  /** Above this many vertices the tree side is no longer broadcast and
-    * the edge checks fall back to shuffle joins. AUTO-SIZED instead of a
-    * hand-set constant: the cap is the vertex count whose hashed
+  /** Above this many tree rows (vertices × runs) the tree side is no
+    * longer broadcast and the checks fall back to shuffle joins.
+    * AUTO-SIZED instead of a hand-set constant: the cap is the vertex count whose hashed
     * relation fits in 1/16 of the executor heap (three broadcast sites
-    * are live at once — parentDepth, du, dv — so the worst case is
+    * are live at once — parents, du, dv — so the worst case is
     * ~3/16 of heap in broadcasts), floored at [[BroadcastVertsFloor]]
     * and ceiled so the relation stays under Spark's 8 GB broadcast-table
     * hard limit ([[BroadcastRelationByteCeil]]). The sizing heap is
@@ -87,16 +94,16 @@ object Validator {
     math.min(BroadcastRelationByteCeil / BroadcastBytesPerVertex,
       math.max(BroadcastVertsFloor, heapBytes / 16 / BroadcastBytesPerVertex))
 
-  /** The canonical undirected raw edge set used by check 4c — (lo, hi)
-    * with self-loops dropped and duplicates merged. A benchmark validating
-    * many runs over ONE graph should compute this once, persist it, and
-    * pass it to every [[validate]] call (the reference's redistributed
+  /** The canonical undirected raw edge set of the pred-edge check: (lo,
+    * hi) with self-loops dropped and duplicates merged. A benchmark
+    * validating many runs over ONE graph should compute this once, persist
+    * it, and pass it to every validation (the reference's redistributed
     * edge list is likewise built once, mpi/main.cc:63-66). Same streaming
     * sort-based dedup as construction (`EdgeOps.cleanEdges` — a
     * `distinct()`'s per-task hash maps on near-unique pairs spilled tens
     * of GB at SCALE 24): ONE exchange on lo, radix sort within partitions,
     * keep a row iff it differs from its predecessor; the lo layout is the
-    * one check 4c's anti-join clusters on, so the big side never
+    * one the tree pass's pair join clusters on, so the big side never
     * re-shuffles. */
   def undirectedRawOf(rawEdges: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -110,85 +117,113 @@ object Validator {
       .drop("_p")
   }
 
+  /** Runs per validation pass such that the tree side stays under the
+    * broadcast cap (nGlobalVerts · runs ≤ `cap`), at least one: every
+    * pass's raw-edge scan then stays shuffle-free. */
+  private[graft] def runsPerPass(cap: Long, nGlobalVerts: Long): Int =
+    math.min(Int.MaxValue.toLong,
+      math.max(1L, cap / math.max(1L, nGlobalVerts))).toInt
+
   /**
-   * Returns a single-row DataFrame of error counters (all BIGINT, 0 = pass)
-   * plus the traversed-edge count:
-   * (range_errors, root_errors, self_parent_errors, depth_errors,
-   *  pred_edge_missing, edge_depth_errors, edge_visit_count).
+   * Validates one BFS tree. Returns a single-row DataFrame of error
+   * counters (all BIGINT, 0 = pass) plus the traversed-edge count:
+   * (range_errors, root_errors, self_parent_errors, depth_presence_errors,
+   *  depth_chain_errors, pred_edge_missing, edge_depth_errors,
+   *  edge_visit_count). This is [[validateMulti]]'s plan at one run.
    *
    * `undirectedRaw`: optional precomputed (persisted) [[undirectedRawOf]]
    * result, to amortize the raw-edge dedup across many runs.
    */
   def validate(spark: SparkSession, rawEdges: DataFrame, tree: DataFrame,
                root: Long, nGlobalVerts: Long,
-               undirectedRaw: Option[DataFrame] = None): DataFrame = {
-    val t = tree.select("vertex", "pred", "depth")
-    // One tree row per vertex: when the vertex universe fits, broadcast
-    // the tree-side BUILD inputs (parentDepth, du, dv below) — the
-    // raw-edge scans then run as map-side hash probes with no shuffle of
-    // the |E|-sized table. Scoped per join site, NOT on t itself: t is
-    // also the streamed (left) side of an anti-join, where a broadcast
-    // hint is unsupported and would be silently dropped with a warning.
+               undirectedRaw: Option[DataFrame] = None): DataFrame =
+    plan(spark, rawEdges,
+      tree.select(lit(0L).as("run"), col("vertex"), col("pred"), col("depth"),
+        lit(root).as("root")),
+      Seq(0L), nGlobalVerts, undirectedRaw).drop("run")
+
+  /**
+   * Validates many BFS runs in one pass: `trees` is (run, vertex, pred,
+   * depth), e.g. from [[graft.bfs.Bfs.bfsMinParentMulti]], and `rootsDf`
+   * is (run, root). Run ids are any distinct longs; the trees' rows of
+   * runs not in `rootsDf` are ignored. The raw edge list is scanned ONCE
+   * for all runs (the reference re-scans it per run, mpi/main.cc:131-137).
+   *
+   * Returns one row per run of `rootsDf`: (run, then [[validate]]'s
+   * counters).
+   */
+  def validateMulti(spark: SparkSession, rawEdges: DataFrame, trees: DataFrame,
+                    rootsDf: DataFrame, nGlobalVerts: Long,
+                    undirectedRaw: Option[DataFrame] = None): DataFrame = {
+    val roots = rootsDf.select("run", "root")
+    plan(spark, rawEdges,
+      trees.select("run", "vertex", "pred", "depth").join(broadcast(roots), "run"),
+      roots.select("run").collect().map(_.getLong(0)).toSeq,
+      nGlobalVerts, undirectedRaw)
+  }
+
+  /** The one plan behind [[validate]] and [[validateMulti]]: `t` is
+    * (run, vertex, pred, depth, root) for exactly the runs in `runs`. */
+  private def plan(spark: SparkSession, rawEdges: DataFrame, t: DataFrame,
+                   runs: Seq[Long], nGlobalVerts: Long,
+                   undirectedRaw: Option[DataFrame]): DataFrame = {
+    import spark.implicits._
+    val (vertex, pred, depth, root) =
+      (col("vertex"), col("pred"), col("depth"), col("root"))
     def bcast(df: DataFrame): DataFrame =
-      if (nGlobalVerts <= broadcastVerts(spark)) broadcast(df) else df
+      if (nGlobalVerts * runs.size <= broadcastVerts(spark)) broadcast(df)
+      else df
+    // Build sides hold only rows with a depth: an absent row reads the
+    // same NULL depth.
+    val reached = t.filter(depth.isNotNull)
 
-    // 1-4: single pass over the tree.
-    val treeChecks = t.agg(
-      sum(when(col("pred") < -1 || col("pred") >= nGlobalVerts, 1L).otherwise(0L))
-        .as("range_errors"),
-      sum(when(col("vertex") === root &&
-               (col("pred") =!= root || col("depth") =!= 0L), 1L).otherwise(0L))
-        .as("root_errors"),
-      sum(when(col("vertex") =!= root && col("pred") === col("vertex"), 1L)
-        .otherwise(0L)).as("self_parent_errors"),
-      sum(when((col("pred") === -1L) =!= col("depth").isNull, 1L).otherwise(0L))
-        .as("depth_presence_errors"))
+    // Tree pass, checks 1-4 and the pred edge: a reached non-root v joins
+    // its parent's depth on (run, pred) (reference J7) and the raw pair
+    // (v, pred(v)) on (lo, hi) (pred_valid sweep, validate.hpp:780-792).
+    // Every other row keys on a negative per-vertex value: it matches
+    // nothing and does not pile onto one null or −1 key's partition.
+    val chk = pred =!= -1L && vertex =!= root
+    val unchecked = lit(-1L) - vertex
+    val parents = bcast(reached.select(col("run"), vertex.as("pk"),
+      depth.as("p_depth")))
+    val pairs = undirectedRaw.getOrElse(undirectedRawOf(rawEdges))
+      .withColumn("edge", lit(true))
+    val treeCounts = t
+      .select(col("*"), when(chk, pred).otherwise(unchecked).as("pk"),
+        when(chk, least(vertex, pred)).otherwise(unchecked).as("lo"),
+        when(chk, greatest(vertex, pred)).otherwise(-1L).as("hi"))
+      .join(parents, Seq("run", "pk"), "left_outer")
+      .join(pairs, Seq("lo", "hi"), "left_outer")
+      .groupBy("run").agg(
+        count_if(pred < -1L || pred >= nGlobalVerts).as("range_errors"),
+        count_if(vertex === root && (pred =!= root || depth =!= 0L))
+          .as("root_errors"),
+        count_if(vertex =!= root && pred === vertex).as("self_parent_errors"),
+        count_if((pred === -1L) =!= depth.isNull).as("depth_presence_errors"),
+        count_if(chk && (col("p_depth").isNull ||
+          depth =!= col("p_depth") + 1L)).as("depth_chain_errors"),
+        count_if(chk && col("edge").isNull).as("pred_edge_missing"))
 
-    // 4b: depth(v) = depth(pred(v)) + 1 for every reached non-root v
-    // (self-join tree↔tree on pred = vertex; reference pred-pred gather J7).
-    val parentDepth =
-      bcast(t.select(col("vertex").as("p_vertex"), col("depth").as("p_depth")))
-    val depthErrors = t
-      .filter(col("pred") =!= -1L && col("vertex") =!= root)
-      .join(parentDepth, col("pred") === col("p_vertex"), "left_outer")
-      .agg(sum(when(col("p_depth").isNull ||
-                    col("depth") =!= col("p_depth") + 1L, 1L).otherwise(0L))
-        .as("depth_chain_errors"))
-
-    // 4c: a raw edge (v, pred(v)) must exist for every reached non-root v
-    // (reference pred_valid sweep, validate.hpp:780-792).
-    // Canonicalize both sides to (lo, hi) so the anti-join is a plain
-    // two-key equi-join (hash-joinable) instead of an OR-of-conjunctions
-    // nested loop.
-    val undirected = undirectedRaw.getOrElse(undirectedRawOf(rawEdges))
-    val predPairs = t.filter(col("pred") =!= -1L && col("vertex") =!= root)
-      .select(least(col("vertex"), col("pred")).as("lo"),
-        greatest(col("vertex"), col("pred")).as("hi"))
-    val predEdgeMissing = predPairs
-      .join(undirected, Seq("lo", "hi"), "left_anti")
-      .agg(count(lit(1)).as("pred_edge_missing"))
-
-    // 5: per-raw-edge depth checks + traversed-edge count w/ multiplicity
-    // (two hash joins against the tree; reference J6 two-sided gather).
-    val du = bcast(t.select(col("vertex").as("u"), col("depth").as("du")))
-    val dv = bcast(t.select(col("vertex").as("v"), col("depth").as("dv")))
-    val edgeChecks = rawEdges
-      .join(du, col("src") === col("u"), "left_outer")
-      .join(dv, col("dst") === col("v"), "left_outer")
-      .agg(
-        sum(when(
-          (col("du").isNotNull && col("dv").isNotNull &&
-            abs(col("du") - col("dv")) > 1L) ||
-            (col("du").isNull =!= col("dv").isNull), 1L).otherwise(0L))
+    // Edge pass, check 5: every raw edge once per run (a literal at one
+    // run, no join), both endpoint depths by (run, vertex) hash probes
+    // (reference J6 two-sided gather); traversed edges counted with
+    // multiplicity, self-loops included (validate.hpp:703-721).
+    val runId = if (runs.size == 1) lit(runs.head) else explode(typedLit(runs))
+    val du = bcast(reached.select(col("run"), vertex.as("src"), depth.as("du")))
+    val dv = bcast(reached.select(col("run"), vertex.as("dst"), depth.as("dv")))
+    val (a, b) = (col("du"), col("dv"))
+    val edgeCounts = rawEdges.select(col("src"), col("dst"), runId.as("run"))
+      .join(du, Seq("run", "src"), "left_outer")
+      .join(dv, Seq("run", "dst"), "left_outer")
+      .groupBy("run").agg(
+        count_if(a.isNull =!= b.isNull || abs(a - b) > 1L)
           .as("edge_depth_errors"),
-        sum(when(col("du").isNotNull && col("dv").isNotNull &&
-                 abs(col("du") - col("dv")) <= 1L, 1L).otherwise(0L))
-          .as("edge_visit_count"))
+        count_if(abs(a - b) <= 1L).as("edge_visit_count"))
 
-    treeChecks
-      .crossJoin(depthErrors)
-      .crossJoin(predEdgeMissing)
-      .crossJoin(edgeChecks)
+    runs.toDF("run")
+      .join(treeCounts, Seq("run"), "left_outer")
+      .join(edgeCounts, Seq("run"), "left_outer")
+      .na.fill(0L)
   }
 
   /** The LocalValidator counter array as the single-row DataFrame the
@@ -199,100 +234,5 @@ object Validator {
       .toDF("range_errors", "root_errors", "self_parent_errors",
         "depth_presence_errors", "depth_chain_errors", "pred_edge_missing",
         "edge_depth_errors", "edge_visit_count")
-  }
-
-  /**
-   * Batched validation of many BFS runs in one pass: `trees` is
-   * (run, vertex, pred, depth) from [[graft.bfs.Bfs.bfsMinParentMulti]],
-   * `rootsDf` is (run, root). Same five spec checks, every aggregation
-   * keyed by run, the raw edge list scanned ONCE for all runs (the
-   * reference re-scans it per run, mpi/main.cc:131-137).
-   *
-   * Returns one row per run:
-   * (run, range_errors, root_errors, self_parent_errors,
-   *  depth_presence_errors, depth_chain_errors, pred_edge_missing,
-   *  edge_depth_errors, edge_visit_count).
-   */
-  def validateMulti(spark: SparkSession, rawEdges: DataFrame, trees: DataFrame,
-                    rootsDf: DataFrame, nGlobalVerts: Long): DataFrame = {
-    val t = trees.select("run", "vertex", "pred", "depth")
-      .join(broadcast(rootsDf), "run")
-
-    val treeChecks = t.groupBy("run").agg(
-      sum(when(col("pred") < -1 || col("pred") >= nGlobalVerts, 1L).otherwise(0L))
-        .as("range_errors"),
-      sum(when(col("vertex") === col("root") &&
-               (col("pred") =!= col("root") || col("depth") =!= 0L), 1L)
-        .otherwise(0L)).as("root_errors"),
-      sum(when(col("vertex") =!= col("root") && col("pred") === col("vertex"), 1L)
-        .otherwise(0L)).as("self_parent_errors"),
-      sum(when((col("pred") === -1L) =!= col("depth").isNull, 1L).otherwise(0L))
-        .as("depth_presence_errors"))
-
-    val parentDepth = trees.select(col("run").as("p_run"),
-      col("vertex").as("p_vertex"), col("depth").as("p_depth"))
-    val depthErrors = t
-      .filter(col("pred") =!= -1L && col("vertex") =!= col("root"))
-      .join(parentDepth,
-        col("run") === col("p_run") && col("pred") === col("p_vertex"),
-        "left_outer")
-      .groupBy("run")
-      .agg(sum(when(col("p_depth").isNull ||
-                    col("depth") =!= col("p_depth") + 1L, 1L).otherwise(0L))
-        .as("depth_chain_errors"))
-
-    val undirectedRaw = undirectedRawOf(rawEdges)
-    val predEdgeMissing = t
-      .filter(col("pred") =!= -1L && col("vertex") =!= col("root"))
-      .select(col("run"), least(col("vertex"), col("pred")).as("lo"),
-        greatest(col("vertex"), col("pred")).as("hi"))
-      .join(undirectedRaw, Seq("lo", "hi"), "left_anti")
-      .groupBy("run").agg(count(lit(1)).as("pred_edge_missing"))
-
-    // Per-edge depth checks for ALL runs in one pass: depths packed into
-    // a run-indexed vector per vertex (unreached = −1), so the raw list
-    // joins the (|V|-row) vector table twice on vertex alone — no
-    // run-keyed |E|×runs join probe — and a posexplode generator fans
-    // out the per-run comparisons map-side.
-    val nRuns = rootsDf.count().toInt
-    val depthVec0 = trees
-      .select(col("vertex"), struct(col("run"),
-        coalesce(col("depth"), lit(-1L)).as("d")).as("rd"))
-      .groupBy("vertex")
-      .agg(transform(array_sort(collect_list(col("rd"))),
-        x => x.getField("d")).as("ds"))
-    // |V| rows of nRuns-long vectors: broadcast while that fits so the
-    // raw-edge pass below stays shuffle-free.
-    val depthVec = if (nGlobalVerts * nRuns <= broadcastVerts(spark))
-                     broadcast(depthVec0)
-                   else depthVec0
-    val missing = array_repeat(lit(-1L), lit(nRuns))
-    val edgeChecks = rawEdges
-      .join(depthVec.select(col("vertex").as("u"), col("ds").as("ua")),
-        col("src") === col("u"), "left_outer")
-      .join(depthVec.select(col("vertex").as("v"), col("ds").as("va")),
-        col("dst") === col("v"), "left_outer")
-      .select(posexplode(zip_with(
-        coalesce(col("ua"), missing), coalesce(col("va"), missing),
-        (a, b) => struct(a.as("da"), b.as("db")))).as(Seq("run", "p")))
-      .select(col("run").cast("long").as("run"),
-        col("p.da").as("da"), col("p.db").as("db"))
-      .groupBy("run")
-      .agg(
-        sum(when(
-          (col("da") =!= -1L && col("db") =!= -1L &&
-            abs(col("da") - col("db")) > 1L) ||
-            ((col("da") === -1L) =!= (col("db") === -1L)), 1L).otherwise(0L))
-          .as("edge_depth_errors"),
-        sum(when(col("da") =!= -1L && col("db") =!= -1L &&
-                 abs(col("da") - col("db")) <= 1L, 1L).otherwise(0L))
-          .as("edge_visit_count"))
-
-    rootsDf.select("run")
-      .join(treeChecks, Seq("run"), "left_outer")
-      .join(depthErrors, Seq("run"), "left_outer")
-      .join(predEdgeMissing, Seq("run"), "left_outer")
-      .join(edgeChecks, Seq("run"), "left_outer")
-      .na.fill(0L)
   }
 }

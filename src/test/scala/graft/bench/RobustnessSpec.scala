@@ -127,6 +127,20 @@ class RobustnessSpec extends SparkSpec {
     } finally g.unpersist()
   }
 
+  test("runBatched forced distributed: the kernel's roots and per-root " +
+    "nedge, no validation errors") {
+    val kernel = Graph500.runBatched(spark, 10, nRoots = 4)
+    val dist =
+      try {
+        graft.Gates.forceDistributed(spark)
+        Graph500.runBatched(spark, 10, nRoots = 4)
+      } finally graft.Gates.all.foreach(g => spark.conf.unset(g.conf))
+    assert(dist.roots === kernel.roots)
+    assert(dist.perRootNedge === kernel.perRootNedge)
+    assert(kernel.errors === 0L && dist.errors === 0L)
+    assert(dist.nedgeGoldenOk)
+  }
+
   test("validate=false with non-default edgefactor reports nonzero nedge") {
     val sum = Graph500.run(spark, scale = 8, nRoots = 2, validate = false,
       edgeFactor = 8L)

@@ -20,4 +20,15 @@ class BroadcastCapSpec extends SparkSpec {
     try assert(Validator.broadcastVerts(spark) === 12345L)
     finally spark.conf.unset("spark.graft.validateBroadcastVerts")
   }
+
+  test("runsPerPass: one run past the cap, the cap's quotient under it") {
+    assert(Validator.runsPerPass(1000L, 5000L) === 1)
+    assert(Validator.runsPerPass(1000L, 1000L) === 1)
+    assert(Validator.runsPerPass(1000L, 300L) === 3)
+    // SCALE 20 at the floor: every run of a 16-root batch in one pass
+    assert(Validator.runsPerPass(Validator.BroadcastVertsFloor, 1L << 20) === 19)
+    // no vertices or a vast cap: an Int, never zero or negative
+    assert(Validator.runsPerPass(1000L, 0L) === 1000)
+    assert(Validator.runsPerPass(Long.MaxValue, 1L) === Int.MaxValue)
+  }
 }

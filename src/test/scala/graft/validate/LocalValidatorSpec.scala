@@ -117,6 +117,74 @@ class LocalValidatorSpec extends SparkSpec {
     c.check(pt2, dt, 5L, "root pred moved down")
   }
 
+  test("a tree that reaches only its root: every relational counter is 0 " +
+    "or a count, never NULL") {
+    val c = new Case(Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L)))
+    val root = c.dense(0L)
+    val p = Array.fill(c.csr.nVerts)(-1); p(root) = root
+    val d = Array.fill(c.csr.nVerts)(-1); d(root) = 0
+    val row = Validator.validate(spark, c.raw, denseTreeDf(c.csr.ids, p, d),
+      0L, c.nGlobal).head()
+    assert(!row.anyNull, row)
+    // edges 0-1 and 2-0 leave the lone root: one depth error each
+    assert(c.check(p, d, 0L, "root only") === Seq(0, 0, 0, 0, 0, 0, 2, 0))
+  }
+
+  test("validateMulti equals the kernel per run, over all runs and over a " +
+    "non-dense subset of run ids") {
+    val s = spark; import s.implicits._
+    val raw = Kronecker.generate(spark, 10).persist()
+    try {
+      val flat = LocalCsr.collectPairs(raw)
+      val csr = LocalCsr.buildFromRawPairs(flat)
+      val lv = new LocalValidator(csr.ids, flat)
+      val nGlobal = flat.max + 1
+      val roots = Kronecker.sampleRoots(8, nGlobal,
+        v => java.util.Arrays.binarySearch(csr.ids, v) >= 0)
+      def dense(v: Long) = java.util.Arrays.binarySearch(csr.ids, v)
+      val trees = roots.map(r => { val (p, d, _) = csr.bfs(r); (p, d) })
+      def reachedNonRoot(run: Int) = (0 until csr.nVerts)
+        .find(v => v != dense(roots(run)) && trees(run)._2(v) > 0).get
+      // run 3: a wrong depth; run 5: a pred edge that is not in the graph
+      val v3 = reachedNonRoot(3)
+      trees(3)._2(v3) += 5
+      val v5 = reachedNonRoot(5)
+      val nbrs5 = (csr.rowStarts(v5) until csr.rowStarts(v5 + 1)).map(csr.nbrs).toSet
+      trees(5)._1(v5) = (0 until csr.nVerts).find(u => u != v5 && !nbrs5(u)).get
+      val treesDf = trees.indices.flatMap { run =>
+        val (p, d) = trees(run)
+        csr.ids.indices.map(i => (run.toLong, csr.ids(i),
+          if (p(i) < 0) -1L else csr.ids(p(i)),
+          if (d(i) < 0) None else Some(d(i).toLong)))
+      }.toDF("run", "vertex", "pred", "depth")
+      def expected(run: Int): Seq[Long] =
+        lv.validate(trees(run)._1, trees(run)._2, dense(roots(run)), nGlobal).toSeq
+      assert(expected(3).init.sum > 0L)
+      assert(expected(5)(5) === 1L)
+
+      // all runs; a non-dense subset given only its own trees (one pass of
+      // a batch), then given every run's trees (the others are ignored);
+      // each under the default broadcast cap, then with every join shuffled
+      val subset = Seq(3, 4, 5)
+      val subsetTrees = treesDf.filter(col("run").isin(subset: _*))
+      val shuffled = Seq("spark.graft.validateBroadcastVerts" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      for (confs <- Seq(Nil, shuffled);
+           (runs, given) <- Seq(roots.indices -> treesDf, subset -> subsetTrees,
+                                subset -> treesDf)) {
+        val rootsDf = runs.map(i => (i.toLong, roots(i))).toDF("run", "root")
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        val rows = try Validator.validateMulti(spark, raw, given, rootsDf, nGlobal)
+          .collect().map(r => r.getLong(0).toInt -> (1 until r.length).map(r.getLong))
+          .toMap
+        finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+        assert(rows.keySet === runs.toSet, confs)
+        for (run <- runs)
+          assert(rows(run) === expected(run), s"run $run of $runs $confs")
+      }
+    } finally raw.unpersist()
+  }
+
   test("an edge to a vertex outside the tree counts as the plan counts it") {
     val s = spark; import s.implicits._
     val raw = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 3L), (4L, 5L)).toDF("src", "dst")
