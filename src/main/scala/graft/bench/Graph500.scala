@@ -379,8 +379,9 @@ object Graph500 {
 
         val v0 = System.nanoTime()
         // Validate in passes of as many runs as keep the tree side under
-        // the broadcast cap (16 roots take one pass through SCALE 20), so
-        // no pass shuffles |E| × runs raw-edge rows (at SCALE 26 an 8-run
+        // the broadcast cap (a 16-root SCALE 20 batch is one pass on a
+        // 48g heap, six of up to 3 runs at the cap's floor), so no pass
+        // shuffles |E| × runs raw-edge rows (at SCALE 26 an 8-run
         // single-shot validation disk-filled the 252 GB scratch volume
         // after the batched BFS itself completed). Every predicate is
         // per-run, so passing changes no result; a (concurrent) GC

@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
  * is keyed by (run, vertex) and reaches the edges through plain
  * equi-joins — a tree pass and an edge pass, each one groupBy(run), then
  * the run list joined to both, a run without rows reading 0.
- * [[validate]] is this plan at one run. The tree-side build inputs are
- * broadcast while nGlobalVerts · runs ≤ [[broadcastVerts]], so the
- * |E|-sized raw scan needs no shuffle; [[runsPerPass]] sizes batches
+ * [[validate]] is this plan at one run, where the run column is a literal
+ * that folds out of every join key (two long keys above one run). The
+ * tree side is broadcast while nGlobalVerts · runs ≤ [[treeRowsCap]], so
+ * the |E|-sized raw scan needs no shuffle; [[runsPerPass]] sizes batches
  * that stay under it.
  *
  * A tree given as a DataFrame always takes this relational plan. Callers
@@ -48,9 +49,15 @@ object Validator {
   val BroadcastVertsFloor = 20000000L
 
   /** Per-vertex hashed-relation budget used by the auto-sizing: a
-    * LongToUnsafeRowMap entry for (vertex BIGINT, depth BIGINT) measures
-    * ~25 B/vertex at SCALE 24; 32 B adds headroom for map load factor. */
+    * one-run LongToUnsafeRowMap entry for (vertex BIGINT, depth BIGINT)
+    * measures ~25 B/vertex at SCALE 24; 32 B adds load-factor headroom. */
   val BroadcastBytesPerVertex = 32L
+
+  /** The same budget for a several-run pass's row: two BIGINT keys do not
+    * pack into one long, so Spark builds an UnsafeHashedRelation, measured
+    * 123-144 B/row (the broadcast's dataSize) at 1.4-4.2M rows against
+    * 40-56 B/row one-key on the same trees; 160 B covers slot rounding. */
+  val BroadcastBytesPerRunVertex = 160L
 
   /** Ceiling on the per-site hashed-relation size: Spark hard-fails any
     * broadcast table past 8 GB (BroadcastExchangeExec), so the derived
@@ -60,22 +67,18 @@ object Validator {
     * failure. 6 GB leaves headroom for map load factor variance. */
   val BroadcastRelationByteCeil = 6L * 1024 * 1024 * 1024
 
-  /** Above this many tree rows (vertices × runs) the tree side is no
-    * longer broadcast and the checks fall back to shuffle joins.
-    * AUTO-SIZED instead of a hand-set constant: the cap is the vertex count whose hashed
-    * relation fits in 1/16 of the executor heap (three broadcast sites
-    * are live at once — parents, du, dv — so the worst case is
-    * ~3/16 of heap in broadcasts), floored at [[BroadcastVertsFloor]]
-    * and ceiled so the relation stays under Spark's 8 GB broadcast-table
-    * hard limit ([[BroadcastRelationByteCeil]]). The sizing heap is
-    * `spark.executor.memory` when set (cluster mode: the broadcast
-    * lives on executors, whose heap may be far smaller than a fat
-    * driver's) and the local JVM max heap otherwise (local mode:
-    * driver == executor). At the bench box's 48-128 GiB heaps this
-    * admits SCALE 25-26 (33.5-67M vertices) with no hand tuning, while
-    * an 8 GiB executor still gets the floor. Override with
-    * spark.graft.validateBroadcastVerts (an override, not a
-    * requirement — an explicit conf is trusted as-is). */
+  /** Above this many vertices a one-run validation's tree side is no
+    * longer broadcast and the checks fall back to shuffle joins; a
+    * several-run pass gets the same bytes in two-key rows
+    * ([[treeRowsCap]]). AUTO-SIZED: the vertex count whose one-key
+    * relation fits in 1/16 of the executor heap (three sites are live at
+    * once — parents, du, dv — so ~3/16 of heap in broadcasts), floored
+    * at [[BroadcastVertsFloor]], ceiled under Spark's 8 GB broadcast
+    * limit ([[BroadcastRelationByteCeil]]). The heap is
+    * `spark.executor.memory` in cluster mode (the broadcast lives on
+    * executors) and the local JVM max heap otherwise. At 48-128 GiB this
+    * admits SCALE 25-26 at one run; an 8 GiB executor gets the floor.
+    * spark.graft.validateBroadcastVerts overrides it, trusted as-is. */
   private[graft] def broadcastVerts(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.validateBroadcastVerts")
       .map(_.toLong)
@@ -94,17 +97,13 @@ object Validator {
     math.min(BroadcastRelationByteCeil / BroadcastBytesPerVertex,
       math.max(BroadcastVertsFloor, heapBytes / 16 / BroadcastBytesPerVertex))
 
-  /** The canonical undirected raw edge set of the pred-edge check: (lo,
-    * hi) with self-loops dropped and duplicates merged. A benchmark
-    * validating many runs over ONE graph should compute this once, persist
-    * it, and pass it to every validation (the reference's redistributed
-    * edge list is likewise built once, mpi/main.cc:63-66). Same streaming
-    * sort-based dedup as construction (`EdgeOps.cleanEdges` — a
-    * `distinct()`'s per-task hash maps on near-unique pairs spilled tens
-    * of GB at SCALE 24): ONE exchange on lo, radix sort within partitions,
-    * keep a row iff it differs from its predecessor; the lo layout is the
-    * one the tree pass's pair join clusters on, so the big side never
-    * re-shuffles. */
+  /** The pred-edge check's undirected raw edge set: (lo, hi), self-loops
+    * dropped, duplicates merged. Build it once per graph, persist it and
+    * pass it to every validation (the reference redistributes its edge
+    * list once, mpi/main.cc:63-66). One exchange on lo and a sort-based
+    * dedup within partitions, as `EdgeOps.cleanEdges` (a `distinct()`
+    * spilled tens of GB at SCALE 24); the tree pass's pair join clusters
+    * on that lo layout, so the big side never re-shuffles. */
   def undirectedRawOf(rawEdges: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lo")).orderBy(col("hi"))
@@ -117,62 +116,62 @@ object Validator {
       .drop("_p")
   }
 
-  /** Runs per validation pass such that the tree side stays under the
-    * broadcast cap (nGlobalVerts · runs ≤ `cap`), at least one: every
-    * pass's raw-edge scan then stays shuffle-free. */
-  private[graft] def runsPerPass(cap: Long, nGlobalVerts: Long): Int =
-    math.min(Int.MaxValue.toLong,
-      math.max(1L, cap / math.max(1L, nGlobalVerts))).toInt
+  /** Tree rows (vertices × runs) a pass of `runs` runs may broadcast
+    * under the cap: `cap` one-key rows at one run, the same bytes in
+    * [[BroadcastBytesPerRunVertex]]-byte two-key rows above one. */
+  private[graft] def treeRowsCap(cap: Long, runs: Int): Long =
+    if (runs <= 1) cap
+    else cap / BroadcastBytesPerRunVertex * BroadcastBytesPerVertex
 
-  /**
-   * Validates one BFS tree. Returns a single-row DataFrame of error
-   * counters (all BIGINT, 0 = pass) plus the traversed-edge count:
-   * (range_errors, root_errors, self_parent_errors, depth_presence_errors,
-   *  depth_chain_errors, pred_edge_missing, edge_depth_errors,
-   *  edge_visit_count). This is [[validateMulti]]'s plan at one run.
-   *
-   * `undirectedRaw`: optional precomputed (persisted) [[undirectedRawOf]]
-   * result, to amortize the raw-edge dedup across many runs.
-   */
+  /** Runs per pass keeping nGlobalVerts · runs ≤ [[treeRowsCap]], at
+    * least one: every pass's raw-edge scan then stays shuffle-free. */
+  private[graft] def runsPerPass(cap: Long, nGlobalVerts: Long): Int =
+    math.min(Int.MaxValue.toLong, math.max(1L,
+      treeRowsCap(cap, 2) / math.max(1L, nGlobalVerts))).toInt
+
+  /** One BFS tree's single-row DataFrame of error counters (all BIGINT,
+    * 0 = pass) and traversed-edge count: (range_errors, root_errors,
+    * self_parent_errors, depth_presence_errors, depth_chain_errors,
+    * pred_edge_missing, edge_depth_errors, edge_visit_count) — the plan
+    * at one run. `undirectedRaw`: an optional persisted
+    * [[undirectedRawOf]] result, to amortize the dedup across runs. */
   def validate(spark: SparkSession, rawEdges: DataFrame, tree: DataFrame,
                root: Long, nGlobalVerts: Long,
                undirectedRaw: Option[DataFrame] = None): DataFrame =
-    plan(spark, rawEdges,
-      tree.select(lit(0L).as("run"), col("vertex"), col("pred"), col("depth"),
-        lit(root).as("root")),
-      Seq(0L), nGlobalVerts, undirectedRaw).drop("run")
+    plan(spark, rawEdges, tree.withColumn("run", lit(0L)), Seq(0L -> root),
+      nGlobalVerts, undirectedRaw).drop("run")
 
-  /**
-   * Validates many BFS runs in one pass: `trees` is (run, vertex, pred,
-   * depth), e.g. from [[graft.bfs.Bfs.bfsMinParentMulti]], and `rootsDf`
-   * is (run, root). Run ids are any distinct longs; the trees' rows of
-   * runs not in `rootsDf` are ignored. The raw edge list is scanned ONCE
-   * for all runs (the reference re-scans it per run, mpi/main.cc:131-137).
-   *
-   * Returns one row per run of `rootsDf`: (run, then [[validate]]'s
-   * counters).
-   */
+  /** Many BFS runs in one pass: `trees` is (run, vertex, pred, depth),
+    * e.g. from [[graft.bfs.Bfs.bfsMinParentMulti]], `rootsDf` is (run,
+    * root) over any distinct run ids (trees' other runs are ignored). The
+    * raw list is scanned ONCE for all runs (the reference re-scans it per
+    * run, mpi/main.cc:131-137). One row per run of `rootsDf`: run, then
+    * [[validate]]'s counters. */
   def validateMulti(spark: SparkSession, rawEdges: DataFrame, trees: DataFrame,
                     rootsDf: DataFrame, nGlobalVerts: Long,
-                    undirectedRaw: Option[DataFrame] = None): DataFrame = {
-    val roots = rootsDf.select("run", "root")
-    plan(spark, rawEdges,
-      trees.select("run", "vertex", "pred", "depth").join(broadcast(roots), "run"),
-      roots.select("run").collect().map(_.getLong(0)).toSeq,
-      nGlobalVerts, undirectedRaw)
-  }
+                    undirectedRaw: Option[DataFrame] = None): DataFrame =
+    plan(spark, rawEdges, trees, rootsDf.select("run", "root").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq, nGlobalVerts, undirectedRaw)
 
-  /** The one plan behind [[validate]] and [[validateMulti]]: `t` is
-    * (run, vertex, pred, depth, root) for exactly the runs in `runs`. */
-  private def plan(spark: SparkSession, rawEdges: DataFrame, t: DataFrame,
-                   runs: Seq[Long], nGlobalVerts: Long,
+  /** The one plan behind [[validate]] and [[validateMulti]]: `trees` is
+    * (run, vertex, pred, depth), `roots` the (run, root) pairs to check.
+    * One run's tree gets its run id and root as literals, so the run key
+    * folds out of every join exactly as in [[validate]]. */
+  private def plan(spark: SparkSession, rawEdges: DataFrame, trees: DataFrame,
+                   roots: Seq[(Long, Long)], nGlobalVerts: Long,
                    undirectedRaw: Option[DataFrame]): DataFrame = {
     import spark.implicits._
     val (vertex, pred, depth, root) =
       (col("vertex"), col("pred"), col("depth"), col("root"))
-    def bcast(df: DataFrame): DataFrame =
-      if (nGlobalVerts * runs.size <= broadcastVerts(spark)) broadcast(df)
-      else df
+    val runs = roots.map(_._1)
+    val t = roots match {
+      case Seq((run, r)) => trees.filter(col("run") === run)
+        .select(lit(run).as("run"), vertex, pred, depth, lit(r).as("root"))
+      case _ => trees.select("run", "vertex", "pred", "depth")
+        .join(broadcast(roots.toDF("run", "root")), "run")
+    }
+    val fits = nGlobalVerts * runs.size <= treeRowsCap(broadcastVerts(spark), runs.size)
+    def bcast(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
     // Build sides hold only rows with a depth: an absent row reads the
     // same NULL depth.
     val reached = t.filter(depth.isNotNull)

@@ -130,15 +130,27 @@ class RobustnessSpec extends SparkSpec {
   test("runBatched forced distributed: the kernel's roots and per-root " +
     "nedge, no validation errors") {
     val kernel = Graph500.runBatched(spark, 10, nRoots = 4)
-    val dist =
-      try {
-        graft.Gates.forceDistributed(spark)
-        Graph500.runBatched(spark, 10, nRoots = 4)
-      } finally graft.Gates.all.foreach(g => spark.conf.unset(g.conf))
-    assert(dist.roots === kernel.roots)
-    assert(dist.perRootNedge === kernel.perRootNedge)
-    assert(kernel.errors === 0L && dist.errors === 0L)
-    assert(dist.nedgeGoldenOk)
+    assert(kernel.errors === 0L)
+    // at the default cap one pass; at 15 × 2^10 one-run vertices, passes
+    // of 3 runs of two-key rows: {0, 1, 2}, then {3} alone, a one-run
+    // pass with a run id past 0
+    val cap = 15L << 10
+    assert(graft.validate.Validator.runsPerPass(cap, 1L << 10) === 3)
+    for (capConf <- Seq(None, Some(cap.toString))) {
+      val dist =
+        try {
+          graft.Gates.forceDistributed(spark)
+          capConf.foreach(spark.conf.set("spark.graft.validateBroadcastVerts", _))
+          Graph500.runBatched(spark, 10, nRoots = 4)
+        } finally {
+          graft.Gates.all.foreach(g => spark.conf.unset(g.conf))
+          spark.conf.unset("spark.graft.validateBroadcastVerts")
+        }
+      assert(dist.roots === kernel.roots, capConf)
+      assert(dist.perRootNedge === kernel.perRootNedge, capConf)
+      assert(dist.errors === 0L, capConf)
+      assert(dist.nedgeGoldenOk, capConf)
+    }
   }
 
   test("validate=false with non-default edgefactor reports nonzero nedge") {
