@@ -455,14 +455,11 @@ object LocalCsr {
     if (!wasBottomUp) mf * Alpha > mu
     else !(nf * BetaVerts < nV && nf < prevNf)
 
-  /** Build from a symmetric loop-free edge DataFrame. One collect of the
-    * edge pairs; dense ids assigned by sorted original id; adjacency rows
-    * end up sorted because the packed (src,dst) array is sorted before
-    * the CSR fill — the reference's per-row sort + compaction
-    * (graph_constructor.hpp:1363-1412) in one pass.
+  /** Build from a symmetric loop-free edge DataFrame: one collect of the
+    * edge pairs, then [[fromPairs]].
     *
-    * `dedupAdjacent = true` additionally merges duplicate edges after the
-    * sort (the reference's duplicate merge, graph_constructor.hpp:
+    * `dedupAdjacent = true` additionally merges duplicate edges in each
+    * sorted row (the reference's duplicate merge, graph_constructor.hpp:
     * 1390-1408), so the input may carry parallel edges — a DataFrame
     * `distinct()` (a full shuffle) becomes unnecessary when the CSR is
     * the execution target anyway. */
@@ -479,12 +476,16 @@ object LocalCsr {
   /** Collect (src, dst) pairs as ONE primitive long array
     * ([src,dst,src,dst,...]) — primitive chunks serialize compactly, no
     * driver-side deserialization of millions of boxed tuples; reading
-    * InternalRow (queryExecution.toRdd) skips the Row conversion layer. */
+    * InternalRow (queryExecution.toRdd) skips the Row conversion layer.
+    * A row with a NULL endpoint is skipped, as the loop filter of
+    * [[graft.etl.EdgeOps.cleanEdges]] drops it. */
   def collectPairs(df: DataFrame): Array[Long] = {
     val chunks: Array[Array[Long]] = df.select(col("src"), col("dst"))
       .queryExecution.toRdd.mapPartitions { it =>
         val b = new scala.collection.mutable.ArrayBuilder.ofLong
-        it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) { b += r.getLong(0); b += r.getLong(1) }
+        }
         Iterator.single(b.result())
       }.collect()
     val flat = new Array[Long](chunks.iterator.map(_.length).sum)
@@ -493,147 +494,303 @@ object LocalCsr {
     flat
   }
 
-  /** Shared CSR core. `symmetrize = false` expects a symmetric loop-free
-    * input whose srcs cover every vertex (a cleaned relation);
-    * `symmetrize = true` takes a raw list, drops loops, and emits both
-    * directions. */
-  private def fromPairs(flat: Array[Long], symmetrize: Boolean,
-                        dedup: Boolean): LocalCsr = {
-    val nIn = flat.length / 2
+  /** `body(from, to)` over `Threads * 4` contiguous slices of [0, n), in
+    * parallel on the common pool. */
+  private[graft] def inStripes(n: Int)(body: (Int, Int) => Unit): Unit = {
     val nStripes = Threads * 4
-    def stripe(st: Int): (Int, Int) =
-      ((nIn.toLong * st / nStripes).toInt, (nIn.toLong * (st + 1) / nStripes).toInt)
-
-    // distinct sorted vertex ids via primitive parallel sort + in-place
-    // dedup: srcs cover everything for symmetric input; for raw input,
-    // both endpoints of every non-loop edge
-    val endpoints =
-      if (!symmetrize) {
-        val a = new Array[Long](nIn)
-        var i = 0
-        while (i < nIn) { a(i) = flat(2 * i); i += 1 }
-        a
-      } else {
-        val b = new scala.collection.mutable.ArrayBuilder.ofLong
-        b.sizeHint(nIn * 2)
-        var i = 0
-        while (i < nIn) {
-          val s = flat(2 * i); val d = flat(2 * i + 1)
-          if (s != d) { b += s; b += d }
-          i += 1
-        }
-        b.result()
-      }
-    java.util.Arrays.parallelSort(endpoints)
-    var nV0 = 0
-    var i = 0
-    while (i < endpoints.length) {
-      if (nV0 == 0 || endpoints(nV0 - 1) != endpoints(i)) {
-        endpoints(nV0) = endpoints(i); nV0 += 1
-      }
-      i += 1
+    java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
+      body((n.toLong * st / nStripes).toInt, (n.toLong * (st + 1) / nStripes).toInt)
     }
-    val ids = java.util.Arrays.copyOf(endpoints, nV0)
+  }
 
-    // open-addressed id→dense table for the mapping passes: a binary
-    // search costs log2(nV) dependent cache misses PER LOOKUP (20+ at
-    // SCALE 20) and the passes do two lookups per edge — linear probing
-    // at 50% load does ~1-2. Sequential fill (|V| inserts, ~ms), shared
-    // read-only by the parallel stripes.
-    // ≤50% load: ~1.5 probes per hit, 12 B/slot (24 MB at SCALE 20's
-    // 645k vertices; bounded by 2× the CSR's own id array at the gate)
-    val cap = java.lang.Integer.highestOneBit(math.max(2, nV0) * 2 - 1) << 1
-    val mask = cap - 1
-    val tKeys = new Array[Long](cap)
-    val tVals = new Array[Int](cap)
-    java.util.Arrays.fill(tVals, -1)
-    i = 0
-    while (i < nV0) {
-      var h = ((ids(i) * 0x9E3779B97F4A7C15L) >>> 40).toInt & mask
-      while (tVals(h) >= 0) h = (h + 1) & mask
-      tKeys(h) = ids(i); tVals(h) = i
-      i += 1
-    }
-    def dense(x: Long): Int = {
-      var h = ((x * 0x9E3779B97F4A7C15L) >>> 40).toInt & mask
-      while (tKeys(h) != x || tVals(h) < 0) h = (h + 1) & mask
-      tVals(h)
-    }
+  /** Where [[groupRows]]' `entries` puts each entry of one slice: it
+    * first counts the entries of each row in `slots`, then, once `out`
+    * is set and `slots` holds the slice's first slot in each row,
+    * scatters them. One class for both passes keeps `put` monomorphic. */
+  private[graft] final class RowSink private[LocalCsr] (slots: Array[Int]) {
+    private[LocalCsr] var out: Array[Int] = _
+    def put(row: Int, value: Int): Unit =
+      if (out == null) slots(row) += 1
+      else { out(slots(row)) = value; slots(row) += 1 }
+  }
 
-    // dense-map in parallel; raw input additionally emits the reverse
-    // direction per kept edge
-    val enc =
-      if (!symmetrize) {
-        val a = new Array[Long](nIn)
-        java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
-          val (from, to) = stripe(st)
-          var j = from
-          while (j < to) {
-            val s = dense(flat(2 * j))
-            val d = dense(flat(2 * j + 1))
-            a(j) = (s.toLong << 32) | (d.toLong & 0xffffffffL)
-            j += 1
-          }
-        }
-        a
-      } else {
-        // per-stripe non-loop counts → offsets → parallel fill
-        val counts = new Array[Int](nStripes)
-        java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
-          val (from, to) = stripe(st)
-          var c = 0
-          var j = from
-          while (j < to) { if (flat(2 * j) != flat(2 * j + 1)) c += 1; j += 1 }
-          counts(st) = c
-        }
-        val offs = new Array[Int](nStripes + 1)
-        var st = 0
-        while (st < nStripes) { offs(st + 1) = offs(st) + 2 * counts(st); st += 1 }
-        val a = new Array[Long](offs(nStripes))
-        java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
-          val (from, to) = stripe(st)
-          var w = offs(st)
-          var j = from
-          while (j < to) {
-            val s0 = flat(2 * j); val d0 = flat(2 * j + 1)
-            if (s0 != d0) {
-              val s = dense(s0)
-              val d = dense(d0)
-              a(w) = (s.toLong << 32) | (d.toLong & 0xffffffffL)
-              a(w + 1) = (d.toLong << 32) | (s.toLong & 0xffffffffL)
-              w += 2
-            }
-            j += 1
-          }
-        }
-        a
+  /** Groups entries into rows by a counting sort: `entries(from, to,
+    * sink)` puts the entries of input items [from, to) into `sink`, the
+    * same ones on every call. It is called twice per slice of the
+    * [0, nItems) items, once to count each row's entries and once to
+    * scatter them. Each slice counts and scatters into slots of its own,
+    * so no write is shared; there are no more slices than `nItems /
+    * nRows`, so the counts take no more room than the entries. Returns
+    * each row's start and the entries, in no set order within a row. */
+  private[graft] def groupRows(nItems: Int, nRows: Int)(
+      entries: (Int, Int, RowSink) => Unit): (Array[Int], Array[Int]) = {
+    val nSlices = math.max(1, math.min(Threads, nItems / math.max(1, nRows)))
+    val slots = Array.fill(nSlices)(new Array[Int](nRows))
+    val sinks = slots.map(new RowSink(_))
+    def slices(): Unit =
+      java.util.stream.IntStream.range(0, nSlices).parallel().forEach { sl =>
+        entries((nItems.toLong * sl / nSlices).toInt,
+          (nItems.toLong * (sl + 1) / nSlices).toInt, sinks(sl))
       }
-    java.util.Arrays.parallelSort(enc)
-    val nE = enc.length
-    val nKeep =
-      if (!dedup) nE
+    slices()
+    // each slice's count becomes its first slot in the row
+    val starts = new Array[Int](nRows + 1)
+    var pos = 0
+    var r = 0
+    while (r < nRows) {
+      starts(r) = pos
+      var sl = 0
+      while (sl < nSlices) {
+        val n = slots(sl)(r); slots(sl)(r) = pos; pos += n; sl += 1
+      }
+      r += 1
+    }
+    starts(nRows) = pos
+    val out = new Array[Int](pos)
+    sinks.foreach(_.out = out)
+    slices()
+    (starts, out)
+  }
+
+  /** Sorted distinct vertex ids and the map from an id to its dense index,
+    * its position in `ids`. */
+  private[graft] abstract class IdMap(val ids: Array[Long]) {
+    /** The dense index of `x`, or -1 when `x` is not an id. */
+    def apply(x: Long): Int
+  }
+
+  /** Dense ids — non-negative, with a bitmap over [0, max id] no larger
+    * than the pair array they come from — map through that bitmap and a
+    * per-word prefix popcount, the reference's `row_bitmap_` /
+    * `row_sums_` (graph_constructor.hpp:24-143): two reads and a
+    * popcount per lookup. Other ids map through an open-addressed hash
+    * over the sorted ids. */
+  private[graft] object IdMap {
+
+    private def dense(min: Long, max: Long, budget: Long): Boolean =
+      min >= 0L && (max >>> 6) < budget
+
+    /** The map over sorted distinct `ids`, taken from a pair array of
+      * `budget` longs. */
+    def ofSorted(ids: Array[Long], budget: Long): IdMap =
+      if (ids.nonEmpty && !dense(ids(0), ids.last, budget)) new Hashed(ids)
       else {
-        var n = 0
-        i = 0
-        while (i < nE) {
-          if (n == 0 || enc(n - 1) != enc(i)) { enc(n) = enc(i); n += 1 }
-          i += 1
-        }
-        n
+        val bits = new Array[Long](if (ids.isEmpty) 0 else (ids.last >>> 6).toInt + 1)
+        ids.foreach(v => bits((v >>> 6).toInt) |= 1L << v)
+        new Ranked(bits, ids)
       }
 
-    val nV = ids.length
-    val rowStarts = new Array[Int](nV + 1)
-    val nbrs = new Array[Int](nKeep)
-    i = 0
-    while (i < nKeep) {
-      nbrs(i) = (enc(i) & 0xffffffffL).toInt
-      rowStarts((enc(i) >>> 32).toInt + 1) += 1
-      i += 1
+    /** The map over the vertices of a pair array: its srcs for a
+      * symmetric input, both endpoints of every non-loop pair for a raw
+      * one. */
+    def ofPairs(flat: Array[Long], symmetrize: Boolean): IdMap = {
+      val nIn = flat.length / 2
+      def each(from: Int, to: Int)(f: Long => Unit): Unit = {
+        var j = from
+        while (j < to) {
+          val s = flat(2 * j); val d = flat(2 * j + 1)
+          if (!symmetrize) f(s)
+          else if (s != d) { f(s); f(d) }
+          j += 1
+        }
+      }
+      val bounds = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+      inStripes(nIn) { (from, to) =>
+        var min = Long.MaxValue; var max = Long.MinValue
+        var j = from
+        while (j < to) {
+          val s = flat(2 * j); val d = flat(2 * j + 1)
+          if (!symmetrize || s != d) {
+            val lo = if (symmetrize) math.min(s, d) else s
+            val hi = if (symmetrize) math.max(s, d) else s
+            if (lo < min) min = lo
+            if (hi > max) max = hi
+          }
+          j += 1
+        }
+        bounds.add((min, max))
+      }
+      var min = Long.MaxValue; var max = Long.MinValue
+      bounds.forEach { case (a, b) => min = math.min(min, a); max = math.max(max, b) }
+      if (min > max) new Ranked(Array.emptyLongArray, Array.emptyLongArray)
+      else if (dense(min, max, flat.length)) {
+        // concurrent bit-sets: a set bit is never written again, so a
+        // CAS runs only the first few times a vertex is seen
+        val shared = new java.util.concurrent.atomic.AtomicLongArray((max >>> 6).toInt + 1)
+        inStripes(nIn) { (from, to) =>
+          each(from, to) { v =>
+            val w = (v >>> 6).toInt
+            val m = 1L << v
+            var old = shared.get(w)
+            while ((old & m) == 0L && !shared.compareAndSet(w, old, old | m))
+              old = shared.get(w)
+          }
+        }
+        val bits = Array.tabulate(shared.length)(shared.get)
+        val ids = new Array[Long](bits.iterator.map(java.lang.Long.bitCount).sum)
+        var k = 0
+        var w = 0
+        while (w < bits.length) {
+          var word = bits(w)
+          while (word != 0L) {
+            ids(k) = (w.toLong << 6) + java.lang.Long.numberOfTrailingZeros(word)
+            k += 1
+            word &= word - 1
+          }
+          w += 1
+        }
+        new Ranked(bits, ids)
+      } else {
+        // sparse: distinct sorted ids by a primitive parallel sort and an
+        // in-place dedup
+        val endpoints = new scala.collection.mutable.ArrayBuilder.ofLong
+        endpoints.sizeHint(if (symmetrize) nIn * 2 else nIn)
+        each(0, nIn)(endpoints += _)
+        val a = endpoints.result()
+        java.util.Arrays.parallelSort(a)
+        var n = 0
+        var i = 0
+        while (i < a.length) {
+          if (n == 0 || a(n - 1) != a(i)) { a(n) = a(i); n += 1 }
+          i += 1
+        }
+        new Hashed(java.util.Arrays.copyOf(a, n))
+      }
+    }
+
+    private final class Ranked(bits: Array[Long], ids: Array[Long]) extends IdMap(ids) {
+      /** Set bits in the words before each word. */
+      private val rank: Array[Int] = {
+        val r = new Array[Int](bits.length)
+        var c = 0
+        var w = 0
+        while (w < bits.length) { r(w) = c; c += java.lang.Long.bitCount(bits(w)); w += 1 }
+        r
+      }
+      def apply(x: Long): Int = {
+        val w = x >>> 6 // past the bitmap for a negative x too
+        if (w >= bits.length) -1
+        else {
+          val word = bits(w.toInt)
+          val m = 1L << x
+          if ((word & m) == 0L) -1
+          else rank(w.toInt) + java.lang.Long.bitCount(word & (m - 1))
+        }
+      }
+    }
+
+    /** Linear probing at ≤ 50% load: ~1.5 probes per hit, against
+      * log2(nV) dependent cache misses for a binary search. */
+    private final class Hashed(ids: Array[Long]) extends IdMap(ids) {
+      private val mask =
+        (java.lang.Integer.highestOneBit(math.max(2, ids.length) * 2 - 1) << 1) - 1
+      private val keys = new Array[Long](mask + 1)
+      private val vals = Array.fill(mask + 1)(-1)
+      ids.indices.foreach { i =>
+        var h = slot(ids(i))
+        while (vals(h) >= 0) h = (h + 1) & mask
+        keys(h) = ids(i); vals(h) = i
+      }
+      private def slot(x: Long): Int = ((x * 0x9E3779B97F4A7C15L) >>> 40).toInt & mask
+      def apply(x: Long): Int = {
+        var h = slot(x)
+        while (vals(h) >= 0 && keys(h) != x) h = (h + 1) & mask
+        vals(h)
+      }
+    }
+  }
+
+  /** Sorts each row `vals(starts(v) until starts(v + 1))` ascending, on
+    * the common pool in chunks of rows balanced by entries. With
+    * `merge`, each run of equal values in a row becomes one value, and
+    * with `counted` its run length is recorded beside it. Returns the
+    * rows' starts, values and (when counted) run lengths; `vals` itself
+    * when nothing merged. */
+  private[graft] def sortRows(starts: Array[Int], vals: Array[Int], merge: Boolean,
+                              counted: Boolean): (Array[Int], Array[Int], Array[Int]) = {
+    val nRows = starts.length - 1
+    val total = starts(nRows)
+    val nChunks = Threads * 4
+    // chunk c covers rows [cut(c), cut(c + 1)): the first row starting
+    // at or after its share of the entries
+    val cut = Array.tabulate(nChunks + 1) { c =>
+      if (c == nChunks) nRows
+      else {
+        val target = total.toLong * c / nChunks
+        var lo = 0; var hi = nRows
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (starts(mid) < target) lo = mid + 1 else hi = mid
+        }
+        lo
+      }
+    }
+    def chunks(body: Int => Unit): Unit =
+      java.util.stream.IntStream.range(0, nChunks).parallel().forEach { c =>
+        var v = cut(c)
+        while (v < cut(c + 1)) { body(v); v += 1 }
+      }
+    val mult = if (counted) new Array[Int](total) else null
+    val kept = new Array[Int](nRows + 1) // kept(v + 1): values row v keeps
+    chunks { v =>
+      val s = starts(v); val e = starts(v + 1)
+      java.util.Arrays.sort(vals, s, e)
+      if (!merge) kept(v + 1) = e - s
+      else {
+        var w = s
+        var k = s
+        while (k < e) {
+          val x = vals(k)
+          var r = k + 1
+          while (r < e && vals(r) == x) r += 1
+          vals(w) = x
+          if (counted) mult(w) = r - k
+          w += 1
+          k = r
+        }
+        kept(v + 1) = w - s
+      }
     }
     var v = 0
-    while (v < nV) { rowStarts(v + 1) += rowStarts(v); v += 1 }
-    new LocalCsr(ids, rowStarts, nbrs)
+    while (v < nRows) { kept(v + 1) += kept(v); v += 1 }
+    if (kept(nRows) == total) (starts, vals, mult)
+    else {
+      val outV = new Array[Int](kept(nRows))
+      val outM = if (counted) new Array[Int](kept(nRows)) else null
+      chunks { v =>
+        val n = kept(v + 1) - kept(v)
+        System.arraycopy(vals, starts(v), outV, kept(v), n)
+        if (counted) System.arraycopy(mult, starts(v), outM, kept(v), n)
+      }
+      (kept, outV, outM)
+    }
+  }
+
+  /** Shared CSR core, the reference's construction order
+    * (graph_constructor.hpp:296-311, 1363-1412): dense ids ([[IdMap]]),
+    * a degree count, a scatter of each entry into its row, then a sort
+    * of each row ([[sortRows]]), merging duplicates with `dedup`.
+    * `symmetrize = false` expects a symmetric loop-free input whose srcs
+    * cover every vertex (a cleaned relation); `symmetrize = true` takes
+    * a raw list, drops loops, and emits both directions. */
+  private def fromPairs(flat: Array[Long], symmetrize: Boolean,
+                        dedup: Boolean): LocalCsr = {
+    val map = IdMap.ofPairs(flat, symmetrize)
+    val (starts, entries) = groupRows(flat.length / 2, map.ids.length) {
+      (from, to, sink) =>
+        var j = from
+        while (j < to) {
+          val s = flat(2 * j); val d = flat(2 * j + 1)
+          if (!symmetrize) sink.put(map(s), map(d))
+          else if (s != d) {
+            val a = map(s); val b = map(d)
+            sink.put(a, b); sink.put(b, a)
+          }
+          j += 1
+        }
+    }
+    val (rowStarts, nbrs, _) = sortRows(starts, entries, merge = dedup, counted = false)
+    new LocalCsr(map.ids, rowStarts, nbrs)
   }
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)

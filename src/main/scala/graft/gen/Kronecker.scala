@@ -1,6 +1,10 @@
 package graft.gen
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.graft.GraftShims
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.rng.Mrg
 
 /**
@@ -13,11 +17,12 @@ import graft.rng.Mrg
  * Edge i is a pure function of (scale, seed1, seed2, i): the MRG stream is
  * skipped to offset i·2^64 (mid word = i) and the 4-way Bernoulli descent
  * consumes draws from there. That makes generation an embarrassingly
- * parallel scan — `spark.range(numEdges).mapPartitions(...)` — with no
- * shuffle and linear scaling in the number of executors. Within a
- * partition the scan's indices are consecutive, so [[Source]] steps one
- * base state from edge i's stream to edge i+1's instead of re-skipping
- * from the seed per edge.
+ * parallel scan over the index range, split as `spark.range(numEdges)`
+ * splits it, with no shuffle and linear scaling in the number of
+ * executors. Within a partition the scan's indices are consecutive, so
+ * [[Source]] steps one base state from edge i's stream to edge i+1's
+ * instead of re-skipping from the seed per edge, and fills primitive
+ * blocks of edges that the partition's rows are read from ([[scan]]).
  */
 object Kronecker {
   final val ANumerator = 5700
@@ -71,9 +76,10 @@ object Kronecker {
   }
 
   /** R-MAT descent from `st` (positioned at the start of an edge's
-    * stream); returns the scrambled (src, dst). */
-  private def descend(st: Mrg.State, scale: Int,
-                      val0: Long, val1: Long): (Long, Long) = {
+    * stream); writes the scrambled (src, dst) to `out(off)`,
+    * `out(off + 1)`. */
+  private def descend(st: Mrg.State, scale: Int, val0: Long, val1: Long,
+                      out: Array[Long], off: Int): Unit = {
     var nverts = 1L << scale
     var baseSrc = 0L
     var baseTgt = 0L
@@ -88,7 +94,8 @@ object Kronecker {
       baseSrc += nverts * srcOff
       baseTgt += nverts * tgtOff
     }
-    (scramble(baseSrc, scale, val0, val1), scramble(baseTgt, scale, val0, val1))
+    out(off) = scramble(baseSrc, scale, val0, val1)
+    out(off + 1) = scramble(baseTgt, scale, val0, val1)
   }
 
   /** R-MAT descent for edge `edgeIndex`; returns scrambled (src, dst). */
@@ -96,7 +103,9 @@ object Kronecker {
                val0: Long, val1: Long): (Long, Long) = {
     val st = Mrg.makeSeed(seed1, seed2)
     st.skip(0L, edgeIndex, 0L)
-    descend(st, scale, val0, val1)
+    val e = new Array[Long](2)
+    descend(st, scale, val0, val1, e, 0)
+    (e(0), e(1))
   }
 
   /** Edges for one scan: [[edge]] `(i)` equals [[makeEdge]] for any `i`.
@@ -122,16 +131,82 @@ object Kronecker {
       st
     }
 
-    def edge(i: Long): (Long, Long) = descend(stream(i), scale, val0, val1)
+    def edge(i: Long): (Long, Long) = {
+      val e = new Array[Long](2)
+      edgeInto(i, e, 0)
+      (e(0), e(1))
+    }
+
+    /** [[edge]] `(i)` written to `out(off)`, `out(off + 1)`. */
+    def edgeInto(i: Long, out: Array[Long], off: Int): Unit =
+      descend(stream(i), scale, val0, val1, out, off)
 
     /** [[generateUniform]]'s edge i: two draws from edge i's stream,
-      * masked to [0, 2^scale) and scrambled. */
-    def uniformEdge(i: Long): (Long, Long) = {
+      * masked to [0, 2^scale) and scrambled, written to `out(off)`,
+      * `out(off + 1)`. */
+    def uniformEdgeInto(i: Long, out: Array[Long], off: Int): Unit = {
       val st = stream(i)
       val mask = (1L << scale) - 1
-      (scramble(st.nextUint() & mask, scale, val0, val1),
-        scramble(st.nextUint() & mask, scale, val0, val1))
+      out(off) = scramble(st.nextUint() & mask, scale, val0, val1)
+      out(off + 1) = scramble(st.nextUint() & mask, scale, val0, val1)
     }
+  }
+
+  /** Edges a partition fills into its reused block at a time: the block
+    * stays 2^16 edges at any SCALE, so a task's memory is flat. */
+  private[gen] final val BlockEdges = 1 << 16
+
+  private val EdgeSchema = StructType(Seq(
+    StructField("src", LongType, nullable = false),
+    StructField("dst", LongType, nullable = false)))
+
+  /**
+   * The scan the [[Source]]-based generators share. The indices
+   * [0, numEdges) split into the partitions `spark.range` makes of them
+   * (`spark.sql.leafNodeDefaultParallelism`, consecutive ranges in
+   * order). Each partition calls `newFill()` once, then fills a reused
+   * primitive block, `schema.length` longs per edge, with
+   * `fill(first, n, block)` for at most [[BlockEdges]] consecutive
+   * indices at a time, and emits one row per edge from the block, in
+   * index order. The third field, when there is one, is an INT.
+   *
+   * The plan's size estimate is the one a `spark.range` scan projected
+   * to these fields gets: 8 B per index, scaled by the row sizes.
+   */
+  private def scan(spark: SparkSession, numEdges: Long, schema: StructType)(
+      newFill: () => (Long, Int, Array[Long]) => Unit): DataFrame = {
+    val nParts = GraftShims.leafParallelism(spark)
+    val width = schema.length
+    val types = schema.map(_.dataType)
+    val rows = spark.sparkContext.parallelize(0 until nParts, nParts)
+      .mapPartitionsWithIndex { (p, _) =>
+        var first = (BigInt(p) * numEdges / nParts).toLong
+        val end = (BigInt(p + 1) * numEdges / nParts).toLong
+        val fill = newFill()
+        val block = new Array[Long](width * math.min(BlockEdges.toLong, end - first).toInt)
+        val row = new SpecificInternalRow(types)
+        new Iterator[InternalRow] {
+          private var n = 0 // edges in the block
+          private var k = 0 // the next edge of the block to emit
+          def hasNext: Boolean = k < n || first < end
+          def next(): InternalRow = {
+            if (k == n) {
+              n = math.min(BlockEdges.toLong, end - first).toInt
+              fill(first, n, block)
+              first += n
+              k = 0
+            }
+            val o = k * width
+            row.setLong(0, block(o))
+            row.setLong(1, block(o + 1))
+            if (width == 3) row.setInt(2, block(o + 2).toInt)
+            k += 1
+            row
+          }
+        }
+      }
+    GraftShims.rowsToDataFrame(spark, rows, schema,
+      BigInt(numEdges) * (8 + schema.defaultSize) / 2)
   }
 
   /**
@@ -139,20 +214,19 @@ object Kronecker {
    * (src BIGINT, dst BIGINT). Pure narrow scan — partitions of the index
    * range generate independently; at cluster scale this saturates all cores
    * with zero communication. Each partition streams its consecutive
-   * indices through one [[Source]].
+   * indices through one [[Source]], block by block ([[scan]]).
    */
   def generate(spark: SparkSession, scale: Int,
                edgeFactor: Long = DefaultEdgeFactor,
                seed1: Long = DefaultSeed1, seed2: Long = DefaultSeed2): DataFrame = {
-    import spark.implicits._
-    val numEdges = edgeFactor << scale
     val (val0, val1) = scrambleVals(seed1, seed2)
-    spark.range(0L, numEdges)
-      .mapPartitions { iter =>
-        val src = new Source(scale, seed1, seed2, val0, val1)
-        iter.map(i => src.edge(i))
+    scan(spark, edgeFactor << scale, EdgeSchema) { () =>
+      val src = new Source(scale, seed1, seed2, val0, val1)
+      (first, n, block) => {
+        var k = 0
+        while (k < n) { src.edgeInto(first + k, block, 2 * k); k += 1 }
       }
-      .toDF("src", "dst")
+    }
   }
 
   /**
@@ -197,19 +271,19 @@ object Kronecker {
     * graph_generator.hpp:571-600): endpoints = scramble(uint & (n−1)) from
     * the per-edge MRG state at offset i·2^64. Same embarrassingly parallel
     * scan shape as the Kronecker path, streamed the same way: each
-    * partition steps one [[Source]] ([[Source.uniformEdge]]). */
+    * partition steps one [[Source]] ([[Source.uniformEdgeInto]]). */
   def generateUniform(spark: SparkSession, scale: Int,
                       edgeFactor: Long = DefaultEdgeFactor,
                       seed1: Long = DefaultSeed1,
                       seed2: Long = DefaultSeed2): DataFrame = {
-    import spark.implicits._
     val (val0, val1) = scrambleVals(seed1, seed2)
-    spark.range(0L, edgeFactor << scale)
-      .mapPartitions { iter =>
-        val src = new Source(scale, seed1, seed2, val0, val1)
-        iter.map(i => src.uniformEdge(i))
+    scan(spark, edgeFactor << scale, EdgeSchema) { () =>
+      val src = new Source(scale, seed1, seed2, val0, val1)
+      (first, n, block) => {
+        var k = 0
+        while (k < n) { src.uniformEdgeInto(first + k, block, 2 * k); k += 1 }
       }
-      .toDF("src", "dst")
+    }
   }
 
   /** Weighted generation (reference S7, graph_generator.hpp:479-506): the
@@ -226,21 +300,25 @@ object Kronecker {
                        edgeFactor: Long = DefaultEdgeFactor,
                        seed1: Long = DefaultSeed1,
                        seed2: Long = DefaultSeed2): DataFrame = {
-    import spark.implicits._
     val (val0, val1) = scrambleVals(seed1, seed2)
-    spark.range(0L, edgeFactor << scale)
-      .mapPartitions { iter =>
-        val src = new Source(scale, seed1, seed2, val0, val1)
-        val w = Mrg.makeSeed(seed1, seed2)
-        var next = -1L
-        iter.map { i =>
-          if (i != next) { w.set(Mrg.makeSeed(seed1, seed2)); w.skip(30L, 46L, i) }
-          next = i + 1
-          val (s, d) = src.edge(i)
-          (s, d, ((w.nextUint() % maxWeight) + 1).toInt)
+    val schema = EdgeSchema.add(StructField("weight", IntegerType, nullable = false))
+    scan(spark, edgeFactor << scale, schema) { () =>
+      val src = new Source(scale, seed1, seed2, val0, val1)
+      val w = Mrg.makeSeed(seed1, seed2)
+      var next = -1L
+      (first, n, block) => {
+        if (first != next) {
+          w.set(Mrg.makeSeed(seed1, seed2)); w.skip(30L, 46L, first)
+        }
+        next = first + n
+        var k = 0
+        while (k < n) {
+          src.edgeInto(first + k, block, 3 * k)
+          block(3 * k + 2) = (w.nextUint() % maxWeight) + 1
+          k += 1
         }
       }
-      .toDF("src", "dst", "weight")
+    }
   }
 
   /**

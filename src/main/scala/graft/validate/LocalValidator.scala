@@ -61,10 +61,11 @@ final class LocalValidator private (clean_ids: Array[Long],
   def this(clean_ids: Array[Long], rawPairs: Array[Long]) =
     this(clean_ids, LocalValidator.rowsOf(clean_ids, rawPairs))
 
-  /** Collects the raw list itself (primitive chunks). Prefer the
-    * pair-array constructor when the flat array already exists (e.g.
-    * from the construction stage) — the list then ships from the
-    * executors ONCE. */
+  /** Collects the raw list itself (primitive chunks; a row with a NULL
+    * endpoint is skipped, as [[graft.bfs.LocalCsr.collectPairs]] skips
+    * it). Prefer the pair-array constructor when the flat array already
+    * exists (e.g. from the construction stage) — the list then ships
+    * from the executors ONCE. */
   def this(clean_ids: Array[Long], rawEdges: DataFrame) =
     this(clean_ids, graft.bfs.LocalCsr.collectPairs(rawEdges))
 
@@ -158,55 +159,50 @@ object LocalValidator {
     * his of lo, ascending, in `hi(loStart(lo) until loStart(lo + 1))`,
     * each with its raw multiplicity in `mult` — and the self-loops as
     * (vertex `loopV(i)`, loop count `nLoops(i)`). */
-  private final class Rows(val loStart: Array[Int], val hi: Array[Int],
-                           val mult: Array[Int], val loopV: Array[Int],
-                           val nLoops: Array[Int])
+  private[validate] final class Rows(val loStart: Array[Int], val hi: Array[Int],
+                                     val mult: Array[Int], val loopV: Array[Int],
+                                     val nLoops: Array[Int])
 
-  private def rowsOf(ids: Array[Long], raw: Array[Long]): Rows = {
+  /** The rows grouped the way the CSR build groups its own
+    * ([[graft.bfs.LocalCsr.groupRows]], [[graft.bfs.LocalCsr.sortRows]]):
+    * each non-loop edge's hi into the row of its lo, each row sorted,
+    * and each run of equal his one edge with the run length as its
+    * multiplicity. Ids map through [[graft.bfs.LocalCsr.IdMap]]. */
+  private[validate] def rowsOf(ids: Array[Long], raw: Array[Long]): Rows = {
+    val map = graft.bfs.LocalCsr.IdMap.ofSorted(ids, raw.length)
+    val nV = ids.length
     val nE = raw.length / 2
-    // one key per raw edge: lo << 32 | hi for an edge between graph
-    // vertices, v << 32 | v for a self-loop, and -1 for a loop on a
-    // vertex outside the graph; sorted, equal keys are one edge with its
-    // multiplicity
-    val keys = new Array[Long](nE)
-    java.util.stream.IntStream.range(0, nStripes).parallel().forEach { st =>
-      var i = (nE.toLong * st / nStripes).toInt
-      val to = (nE.toLong * (st + 1) / nStripes).toInt
+    val (starts, his) = graft.bfs.LocalCsr.groupRows(nE, nV) { (from, to, sink) =>
+      var i = from
       while (i < to) {
         val s = raw(2 * i); val d = raw(2 * i + 1)
-        val a = java.util.Arrays.binarySearch(ids, s)
-        val c = if (d == s) a else java.util.Arrays.binarySearch(ids, d)
-        if (d != s && (a < 0 || c < 0))
-          throw new IllegalArgumentException(
-            s"raw edge ($s, $d): vertex ${if (a < 0) s else d} is not in " +
-              "the graph's ids — the ids must come from this raw list")
-        keys(i) =
-          if (a >= 0) (math.min(a, c).toLong << 32) | math.max(a, c)
-          else -1L
+        if (d != s) {
+          val a = map(s); val c = map(d)
+          if (a < 0 || c < 0)
+            throw new IllegalArgumentException(
+              s"raw edge ($s, $d): vertex ${if (a < 0) s else d} is not in " +
+                "the graph's ids — the ids must come from this raw list")
+          sink.put(math.min(a, c), math.max(a, c))
+        }
         i += 1
       }
     }
-    java.util.Arrays.parallelSort(keys)
-    val nV = ids.length
-    val loStart = new Array[Int](nV + 1)
-    val hi = Array.newBuilder[Int]; val mult = Array.newBuilder[Int]
-    val loopV = Array.newBuilder[Int]; val nLoops = Array.newBuilder[Int]
-    var j = 0
-    while (j < nE) {
-      val key = keys(j)
-      var m = 1
-      while (j + m < nE && keys(j + m) == key) m += 1
-      if (key >= 0) {
-        val lo = (key >>> 32).toInt
-        val h = key.toInt
-        if (h != lo) { hi += h; mult += m; loStart(lo + 1) += 1 }
-        else { loopV += lo; nLoops += m }
+    val (loStart, hi, mult) =
+      graft.bfs.LocalCsr.sortRows(starts, his, merge = true, counted = true)
+    // loops are few: one atomic add each
+    val loops = new java.util.concurrent.atomic.AtomicIntegerArray(nV)
+    graft.bfs.LocalCsr.inStripes(nE) { (from, to) =>
+      var i = from
+      while (i < to) {
+        val s = raw(2 * i)
+        if (raw(2 * i + 1) == s) {
+          val a = map(s)
+          if (a >= 0) loops.incrementAndGet(a)
+        }
+        i += 1
       }
-      j += m
     }
-    var v = 0
-    while (v < nV) { loStart(v + 1) += loStart(v); v += 1 }
-    new Rows(loStart, hi.result(), mult.result(), loopV.result(),
-      nLoops.result())
+    val loopV = (0 until nV).filter(loops.get(_) > 0).toArray
+    new Rows(loStart, hi, mult, loopV, loopV.map(loops.get))
   }
 }

@@ -253,4 +253,120 @@ class LocalCsrSpec extends SparkSpec {
       }
     } finally g.unpersist()
   }
+
+  test("a raw row with a NULL endpoint is dropped, as cleanEdges drops it") {
+    val s = spark
+    import s.implicits._
+    val raw = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), Some(3L)), (None, Some(5L)), (Some(4L), None)).toDF("src", "dst")
+    val flat = LocalCsr.collectPairs(raw)
+    assert(flat.toSeq === Seq(1L, 2L, 2L, 3L))
+    val csr = LocalCsr.buildFromRawPairs(flat)
+    assert(csr.ids.toSeq === Seq(1L, 2L, 3L))
+    val clean = EdgeOps.cleanEdges(raw)
+    val kernel = csr.toCleanDf(spark)
+    assert(kernel.exceptAll(clean).isEmpty && clean.exceptAll(kernel).isEmpty)
+    // the validator's collecting constructor skips them too
+    new graft.validate.LocalValidator(csr.ids, raw)
+  }
+
+  test("the dense id map answers as a binary search over its ids") {
+    val rnd = new scala.util.Random(7)
+    val dense = (0L until 3000L).filter(_ => rnd.nextInt(3) == 0).toArray
+    val cases = Seq(
+      "dense" -> dense,
+      "sparse (v << 40)" -> dense.map(_ << 40),
+      "negative" -> (dense.map(-_) ++ dense).distinct.sorted,
+      "Long.MaxValue" -> (dense :+ Long.MaxValue),
+      "empty" -> Array.emptyLongArray)
+    // the bitmap's size in longs for the dense ids, and one less: both
+    // sides of the density rule
+    val words = (dense.last >>> 6) + 1
+    for ((label, ids) <- cases; budget <- Seq(words, words - 1)) {
+      val map = LocalCsr.IdMap.ofSorted(ids, budget)
+      assert(map.ids eq ids)
+      val probes = ids.iterator ++ ids.iterator.map(_ + 1) ++
+        ids.iterator.map(_ - 1) ++ Iterator(Long.MinValue, Long.MaxValue, -1L, 0L,
+          dense.last + 64, dense.last << 40)
+      for (x <- probes) {
+        val i = java.util.Arrays.binarySearch(ids, x)
+        assert(map(x) === math.max(i, -1), s"$label budget $budget: id $x")
+      }
+    }
+    def kind(ids: Array[Long], budget: Long) =
+      LocalCsr.IdMap.ofSorted(ids, budget).getClass.getSimpleName
+    assert(kind(dense, words) === "Ranked")
+    assert(kind(dense, words - 1) === "Hashed")
+    assert(kind(dense.map(_ << 40), Int.MaxValue) === "Hashed")
+    assert(kind(dense :+ -1L, Int.MaxValue) === "Hashed")
+    // the construction's map over a pair array: the same ids either way
+    val flat = dense.flatMap(v => Seq(v, (v * 7) % 3000)) ++ Array(5000L, 5000L)
+    for ((pairs, want) <- Seq(flat -> "Ranked", flat.map(_ << 40) -> "Hashed")) {
+      val map = LocalCsr.IdMap.ofPairs(pairs, symmetrize = true)
+      assert(map.getClass.getSimpleName === want)
+      val endpoints = pairs.grouped(2).filter(p => p(0) != p(1)).flatten
+        .toArray.distinct.sorted
+      assert(map.ids.toSeq === endpoints.toSeq, want)
+    }
+  }
+
+  test("a graph and its relabeling v -> v << 40 build the same rows") {
+    val raw = graft.gen.Kronecker.generate(spark, 10).persist()
+    try {
+      val flat = LocalCsr.collectPairs(raw)
+      val a = LocalCsr.buildFromRawPairs(flat)
+      val b = LocalCsr.buildFromRawPairs(flat.map(_ << 40))
+      assert(b.ids.toSeq === a.ids.toSeq.map(_ << 40))
+      assert(b.rowStarts.toSeq === a.rowStarts.toSeq)
+      assert(b.nbrs.toSeq === a.nbrs.toSeq)
+      // the symmetric input of build() takes the same two maps
+      val shifted = raw.select((col("src") * (1L << 40)).as("src"),
+        (col("dst") * (1L << 40)).as("dst"))
+      val c = LocalCsr.build(EdgeOps.cleanEdges(raw))
+      val d = LocalCsr.build(EdgeOps.cleanEdges(shifted))
+      assert(c.ids.toSeq === a.ids.toSeq && d.ids.toSeq === b.ids.toSeq)
+      assert(c.rowStarts.toSeq === a.rowStarts.toSeq && c.nbrs.toSeq === a.nbrs.toSeq)
+      assert(d.rowStarts.toSeq === a.rowStarts.toSeq && d.nbrs.toSeq === a.nbrs.toSeq)
+    } finally raw.unpersist()
+  }
+
+  test("kernel-path prepareRaw runs one Spark job, the collect, and builds " +
+    "its relational frames on first use only") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val raw = graft.gen.Kronecker.generate(spark, 10).persist()
+    try {
+      val n = raw.count()
+      val groups = new ConcurrentLinkedQueue[String]
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      val g = try {
+        val g = Bfs.prepareRaw(raw, knownCount = n)
+        // listener events arrive in order: once the sentinel job's start
+        // is seen, every job prepareRaw started has been seen too
+        sc.setJobGroup("prepare-sentinel", "sentinel")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30e9.toLong
+        while (!groups.contains("prepare-sentinel") && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(groups.contains("prepare-sentinel"))
+        assert(groups.size === 2, s"jobs started: $groups")
+        g
+      } finally sc.removeSparkListener(listener)
+      assert(g.csrIfBuilt.isDefined)
+      assert(g.framesBuilt === ((false, false)))
+      g.unpersist()
+      assert(g.framesBuilt === ((false, false)), "unpersist built a frame")
+      // read on demand: the same relations the eager frames held
+      val clean = EdgeOps.cleanEdges(raw)
+      assert(g.edges.exceptAll(clean).isEmpty && clean.exceptAll(g.edges).isEmpty)
+      assert(g.all.count() === g.totalVerts)
+      assert(g.framesBuilt === ((true, true)))
+      g.unpersist()
+    } finally raw.unpersist()
+  }
 }

@@ -123,6 +123,47 @@ class KroneckerSpec extends SparkSpec {
     }
   }
 
+  test("all three scans equal their per-index streams when a partition " +
+    "spans several fill blocks") {
+    import graft.rng.Mrg
+    // SCALE 15 at 7 partitions: 74,898-74,899 edges per partition, two
+    // blocks each, and an edge count that does not split evenly
+    val scale = 15
+    val n = 16 << scale
+    assert(n / 7 > Kronecker.BlockEdges && n % 7 != 0)
+    val (v0, v1) = Kronecker.scrambleVals(2, 3)
+    val mask = (1L << scale) - 1
+    val session = spark.newSession()
+    session.conf.set("spark.sql.leafNodeDefaultParallelism", "7")
+    def stream(high: Long, mid: Long, low: Long): Mrg.State = {
+      val st = Mrg.makeSeed(2, 3)
+      st.skip(high, mid, low)
+      st
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
+      assert(df.rdd.getNumPartitions === 7)
+      val r = df.collect()
+      assert(r.length === n)
+      r
+    }
+    val kron = rows(Kronecker.generate(session, scale))
+    val uniform = rows(Kronecker.generateUniform(session, scale))
+    val weighted = rows(Kronecker.generateWeighted(session, scale, 100))
+    for (i <- 0 until n) {
+      val e = Kronecker.makeEdge(scale, i, 2, 3, v0, v1)
+      if ((kron(i).getLong(0), kron(i).getLong(1)) != e) fail(s"edge $i: ${kron(i)}")
+      val st = stream(0L, i, 0L)
+      val u = (Kronecker.scramble(st.nextUint() & mask, scale, v0, v1),
+        Kronecker.scramble(st.nextUint() & mask, scale, v0, v1))
+      if ((uniform(i).getLong(0), uniform(i).getLong(1)) != u)
+        fail(s"uniform edge $i: ${uniform(i)}")
+      val w = ((stream(30L, 46L, i).nextUint() % 100) + 1).toInt
+      if ((weighted(i).getLong(0), weighted(i).getLong(1), weighted(i).getInt(2)) !=
+          ((e._1, e._2, w)))
+        fail(s"weighted edge $i: ${weighted(i)}")
+    }
+  }
+
   test("the streamed source equals makeEdge on random-order indices") {
     val (v0, v1) = Kronecker.scrambleVals(7, 9)
     val src = new Kronecker.Source(14, 7, 9, v0, v1)

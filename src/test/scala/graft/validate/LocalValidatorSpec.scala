@@ -365,4 +365,22 @@ class LocalValidatorSpec extends SparkSpec {
     // the bogus pred shows up as chain + missing-edge errors
     assert((0 until row.length).map(row.getLong) === Seq(0, 0, 0, 0, 1, 1, 0, 3))
   }
+
+  test("SCALE 16, seeds (2, 3): pinned construction, and validator rows " +
+    "that hold each raw non-loop edge once") {
+    val flat = LocalCsr.collectPairs(Kronecker.generate(spark, 16))
+    val csr = LocalCsr.buildFromRawPairs(flat)
+    assert(csr.nVerts === 46815)
+    assert(csr.nbrs.length === 1819202)
+    val rows = LocalValidator.rowsOf(csr.ids, flat)
+    assert(rows.hi.length === 909601)
+    val nonLoops = (0 until flat.length / 2).count(i => flat(2 * i) != flat(2 * i + 1))
+    assert(rows.mult.iterator.map(_.toLong).sum === nonLoops.toLong)
+    // the two constructions agree: row lo holds the CSR neighbours above lo
+    for (v <- 0 until csr.nVerts) {
+      val above = (csr.rowStarts(v) until csr.rowStarts(v + 1)).map(csr.nbrs).filter(_ > v)
+      val his = (rows.loStart(v) until rows.loStart(v + 1)).map(rows.hi)
+      if (his != above) fail(s"row $v: $his, CSR $above")
+    }
+  }
 }
