@@ -447,7 +447,7 @@ object Bench {
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     // The st_* streaming twins are REPLAY-VERIFICATION harnesses: their
     // cost is dominated by the driver-side MemoryStream feed + per-batch
-    // state-store churn, by construction (StreamVerify scaladoc), not by
+    // checkpoint commits, by construction (StreamVerify scaladoc), not by
     // the operators — production streams read Kafka/files. Timing them
     // into the headline would make `value` incomparable with the batch
     // surface band, so they are timed ONCE into their own field.

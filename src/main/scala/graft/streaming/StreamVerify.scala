@@ -37,32 +37,80 @@ object StreamVerify {
 
   private val qid = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  private val PartitionsKey = "spark.sql.shuffle.partitions"
+  private val replayConfLock = new Object
+  private[streaming] val RocksDbConf = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      ("org.apache.spark.sql.execution.streaming" +
+        ".state.RocksDBStateStoreProvider"),
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** Run `transform` over a MemoryStream fed `batches`, one
-    * micro-batch per element, into a uniquely-named memory sink;
-    * returns the sink table.
+    * micro-batch per non-empty element, into a uniquely-named memory
+    * sink; returns the sink table.
     *
-    * Stateful operators pin one state store per shuffle partition for
-    * the query's lifetime, and every micro-batch checkpoints every
-    * store — at the session's 32 partitions the stream-stream join
-    * twin spends its time on store-file churn, not rows. Replay
-    * results are partition-count-independent (the same oracles pass
-    * at 8 and 32), so the harness drops to 8 for the stream's
-    * lifetime and restores the session value after. */
-  private def run[T](spark: SparkSession, mem: MemoryStream[T],
-                     batches: Seq[Seq[T]], mode: String)(
+    * The query starts with replay-scoped session confs, `extraConf`
+    * on top of two that every replay takes:
+    *  - checkpoint files go through [[NioCheckpointFileManager]]. The
+    *    per-batch cost of a replay is its checkpoint commits, and
+    *    without the native `libhadoop` Hadoop's local file system forks
+    *    a child process for them: a `chmod` per created file and mkdir,
+    *    a `readlink` per rename. A JFR `jdk.ProcessStart` recording on
+    *    sf0.01 at 8 partitions counted 911 child processes per
+    *    `st_userstats` replay (239 `chmod`, 600 `readlink`, 72 `rm`)
+    *    and 5,390 per `st_range`; with the manager (and, for RocksDB,
+    *    [[NioLocalFileSystem]]) only Spark's `rm -rf` of local RocksDB
+    *    directories is left.
+    *  - at most 8 shuffle partitions: a stateful operator pins one
+    *    state store per partition and every micro-batch commits each
+    *    one. Replay results are partition-count-independent (the same
+    *    oracles pass at 8 and 32).
+    * The streaming plan is built on the caller's confs. The overrides
+    * hold only while `start()` runs, under one lock so that concurrent
+    * replays on one session cannot restore each other's values; the
+    * running query keeps them because `StreamExecution` clones the
+    * session when it is constructed. The caller's session is left as
+    * it was, and its streaming listeners see the replay.
+    *
+    * Fails loudly when the query did not run exactly one data
+    * micro-batch per non-empty fed batch (watermark-only batches read
+    * no rows and are not counted). */
+  private[streaming] def run[T](spark: SparkSession, replay: String,
+                     mem: MemoryStream[T], batches: Seq[Seq[T]],
+                     mode: String, extraConf: Map[String, String] = Map.empty)(
                      transform: DataFrame => Dataset[_]): DataFrame = {
     val name = s"stream_verify_${qid.incrementAndGet()}"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(partKey)
-    if (prevParts.toInt > 8) spark.conf.set(partKey, "8")
-    try {
-      val q = transform(mem.toDF()).writeStream
-        .format("memory").queryName(name).outputMode(mode).start()
-      try batches.foreach { b =>
-        if (b.nonEmpty) { mem.addData(b); q.processAllAvailable() }
-      } finally q.stop()
-    } finally spark.conf.set(partKey, prevParts)
+    val writer = transform(mem.toDF()).writeStream
+      .format("memory").queryName(name).outputMode(mode)
+    val q = replayConfLock.synchronized {
+      val parts = math.min(spark.conf.get(PartitionsKey).toInt, 8)
+      withConf(spark, extraConf ++ Map(
+        PartitionsKey -> parts.toString,
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[NioCheckpointFileManager].getName))(writer.start())
+    }
+    try batches.foreach { b =>
+      if (b.nonEmpty) { mem.addData(b); q.processAllAvailable() }
+    } finally q.stop()
+    val fed = batches.count(_.nonEmpty)
+    val ran = q.recentProgress.count(_.numInputRows > 0)
+    if (ran != fed)
+      throw new IllegalStateException(
+        s"replay $replay ran $ran data micro-batches for $fed fed batches")
     spark.table(name)
+  }
+
+  /** `body` with `conf` set on `spark`, each key restored after. */
+  private def withConf[A](spark: SparkSession, conf: Map[String, String])(
+      body: => A): A = {
+    val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   private def eventBatches(events: DataFrame, nBatches: Int)
@@ -126,7 +174,7 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4), "update")(
+    run(spark, "st_window", mem, eventBatches(events, 4), "update")(
         df => Events.windowedCountsStream(df, "1 hour"))
       .groupBy("w_start", "event_type")
       .agg(max(struct(col("n_events"), col("sum_value"))).as("s"))
@@ -152,7 +200,8 @@ object StreamVerify {
     val sentinel = EvRow(-1L,
       new Timestamp(maxTs.getTime + 100L * 24 * 3600 * 1000), -1L, "x", 0.0)
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4) :+ Seq(sentinel), "append")(
+    run(spark, "st_sessionwin", mem,
+        eventBatches(events, 4) :+ Seq(sentinel), "append")(
         df => Events.sessionWindows(df.withWatermark("ts", "0 seconds")))
       .filter(col("user_id") =!= -1L)
   }
@@ -161,23 +210,14 @@ object StreamVerify {
     * 4 `transformWithState` path). n_events is strictly monotone per
     * user, so max(struct) per key is the last update ≡ the batch
     * groupBy. transformWithState needs multi-column-family state, which
-    * only the RocksDB provider supports — scoped to this query's
-    * lifetime, then restored. */
+    * only the RocksDB provider supports; it and the file system RocksDB
+    * copies its SST files through are replay-scoped confs. */
   def userStatsFinal(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val sink = try {
-      val mem = MemoryStream[EvRow]
-      run(spark, mem, eventBatches(events, 4), "update")(
-        df => Events.userStatsStream(spark, df))
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    val mem = MemoryStream[EvRow]
+    val sink = run(spark, "st_userstats", mem, eventBatches(events, 4),
+        "update", RocksDbConf)(df => Events.userStatsStream(spark, df))
     sink
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("sum_value_micro"),
@@ -191,7 +231,7 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4), "update")(
+    run(spark, "st_sessions", mem, eventBatches(events, 4), "update")(
         df => Events.sessionizeStream(spark, df))
       .groupBy("user_id")
       .agg(max(struct(col("session_idx"), col("n_events"),
@@ -207,7 +247,7 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4), "update")(
+    run(spark, "st_funnel", mem, eventBatches(events, 4), "update")(
         df => Events.funnelStream(spark, df))
       .groupBy("user_id")
       .agg(max(struct(col("steps_completed"), col("t_signup"),
@@ -225,7 +265,7 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4), "update")(
+    run(spark, "st_asof", mem, eventBatches(events, 4), "update")(
       df => Events.asofJoinStream(spark, df))
   }
 
@@ -236,7 +276,7 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4), "append")(
+    run(spark, "st_range", mem, eventBatches(events, 4), "append")(
         df => Events.rangeJoinStream(df, df))
       .select(col("event_id"), col("user_id"),
         unix_micros(col("l_ts")).as("us"), col("r_event_id"),
@@ -251,7 +291,8 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[DocRow]
-    run(spark, mem, docBatchesByKey(docs, md5(col("text"))), "append")(
+    run(spark, "st_exact", mem, docBatchesByKey(docs, md5(col("text"))),
+        "append")(
         df => graft.ops.Dedup.exactStream(df))
       .select(col("doc_id"), col("content_hash"))
   }
@@ -266,7 +307,7 @@ object StreamVerify {
       .withColumnRenamed("simhash", "sig_key")
     val key = coalesce(col("sig_key"), -col("doc_id") - 1)
     val mem = MemoryStream[DocRow]
-    run(spark, mem,
+    run(spark, "st_simhash", mem,
         docBatchesByKey(docs.join(sig, Seq("doc_id"), "left"), key),
         "append")(
         df => graft.ops.Dedup.simhashStream(df))
@@ -285,7 +326,7 @@ object StreamVerify {
       .as[DocRow].collect().toSeq
     val per = math.max(1, (base.length + 2) / 3)
     val mem = MemoryStream[DocRow]
-    run(spark, mem, base.grouped(per).toSeq, "append")(
+    run(spark, "st_decontam", mem, base.grouped(per).toSeq, "append")(
       df => graft.ops.TextOps.decontaminateStream(df, bench))
   }
 
@@ -297,7 +338,7 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4), "update")(
+    run(spark, "st_rfm", mem, eventBatches(events, 4), "update")(
         df => Events.rfmDistributed(df))
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("last_us"),
@@ -319,7 +360,8 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    val sums = run(spark, mem, eventBatches(events, 4), "update")(df =>
+    val sums = run(spark, "st_topusers", mem, eventBatches(events, 4),
+        "update")(df =>
         df.groupBy("event_type", "user_id")
           .agg(round(sum(col("value")), 6).as("total_value"),
             count(lit(1)).as("n_upd")))
@@ -339,7 +381,7 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4), "update")(
+    run(spark, "st_latest", mem, eventBatches(events, 4), "update")(
         df => Events.latestRecordDistributed(df))
       .groupBy("user_id")
       .agg(max(struct(col("last_us"), col("event_id"), col("event_type"),
@@ -360,7 +402,7 @@ object StreamVerify {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[EvRow]
-    run(spark, mem, eventBatches(events, 4), "update")(df =>
+    run(spark, "st_hll", mem, eventBatches(events, 4), "update")(df =>
         df.groupBy("event_type")
           .agg(graft.functions.HllDistinct.of(col("user_id"), 12)
               .as("approx_users"),
@@ -385,7 +427,8 @@ object StreamVerify {
     val base = withDocTs(docs).orderBy("doc_id").as[DocRow].collect().toSeq
     val per = math.max(1, (base.length + 2) / 3)
     val mem = MemoryStream[DocRow]
-    val sink = run(spark, mem, base.grouped(per).toSeq, "update")(df =>
+    val sink = run(spark, "st_cms", mem, base.grouped(per).toSeq,
+        "update")(df =>
       graft.ops.TextOps.tokenized(df)
         .select(explode(col("tk")).as("token"))
         .agg(graft.functions.CountMinSketch.of(col("token"), depth, width)
@@ -410,7 +453,7 @@ object StreamVerify {
       .orderBy("vec_id").as[EmbRow].collect().toSeq
     val per = math.max(1, (rows.length + 2) / 3)
     val mem = MemoryStream[EmbRow]
-    run(spark, mem, rows.grouped(per).toSeq, "append")(
+    run(spark, "st_quantize", mem, rows.grouped(per).toSeq, "append")(
       df => graft.ops.Similarity.quantizeInt8(df))
   }
 
@@ -428,7 +471,7 @@ object StreamVerify {
       .orderBy("vec_id").as[EmbRow].collect().toSeq
     val per = math.max(1, (qrows.length + 2) / 3)
     val mem = MemoryStream[EmbRow]
-    run(spark, mem, qrows.grouped(per).toSeq, "append")(
+    run(spark, "st_ann", mem, qrows.grouped(per).toSeq, "append")(
       df => graft.ops.Similarity.topKForQueryStream(df, embeddings, k))
   }
 }
