@@ -63,16 +63,20 @@ object SparkEntry {
   // in one session; BFS is iterative, so reuse its result across the
   // queries that consume it) ----
 
-  /** Per-sfDir graph handle: BFS root, checkpointed canonical tree, and —
-    * when the graph took the hybrid executor's local path — the kernel
-    * CSR, from which the cleaned edge set, vertex universe and max vertex
-    * fall out with no further jobs (no distinct() shuffle, no extra
-    * scans). */
-  private final case class GraphHandle(root: Long, tree: DataFrame,
-                                       csr: Option[graft.bfs.LocalCsr],
+  /** Per-sfDir graph handle: the prepared graph (kept for later
+    * re-traversals: gr_diameter's second sweep reuses its persisted
+    * src-partitioned edges on the distributed path), BFS root,
+    * checkpointed canonical tree, and — when the graph took the hybrid
+    * executor's local path — the kernel CSR, from which the cleaned edge
+    * set, vertex universe and max vertex fall out with no further jobs
+    * (no distinct() shuffle, no extra scans). */
+  private final case class GraphHandle(g: graft.bfs.Bfs.PreparedGraph,
+                                       root: Long, tree: DataFrame,
                                        levelSizes: Seq[(Int, Long)],
                                        rawPairs: Option[Array[Long]],
-                                       dense: Option[(Array[Int], Array[Int])])
+                                       dense: Option[(Array[Int], Array[Int])]) {
+    def csr: Option[graft.bfs.LocalCsr] = g.csrIfBuilt
+  }
 
   /** Per-session cache: cached DataFrames are bound to the SparkSession
     * that built them, so the outer map keys on the session OBJECT
@@ -80,11 +84,7 @@ object SparkEntry {
     * sessions), and entries whose session has stopped are evicted on the
     * next access, so a long-lived JVM doesn't accumulate dead plans,
     * broadcasts, or retained kernel arrays across sessions. */
-  /** `onDiscard`: cleanup for a freshly built value that LOST the insert
-    * race (another thread — or the build itself, via a recursive
-    * [[put]] seed — installed a value first), so persisted state on the
-    * loser doesn't leak. */
-  private final class SessionCache[V <: AnyRef](onDiscard: V => Unit = (_: V) => ()) {
+  private final class SessionCache[V <: AnyRef] {
     private val bySession = new java.util.concurrent.ConcurrentHashMap[
       SparkSession, java.util.concurrent.ConcurrentHashMap[String, V]]()
     private val locks = new java.util.concurrent.ConcurrentHashMap[
@@ -97,17 +97,10 @@ object SparkEntry {
       bySession.computeIfAbsent(s,
         _ => new java.util.concurrent.ConcurrentHashMap[String, V]())
     }
-    /** Memoized build. NOT computeIfAbsent: a build that re-enters this
-      * cache on its OWN key (handle() seeds preparedCache while
-      * prepared() is building that same key) would make computeIfAbsent
-      * throw IllegalStateException("Recursive update"). Instead:
-      * get-then-putIfAbsent, serialized per (session, key) by a plain
-      * lock so the concurrent warm-up still builds each value once.
-      * put() takes no lock, so the recursive seed cannot deadlock; if it
-      * wins the insert, the outer build's duplicate is discarded. Builds
-      * of DIFFERENT keys proceed in parallel, and the caches' nesting
-      * order (prepared → clean → handle) is a DAG, so cross-key lock
-      * acquisition cannot cycle. */
+    /** Memoized build, serialized per (session, key) by a plain lock so
+      * the concurrent warm-up builds each value once. Builds of DIFFERENT
+      * keys proceed in parallel, and the caches' nesting order (degrees →
+      * clean → handle, ...) is a DAG, so cross-key lock acquisition cannot cycle. */
     def get(s: SparkSession, key: String)(build: => V): V = {
       val m = mapFor(s)
       val e = m.get(key)
@@ -115,31 +108,13 @@ object SparkEntry {
       locks.computeIfAbsent((s, key), _ => new Object).synchronized {
         val e2 = m.get(key)
         if (e2 != null) e2
-        else {
-          val v = build
-          val prior = m.putIfAbsent(key, v)
-          if (prior == null) v
-          else { if (prior ne v) onDiscard(v); prior }
-        }
+        else { val v = build; m.put(key, v); v }
       }
     }
-    def put(s: SparkSession, key: String, v: V): Unit =
-      mapFor(s).putIfAbsent(key, v)
   }
 
   private val handleCache = new SessionCache[GraphHandle]
   private val cleanCache = new SessionCache[DataFrame]
-  // a prepared graph that loses the insert race holds a persisted
-  // src-partitioned edge exchange — drop it rather than leak it
-  private val preparedCache =
-    new SessionCache[graft.bfs.Bfs.PreparedGraph](_.unpersist())
-
-  /** Per-sfDir PREPARED graph for distributed-path re-traversals: the
-    * canonical BFS's own prepared graph is seeded here by [[handle]], so
-    * a second sweep from a different root (gr_diameter) reuses the one
-    * src-partitioned persisted edge exchange instead of re-preparing. */
-  private def prepared(s: SparkSession, dir: String): graft.bfs.Bfs.PreparedGraph =
-    preparedCache.get(s, dir)(graft.bfs.Bfs.prepare(clean(s, dir)))
 
   private def rawEdges(s: SparkSession, dir: String): DataFrame =
     EdgeOps.edgesFromLineitem(s, dir)
@@ -152,22 +127,12 @@ object SparkEntry {
       // src, from the same collected array
       val (g, root) = Bfs.prepareRawWithRoot(raw)
       val r = Bfs.bfsMinParent(s, g, root)
-      val csr = g.csrIfBuilt
       // Local-path trees are a range + broadcast-lookup plan — cheaper to
       // rescan than to checkpoint. Distributed trees carry the iterative
       // level-loop lineage and MUST be checkpointed while g is cached.
       val tree =
-        if (csr.isDefined) r.tree
-        else {
-          val t = r.tree.localCheckpoint(eager = true)
-          // keep the prepared graph cached for later re-traversals
-          // (gr_diameter's second sweep) instead of unpersisting it —
-          // the src-partitioned edge exchange is the expensive part of
-          // any further distributed BFS over this dir.
-          preparedCache.put(s, dir, g)
-          t
-        }
-      GraphHandle(root, tree, csr, r.levelSizes, g.takeRawPairs(), r.dense)
+        if (g.csrIfBuilt.isDefined) r.tree else r.tree.localCheckpoint(eager = true)
+      GraphHandle(g, root, tree, r.levelSizes, g.takeRawPairs(), r.dense)
     }
 
   /** Cleaned edge set, one per sfDir. Local-path graphs emit it straight
@@ -1278,7 +1243,7 @@ object SparkEntry {
           // sweep 2 needs only the ECCENTRICITY, which the level loop
           // counts as it runs: take it off the driver-held sizes and
           // never materialize (or aggregate) the sweep-2 tree
-          graft.bfs.Bfs.bfsMinParent(s, prepared(s, dir), far)
+          graft.bfs.Bfs.bfsMinParent(s, h.g, far)
             .levelSizes.map(_._1).max.toLong
       }
       Seq((h.root, ecc1, far, ecc2))
@@ -1362,15 +1327,12 @@ object SparkEntry {
 
   /** Memoized CC labelling of the lineitem subgraph — shared by
     * cc_components and gr_ccsizes (the result is |V|-sized and already
-    * materialized by the CC run's own checkpoint). */
+    * materialized by the CC run itself). */
   private def ccLabels(s: SparkSession, dir: String): DataFrame =
-    clustersCache.get(s, s"$dir/cc_labels") {
-      val sub = lineitemSub(s, dir)
+    clustersCache.get(s, s"$dir/cc_labels")(
+      graft.bfs.ConnectedComponents.components(s, lineitemSub(s, dir)
         .select((col("l_orderkey") * 2).as("src"),
-          (col("l_partkey") * 2 + 1).as("dst"))
-      graft.bfs.ConnectedComponents.componentsRaw(s, sub)
-        .localCheckpoint(eager = true)
-    }
+          (col("l_partkey") * 2 + 1).as("dst"))))
 
   /** Deterministic 2000-line lineitem subset feeding cc_components and
     * sssp_dist: the global top-2000 sort runs once per sfDir, not once

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json (the oracles of the same queries), for the
   * DuckDB oracle compare (tools/check.py). Exits 1 after dumping every query it could
@@ -32,8 +32,7 @@ object Verify {
     }
     val failed = selected.toSeq.filter { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        dump(fn(spark, sfDir), s"$outDir/$name")
         false
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -48,6 +47,17 @@ object Verify {
       sys.exit(1)
     }
   }
+
+  /** `df` as one parquet file under `path`, replacing it. A `file:`
+    * write goes through [[streaming.NioLocalFileSystem]] (scoped to this
+    * write, the cached file system untouched): without the native
+    * `libhadoop`, Hadoop's local file system forks a `chmod` per created
+    * file and directory. */
+  private[graft] def dump(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite")
+      .option("fs.file.impl", classOf[streaming.NioLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+      .parquet(path)
 
   /** The oracle SQL of the named queries, as one JSON object. */
   private[graft] def writeOracles(path: String, names: Set[String]): Unit =

@@ -103,11 +103,13 @@ object Graph500 {
     }
 
   /** The stages both protocols share: generation, construction and the
-    * root sample. `localMode` is the kernel gate's verdict on the
-    * constructed graph. */
+    * root sample. */
   private final case class SetUp(raw: DataFrame, g: Bfs.PreparedGraph,
                                  tGen: Double, tCon: Double, maxV: Long,
-                                 roots: Array[Long], localMode: Boolean) {
+                                 roots: Array[Long]) {
+    /** The construction's gate verdict: it built a kernel CSR. */
+    def localMode: Boolean = g.csrIfBuilt.isDefined
+
     /** The kernel-path validator, built on the construction stage's
       * collected pair array when it kept one — the raw list then ships
       * from the executors once, not twice. */
@@ -174,8 +176,7 @@ object Graph500 {
         (mv, Kronecker.sampleRootsDistributed(g.all.toDF("vertex"),
           "vertex", nRoots, mv + 1))
     }
-    SetUp(raw, g, tGen, tCon, maxV, roots,
-      g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark))
+    SetUp(raw, g, tGen, tCon, maxV, roots)
   }
 
   def run(spark: SparkSession, scale: Int, nRoots: Int = 16,

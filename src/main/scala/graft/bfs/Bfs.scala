@@ -72,24 +72,24 @@ object Bfs {
   final case class Result(tree: DataFrame, levelSizes: Seq[(Int, Long)],
                           dense: Option[(Array[Int], Array[Int])] = None)
 
-  /** The reference's cached CSR analogue: the big table shuffled ONCE
-    * (hash-partitioned by src) + the vertex set, both persisted and shared
-    * by every BFS run of a benchmark (reference builds Graph2DCSR once,
-    * mpi/main.cc:58-61, then runs 64 BFS over it). When the graph fits
-    * under the local-kernel gate, the CSR itself is materialized once too
-    * (memoized) — the construction stage of the hybrid executor — and a
-    * frame the kernel path does not need is built on first use only.
+  /** The reference's cached CSR analogue, built ONCE and shared by every
+    * BFS run of a benchmark (reference builds Graph2DCSR once,
+    * mpi/main.cc:58-61, then runs 64 BFS over it). [[prepareRaw]] builds
+    * every one and makes the gate decision for it: under the gate the
+    * kernel CSR (`csrIfBuilt`) and frames built on first use; above it
+    * the cleaned edges hash-partitioned by src and the vertex set, both
+    * persisted, and no CSR.
     *
     * `edges`: the cleaned symmetric edge relation. `all`: the vertex
     * table (vertex BIGINT), persisted. */
   final class PreparedGraph private (edgesFrame: Frame, allFrame: Frame,
-                                     val totalVerts: Long, val totalEdges: Long) {
+                                     val totalVerts: Long, val totalEdges: Long,
+                                     private[graft] val csrIfBuilt: Option[LocalCsr]) {
     def edges: DataFrame = edgesFrame.get
     def all: DataFrame = allFrame.get
     /** Which of (edges, all) have been built. */
     private[bfs] def framesBuilt: (Boolean, Boolean) =
       (edgesFrame.ifBuilt.isDefined, allFrame.ifBuilt.isDefined)
-    private var csrCache: LocalCsr = _
     /** Raw flat pair array retained by prepareRaw's local path so the
       * benchmark validator can dense-map the list without re-collecting
       * it; cleared by takeRawPairs. */
@@ -98,15 +98,9 @@ object Bfs {
     private[graft] def takeRawPairs(): Option[Array[Long]] = {
       val r = rawPairs; rawPairs = None; r
     }
-    private[graft] def csr: LocalCsr = synchronized {
-      if (csrCache == null) csrCache = LocalCsr.build(edges)
-      csrCache
-    }
-    /** The kernel CSR if this graph took the local path — without
-      * triggering a build on distributed-path graphs. */
-    private[graft] def csrIfBuilt: Option[LocalCsr] = synchronized {
-      Option(csrCache)
-    }
+    /** The kernel CSR; fails on a graph that took the distributed path. */
+    private[graft] def csr: LocalCsr = csrIfBuilt.getOrElse(throw
+      new IllegalStateException("no kernel CSR: the graph took the distributed path"))
     /** Drops the caches of the frames that were built. */
     def unpersist(): Unit = {
       edgesFrame.ifBuilt.foreach(_.unpersist(blocking = false))
@@ -115,20 +109,19 @@ object Bfs {
   }
 
   private object PreparedGraph {
-    /** Both frames built by the caller (the distributed path). */
+    /** The distributed path: both frames built by the caller. */
     def apply(edges: DataFrame, all: DataFrame, totalVerts: Long,
               totalEdges: Long): PreparedGraph =
-      new PreparedGraph(Frame.of(edges), Frame.of(all), totalVerts, totalEdges)
+      new PreparedGraph(Frame.of(edges), Frame.of(all), totalVerts, totalEdges, None)
 
-    /** A kernel-path graph over `csr`: `all` is derived from its ids on
-      * first use. */
-    def kernel(edges: Frame, csr: LocalCsr, spark: SparkSession,
-               totalEdges: Long): PreparedGraph = {
-      val g = new PreparedGraph(edges, Frame.lazily(() => vertexTableOf(spark, csr.ids)),
-        csr.nVerts.toLong, totalEdges)
-      g.csrCache = csr
-      g
-    }
+    /** A kernel-path graph over `csr`: `edges` and `all` (derived from
+      * its ids) are built on first use. */
+    def kernel(edges: () => DataFrame, csr: LocalCsr,
+               spark: SparkSession): PreparedGraph =
+      new PreparedGraph(Frame.lazily(edges), Frame.lazily(() =>
+        graft.functions.Ship.df(spark, "vertex" -> csr.ids)
+          .persist(StorageLevel.MEMORY_AND_DISK)),
+        csr.nVerts.toLong, csr.nbrs.length.toLong, Some(csr))
   }
 
   /** A DataFrame that is either given or built on first use. */
@@ -146,54 +139,15 @@ object Bfs {
     def lazily(build: () => DataFrame): Frame = new Frame(build)
   }
 
-  def prepare(clean: DataFrame, bySrc: Boolean = false): PreparedGraph = {
-    val spark = clean.sparkSession
-    val cached = clean.persist(StorageLevel.MEMORY_AND_DISK)
-    val nE = cached.count()
-    val local = nE <= graft.Gates.localBfsMaxEdges.limit(spark)
-    // Local path skips the src-hash shuffle + second cache: the CSR is the
-    // physical layout there, so pre-partitioning the DataFrame buys nothing.
-    val edges =
-      if (local) cached
-      // Caller guarantees `clean` is already hash-partitioned by src
-      // (EdgeOps.cleanEdges' output layout): reuse the one cache —
-      // re-exchanging 2·nE rows into the identical layout is the single
-      // most expensive no-op in the construction stage.
-      else if (bySrc) cached
-      else cached.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    if (local) {
-      // Hybrid-executor construction: build the local CSR up front (like
-      // the reference's construction stage) so per-run timings measure BFS
-      // only — and derive the vertex table from its sorted ids, on first
-      // use, instead of paying a distinct() shuffle.
-      PreparedGraph.kernel(Frame.of(edges), LocalCsr.build(edges), spark, nE)
-    } else {
-      val all = edges.select(col("src").as("vertex")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val g = PreparedGraph(edges, all, all.count(), nE)
-      if (edges ne cached) cached.unpersist(blocking = false)
-      g
-    }
-  }
-
-  /** Distributed (vertex BIGINT) table from a driver-resident sorted id
-    * array: broadcast + range lookup. NEVER a LocalRelation /
-    * parallelize of boxed rows — those re-serialize the whole array into
-    * every job that scans the table. */
-  private def vertexTableOf(spark: SparkSession, ids: Array[Long]): DataFrame = {
-    val bcIds = spark.sparkContext.broadcast(ids)
-    val idOf = udf((i: Long) => bcIds.value(i.toInt))
-    spark.range(ids.length.toLong).select(idOf(col("id")).as("vertex"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** [[prepare]] from a RAW edge list (loops/duplicates allowed). Under
-    * the local gate the DataFrame `distinct()` shuffle is skipped
-    * entirely: edges are symmetrized narrowly and the kernel build's
-    * sort-and-merge does the dedup (the reference's own construction
-    * order — sortEdges then duplicate merge, graph_constructor.hpp:
-    * 1363-1412). The distributed path falls back to the full
-    * [[graft.etl.EdgeOps.cleanEdges]] + [[prepare]]. */
+  /** The one construction of an unweighted graph, and its one gate
+    * decision, from a RAW edge list (loops/duplicates allowed; a cleaned
+    * relation is a valid raw list). Under the local gate the DataFrame
+    * `distinct()` shuffle is skipped entirely: the raw list is collected
+    * once and the kernel build symmetrizes and merges duplicates (the
+    * reference's own construction order — sortEdges then duplicate
+    * merge, graph_constructor.hpp:1363-1412). Above it the graph is
+    * [[graft.etl.EdgeOps.cleanEdges]]' relation, persisted, plus its
+    * vertex set. */
   def prepareRaw(raw: DataFrame, knownCount: Long = -1L): PreparedGraph =
     prepareRawInternal(raw, knownCount = knownCount)._1
 
@@ -239,7 +193,14 @@ object Bfs {
       // opaque mid-sort disk-full crash (no-op when the count is
       // unknown or the need is small)
       graft.etl.ScratchGate.check(spark, nRawForGate)
-      val g = prepare(graft.etl.EdgeOps.cleanEdges(raw), bySrc = true)
+      // cleanEdges' output is already hash-partitioned by src, the
+      // layout every level of the loop joins on: cache it as it is
+      val edges = graft.etl.EdgeOps.cleanEdges(raw)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val nE = edges.count()
+      val all = edges.select(col("src").as("vertex")).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val g = PreparedGraph(edges, all, all.count(), nE)
       val root =
         if (needRoot) Some(raw.agg(min(col("src"))).head().getLong(0)) else None
       (g, root)
@@ -266,9 +227,8 @@ object Bfs {
           }
         // the relational frames are built on first use: the kernel path
         // reads neither
-        val g = PreparedGraph.kernel(
-          Frame.lazily(() => graft.etl.EdgeOps.cleanEdges(raw)), csr, spark,
-          csr.nbrs.length.toLong)
+        val g = PreparedGraph.kernel(() => graft.etl.EdgeOps.cleanEdges(raw),
+          csr, spark)
         g.rawPairs = Some(flat)
         (g, root)
       }
@@ -282,7 +242,7 @@ object Bfs {
    * reference's convention (pred initialized to -1, mpi/bfs.hpp:241-276).
    */
   def bfsMinParent(spark: SparkSession, clean: DataFrame, root: Long): Result = {
-    val g = prepare(clean)
+    val g = prepareRaw(clean)
     try {
       val r = bfsMinParent(spark, g, root)
       // checkpoint the tree while the prepared caches are alive — the
@@ -329,14 +289,16 @@ object Bfs {
                         roots: Seq[Long]): DataFrame =
     search(spark, g, roots).tree
 
-  /** The hybrid gate: the kernel when the graph fits and the run-major
-    * arrays fit Int indexing, the level loop otherwise. The tree has a
-    * leading `run` column. */
+  /** The kernel when [[prepareRaw]] built a CSR, the gate still admits
+    * the graph (a gate lowered since, such as `withLimit(0)`, forces the
+    * loop) and the run-major arrays fit Int indexing; the level loop
+    * otherwise. The tree has a leading `run` column. */
   private def search(spark: SparkSession, g: PreparedGraph,
-                     roots: Seq[Long]): Result =
-    if (g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark) &&
-        roots.size.toLong * g.csr.nVerts <= Int.MaxValue) kernelSearch(spark, g, roots)
-    else levelLoop(spark, g, roots)
+                     roots: Seq[Long]): Result = g.csrIfBuilt match {
+    case Some(csr) if g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark) &&
+        roots.size.toLong * csr.nVerts <= Int.MaxValue => kernelSearch(spark, csr, roots)
+    case _ => levelLoop(spark, g, roots)
+  }
 
   /** `df` with a leading `run` column: each row once per run, by a
     * projection (one generator above one run) — no join, no Spark job. */
@@ -351,12 +313,12 @@ object Bfs {
     * graph (its only edges were self-loops) reaches nothing, exactly as
     * in the level loop: every vertex unreached, sizes (0, 1). The dense
     * outputs ship to executors as ONE compact broadcast each and the
-    * rows materialize DISTRIBUTED, from the cached vertex table — never
-    * a driver-side row collection (a parallelize of millions of boxed
-    * rows costs seconds per downstream scan). */
-  private def kernelSearch(spark: SparkSession, g: PreparedGraph,
+    * rows materialize DISTRIBUTED over `range(runs · nV)`, row i being
+    * run i / nV, vertex i % nV, read by position — never a driver-side
+    * row collection (a parallelize of millions of boxed rows costs
+    * seconds per downstream scan) and no vertex table. */
+  private def kernelSearch(spark: SparkSession, csr: LocalCsr,
                            roots: Seq[Long]): Result = {
-    val csr = g.csr
     val nV = csr.nVerts
     val runs = roots.map { root =>
       if (java.util.Arrays.binarySearch(csr.ids, root) >= 0) csr.bfs(root)
@@ -368,21 +330,20 @@ object Bfs {
     val bcIds = spark.sparkContext.broadcast(csr.ids)
     val bcPred = spark.sparkContext.broadcast(predFlat)
     val bcDepth = spark.sparkContext.broadcast(depthFlat)
-    val predOf = udf { (run: Long, vertex: Long) =>
-      val p = bcPred.value(run.toInt * nV +
-        java.util.Arrays.binarySearch(bcIds.value, vertex))
+    val runOf = udf((i: Long) => i / nV)
+    val vertexOf = udf((i: Long) => bcIds.value((i % nV).toInt))
+    val predOf = udf { (i: Long) =>
+      val p = bcPred.value(i.toInt)
       if (p < 0) -1L else bcIds.value(p)
     }
-    val depthOf = udf { (run: Long, vertex: Long) =>
-      val d = bcDepth.value(run.toInt * nV +
-        java.util.Arrays.binarySearch(bcIds.value, vertex))
+    val depthOf = udf { (i: Long) =>
+      val d = bcDepth.value(i.toInt)
       if (d < 0) null.asInstanceOf[java.lang.Long]
       else java.lang.Long.valueOf(d.toLong)
     }
-    val trees = withRuns(g.all, roots.size)
-      .select(col("run"), col("vertex"),
-        predOf(col("run"), col("vertex")).as("pred"),
-        depthOf(col("run"), col("vertex")).as("depth"))
+    val trees = spark.range(roots.size.toLong * nV)
+      .select(runOf(col("id")).as("run"), vertexOf(col("id")).as("vertex"),
+        predOf(col("id")).as("pred"), depthOf(col("id")).as("depth"))
     val sizes = runs.flatMap(_._3).groupMapReduce(_._1)(_._2)(_ + _)
     Result(trees, sizes.toSeq.sorted, Some((predFlat, depthFlat)))
   }

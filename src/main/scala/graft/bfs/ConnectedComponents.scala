@@ -27,20 +27,20 @@ import org.apache.spark.sql.functions._
  */
 object ConnectedComponents {
 
-  /** (vertex, component) for every vertex in `clean` (symmetric edges).
-    * Hybrid like [[Bfs]]: union-find kernel when the edge set fits under
-    * the same size gate, distributed label propagation + pointer jumping
-    * otherwise. Identical output (component = min vertex id) either way. */
-  def components(spark: SparkSession, clean: DataFrame): DataFrame = {
-    val cached = clean.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Materialize (checkpoint) the small result BEFORE the input cache
-      // is dropped — otherwise the caller's first action recomputes the
-      // whole upstream query.
-      if (cached.count() <= graft.Gates.localBfsMaxEdges.limit(spark))
-        componentsLocal(spark, cached).localCheckpoint(eager = true)
-      else componentsDistributed(spark, cached)
-    } finally cached.unpersist(blocking = false)
+  /** (vertex, component) for every vertex of `edges` that has a non-loop
+    * edge (self-loops and duplicates allowed; a vertex seen only in a
+    * self-loop is left out, as [[graft.etl.EdgeOps.cleanEdges]] drops
+    * it). The graph is built by [[Bfs.prepareRaw]], whose gate decides
+    * the path: union-find over its kernel CSR, or distributed label
+    * propagation + pointer jumping over its persisted edges. Identical
+    * output (component = min vertex id) either way, materialized before
+    * the graph's caches are dropped. */
+  def components(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val g = Bfs.prepareRaw(edges)
+    try g.csrIfBuilt match {
+      case Some(csr) => componentsLocal(spark, csr).localCheckpoint(eager = true)
+      case None => componentsDistributed(g)
+    } finally g.unpersist()
   }
 
   /** Component-size distribution over a (vertex, component) labelling:
@@ -57,30 +57,11 @@ object ConnectedComponents {
       .agg(count(lit(1)).as("n_components"),
         sum(col("csize")).as("n_vertices"))
 
-  /** [[components]] from a RAW edge list (loops/duplicates allowed):
-    * under the gate, symmetrize narrowly and let the kernel build's
-    * sort-and-merge dedup (no DataFrame distinct shuffle — see
-    * [[Bfs.prepareRaw]]). */
-  def componentsRaw(spark: SparkSession, raw: DataFrame): DataFrame = {
-    val cached = raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (cached.count() * 2 <= graft.Gates.localBfsMaxEdges.limit(spark)) {
-        val noLoops = cached.filter(col("src") =!= col("dst"))
-        val sym = noLoops.union(
-          noLoops.select(col("dst").as("src"), col("src").as("dst")))
-        componentsLocal(spark, sym, dedupAdjacent = true)
-          .localCheckpoint(eager = true)
-      } else components(spark, graft.etl.EdgeOps.cleanEdges(cached))
-    } finally cached.unpersist(blocking = false)
-  }
-
-  /** Local kernel: collect edges as primitive chunks, union-find with
-    * path halving, resolve every root class to its min member id, ship
-    * the result back as one broadcast and materialize rows distributed
-    * (same output-path design as [[Bfs]]'s local kernel). */
-  private[graft] def componentsLocal(spark: SparkSession, clean: DataFrame,
-                                     dedupAdjacent: Boolean = false): DataFrame = {
-    val csr = LocalCsr.build(clean, dedupAdjacent)
+  /** Local kernel: union-find with path halving over the CSR, resolve
+    * every root class to its min member id, ship the result back as one
+    * broadcast and materialize rows distributed (same output-path design
+    * as [[Bfs]]'s local kernel). */
+  private def componentsLocal(spark: SparkSession, csr: LocalCsr): DataFrame = {
     val ids = csr.ids
     val nV = csr.nVerts
     val parent = Array.tabulate(nV)(identity)
@@ -108,15 +89,11 @@ object ConnectedComponents {
     graft.functions.Ship.df(spark, "vertex" -> ids, "component" -> comp)
   }
 
-  /** Distributed path (see [[components]]). */
-  private[graft] def componentsDistributed(spark: SparkSession,
-                                           clean: DataFrame): DataFrame = {
-    val edges = clean.repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var labels = edges.select(col("src").as("vertex"))
-      .distinct()
-      .withColumn("component", col("vertex"))
+  /** Distributed path (see [[components]]) over the prepared graph's
+    * src-partitioned edges and vertex set. */
+  private def componentsDistributed(g: Bfs.PreparedGraph): DataFrame = {
+    val edges = g.edges
+    var labels = g.all.withColumn("component", col("vertex"))
       .localCheckpoint(eager = true)
     var changedCount = 1L
 
@@ -149,7 +126,6 @@ object ConnectedComponents {
       changedCount = updated.filter(col("component") =!= col("old")).count()
       labels = updated.select("vertex", "component")
     }
-    edges.unpersist(blocking = false)
     labels
   }
 }

@@ -55,17 +55,9 @@ final class LocalCsr(val ids: Array[Long], val rowStarts: Array[Int],
 
   /** (vertex, degree) ≡ EdgeOps.degrees over the cleaned relation — the
     * degree is a rowStarts difference, no groupBy shuffle. */
-  def degreesDf(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val bcIds = spark.sparkContext.broadcast(ids)
-    val bcRs = spark.sparkContext.broadcast(rowStarts)
-    import org.apache.spark.sql.functions.{col, udf}
-    val idOf = udf((i: Long) => bcIds.value(i.toInt))
-    val degOf = udf { (i: Long) =>
-      val rs = bcRs.value; (rs(i.toInt + 1) - rs(i.toInt)).toLong
-    }
-    spark.range(nVerts.toLong)
-      .select(idOf(col("id")).as("vertex"), degOf(col("id")).as("degree"))
-  }
+  def degreesDf(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    graft.functions.Ship.df(spark, "vertex" -> ids,
+      "degree" -> Array.tabulate(nVerts)(v => (rowStarts(v + 1) - rowStarts(v)).toLong))
 
   /** (vertex, new_id) ≡ EdgeOps.reorderMap(clean, mode): 0/1 = vertex-id
     * order (every CSR vertex has an edge, so isolated-last ≡ identity),
@@ -75,9 +67,7 @@ final class LocalCsr(val ids: Array[Long], val rowStarts: Array[Int],
   def reorderDf(spark: org.apache.spark.sql.SparkSession,
                 mode: Int): DataFrame = {
     require(mode >= 0 && mode <= 2, s"reorder mode $mode")
-    val bcIds = spark.sparkContext.broadcast(ids)
-    import org.apache.spark.sql.functions.{col, udf}
-    val idOf = udf((i: Long) => bcIds.value(i.toInt))
+    val newId = new Array[Long](nVerts)
     if (mode == 2) {
       // pack (degree desc, dense id asc) into one sortable long:
       // ids are sorted, so dense order == vertex-id order for ties
@@ -89,16 +79,13 @@ final class LocalCsr(val ids: Array[Long], val rowStarts: Array[Int],
         v += 1
       }
       java.util.Arrays.parallelSort(packed)
-      val newId = new Array[Long](nVerts)
       var k = 0
       while (k < nVerts) { newId((packed(k) & 0xffffffffL).toInt) = k; k += 1 }
-      val bcNew = spark.sparkContext.broadcast(newId)
-      val newOf = udf((i: Long) => bcNew.value(i.toInt))
-      spark.range(nVerts.toLong)
-        .select(idOf(col("id")).as("vertex"), newOf(col("id")).as("new_id"))
-    } else
-      spark.range(nVerts.toLong)
-        .select(idOf(col("id")).as("vertex"), col("id").as("new_id"))
+    } else {
+      var v = 0
+      while (v < nVerts) { newId(v) = v; v += 1 }
+    }
+    graft.functions.Ship.df(spark, "vertex" -> ids, "new_id" -> newId)
   }
 
   /** (vertex, new_id) over the FULL universe 0..nVertices-1, isolated
@@ -455,23 +442,31 @@ object LocalCsr {
     if (!wasBottomUp) mf * Alpha > mu
     else !(nf * BetaVerts < nV && nf < prevNf)
 
-  /** Build from a symmetric loop-free edge DataFrame: one collect of the
-    * edge pairs, then [[fromPairs]].
-    *
-    * `dedupAdjacent = true` additionally merges duplicate edges in each
-    * sorted row (the reference's duplicate merge, graph_constructor.hpp:
-    * 1390-1408), so the input may carry parallel edges — a DataFrame
-    * `distinct()` (a full shuffle) becomes unnecessary when the CSR is
-    * the execution target anyway. */
-  def build(clean: DataFrame, dedupAdjacent: Boolean = false): LocalCsr =
-    fromPairs(collectPairs(clean), symmetrize = false, dedup = dedupAdjacent)
-
-  /** Build straight from a RAW flat pair array: drop self-loops,
-    * symmetrize, and merge duplicates in-kernel — the raw list is
-    * collected ONCE (vs collecting a DataFrame union that scans the
-    * source twice and ships both directions over the wire). */
-  def buildFromRawPairs(flat: Array[Long]): LocalCsr =
-    fromPairs(flat, symmetrize = true, dedup = true)
+  /** Build straight from a RAW flat pair array (a cleaned relation is a
+    * valid one) in the reference's construction order
+    * (graph_constructor.hpp:296-311, 1363-1412): dense ids ([[IdMap]]),
+    * a degree count and a scatter of each non-loop pair in both
+    * directions, then a sort of each row merging duplicates
+    * ([[sortRows]]). The raw list is collected ONCE (vs collecting a
+    * DataFrame union that scans the source twice and ships both
+    * directions over the wire). */
+  def buildFromRawPairs(flat: Array[Long]): LocalCsr = {
+    val map = IdMap.ofPairs(flat)
+    val (starts, entries) = groupRows(flat.length / 2, map.ids.length) {
+      (from, to, sink) =>
+        var j = from
+        while (j < to) {
+          val s = flat(2 * j); val d = flat(2 * j + 1)
+          if (s != d) {
+            val a = map(s); val b = map(d)
+            sink.put(a, b); sink.put(b, a)
+          }
+          j += 1
+        }
+    }
+    val (rowStarts, nbrs, _) = sortRows(starts, entries, merge = true, counted = false)
+    new LocalCsr(map.ids, rowStarts, nbrs)
+  }
 
   /** Collect (src, dst) pairs as ONE primitive long array
     * ([src,dst,src,dst,...]) — primitive chunks serialize compactly, no
@@ -580,17 +575,15 @@ object LocalCsr {
         new Ranked(bits, ids)
       }
 
-    /** The map over the vertices of a pair array: its srcs for a
-      * symmetric input, both endpoints of every non-loop pair for a raw
-      * one. */
-    def ofPairs(flat: Array[Long], symmetrize: Boolean): IdMap = {
+    /** The map over the vertices of a raw pair array: both endpoints of
+      * every non-loop pair. */
+    def ofPairs(flat: Array[Long]): IdMap = {
       val nIn = flat.length / 2
       def each(from: Int, to: Int)(f: Long => Unit): Unit = {
         var j = from
         while (j < to) {
           val s = flat(2 * j); val d = flat(2 * j + 1)
-          if (!symmetrize) f(s)
-          else if (s != d) { f(s); f(d) }
+          if (s != d) { f(s); f(d) }
           j += 1
         }
       }
@@ -600,11 +593,9 @@ object LocalCsr {
         var j = from
         while (j < to) {
           val s = flat(2 * j); val d = flat(2 * j + 1)
-          if (!symmetrize || s != d) {
-            val lo = if (symmetrize) math.min(s, d) else s
-            val hi = if (symmetrize) math.max(s, d) else s
-            if (lo < min) min = lo
-            if (hi > max) max = hi
+          if (s != d) {
+            if (math.min(s, d) < min) min = math.min(s, d)
+            if (math.max(s, d) > max) max = math.max(s, d)
           }
           j += 1
         }
@@ -644,7 +635,7 @@ object LocalCsr {
         // sparse: distinct sorted ids by a primitive parallel sort and an
         // in-place dedup
         val endpoints = new scala.collection.mutable.ArrayBuilder.ofLong
-        endpoints.sizeHint(if (symmetrize) nIn * 2 else nIn)
+        endpoints.sizeHint(nIn * 2)
         each(0, nIn)(endpoints += _)
         val a = endpoints.result()
         java.util.Arrays.parallelSort(a)
@@ -764,33 +755,6 @@ object LocalCsr {
       }
       (kept, outV, outM)
     }
-  }
-
-  /** Shared CSR core, the reference's construction order
-    * (graph_constructor.hpp:296-311, 1363-1412): dense ids ([[IdMap]]),
-    * a degree count, a scatter of each entry into its row, then a sort
-    * of each row ([[sortRows]]), merging duplicates with `dedup`.
-    * `symmetrize = false` expects a symmetric loop-free input whose srcs
-    * cover every vertex (a cleaned relation); `symmetrize = true` takes
-    * a raw list, drops loops, and emits both directions. */
-  private def fromPairs(flat: Array[Long], symmetrize: Boolean,
-                        dedup: Boolean): LocalCsr = {
-    val map = IdMap.ofPairs(flat, symmetrize)
-    val (starts, entries) = groupRows(flat.length / 2, map.ids.length) {
-      (from, to, sink) =>
-        var j = from
-        while (j < to) {
-          val s = flat(2 * j); val d = flat(2 * j + 1)
-          if (!symmetrize) sink.put(map(s), map(d))
-          else if (s != d) {
-            val a = map(s); val b = map(d)
-            sink.put(a, b); sink.put(b, a)
-          }
-          j += 1
-        }
-    }
-    val (rowStarts, nbrs, _) = sortRows(starts, entries, merge = dedup, counted = false)
-    new LocalCsr(map.ids, rowStarts, nbrs)
   }
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)

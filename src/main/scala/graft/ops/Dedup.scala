@@ -372,7 +372,7 @@ object Dedup {
     * (the driver runs `dd_minhash` and `dd_clusters` over the same
     * corpus) skip recomputing the LSH pipeline. */
   def clustersFromPairs(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val comp = graft.bfs.ConnectedComponents.componentsRaw(docs.sparkSession,
+    val comp = graft.bfs.ConnectedComponents.components(docs.sparkSession,
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
     docs.select(col("doc_id"))
       .join(comp, col("doc_id") === col("vertex"), "left_outer")

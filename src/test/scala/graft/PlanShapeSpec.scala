@@ -303,4 +303,23 @@ class PlanShapeSpec extends SparkSpec {
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
   }
+
+  test("gr_diameter forced distributed: the second sweep persists no new " +
+    "edge exchange, it reuses the handle's prepared graph") {
+    val ns = spark.newSession()
+    Gates.localBfsMaxEdges.set(ns, 0L)
+    val dir = "/root/testdata/sf0.001"
+    SparkEntry.queries("q7_bfs")(ns, dir).count()
+    val sc = ns.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val row = SparkEntry.queries("gr_diameter")(ns, dir).head()
+    assert(row.getLong(3) >= 1L)
+    // the sweep's level loop checkpoints its levels serialized; a second
+    // construction would persist its edges and vertex set deserialized
+    val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      .values.map(_.getStorageLevel).toSeq
+    assert(added.nonEmpty, "the second sweep ran the level loop")
+    assert(added.forall(_ == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
+      s"storage levels persisted by the second sweep: $added")
+  }
 }

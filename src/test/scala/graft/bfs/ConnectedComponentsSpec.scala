@@ -9,7 +9,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val raw = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 7L), (8L, 9L), (9L, 8L))
       .toDF("src", "dst")
-    val got = ConnectedComponents.components(spark, EdgeOps.cleanEdges(raw))
+    val got = ConnectedComponents.components(spark, raw)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L),
       (8L, 8L), (9L, 8L)))
@@ -22,7 +22,7 @@ class ConnectedComponentsSpec extends SparkSpec {
       .select((org.apache.spark.sql.functions.col("l_orderkey") * 2).as("src"),
         (org.apache.spark.sql.functions.col("l_partkey") * 2 + 1).as("dst"))
     val clean = EdgeOps.cleanEdges(sub)
-    val ours = ConnectedComponents.components(spark, clean).collect()
+    val ours = ConnectedComponents.components(spark, sub).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val edgeRdd = clean.as[(Long, Long)].rdd
       .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, ()) }
@@ -31,36 +31,24 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(ours === gx.map { case (k, v) => (k, v) })
   }
 
-  test("componentsRaw equals components over cleaned edges") {
-    val s = spark; import s.implicits._
-    for (seed <- 50L until 53L) {
-      val rnd = new scala.util.Random(seed)
-      val raw = Seq.fill(100)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-        .toDF("src", "dst")
-      if (EdgeOps.cleanEdges(raw).count() > 0) {
-        val a = ConnectedComponents.componentsRaw(spark, raw).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toMap
-        val b = ConnectedComponents.components(spark, EdgeOps.cleanEdges(raw))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(a === b, s"seed=$seed")
-      }
-    }
-  }
-
   test("local union-find kernel equals distributed label propagation") {
     val s = spark; import s.implicits._
     for (seed <- 10L until 13L) {
       val rnd = new scala.util.Random(seed)
-      val raw = Seq.fill(120)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
-        .toDF("src", "dst")
-      val clean = EdgeOps.cleanEdges(raw)
-      if (clean.count() > 0) {
-        val loc = ConnectedComponents.componentsLocal(spark, clean).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toMap
-        val dist = ConnectedComponents.componentsDistributed(spark, clean)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(loc === dist, s"seed=$seed")
-      }
+      // raw lists: self-loops, duplicate edges both ways, and vertex 1000
+      // seen only in a self-loop
+      val pairs = Seq.fill(120)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      val raw = (pairs ++ pairs.take(20).map(_.swap) ++ pairs.take(10) ++
+        Seq((1000L, 1000L), (5L, 5L))).toDF("src", "dst")
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val loc = labels(ConnectedComponents.components(spark, raw))
+      val dist = graft.Gates.localBfsMaxEdges.withLimit(spark, 0L)(
+        labels(ConnectedComponents.components(spark, raw)))
+      assert(loc === dist, s"seed=$seed")
+      val vertices = pairs.filter(p => p._1 != p._2).flatMap(p => Seq(p._1, p._2)).toSet
+      assert(loc.keySet === vertices, s"seed=$seed: the non-loop endpoints")
+      assert(!loc.contains(1000L))
     }
   }
 

@@ -30,7 +30,7 @@ class LocalCsrSpec extends SparkSpec {
     val clean = EdgeOps.cleanEdges(
       EdgeOps.edgesFromLineitem(spark, s"/root/testdata/$scale"))
     val root = clean.agg(min(col("src"))).head().getLong(0)
-    val g = Bfs.prepare(clean)
+    val g = Bfs.prepareRaw(clean)
     try kernelEqualsLoop(g, root, scale)
     finally g.unpersist()
   }
@@ -50,7 +50,7 @@ class LocalCsrSpec extends SparkSpec {
       val clean = EdgeOps.cleanEdges(raw)
       if (clean.count() > 0) {
         val root = clean.agg(min(col("src"))).head().getLong(0)
-        val g = Bfs.prepare(clean)
+        val g = Bfs.prepareRaw(clean)
         try kernelEqualsLoop(g, root, s"seed $seed")
         finally g.unpersist()
       }
@@ -60,16 +60,12 @@ class LocalCsrSpec extends SparkSpec {
   test("in-kernel dedup CSR equals CSR from DataFrame-distinct edges") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.col
     for (seed <- 40 to 42) {
       val rnd = new scala.util.Random(seed)
       val raw = Seq.fill(200)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
         .toDF("src", "dst")
-      val noLoops = raw.filter(col("src") =!= col("dst"))
-      val sym = noLoops.union(
-        noLoops.select(col("dst").as("src"), col("src").as("dst")))
-      val a = LocalCsr.build(EdgeOps.cleanEdges(raw))
-      val b = LocalCsr.build(sym, dedupAdjacent = true)
+      val a = LocalCsr.buildFromRawPairs(LocalCsr.collectPairs(EdgeOps.cleanEdges(raw)))
+      val b = LocalCsr.buildFromRawPairs(LocalCsr.collectPairs(raw))
       assert(a.ids.toSeq === b.ids.toSeq, s"seed=$seed ids")
       assert(a.rowStarts.toSeq === b.rowStarts.toSeq, s"seed=$seed rowStarts")
       assert(a.nbrs.toSeq === b.nbrs.toSeq, s"seed=$seed nbrs")
@@ -79,7 +75,7 @@ class LocalCsrSpec extends SparkSpec {
   test("parallel kernels produce the sequential min-parent tree") {
     val clean = EdgeOps.cleanEdges(
       EdgeOps.edgesFromLineitem(spark, "/root/testdata/sf0.001"))
-    val csr = LocalCsr.build(clean)
+    val csr = LocalCsr.buildFromRawPairs(LocalCsr.collectPairs(clean))
     val root = csr.ids(0)
     val (pSeq, dSeq, sSeq) = csr.bfs(root)
     val saved = csr.parallelWork
@@ -130,7 +126,7 @@ class LocalCsrSpec extends SparkSpec {
         // the distributed level loop: one loop for all 16 roots, and at
         // SCALE 10 the single-source search from the root outside the
         // giant component (trees and levelSizes against the kernel's)
-        val g = Bfs.prepare(EdgeOps.cleanEdges(raw))
+        val g = Bfs.prepareRaw(raw)
         val dist = try {
           if (scale == 10) outside.foreach(r => kernelEqualsLoop(g, r,
             s"SCALE 10 root $r outside the giant component"))
@@ -181,7 +177,7 @@ class LocalCsrSpec extends SparkSpec {
       EdgeOps.edgesFromLineitem(spark, "/root/testdata/sf0.001"))
       .persist()
     try {
-      val csr = LocalCsr.build(clean)
+      val csr = LocalCsr.buildFromRawPairs(LocalCsr.collectPairs(clean))
       def same(a: org.apache.spark.sql.DataFrame,
                b: org.apache.spark.sql.DataFrame, label: String): Unit =
         assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, label)
@@ -205,7 +201,7 @@ class LocalCsrSpec extends SparkSpec {
   test("multi-root distributed loop: serialized level checkpoints, kernel-equal trees") {
     val clean = EdgeOps.cleanEdges(
       EdgeOps.edgesFromLineitem(spark, "/root/testdata/sf0.001"))
-    val g = Bfs.prepare(clean)
+    val g = Bfs.prepareRaw(clean)
     try {
       val roots = clean.select("src").distinct().orderBy("src")
         .limit(2).collect().map(_.getLong(0)).toSeq
@@ -239,7 +235,7 @@ class LocalCsrSpec extends SparkSpec {
   test("multi-root local path equals per-root local trees") {
     val clean = EdgeOps.cleanEdges(
       EdgeOps.edgesFromLineitem(spark, "/root/testdata/sf0.001"))
-    val g = Bfs.prepare(clean)
+    val g = Bfs.prepareRaw(clean)
     try {
       val roots = clean.select("src").distinct().orderBy("src")
         .limit(3).collect().map(_.getLong(0)).toSeq
@@ -302,7 +298,7 @@ class LocalCsrSpec extends SparkSpec {
     // the construction's map over a pair array: the same ids either way
     val flat = dense.flatMap(v => Seq(v, (v * 7) % 3000)) ++ Array(5000L, 5000L)
     for ((pairs, want) <- Seq(flat -> "Ranked", flat.map(_ << 40) -> "Hashed")) {
-      val map = LocalCsr.IdMap.ofPairs(pairs, symmetrize = true)
+      val map = LocalCsr.IdMap.ofPairs(pairs)
       assert(map.getClass.getSimpleName === want)
       val endpoints = pairs.grouped(2).filter(p => p(0) != p(1)).flatten
         .toArray.distinct.sorted
@@ -319,11 +315,13 @@ class LocalCsrSpec extends SparkSpec {
       assert(b.ids.toSeq === a.ids.toSeq.map(_ << 40))
       assert(b.rowStarts.toSeq === a.rowStarts.toSeq)
       assert(b.nbrs.toSeq === a.nbrs.toSeq)
-      // the symmetric input of build() takes the same two maps
+      // a cleaned (symmetric) input takes the same two maps
       val shifted = raw.select((col("src") * (1L << 40)).as("src"),
         (col("dst") * (1L << 40)).as("dst"))
-      val c = LocalCsr.build(EdgeOps.cleanEdges(raw))
-      val d = LocalCsr.build(EdgeOps.cleanEdges(shifted))
+      def fromClean(df: org.apache.spark.sql.DataFrame) =
+        LocalCsr.buildFromRawPairs(LocalCsr.collectPairs(EdgeOps.cleanEdges(df)))
+      val c = fromClean(raw)
+      val d = fromClean(shifted)
       assert(c.ids.toSeq === a.ids.toSeq && d.ids.toSeq === b.ids.toSeq)
       assert(c.rowStarts.toSeq === a.rowStarts.toSeq && c.nbrs.toSeq === a.nbrs.toSeq)
       assert(d.rowStarts.toSeq === a.rowStarts.toSeq && d.nbrs.toSeq === a.nbrs.toSeq)
@@ -368,5 +366,54 @@ class LocalCsrSpec extends SparkSpec {
       assert(g.framesBuilt === ((true, true)))
       g.unpersist()
     } finally raw.unpersist()
+  }
+
+  test("kernel bfsMinParentMulti reads the tree by dense position: no " +
+    "frame of the prepared graph is built") {
+    val raw = graft.gen.Kronecker.generate(spark, 10).persist()
+    try {
+      val g = Bfs.prepareRaw(raw)
+      try {
+        val csr = g.csrIfBuilt.get
+        val roots = Seq(csr.ids(0), csr.ids(csr.nVerts / 2), csr.ids.last)
+        val rows = Bfs.bfsMinParentMulti(spark, g, roots).collect()
+        assert(g.framesBuilt === ((false, false)))
+        assert(rows.length === roots.size * csr.nVerts)
+        // run-major rows: run i / nV, vertex ids(i % nV), the kernel's tree
+        roots.zipWithIndex.foreach { case (r, run) =>
+          val (p, d, _) = csr.bfs(r)
+          val want = (0 until csr.nVerts).map { v =>
+            (run.toLong, csr.ids(v), if (p(v) < 0) -1L else csr.ids(p(v)),
+              if (d(v) < 0) None else Some(d(v).toLong))
+          }
+          val got = rows.filter(_.getLong(0) == run).map(x => (x.getLong(0),
+            x.getLong(1), x.getLong(2),
+            if (x.isNullAt(3)) None else Some(x.getLong(3)))).toSeq.sortBy(_._2)
+          assert(got === want, s"run $run root $r")
+        }
+      } finally g.unpersist()
+    } finally raw.unpersist()
+  }
+
+  test("one gate decision per graph: prepared at gate 0 and searched at " +
+    "the default gate, the search runs the level loop and builds no CSR") {
+    val clean = EdgeOps.cleanEdges(
+      EdgeOps.edgesFromLineitem(spark, "/root/testdata/sf0.001"))
+    val root = clean.agg(min(col("src"))).head().getLong(0)
+    val g = graft.Gates.localBfsMaxEdges.withLimit(spark, 0L)(Bfs.prepareRaw(clean))
+    try {
+      assert(g.csrIfBuilt.isEmpty)
+      assert(g.totalEdges <= graft.Gates.localBfsMaxEdges.limit(spark))
+      val r = Bfs.bfsMinParent(spark, g, root)
+      assert(r.dense.isEmpty, "the kernel ran on a distributed-path graph")
+      assert(g.csrIfBuilt.isEmpty)
+      val kernel = Bfs.prepareRaw(clean)
+      try {
+        val k = Bfs.bfsMinParent(spark, kernel, root)
+        assert(k.dense.isDefined)
+        assert(k.levelSizes === r.levelSizes)
+        assert(k.tree.exceptAll(r.tree).isEmpty && r.tree.exceptAll(k.tree).isEmpty)
+      } finally kernel.unpersist()
+    } finally g.unpersist()
   }
 }

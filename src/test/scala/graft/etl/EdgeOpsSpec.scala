@@ -120,7 +120,7 @@ class EdgeOpsSpec extends SparkSpec {
     val dist = EdgeOps.reorderMapIsolatedLast(clean, 10L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist === want)
-    val csr = graft.bfs.LocalCsr.build(clean)
+    val csr = graft.bfs.LocalCsr.buildFromRawPairs(graft.bfs.LocalCsr.collectPairs(clean))
     val kern = csr.reorderIsolatedLastDf(spark, 10L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(kern === want)

@@ -1041,7 +1041,7 @@ class OpsSpec extends SparkSpec {
     val raw = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (1L, 5L), (6L, 7L))
       .toDF("src", "dst")
     val clean = graft.etl.EdgeOps.cleanEdges(raw)
-    val g = graft.bfs.Bfs.prepare(clean)
+    val g = graft.bfs.Bfs.prepareRaw(clean)
     val roots = Seq(0L, 6L)
     val multi = graft.bfs.Bfs.bfsMinParentMulti(spark, g, roots)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

@@ -240,7 +240,7 @@ class LocalValidatorSpec extends SparkSpec {
         .persist()
       val clean = EdgeOps.cleanEdges(raw)
       if (clean.count() > 0) {
-        val g = Bfs.prepare(clean)
+        val g = Bfs.prepareRaw(clean)
         try {
           val csr = g.csr
           val root = csr.ids(0)
