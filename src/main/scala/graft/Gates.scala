@@ -17,12 +17,8 @@ object Gates {
     val conf: String = s"spark.graft.$name"
 
     /** The effective limit on `spark`: the conf when set, else the
-      * default. A value that is not an integer fails naming the conf. */
-    def limit(spark: SparkSession): Long = spark.conf.getOption(conf) match {
-      case None => default
-      case Some(v) => v.trim.toLongOption.getOrElse(throw
-        new IllegalArgumentException(s"$conf='$v' is not an integer"))
-    }
+      * default ([[longConf]]'s rule). */
+    def limit(spark: SparkSession): Long = longConf(spark, conf, default)
 
     def set(spark: SparkSession, v: Long): Unit = spark.conf.set(conf, v)
 
@@ -73,6 +69,16 @@ object Gates {
     }
   }
 
+  /** The integer conf `conf` on `spark` when set, else `default`. A value
+    * that is not an integer fails naming the conf. The one parse rule for
+    * the gates and the other `spark.graft.*` size caps. */
+  def longConf(spark: SparkSession, conf: String, default: => Long): Long =
+    spark.conf.getOption(conf) match {
+      case None => default
+      case Some(v) => v.trim.toLongOption.getOrElse(throw
+        new IllegalArgumentException(s"$conf='$v' is not an integer"))
+    }
+
   private val table = scala.collection.mutable.ArrayBuffer.empty[Gate]
   private def gate(name: String, default: Long): Gate = {
     val g = new Gate(name, default)
@@ -80,14 +86,13 @@ object Gates {
     g
   }
 
-  /** Graph edges (raw pair rows) for the [[graft.bfs.LocalCsr]] kernels:
-    * BFS, validation, components, triangles, unweighted SSSP — ~1.3 GB of
-    * primitive arrays at the limit (SCALE 20 included). */
+  /** Graph edges for the [[graft.bfs.LocalCsr]] kernels of every graph
+    * family — BFS, validation, components, SSSP, the co-purchase
+    * triangle family — decided once per graph: BFS and SSSP against
+    * twice the raw pair rows (both directions), the co-purchase graph
+    * against its (group, member) rows; ~1.3 GB of primitive arrays at
+    * the limit (SCALE 20 included). */
   val localBfsMaxEdges: Gate = gate("localBfsMaxEdges", 64000000L)
-  /** Raw weighted edges for the in-kernel min-weight merge of
-    * [[graft.bfs.Sssp.ssspFromMinRaw]]; above it the comparator sort
-    * over (pair, w) stops paying. */
-  val localSsspMaxEdges: Gate = gate("localSsspMaxEdges", 4000000L)
   /** Documents for the [[graft.ops.LocalDedup]] kernels. */
   val localDedupMaxDocs: Gate = gate("localDedupMaxDocs", 100000L)
   /** Vectors for the [[graft.ops.LocalSimilarity]] kernels. */

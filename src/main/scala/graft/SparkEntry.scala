@@ -138,14 +138,15 @@ object SparkEntry {
   /** Cleaned edge set, one per sfDir. Local-path graphs emit it straight
     * from the kernel CSR — identical relation, no shuffle, and cheap
     * enough to rescan that materializing it would cost more than every
-    * consumer combined. The distributed form (shuffling distinct) is
-    * checkpointed once. */
+    * consumer combined. Distributed-path graphs hand out the prepared
+    * graph's own edges: the same relation, already persisted and
+    * hash-partitioned by src. */
   private def clean(s: SparkSession, dir: String): DataFrame =
     cleanCache.get(s, dir) {
-      handle(s, dir).csr match {
+      val h = handle(s, dir)
+      h.csr match {
         case Some(csr) if csr.nVerts > 0 => csr.toCleanDf(s)
-        case _ => EdgeOps.cleanEdges(rawEdges(s, dir))
-          .localCheckpoint(eager = true)
+        case _ => h.g.edges
       }
     }
 
@@ -1334,14 +1335,8 @@ object SparkEntry {
         .select((col("l_orderkey") * 2).as("src"),
           (col("l_partkey") * 2 + 1).as("dst"))))
 
-  /** Deterministic 2000-line lineitem subset feeding cc_components and
-    * sssp_dist: the global top-2000 sort runs once per sfDir, not once
-    * per consumer. */
-  /** Raw (order, part) projection feeding the co-purchase triangle
-    * count: Triangles.runCoPurchase emits the co-occurrence pairs
-    * in-kernel under the gate (never running the group self-join) and
-    * falls back to the distributed self-join + degree-oriented count
-    * above it. */
+  /** Raw (order, part) projection: the (group, member) list of the
+    * co-purchase graph ([[graft.bfs.Triangles.coPurchase]]). */
   private def orderPartPairs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_orderkey").as("src"),
@@ -1363,32 +1358,26 @@ object SparkEntry {
       graft.bfs.LabelPropagation.lpaCsr(csr, 4))
 
   /** Shared co-purchase graph for the triangle family (gr_triangles /
-    * gr_localcc / gr_jaccard): the gate dispatch, the pair expansion
-    * and — on the distributed side — the degree joins, the O(m^1.5)
-    * wedge join and the triangle enumeration all run ONCE per sfDir
-    * instead of once per family member (measured: the repeated wedge
-    * join was the entire forced-distributed cost of members two and
-    * three at sf0.1). Keyed on the gate value so a mid-session gate
-    * flip can never serve the wrong side's structure. */
+    * gr_localcc / gr_jaccard): [[graft.bfs.Triangles.coPurchase]] — the
+    * gate decision, the pair expansion and, on the distributed side, the
+    * degree joins, the O(m^1.5) wedge join and the triangle enumeration
+    * — runs ONCE per sfDir instead of once per family member (measured:
+    * the repeated wedge join was the entire forced-distributed cost of
+    * members two and three at sf0.1). Keyed on the gate value so a
+    * mid-session gate flip can never serve the wrong side's structure. */
   private val coPurchaseCache =
     new SessionCache[Either[graft.bfs.LocalCsr,
       graft.bfs.Triangles.TriangleTables]]
   private def coPurchaseGraph(s: SparkSession, dir: String)
       : Either[graft.bfs.LocalCsr, graft.bfs.Triangles.TriangleTables] = {
     val gate = Gates.localBfsMaxEdges.limit(s)
-    coPurchaseCache.get(s, s"$dir/copurchase/gate=$gate") {
-      val gm = orderPartPairs(s, dir)
-      graft.bfs.Triangles.coPurchasePairFlat(gm) match {
-        case Some(flat) =>
-          Left(graft.bfs.LocalCsr.buildFromRawPairs(flat))
-        case None =>
-          Right(graft.bfs.Triangles.triangleTables(
-            etl.EdgeOps.cleanEdges(
-              graft.bfs.Triangles.coPurchaseSelfJoin(gm))).persistAll())
-      }
-    }
+    coPurchaseCache.get(s, s"$dir/copurchase/gate=$gate")(
+      graft.bfs.Triangles.coPurchase(orderPartPairs(s, dir)))
   }
 
+  /** Deterministic 2000-line lineitem subset feeding cc_components and
+    * sssp_dist: the global top-2000 sort runs once per sfDir, not once
+    * per consumer. */
   private def lineitemSub(s: SparkSession, dir: String): DataFrame =
     cachedTable(s, s"$dir/lineitem_sub")(
       s.read.parquet(s"$dir/lineitem.parquet")

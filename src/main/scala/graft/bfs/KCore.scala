@@ -49,8 +49,7 @@ object KCore {
   def kcore(spark: SparkSession, clean: DataFrame, k: Int = 3,
             rounds: Int = 5): DataFrame = {
     require(k > 0 && rounds > 0, s"kcore: need k, rounds > 0, got ($k, $rounds)")
-    val cap = spark.conf.getOption("spark.graft.iterBroadcastVerts")
-      .map(_.toLong).getOrElse(PageRank.iterBroadcastVerts)
+    val cap = PageRank.iterBroadcastVerts(spark)
     val edges = clean.select("src", "dst")
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

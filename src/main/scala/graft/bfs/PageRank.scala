@@ -71,12 +71,14 @@ object PageRank {
       math.max(IterBroadcastVertsFloor,
         heapBytes / 32 / IterBroadcastBytesPerVertex))
 
-  /** The live cap: auto-sized from the driver JVM heap (local-mode
-    * assumption: driver == executor; in cluster mode the collect lands
-    * on the driver and the broadcasts on executors, so driver heap is
-    * the binding side for the |V|-state pattern either way). */
-  private[bfs] def iterBroadcastVerts: Long =
-    autoIterBroadcastVerts(Runtime.getRuntime.maxMemory)
+  /** The live cap: `spark.graft.iterBroadcastVerts` when set, else
+    * auto-sized from the driver JVM heap (local-mode assumption: driver
+    * == executor; in cluster mode the collect lands on the driver and
+    * the broadcasts on executors, so driver heap is the binding side for
+    * the |V|-state pattern either way). */
+  private[bfs] def iterBroadcastVerts(spark: SparkSession): Long =
+    graft.Gates.longConf(spark, "spark.graft.iterBroadcastVerts",
+      autoIterBroadcastVerts(Runtime.getRuntime.maxMemory))
 
   /** Run `body` with AQE off, restoring the prior setting after. The
     * driver-state iteration loops plan the SAME tiny fixed shape every
@@ -144,9 +146,8 @@ object PageRank {
         import spark.implicits._
         return Seq.empty[(Long, Long)].toDF("vertex", "rank_fp")
       }
-      val cap = spark.conf.getOption("spark.graft.iterBroadcastVerts")
-        .map(_.toLong).getOrElse(iterBroadcastVerts)
-      if (nV <= cap) pagerankDriverState(spark, edges, od, nV, iters)
+      if (nV <= iterBroadcastVerts(spark))
+        pagerankDriverState(spark, edges, od, nV, iters)
       else pagerankShuffle(spark, edges, od, nV, iters)
     } finally {
       edges.unpersist(blocking = false)

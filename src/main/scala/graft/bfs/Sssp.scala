@@ -4,29 +4,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Single-source shortest paths over weighted symmetric edges
- * (src, dst, w) — the query the reference's SSSP machinery was built
- * for but never finished (empty `prepare_sssp/run_sssp/end_sssp`,
- * mpi/bfs.hpp:2569-2571, weighted generator graph_generator.hpp:479-506).
+ * Single-source shortest paths over a weighted edge list (src, dst, w)
+ * — the query the reference's SSSP machinery was built for but never
+ * finished (empty `prepare_sssp/run_sssp/end_sssp`, mpi/bfs.hpp:2569-
+ * 2571, weighted generator graph_generator.hpp:479-506), which puts its
+ * weighted path on the graph the BFS builds.
  *
- * Frontier-based relaxation (Bellman-Ford with a delta frontier): each
- * iteration relaxes only edges out of vertices whose distance improved
- * in the previous iteration — the weighted generalization of the BFS
- * level loop, with the same shuffle profile: the big edge table is
- * partitioned once (by src) and joined per iteration against a small
- * frontier; the distance table updates via groupBy-min. Iteration count
- * = hop length of the longest optimal path, not |V|.
+ * So does this one: [[ssspFromMinRaw]] is the one entry, with one gate
+ * decision on the graph gate ([[graft.Gates.localBfsMaxEdges]], the rule
+ * of [[Bfs.prepareRaw]]) and, under it, the one CSR construction
+ * ([[LocalCsr.buildFromRawPairs]]) plus a per-slot min weight. Above it
+ * the graph is [[weightedEdges]]' relation and the search is the
+ * distributed frontier loop.
  *
- * Distances are exact shortest paths; the pred tree is deterministic
- * (per-round candidates merge by min (dist, pred) struct; rounds are
- * deterministic; first-settled wins on later ties). Unreached vertices
- * are absent from the result (join with the vertex table for dense
- * output).
+ * Both paths relax round-synchronously (Bellman-Ford with a delta
+ * frontier): each round relaxes only the edges out of the vertices whose
+ * distance improved in the previous round, takes the best (dist, pred)
+ * candidate per target, and applies it only on a strict improvement.
+ * The round count is the hop length of the longest optimal path, not
+ * |V|. Distances are exact shortest paths, and the pred tree is the same
+ * deterministic one on both paths. Unreached vertices are absent from
+ * the result.
  */
 object Sssp {
 
   /** Symmetrized min-weight edge set from a directed weighted list. */
-  def weightedEdges(raw: DataFrame): DataFrame = {
+  private def weightedEdges(raw: DataFrame): DataFrame = {
     val noLoops = raw.filter(col("src") =!= col("dst"))
     noLoops
       .union(noLoops.select(col("dst").as("src"), col("src").as("dst"),
@@ -34,200 +37,95 @@ object Sssp {
       .groupBy("src", "dst").agg(min("w").as("w"))
   }
 
-  /** (vertex, dist, pred) for every vertex reachable from `root`.
-    * Hybrid like [[Bfs]]/[[ConnectedComponents]]: a local round-
-    * synchronous relaxation kernel under the shared size gate (identical
-    * round semantics ⇒ identical pred trees), the distributed frontier
-    * loop above it. */
-  def sssp(spark: SparkSession, wedges: DataFrame, root: Long): DataFrame = {
-    val cached = wedges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // checkpoint the (small) result while the input cache is alive —
-      // see ConnectedComponents.components
-      if (cached.count() <= graft.Gates.localBfsMaxEdges.limit(spark))
-        ssspLocal(spark, cached, root).localCheckpoint(eager = true)
-      else ssspDistributed(spark, cached, root)
-    } finally cached.unpersist(blocking = false)
-  }
-
-  /** [[sssp]] rooted at the graph's minimum vertex id, with the weighted
-    * edge set persisted ONCE for both the root scan and the traversal —
-    * calling `wedges.agg(min)` and then [[sssp]] separately re-runs the
-    * whole upstream pipeline (sort/limit/groupBy) twice. */
-  def ssspFromMin(spark: SparkSession, wedges: DataFrame): DataFrame = {
-    val cached = wedges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val local = cached.count() <= graft.Gates.localBfsMaxEdges.limit(spark)
-      val root = cached.agg(min(col("src"))).head().getLong(0)
-      if (local) ssspLocal(spark, cached, root).localCheckpoint(eager = true)
-      else ssspDistributed(spark, cached, root)
-    } finally cached.unpersist(blocking = false)
-  }
-
-  /** [[ssspFromMin]] from a RAW directed weighted list (loops and
-    * duplicate edges allowed): under the gate, loop-drop, symmetrization
-    * and min-weight duplicate merge happen in-kernel from ONE collected
-    * triple array — no groupBy shuffle, no separate root agg (the
-    * reference's construction order, like [[Bfs.prepareRaw]]). Above
-    * [[graft.Gates.localSsspMaxEdges]] the groupBy construction +
-    * gate-dispatched relaxation take over. */
+  /** (vertex, dist, pred) for every vertex reachable from the graph's
+    * minimum vertex id, from a RAW directed weighted list (loops and
+    * duplicate edges at any weights allowed; an edge's weight is the
+    * least of its rows in either direction). The raw list is persisted
+    * once for the gate count and either path. */
   def ssspFromMinRaw(spark: SparkSession, raw: DataFrame): DataFrame = {
     val cached = raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (cached.count() > graft.Gates.localSsspMaxEdges.limit(spark))
-        ssspFromMin(spark, weightedEdges(cached))
+      if (cached.count() * 2 <= graft.Gates.localBfsMaxEdges.limit(spark))
+        // checkpoint the (small) result while the input cache is alive
+        kernel(spark, cached).localCheckpoint(eager = true)
       else {
-        val flat = collectTriples(cached)
-        val nIn = flat.length / 3
-        // vertex ids = endpoints of non-loop edges; root = their minimum
-        val eb = new scala.collection.mutable.ArrayBuilder.ofLong
-        var i = 0
-        while (i < nIn) {
-          val a = flat(3 * i); val b = flat(3 * i + 1)
-          if (a != b) { eb += a; eb += b }
-          i += 1
-        }
-        val endpoints = eb.result()
-        if (endpoints.isEmpty)
-          return graft.functions.Ship.df(spark,
-            "vertex" -> Array.empty[Long], "dist" -> Array.empty[Long],
-            "pred" -> Array.empty[Long])
-        java.util.Arrays.sort(endpoints)
-        var nV = 0
-        i = 0
-        while (i < endpoints.length) {
-          if (nV == 0 || endpoints(nV - 1) != endpoints(i)) {
-            endpoints(nV) = endpoints(i); nV += 1
-          }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(endpoints, nV)
-        val root = ids(0)
-        // both directions per non-loop edge, sorted by (src, dst, w) so
-        // the min-weight duplicate survives the adjacent merge
-        val encV = new Array[Long](2 * nIn) // (sDense<<32 | dDense), aligned with ws
-        val ws = new Array[Long](2 * nIn)
-        val ord = new Array[Integer](2 * nIn)
-        var m = 0
-        i = 0
-        while (i < nIn) {
-          val a = flat(3 * i); val b = flat(3 * i + 1); val w = flat(3 * i + 2)
-          if (a != b) {
-            val s = java.util.Arrays.binarySearch(ids, a)
-            val d = java.util.Arrays.binarySearch(ids, b)
-            encV(m) = (s.toLong << 32) | (d.toLong & 0xffffffffL); ws(m) = w; m += 1
-            encV(m) = (d.toLong << 32) | (s.toLong & 0xffffffffL); ws(m) = w; m += 1
-          }
-          i += 1
-        }
-        i = 0
-        while (i < m) { ord(i) = i; i += 1 }
-        java.util.Arrays.sort(ord, 0, m, new java.util.Comparator[Integer] {
-          def compare(x: Integer, y: Integer): Int = {
-            val byKey = java.lang.Long.compare(encV(x), encV(y))
-            if (byKey != 0) byKey else java.lang.Long.compare(ws(x), ws(y))
-          }
-        })
-        // adjacent merge: first (= min-w) entry per (src, dst) wins
-        val rowStarts = new Array[Int](nV + 1)
-        val dstB = new scala.collection.mutable.ArrayBuilder.ofInt
-        val wB = new scala.collection.mutable.ArrayBuilder.ofLong
-        var prev = -1L
-        i = 0
-        while (i < m) {
-          val k = ord(i).intValue()
-          if (encV(k) != prev) {
-            prev = encV(k)
-            rowStarts((encV(k) >>> 32).toInt + 1) += 1
-            dstB += (encV(k) & 0xffffffffL).toInt
-            wB += ws(k)
-          }
-          i += 1
-        }
-        var v = 0
-        while (v < nV) { rowStarts(v + 1) += rowStarts(v); v += 1 }
-        relaxOnCsr(spark, ids, rowStarts, dstB.result(), wB.result(), root)
-          .localCheckpoint(eager = true)
+        val root = cached.filter(col("src") =!= col("dst"))
+          .agg(min(least(col("src"), col("dst")))).head()
+        if (root.isNullAt(0)) empty(spark)
+        else ssspDistributed(spark, weightedEdges(cached), root.getLong(0))
       }
     } finally cached.unpersist(blocking = false)
   }
 
-  /** Local kernel: weighted adjacency collected as primitive chunks; the
-    * SAME round-synchronous relaxation as the DataFrame loop (per round:
-    * best lexicographic (dist, pred) candidate per target from the
-    * improved-frontier's edges, applied only on strict improvement), so
-    * the deterministic pred tree is identical. */
-  private[graft] def ssspLocal(spark: SparkSession, wedges: DataFrame,
-                               root: Long): DataFrame = {
-    val flat = collectTriples(wedges)
-    val nE = flat.length / 3
+  private def empty(spark: SparkSession): DataFrame =
+    graft.functions.Ship.df(spark, "vertex" -> Array.emptyLongArray,
+      "dist" -> Array.emptyLongArray, "pred" -> Array.emptyLongArray)
 
-    // sorted distinct vertex ids (symmetric ⇒ srcs cover all)
-    val srcs = new Array[Long](nE)
+  /** The kernel path: ONE collect of the pairs and their weights, the
+    * graph's CSR ([[LocalCsr.buildFromRawPairs]]: loops dropped, both
+    * directions, duplicates merged, rows sorted), then each raw row's
+    * weight lowers the min of its two slots — (a, b) in row a and (b, a)
+    * in row b, each found by a binary search of the sorted row. */
+  private def kernel(spark: SparkSession, raw: DataFrame): DataFrame = {
+    val (pairs, ws) = collectWeighted(raw)
+    val csr = LocalCsr.buildFromRawPairs(pairs)
+    if (csr.nVerts == 0) return empty(spark)
+    val rs = csr.rowStarts
+    val nbrs = csr.nbrs
+    val map = LocalCsr.IdMap.ofSorted(csr.ids, pairs.length)
+    val slotW = Array.fill(nbrs.length)(Long.MaxValue)
+    def lower(a: Int, b: Int, w: Long): Unit = {
+      val k = java.util.Arrays.binarySearch(nbrs, rs(a), rs(a + 1), b)
+      if (w < slotW(k)) slotW(k) = w
+    }
     var i = 0
-    while (i < nE) { srcs(i) = flat(3 * i); i += 1 }
-    java.util.Arrays.sort(srcs)
-    var nV = 0
-    i = 0
-    while (i < nE) {
-      if (nV == 0 || srcs(nV - 1) != srcs(i)) { srcs(nV) = srcs(i); nV += 1 }
+    while (i < ws.length) {
+      val s = pairs(2 * i); val d = pairs(2 * i + 1)
+      if (s != d) {
+        val a = map(s); val b = map(d)
+        lower(a, b, ws(i)); lower(b, a, ws(i))
+      }
       i += 1
     }
-    val ids = java.util.Arrays.copyOf(srcs, nV)
-
-    // CSR (counting sort by src; intra-row order irrelevant — every
-    // candidate is min-merged explicitly)
-    val rowStarts = new Array[Int](nV + 1)
-    i = 0
-    while (i < nE) {
-      rowStarts(java.util.Arrays.binarySearch(ids, flat(3 * i)) + 1) += 1
-      i += 1
-    }
-    var v = 0
-    while (v < nV) { rowStarts(v + 1) += rowStarts(v); v += 1 }
-    val fill = java.util.Arrays.copyOf(rowStarts, nV)
-    val adjDst = new Array[Int](nE)
-    val adjW = new Array[Long](nE)
-    i = 0
-    while (i < nE) {
-      val s = java.util.Arrays.binarySearch(ids, flat(3 * i))
-      adjDst(fill(s)) = java.util.Arrays.binarySearch(ids, flat(3 * i + 1))
-      adjW(fill(s)) = flat(3 * i + 2)
-      fill(s) += 1
-      i += 1
-    }
-    relaxOnCsr(spark, ids, rowStarts, adjDst, adjW, root)
+    relaxOnCsr(spark, csr, slotW)
   }
 
-  /** Collect (src, dst, w) triples as one flat primitive array. */
-  private def collectTriples(wedges: DataFrame): Array[Long] = {
-    val chunks: Array[Array[Long]] = wedges.select("src", "dst", "w")
-      .queryExecution.toRdd.mapPartitions { it =>
-        val b = new scala.collection.mutable.ArrayBuilder.ofLong
-        it.foreach { r => b += r.getLong(0); b += r.getLong(1); b += r.getLong(2) }
-        Iterator.single(b.result())
+  /** The (src, dst) pairs as one flat array ([src,dst,src,dst,...], as
+    * [[LocalCsr.collectPairs]]) and their weights, aligned, from ONE
+    * collect job of primitive chunks. A row with a NULL is skipped. */
+  private def collectWeighted(raw: DataFrame): (Array[Long], Array[Long]) = {
+    val chunks = raw.select("src", "dst", "w").queryExecution.toRdd
+      .mapPartitions { it =>
+        val p = new scala.collection.mutable.ArrayBuilder.ofLong
+        val w = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
+            p += r.getLong(0); p += r.getLong(1); w += r.getLong(2)
+          }
+        }
+        Iterator.single((p.result(), w.result()))
       }.collect()
-    val flat = new Array[Long](chunks.iterator.map(_.length).sum)
-    var off = 0
-    chunks.foreach { c => System.arraycopy(c, 0, flat, off, c.length); off += c.length }
-    flat
+    (Array.concat(chunks.map(_._1).toIndexedSeq: _*),
+      Array.concat(chunks.map(_._2).toIndexedSeq: _*))
   }
 
-  /** Round-synchronous relaxation over a weighted CSR (see [[ssspLocal]]). */
-  private def relaxOnCsr(spark: SparkSession, ids: Array[Long],
-                         rowStarts: Array[Int], adjDst: Array[Int],
-                         adjW: Array[Long], root: Long): DataFrame = {
-    import spark.implicits._
+  /** Round-synchronous relaxation over the weighted CSR from its minimum
+    * vertex (dense 0): per round, the best lexicographic (dist, pred)
+    * candidate per target from the improved frontier's edges, applied
+    * only on a strict improvement — the rounds of [[ssspDistributed]],
+    * so the pred tree is identical. Dense order is id order, so the
+    * lesser dense pred is the lesser id. */
+  private def relaxOnCsr(spark: SparkSession, csr: LocalCsr,
+                         slotW: Array[Long]): DataFrame = {
+    val ids = csr.ids
+    val rowStarts = csr.rowStarts
+    val nbrs = csr.nbrs
     val nV = ids.length
-    val r0 = java.util.Arrays.binarySearch(ids, root)
-    if (r0 < 0) return Seq((root, 0L, root)).toDF("vertex", "dist", "pred")
-
     val Inf = Long.MaxValue
     val dist = Array.fill(nV)(Inf)
-    val pred = Array.fill(nV)(-1)
-    dist(r0) = 0L
-    pred(r0) = r0
-    var frontier = Array(r0)
+    val pred = new Array[Int](nV)
+    dist(0) = 0L
+    var frontier = Array(0)
     val bestDist = Array.fill(nV)(Inf)
     val bestPred = new Array[Int](nV)
     while (frontier.nonEmpty) {
@@ -238,10 +136,9 @@ object Sssp {
         var k = rowStarts(u)
         val end = rowStarts(u + 1)
         while (k < end) {
-          val t = adjDst(k)
-          val nd = dist(u) + adjW(k)
-          if (nd < bestDist(t) ||
-            (nd == bestDist(t) && ids(u) < ids(bestPred(t)))) {
+          val t = nbrs(k)
+          val nd = dist(u) + slotW(k)
+          if (nd < bestDist(t) || (nd == bestDist(t) && u < bestPred(t))) {
             if (bestDist(t) == Inf) touched += t
             bestDist(t) = nd
             bestPred(t) = u
@@ -272,7 +169,7 @@ object Sssp {
       if (dist(vi) != Inf) {
         outV += ids(vi)
         outD += dist(vi)
-        outP += (if (pred(vi) < 0) -1L else ids(pred(vi)))
+        outP += ids(pred(vi))
       }
       vi += 1
     }
@@ -280,9 +177,14 @@ object Sssp {
       "dist" -> outD.result(), "pred" -> outP.result())
   }
 
-  /** Distributed frontier loop (see [[sssp]]). */
-  private[graft] def ssspDistributed(spark: SparkSession, wedges: DataFrame,
-                                     root: Long): DataFrame = {
+  /** The distributed frontier loop over [[weightedEdges]]' relation: the
+    * weighted generalization of the BFS level loop, with the same
+    * shuffle profile — the edge table is partitioned once (by src) and
+    * joined per round against a small frontier; the distance table
+    * updates via groupBy-min. Per-round candidates merge by min
+    * (dist, pred) struct; first-settled wins on later ties. */
+  private def ssspDistributed(spark: SparkSession, wedges: DataFrame,
+                              root: Long): DataFrame = {
     import spark.implicits._
     val edges = wedges.repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -25,9 +25,13 @@ import org.apache.spark.sql.functions._
  * cartesian anywhere. The one-row output (n_wedges, n_triangles)
  * aggregates with a partial-agg map side.
  *
- * Under the BFS size gate the count runs in-kernel on a [[LocalCsr]]:
- * sorted adjacency rows make the closing-edge check a merge
- * intersection of two oriented rows.
+ * The family's graph is the co-purchase graph of a (group, member)
+ * list, and [[coPurchase]] is its one construction and one gate decision
+ * on the graph gate ([[graft.Gates.localBfsMaxEdges]]): under it a
+ * [[LocalCsr]] built from pairs expanded in-kernel, which the `*Csr`
+ * readers sweep (sorted adjacency rows make the closing-edge check a
+ * merge intersection of two oriented rows); above it the persisted
+ * [[TriangleTables]], which the `*FromTables` plans reduce.
  */
 object Triangles {
 
@@ -71,7 +75,8 @@ object Triangles {
     TriangleTables(deg, ori, tri)
   }
 
-  /** One-row (n_wedges, n_triangles) from the shared tables. The wedge
+  /** One-row (n_wedges, n_triangles) of the graph the shared tables were
+    * built from — [[countCsr]]'s result. The wedge
     * count is the closed form Σ_a od(a)·(od(a)−1)/2 over the oriented
     * out-degrees — exactly the wedge join's row count (each apex
     * contributes its out-pairs), derived WITHOUT materializing the
@@ -85,25 +90,6 @@ object Triangles {
     Seq((w, nTri)).toDF("n_wedges", "n_triangles")
   }
 
-  /** One-row (n_wedges, n_triangles) over a cleaned symmetric loop-free
-    * edge DataFrame (both directions present). Standalone wrapper: the
-    * oriented edge set feeds three plan positions, so it is persisted
-    * for the call and dropped after the aggregate — callers serving the
-    * whole family should build [[triangleTables]] once instead. */
-  def countDistributed(clean: DataFrame): DataFrame = {
-    val spark = clean.sparkSession
-    val t = triangleTables(clean)
-    t.ori.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try countFromTables(spark, t)
-    finally { t.ori.unpersist(blocking = false); () }
-  }
-
-  /** In-kernel count on a symmetric CSR (sorted ids, sorted rows). The
-    * graph is relabeled into rank space — rank = position in the
-    * (degree, id) sort — so orientation is "smaller rank -> larger
-    * rank" and the closing-edge check is a merge intersection of two
-    * rank-sorted oriented rows. Each triangle with ranks x < y < z is
-    * counted exactly once, at oriented edge (x, y): z ∈ out(x) ∩ out(y). */
   /** Degree-ordered orientation of a symmetric CSR in rank space:
     * (rankOf dense→rank, inverse rank→dense, oriStarts, ori) with every
     * oriented row sorted — the shared front half of the counting
@@ -176,6 +162,12 @@ object Triangles {
     Seq((w, t)).toDF("n_wedges", "n_triangles")
   }
 
+  /** In-kernel count on a symmetric CSR (sorted ids, sorted rows). The
+    * graph is relabeled into rank space — rank = position in the
+    * (degree, id) sort — so orientation is "smaller rank -> larger
+    * rank" and the closing-edge check is a merge intersection of two
+    * rank-sorted oriented rows. Each triangle with ranks x < y < z is
+    * counted exactly once, at oriented edge (x, y): z ∈ out(x) ∩ out(y). */
   def countCsr(csr: LocalCsr): (Long, Long) = {
     val nV = csr.nVerts
     val (_, _, oriStarts, ori) = orientCsr(csr)
@@ -214,28 +206,22 @@ object Triangles {
     (wedgeAcc.sum, triAcc.sum)
   }
 
-  /** Co-purchase triangle count fused end-to-end under the gate: input
-    * is the RAW (group, member) projection — e.g. (l_orderkey,
-    * l_partkey) — and the co-occurrence pair list is emitted in-kernel,
-    * so the gated path never runs the distributed self-join (the
-    * group-key sort-merge join plus its re-execution for the collect
-    * was 2-3× the cost of everything else at sf0.1). Above the gate —
-    * or when keys exceed the 32-bit pack range — the distributed
-    * self-join + [[countDistributed]] runs instead; per-group fan-out
-    * is the (bounded) group size, so the join is skew-safe.
-    *
-    * The gate probes the INPUT row count (one cheap scan-count), not
-    * the pair count; pair blow-up beyond the gate is caught by the
-    * pack-range / builder-size recheck and falls back to distributed. */
-  def runCoPurchase(spark: SparkSession, groupMember: DataFrame): DataFrame = {
+  /** The co-purchase graph of a (group, member) list — an edge between
+    * two members that share a group — built once and gated once: under
+    * the gate a kernel CSR from pairs expanded in-kernel
+    * ([[coPurchasePairFlat]]), so the gated path never runs the
+    * distributed self-join (the group-key sort-merge join plus its
+    * re-execution for the collect was 2-3× the cost of everything else
+    * at sf0.1); above the gate — or when keys exceed the 32-bit pack
+    * range — the family tables over the distributed self-join, persisted.
+    * Per-group fan-out is the (bounded) group size, so the join is
+    * skew-safe. */
+  def coPurchase(groupMember: DataFrame): Either[LocalCsr, TriangleTables] = {
     val gm = groupMember.select(col("src"), col("dst"))
     coPurchasePairFlat(gm) match {
-      case Some(pairFlat) =>
-        val (w, t) = countCsr(LocalCsr.buildFromRawPairs(pairFlat))
-        import spark.implicits._
-        Seq((w, t)).toDF("n_wedges", "n_triangles")
-      case None =>
-        countDistributed(graft.etl.EdgeOps.cleanEdges(coPurchaseSelfJoin(gm)))
+      case Some(flat) => Left(LocalCsr.buildFromRawPairs(flat))
+      case None => Right(triangleTables(
+        graft.etl.EdgeOps.cleanEdges(coPurchaseSelfJoin(gm))).persistAll())
     }
   }
 
@@ -249,23 +235,15 @@ object Triangles {
     * union.
     *
     * Scale shape: per-edge common counts ride the SAME degree-ordered
-    * oriented wedge join as [[countDistributed]] — oriented out-degree
+    * oriented wedge join as [[countFromTables]] — oriented out-degree
     * is O(√m), so the wedge mass is O(m^1.5) however hubby the graph
     * (an unoriented all-pairs common-neighbor count is Σdeg², which
     * measured 24 s vs ~1 s at sf0.1 on the co-purchase graph); each
     * closed triangle credits its three normalized edges via a 3-way
     * explode, one partial-agg'd groupBy per edge, TakeOrdered top-k on
     * the rounded score. Only edges in ≥ 1 triangle appear (a zero
-    * common count carries no ranking signal). */
-  def jaccardTop(clean: DataFrame, k: Int): DataFrame = {
-    val t = triangleTables(clean)
-    t.ori.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try jaccardFromTables(t, k)
-    finally { t.ori.unpersist(blocking = false); () }
-  }
-
-  /** Edge-Jaccard top-k from the shared tables (see [[jaccardTop]] for
-    * the contract). Only `tri` and `deg` are consumed. */
+    * common count carries no ranking signal). Only `tri` and `deg` are
+    * consumed. */
   def jaccardFromTables(t: TriangleTables, k: Int): DataFrame = {
     val credits = t.tri.select(explode(array(
         struct(least(col("a"), col("b")).as("va"),
@@ -293,7 +271,7 @@ object Triangles {
   /** Distributed co-occurrence pair expansion: the per-group self-join.
     * Per-group fan-out is the (bounded) group size, so the join is
     * skew-safe. */
-  private[graft] def coPurchaseSelfJoin(gm: DataFrame): DataFrame =
+  private def coPurchaseSelfJoin(gm: DataFrame): DataFrame =
     gm.as("a").join(gm.as("b"),
         col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
       .select(col("a.dst").as("src"), col("b.dst").as("dst"))
@@ -301,11 +279,11 @@ object Triangles {
   /** Kernel-side co-occurrence pair expansion: collects the raw (group,
     * member) projection when it fits the gate AND the (32, 32)-bit pack
     * range, and emits each distinct unordered pair once per group.
-    * None ⇒ the caller takes the distributed self-join instead. The
+    * None ⇒ [[coPurchase]] takes the distributed self-join instead. The
     * gate probes the INPUT row count (one cheap scan-count), not the
     * pair count; pair blow-up beyond the gate is caught by the
     * pack-range / builder-size recheck. */
-  private[graft] def coPurchasePairFlat(gm: DataFrame): Option[Array[Long]] = {
+  private def coPurchasePairFlat(gm: DataFrame): Option[Array[Long]] = {
     if (!graft.Gates.localBfsMaxEdges.fits(gm)) None
     else {
       val flat = LocalCsr.collectPairs(gm)
@@ -414,21 +392,12 @@ object Triangles {
     rows.toDF("v", "degree", "n_tri", "local_cc")
   }
 
-  /** Per-vertex local clustering coefficients, distributed: the same
-    * oriented wedge + closing-edge plan as [[countDistributed]], but
-    * the closing check is a LEFT SEMI join that keeps the full (a, b,
-    * c) triangle row, each corner is credited via a 3-way explode, and
-    * the k result rows come back through TakeOrdered — per-partition
-    * bounded heaps, never a global sort. */
-  def localCcTopDistributed(clean: DataFrame, k: Int): DataFrame = {
-    val t = triangleTables(clean)
-    t.ori.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try localCcFromTables(clean.sparkSession, t, k)
-    finally { t.ori.unpersist(blocking = false); () }
-  }
-
-  /** Local-cc top-k from the shared tables (see [[localCcTopDistributed]]
-    * for the contract). Only `tri` and `deg` are consumed. */
+  /** Per-vertex local clustering coefficients, top-k vertices by
+    * (degree desc, id asc), from the shared tables — [[localCcTopCsr]]'s
+    * rows: each enumerated triangle credits its three corners via a
+    * 3-way explode, and the k result rows come back through TakeOrdered
+    * — per-partition bounded heaps, never a global sort. Only `tri` and
+    * `deg` are consumed. */
   def localCcFromTables(spark: SparkSession, t: TriangleTables,
                         k: Int): DataFrame = {
     val tv = t.tri
@@ -448,7 +417,7 @@ object Triangles {
     out.toDF("v", "degree", "n_tri", "local_cc")
   }
 
-  /** Kernel twin of [[jaccardTop]]: the same orientation sweep, but
+  /** Kernel twin of [[jaccardFromTables]]: the same orientation sweep, but
     * each triangle credits its three ORIENTED EDGES (CAS-add on the
     * oriented-adjacency position — the wedge edge k2 and the two
     * intersection cursors i2/j2 each name one edge of the triangle),
@@ -540,36 +509,5 @@ object Triangles {
     top.sortBy(e => (-e.j, e.va, e.vb))
       .map(e => (e.va, e.vb, e.c, e.da, e.db, e.j)).toSeq
       .toDF("vertex_a", "vertex_b", "common", "deg_a", "deg_b", "jaccard")
-  }
-
-  /** Gate-dispatched per-vertex local-cc over the co-purchase
-    * projection (same dispatch as [[runCoPurchase]]). */
-  def localCcCoPurchase(spark: SparkSession, groupMember: DataFrame,
-                        k: Int): DataFrame = {
-    val gm = groupMember.select(col("src"), col("dst"))
-    coPurchasePairFlat(gm) match {
-      case Some(pairFlat) =>
-        localCcTopCsr(spark, LocalCsr.buildFromRawPairs(pairFlat), k)
-      case None =>
-        localCcTopDistributed(
-          graft.etl.EdgeOps.cleanEdges(coPurchaseSelfJoin(gm)), k)
-    }
-  }
-
-  /** Gate-dispatched entry: in-kernel under
-    * [[graft.Gates.localBfsMaxEdges]] (the CSR build collects the pairs
-    * it would count), distributed above. `edges` is a RAW undirected
-    * pair list (one direction per unordered pair is fine; loops and
-    * duplicates tolerated). */
-  def run(spark: SparkSession, edges: DataFrame): DataFrame = {
-    if (graft.Gates.localBfsMaxEdges.fits(edges.select(col("src")))) {
-      val (w, t) = countCsr(LocalCsr.buildFromRawPairs(
-        LocalCsr.collectPairs(edges)))
-      import spark.implicits._
-      Seq((w, t)).toDF("n_wedges", "n_triangles")
-    } else {
-      val clean = graft.etl.EdgeOps.cleanEdges(edges)
-      countDistributed(clean)
-    }
   }
 }

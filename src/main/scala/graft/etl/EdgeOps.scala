@@ -114,9 +114,8 @@ object EdgeOps {
       .join(clean.select(col("src").as("v"), col("dst").as("v2")), "v")
       .select(col("h"), col("v2").as("v"))
     val wedges = h1.union(h2).where(col("v") =!= col("h"))
-    val bitsetBudget = clean.sparkSession.conf
-      .getOption("spark.graft.twoHopBitsetMaxBits")
-      .flatMap(_.toLongOption).getOrElse(1L << 31)
+    val bitsetBudget = graft.Gates.longConf(clean.sparkSession,
+      "spark.graft.twoHopBitsetMaxBits", 1L << 31)
     // k·(mv+1) ≤ budget / concurrent tasks, with each hub's maxBits
     // capped at the 2^36 BitsetDistinct accepts; divided, not
     // multiplied, so a huge configured budget or mv cannot overflow its

@@ -80,9 +80,8 @@ object Validator {
     * admits SCALE 25-26 at one run; an 8 GiB executor gets the floor.
     * spark.graft.validateBroadcastVerts overrides it, trusted as-is. */
   private[graft] def broadcastVerts(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.validateBroadcastVerts")
-      .map(_.toLong)
-      .getOrElse(autoBroadcastVerts(
+    graft.Gates.longConf(spark, "spark.graft.validateBroadcastVerts",
+      autoBroadcastVerts(
         spark.conf.getOption("spark.executor.memory")
           // local mode IGNORES spark.executor.memory — a shared config
           // carrying executor.memory=4g on a 128 GiB local JVM must not

@@ -14,7 +14,7 @@ class GatesSpec extends SparkSpec {
 
   test("forceDistributed zeroes every gate in the table; unset reads the default") {
     assert(Gates.all.map(_.conf) === Seq("localBfsMaxEdges",
-      "localSsspMaxEdges", "localDedupMaxDocs", "localAnnMaxVecs",
+      "localDedupMaxDocs", "localAnnMaxVecs",
       "localEventsMaxRows", "localBpeMaxTypes", "embeddingBlockMaxVecs")
       .map("spark.graft." + _))
     restoring {
@@ -33,6 +33,36 @@ class GatesSpec extends SparkSpec {
         Gates.localBpeMaxTypes.limit(spark))
       assert(e.getMessage.contains("spark.graft.localBpeMaxTypes='lots'"))
     }
+  }
+
+  /** `body` with `conf` set to a non-integer fails naming it. */
+  private def failsNaming(conf: String)(body: => Any): Unit = {
+    val prior = spark.conf.getOption(conf)
+    spark.conf.set(conf, "lots")
+    try {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(s"$conf='lots'"))
+    } finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
+  private def clean = graft.etl.EdgeOps.cleanEdges(
+    spark.range(6).selectExpr("id as src", "(id + 1) % 6 as dst"))
+
+  test("iterBroadcastVerts: a non-integer value fails naming its conf") {
+    failsNaming("spark.graft.iterBroadcastVerts")(
+      graft.bfs.PageRank.pagerank(spark, clean, 2))
+    failsNaming("spark.graft.iterBroadcastVerts")(
+      graft.bfs.KCore.kcore(spark, clean, 2, 2))
+  }
+
+  test("validateBroadcastVerts: a non-integer value fails naming its conf") {
+    failsNaming("spark.graft.validateBroadcastVerts")(
+      graft.validate.Validator.broadcastVerts(spark))
+  }
+
+  test("twoHopBitsetMaxBits: a non-integer value fails naming its conf") {
+    failsNaming("spark.graft.twoHopBitsetMaxBits")(
+      graft.etl.EdgeOps.twoHopReach(clean, 2, maxVertex = Some(5L)))
   }
 
   test("fits: at most the limit, 0 never, a limit past Int range counts") {

@@ -322,4 +322,52 @@ class PlanShapeSpec extends SparkSpec {
     assert(added.forall(_ == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
       s"storage levels persisted by the second sweep: $added")
   }
+
+  test("q2_clean_edges forced distributed: the prepared graph's edges, no new " +
+    "job or shuffle of the raw edges") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val ns = spark.newSession()
+    Gates.localBfsMaxEdges.set(ns, 0L)
+    val dir = "/root/testdata/sf0.001"
+    SparkEntry.queries("q7_bfs")(ns, dir).count()
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]
+    val shuffled = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }
+    def inGroup[A](g: String)(body: => A): A = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val (q2, rows) = try {
+      val q2 = inGroup("q2-build")(SparkEntry.queries("q2_clean_edges")(ns, dir))
+      val rows = q2.collect()
+      // listener events arrive in order: once the sentinel job's start is
+      // seen, every task of the query's jobs has been seen too
+      inGroup("q2-sentinel")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!groups.contains("q2-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("q2-sentinel"))
+      (q2, rows)
+    } finally sc.removeSparkListener(listener)
+    // no second copy of the relation (the checkpoint of a re-planned
+    // cleanEdges), and nothing shuffled to read it
+    assert(!groups.contains("q2-build"), s"jobs started building q2: $groups")
+    assert(shuffled.get === 0L, "records shuffled by q2_clean_edges")
+    assert(finalPlan(q2).contains("InMemoryTableScan"), finalPlan(q2))
+    // the same relation the kernel path emits from its CSR
+    val kernel = SparkEntry.queries("q2_clean_edges")(spark.newSession(), dir)
+      .collect()
+    assert(rows.length === kernel.length && rows.toSet === kernel.toSet)
+  }
 }

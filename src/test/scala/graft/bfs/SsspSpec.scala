@@ -1,8 +1,10 @@
 package graft.bfs
 
-import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{Gates, SparkSpec}
 
+/** SSSP through its one entry, [[Sssp.ssspFromMinRaw]]: the kernel
+  * path at the default gate, the distributed frontier loop with the
+  * graph gate at 0. */
 class SsspSpec extends SparkSpec {
 
   /** Driver-side Dijkstra for cross-checking. */
@@ -25,76 +27,55 @@ class SsspSpec extends SparkSpec {
     dist.toMap
   }
 
-  test("sssp matches Dijkstra on random weighted graphs (5 seeds)") {
+  /** `q` at the default gate and with the graph gate at 0. */
+  private def bothPaths[A](q: => A): Seq[(String, A)] =
+    Seq("kernel" -> q,
+      "distributed" -> Gates.localBfsMaxEdges.withLimit(spark, 0L)(q))
+
+  private def rows(raw: Seq[(Long, Long, Long)]): Set[(Long, Long, Long)] = {
     val s = spark; import s.implicits._
+    Sssp.ssspFromMinRaw(spark, raw.toDF("src", "dst", "w")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  }
+
+  test("sssp matches Dijkstra on random weighted graphs (5 seeds)") {
     for (seed <- 0L until 5L) {
       val rnd = new scala.util.Random(seed)
       val raw = Seq.fill(60)((rnd.nextInt(25).toLong, rnd.nextInt(25).toLong,
-        (rnd.nextInt(9) + 1).toLong)).toDF("src", "dst", "w")
-      val wedges = Sssp.weightedEdges(raw)
-      val edgeSeq = wedges.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      if (edgeSeq.nonEmpty) {
-        val root = edgeSeq.map(_._1).min
-        val expected = dijkstra(edgeSeq, root)
-        val got = Sssp.sssp(spark, wedges, root).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(got === expected, s"seed=$seed")
+        (rnd.nextInt(9) + 1).toLong))
+      // the symmetric min-weight edge set, built on the driver
+      val edgeSeq = raw.filter(e => e._1 != e._2)
+        .flatMap(e => Seq(e, (e._2, e._1, e._3)))
+        .groupBy(e => (e._1, e._2)).values.map(_.minBy(_._3)).toSeq
+      val expected = dijkstra(edgeSeq, edgeSeq.map(_._1).min)
+      bothPaths(rows(raw)).foreach { case (path, got) =>
+        assert(got.map(r => r._1 -> r._2).toMap === expected, s"seed=$seed $path")
       }
     }
   }
 
   test("local relaxation kernel equals distributed frontier loop") {
-    val s = spark; import s.implicits._
-    for (seed <- 20L until 24L) {
+    for (seed <- 20L until 28L) {
       val rnd = new scala.util.Random(seed)
+      val big = 1L << 33
+      // loops, the same (s, d) at different weights in both directions,
+      // weights above 2^32, and a vertex (999) seen only in a loop
       val raw = Seq.fill(90)((rnd.nextInt(35).toLong, rnd.nextInt(35).toLong,
-        (rnd.nextInt(9) + 1).toLong)).toDF("src", "dst", "w")
-      val wedges = Sssp.weightedEdges(raw)
-      if (wedges.count() > 0) {
-        val root = wedges.agg(org.apache.spark.sql.functions.min(
-          org.apache.spark.sql.functions.col("src"))).head().getLong(0)
-        val loc = Sssp.ssspLocal(spark, wedges, root).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        val dist = Sssp.ssspDistributed(spark, wedges, root).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        assert(loc === dist, s"seed=$seed")
-      }
+          (rnd.nextInt(9) + 1).toLong * (if (rnd.nextInt(3) == 0) big else 1L))) ++
+        Seq((3L, 7L, 5L), (7L, 3L, 2L), (3L, 7L, 9L), (7L, 3L, big + 1),
+          (4L, 4L, 1L), (999L, 999L, 1L))
+      val Seq((_, kernel), (_, dist)) = bothPaths(rows(raw))
+      assert(kernel === dist, s"seed=$seed")
+      assert(kernel.nonEmpty && !kernel.exists(_._1 == 999L), s"seed=$seed")
     }
   }
 
   test("sssp on a hand graph prefers cheap long path over expensive hop") {
-    val s = spark; import s.implicits._
     // 0-1 costs 10 direct, but 0-2-3-1 costs 3
     val raw = Seq((0L, 1L, 10L), (0L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L))
-      .toDF("src", "dst", "w")
-    val got = Sssp.sssp(spark, Sssp.weightedEdges(raw), 0L)
-      .orderBy("vertex").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.toSeq === Seq((0L, 0L, 0L), (1L, 3L, 3L), (2L, 1L, 0L),
-      (3L, 2L, 2L)))
-  }
-
-  test("ssspFromMinRaw equals weightedEdges + ssspFromMin (8 seeds)") {
-    val s = spark; import s.implicits._
-    for (seed <- 400L until 408L) {
-      val rnd = new scala.util.Random(seed)
-      // raw list WITH loops and duplicate (src,dst) pairs at different
-      // weights — the kernel's min-weight merge must match groupBy.min
-      val raw = Seq.fill(120)((rnd.nextInt(25).toLong, rnd.nextInt(25).toLong,
-          (rnd.nextInt(9) + 1).toLong))
-        .toDF("src", "dst", "w").persist()
-      try {
-        if (raw.filter(org.apache.spark.sql.functions.col("src") =!=
-            org.apache.spark.sql.functions.col("dst")).count() > 0) {
-          val viaRaw = graft.bfs.Sssp.ssspFromMinRaw(spark, raw)
-            .collect().map(_.toSeq.toVector).toSet
-          val viaComposed = graft.bfs.Sssp.ssspFromMin(spark,
-              graft.bfs.Sssp.weightedEdges(raw))
-            .collect().map(_.toSeq.toVector).toSet
-          assert(viaRaw === viaComposed, s"seed=$seed")
-        }
-      } finally raw.unpersist()
+    bothPaths(rows(raw)).foreach { case (path, got) =>
+      assert(got.toSeq.sorted === Seq((0L, 0L, 0L), (1L, 3L, 3L), (2L, 1L, 0L),
+        (3L, 2L, 2L)), path)
     }
   }
 }

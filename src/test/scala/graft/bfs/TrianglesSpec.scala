@@ -36,6 +36,32 @@ class TrianglesSpec extends SparkSpec {
     pairs.toDF("src", "dst")
   }
 
+  /** The distributed family tables over a raw pair list. */
+  private def tables(pairs: Seq[(Long, Long)]): Triangles.TriangleTables =
+    Triangles.triangleTables(graft.etl.EdgeOps.cleanEdges(asDf(pairs)))
+
+  private def countRow(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val r = df.head(); (r.getLong(0), r.getLong(1))
+  }
+
+  /** (count, local cc, jaccard) rows of the co-purchase graph of `gm`
+    * through [[Triangles.coPurchase]]'s kernel or distributed form. */
+  private def family(gm: org.apache.spark.sql.DataFrame)
+      : ((Long, Long), Seq[Seq[Any]], Seq[Seq[Any]]) =
+    Triangles.coPurchase(gm) match {
+      case Left(csr) => (Triangles.countCsr(csr),
+        Triangles.localCcTopCsr(spark, csr, 20).collect().map(_.toSeq).toSeq,
+        Triangles.jaccardTopCsr(spark, csr, 20).collect().map(_.toSeq).toSeq)
+      case Right(t) =>
+        try (countRow(Triangles.countFromTables(spark, t)),
+          Triangles.localCcFromTables(spark, t, 20).collect().map(_.toSeq).toSeq,
+          Triangles.jaccardFromTables(t, 20).collect().map(_.toSeq).toSeq)
+        finally Seq(t.deg, t.ori, t.tri).foreach(_.unpersist(blocking = false))
+    }
+
+  private def sf0001Gm = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    .select(col("l_orderkey").as("src"), col("l_partkey").cast("long").as("dst"))
+
   test("K4: 4 triangles; kernel == distributed == brute") {
     val pairs = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L), (2L, 3L))
     val (bw, bt) = brute(pairs)
@@ -43,9 +69,7 @@ class TrianglesSpec extends SparkSpec {
     val kernel = Triangles.countCsr(
       LocalCsr.buildFromRawPairs(pairs.flatMap(p => Seq(p._1, p._2)).toArray))
     assert(kernel == (bw, bt))
-    val dist = Triangles.countDistributed(graft.etl.EdgeOps.cleanEdges(asDf(pairs)))
-      .head()
-    assert((dist.getLong(0), dist.getLong(1)) == (bw, bt))
+    assert(countRow(Triangles.countFromTables(spark, tables(pairs))) == (bw, bt))
   }
 
   test("triangle-free bipartite graph counts zero") {
@@ -70,16 +94,14 @@ class TrianglesSpec extends SparkSpec {
       val kernel = Triangles.countCsr(
         LocalCsr.buildFromRawPairs(noLoops.flatMap(p => Seq(p._1, p._2)).toArray))
       assert(kernel == (bw, bt), s"kernel trial $trial")
-      val dist = Triangles.countDistributed(graft.etl.EdgeOps.cleanEdges(asDf(pairs))).head()
-      assert((dist.getLong(0), dist.getLong(1)) == (bw, bt), s"dist trial $trial")
+      assert(countRow(Triangles.countFromTables(spark, tables(pairs))) == (bw, bt),
+        s"dist trial $trial")
     }
   }
 
   test("jaccardTop: hand graph edge scores, triangle edges only") {
-    val s = spark; import s.implicits._
-    val raw = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
-    val clean = graft.etl.EdgeOps.cleanEdges(raw)
-    val out = Triangles.jaccardTop(clean, 10).collect()
+    val out = Triangles.jaccardFromTables(
+        tables(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))), 10).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(5)))
     // one triangle {1,2,3}: edge (1,2) J = 1/(2+2-2-1) = 1; edges
     // (1,3)/(2,3) J = 1/(2+3-2-1) = 0.5; edge (3,4) has no triangle
@@ -88,15 +110,13 @@ class TrianglesSpec extends SparkSpec {
   }
 
   test("jaccardTopCsr ≡ jaccardTop on random graphs (4 seeds)") {
-    val s = spark; import s.implicits._
     for (seed <- 0 until 4) {
       val rnd = new scala.util.Random(500 + seed)
       val nV = 20 + rnd.nextInt(15)
       val pairs = Seq.fill(4 * nV)(
         (rnd.nextInt(nV).toLong, rnd.nextInt(nV).toLong))
         .filter(p => p._1 != p._2)
-      val clean = graft.etl.EdgeOps.cleanEdges(pairs.toDF("src", "dst"))
-      val dist = Triangles.jaccardTop(clean, 8).collect()
+      val dist = Triangles.jaccardFromTables(tables(pairs), 8).collect()
         .map(_.toSeq.toVector).toSeq
       val csr = LocalCsr.buildFromRawPairs(
         pairs.flatMap(p => Seq(p._1, p._2)).toArray)
@@ -107,55 +127,23 @@ class TrianglesSpec extends SparkSpec {
   }
 
   test("jaccardTop: K4 all edges J = 1; triangle-free graph is empty") {
-    val s = spark; import s.implicits._
-    val k4 = (for (i <- 1L to 4L; j <- 1L to 4L if i < j) yield (i, j))
-      .toDF("src", "dst")
-    val outK4 = Triangles.jaccardTop(graft.etl.EdgeOps.cleanEdges(k4), 10)
+    val k4 = for (i <- 1L to 4L; j <- 1L to 4L if i < j) yield (i, j)
+    val outK4 = Triangles.jaccardFromTables(tables(k4), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(5)))
     assert(outK4.length === 6)
     outK4.foreach { case (_, _, c, j) => assert(c === 2L && j === 1.0) }
-    val star = (1L to 5L).map(l => (0L, l)).toDF("src", "dst")
-    assert(Triangles.jaccardTop(
-      graft.etl.EdgeOps.cleanEdges(star), 10).count() === 0L)
+    val star = (1L to 5L).map(l => (0L, l))
+    assert(Triangles.jaccardFromTables(tables(star), 10).count() === 0L)
   }
 
-  test("run() gate dispatch: local and forced-distributed agree on sf0.001 co-purchase shape") {
-    val s = spark; import s.implicits._
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").cast("long").as("pk"))
-    val pairs = li.as("a").join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-    val local = Triangles.run(spark, pairs).as[(Long, Long)].head()
-    val prev = spark.conf.getOption("spark.graft.localBfsMaxEdges")
-    try {
-      spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-      val dist = Triangles.run(spark, pairs).as[(Long, Long)].head()
-      assert(local == dist)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.localBfsMaxEdges", v)
-      case None => spark.conf.unset("spark.graft.localBfsMaxEdges")
-    }
+  test("coPurchase: kernel == forced-distributed on sf0.001 (count, cc, jaccard)") {
+    val kernel = family(sf0001Gm)
     // pinned against the DuckDB oracle + independent brute force
-    assert(local == ((234314L, 125968L)))
-  }
-
-  test("runCoPurchase: fused kernel == run == forced-distributed on sf0.001") {
-    val s = spark; import s.implicits._
-    val gm = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select(col("l_orderkey").as("src"), col("l_partkey").cast("long").as("dst"))
-    val fused = Triangles.runCoPurchase(spark, gm).as[(Long, Long)].head()
-    assert(fused == ((234314L, 125968L)))
-    val prev = spark.conf.getOption("spark.graft.localBfsMaxEdges")
-    try {
-      spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-      val dist = Triangles.runCoPurchase(spark, gm).as[(Long, Long)].head()
-      assert(dist == fused)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.localBfsMaxEdges", v)
-      case None => spark.conf.unset("spark.graft.localBfsMaxEdges")
-    }
+    assert(kernel._1 == ((234314L, 125968L)))
+    assert(kernel._2.length === 20 && kernel._3.length === 20)
+    val dist = graft.Gates.localBfsMaxEdges.withLimit(spark, 0L)(family(sf0001Gm))
+    assert(dist === kernel)
   }
 
   /** Brute-force per-vertex triangle counts. */
@@ -181,8 +169,7 @@ class TrianglesSpec extends SparkSpec {
     val kernel = Triangles.localCcTopCsr(spark,
         LocalCsr.buildFromRawPairs(pairs.flatMap(p => Seq(p._1, p._2)).toArray), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val dist = Triangles.localCcTopDistributed(
-        graft.etl.EdgeOps.cleanEdges(asDf(pairs)), 10)
+    val dist = Triangles.localCcFromTables(spark, tables(pairs), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(kernel.toSeq === dist.toSeq)
     // top order: deg desc, id asc → 0 first
@@ -202,8 +189,7 @@ class TrianglesSpec extends SparkSpec {
       val kernel = Triangles.localCcTopCsr(spark,
           LocalCsr.buildFromRawPairs(pairs.flatMap(p => Seq(p._1, p._2)).toArray), k)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      val dist = Triangles.localCcTopDistributed(
-          graft.etl.EdgeOps.cleanEdges(asDf(pairs)), k)
+      val dist = Triangles.localCcFromTables(spark, tables(pairs), k)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       assert(kernel.toSeq === dist.toSeq, s"trial $trial")
       assert(kernel.length === math.min(k, exp.size), s"trial $trial")
@@ -215,55 +201,40 @@ class TrianglesSpec extends SparkSpec {
     }
   }
 
-  test("localCcCoPurchase: gate dispatch agrees on sf0.001") {
-    val s = spark; import s.implicits._
-    val gm = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select(col("l_orderkey").as("src"), col("l_partkey").cast("long").as("dst"))
-    val fused = Triangles.localCcCoPurchase(spark, gm, 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(fused.length === 20)
-    val prev = spark.conf.getOption("spark.graft.localBfsMaxEdges")
-    try {
-      spark.conf.set("spark.graft.localBfsMaxEdges", "0")
-      val dist = Triangles.localCcCoPurchase(spark, gm, 20)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      assert(dist.toSeq === fused.toSeq)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.localBfsMaxEdges", v)
-      case None => spark.conf.unset("spark.graft.localBfsMaxEdges")
-    }
-  }
-
-  test("runCoPurchase handles duplicate group members and unpackable keys") {
-    val s = spark; import s.implicits._
+  test("coPurchase handles duplicate group members and unpackable keys") {
     // duplicate (group, member) rows and a within-group dup member:
     // group 1 = {10, 20, 20}, group 2 = {10, 20, 30}
-    val gm = Seq((1L, 10L), (1L, 20L), (1L, 20L), (2L, 10L), (2L, 20L),
-      (2L, 30L)).toDF("src", "dst")
-    val r = Triangles.runCoPurchase(spark, gm).as[(Long, Long)].head()
+    val gm = asDf(Seq((1L, 10L), (1L, 20L), (1L, 20L), (2L, 10L), (2L, 20L),
+      (2L, 30L)))
+    assert(Triangles.coPurchase(gm).isLeft)
     // co-purchase graph: edges {10-20, 10-30, 20-30} → one triangle
-    assert(r._2 == 1L)
+    assert(family(gm)._1._2 == 1L)
     // unpackable group key (negative) falls back to distributed, same result
-    val gm2 = Seq((-1L, 10L), (-1L, 20L), (-1L, 30L)).toDF("src", "dst")
-    val r2 = Triangles.runCoPurchase(spark, gm2).as[(Long, Long)].head()
-    assert(r2 == ((1L, 1L))) // one oriented wedge at the min-rank vertex
+    val gm2 = asDf(Seq((-1L, 10L), (-1L, 20L), (-1L, 30L)))
+    val t = Triangles.coPurchase(gm2)
+    assert(t.isRight)
+    t.foreach(t => Seq(t.deg, t.ori, t.tri).foreach(_.unpersist(blocking = false)))
+    assert(family(gm2)._1 == ((1L, 1L))) // one oriented wedge at the min-rank vertex
   }
 
-  test("run: a gate past Int range (3000000000) equals the unset gate") {
-    val s = spark; import s.implicits._
+  test("coPurchase: a gate past Int range (3000000000) equals the unset gate") {
     val rnd = new scala.util.Random(31L)
-    val pairs = Seq.fill(200)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+    // 12 groups of random members: the co-purchase graph is the union of
+    // each group's clique
+    val gm = Seq.fill(60)((rnd.nextInt(12).toLong, rnd.nextInt(40).toLong))
+    val pairs = gm.groupBy(_._1).values.toSeq.flatMap { g =>
+      val ms = g.map(_._2).distinct
+      for (a <- ms; b <- ms if a < b) yield (a, b)
+    }
     val gate = graft.Gates.localBfsMaxEdges
     val prior = spark.conf.getOption(gate.conf)
     spark.conf.unset(gate.conf)
     try {
-      val unset = Triangles.run(spark, asDf(pairs)).as[(Long, Long)].head()
+      val unset = family(asDf(gm))
       // (gate + 1).toInt wrapped negative here and Spark rejected the limit
-      val huge = gate.withLimit(spark, 3000000000L) {
-        Triangles.run(spark, asDf(pairs)).as[(Long, Long)].head()
-      }
+      val huge = gate.withLimit(spark, 3000000000L)(family(asDf(gm)))
       assert(huge == unset)
-      assert(unset == brute(pairs))
+      assert(unset._1 == brute(pairs))
     } finally prior.foreach(spark.conf.set(gate.conf, _))
   }
 }

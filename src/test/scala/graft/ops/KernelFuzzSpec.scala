@@ -271,9 +271,18 @@ class KernelFuzzSpec extends SparkSpec {
         (a, b)
       }
       val df = pairs.toDF("src", "dst").persist()
+      // each pair a group of its two members: the co-purchase graph is
+      // the pair graph itself
+      val gm = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
+        Seq((i.toLong, a), (i.toLong, b)) }.toDF("src", "dst")
       try {
         val (lt, dt) = bothWays("spark.graft.localBfsMaxEdges")(
-          graft.bfs.Triangles.run(spark, df))
+          graft.bfs.Triangles.coPurchase(gm) match {
+            case Left(csr) => graft.bfs.Triangles.countCsrDf(spark, csr)
+            case Right(t) =>
+              try graft.bfs.Triangles.countFromTables(spark, t)
+              finally Seq(t.deg, t.ori, t.tri).foreach(_.unpersist(blocking = false))
+          })
         assert(lt === dt, s"seed=$seed triangles")
         // pagerank: kernel on the cleaned CSR vs the distributed loop —
         // integer fixed point ⇒ exact equality
