@@ -78,4 +78,18 @@ class SsspSpec extends SparkSpec {
         (3L, 2L, 2L)), path)
     }
   }
+
+  test("ssspFromMinRaw equals weightedEdges + ssspFromMin (8 seeds)") {
+    for (seed <- 400L until 408L) {
+      val rnd = new scala.util.Random(seed)
+      // raw list WITH loops and duplicate (src,dst) pairs at different
+      // weights — the kernel's min-weight merge must match the
+      // distributed path's weightedEdges groupBy.min
+      val raw = Seq.fill(120)((rnd.nextInt(25).toLong, rnd.nextInt(25).toLong,
+        (rnd.nextInt(9) + 1).toLong))
+      val Seq((_, kernel), (_, composed)) = bothPaths(rows(raw))
+      assert(kernel.nonEmpty, s"seed=$seed")
+      assert(kernel === composed, s"seed=$seed")
+    }
+  }
 }

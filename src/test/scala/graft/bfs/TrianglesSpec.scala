@@ -137,13 +137,35 @@ class TrianglesSpec extends SparkSpec {
     assert(Triangles.jaccardFromTables(tables(star), 10).count() === 0L)
   }
 
-  test("coPurchase: kernel == forced-distributed on sf0.001 (count, cc, jaccard)") {
+  /** The sf0.001 co-purchase family through [[Triangles.coPurchase]] at
+    * the default gate and with the graph gate at 0, computed once for
+    * the sf0.001 cases below. */
+  private lazy val sf0001Family = {
     val kernel = family(sf0001Gm)
+    (kernel, graft.Gates.localBfsMaxEdges.withLimit(spark, 0L)(family(sf0001Gm)))
+  }
+
+  test("run() gate dispatch: local and forced-distributed agree on sf0.001 co-purchase shape") {
+    // the co-purchase graph handed over as an explicit pair list
+    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").cast("long").as("pk"))
+    val pairs = li.as("a").join(li.as("b"),
+        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+      .select(col("a.pk").as("src"), col("b.pk").as("dst"))
+    val local = Triangles.countCsr(
+      LocalCsr.buildFromRawPairs(LocalCsr.collectPairs(pairs)))
+    val dist = countRow(Triangles.countFromTables(spark,
+      Triangles.triangleTables(graft.etl.EdgeOps.cleanEdges(pairs))))
+    assert(local == dist)
     // pinned against the DuckDB oracle + independent brute force
+    assert(local == ((234314L, 125968L)))
+  }
+
+  test("runCoPurchase: fused kernel == run == forced-distributed on sf0.001") {
+    val (kernel, dist) = sf0001Family
+    // the same pinned count as the explicit pair list above
     assert(kernel._1 == ((234314L, 125968L)))
-    assert(kernel._2.length === 20 && kernel._3.length === 20)
-    val dist = graft.Gates.localBfsMaxEdges.withLimit(spark, 0L)(family(sf0001Gm))
-    assert(dist === kernel)
+    assert(dist._1 == kernel._1)
   }
 
   /** Brute-force per-vertex triangle counts. */
@@ -199,6 +221,13 @@ class TrianglesSpec extends SparkSpec {
       assert(kernel.map(r => (-r._2, r._1)).toSeq ===
         kernel.map(r => (-r._2, r._1)).sorted.toSeq, s"trial $trial")
     }
+  }
+
+  test("localCcCoPurchase: gate dispatch agrees on sf0.001") {
+    val (kernel, dist) = sf0001Family
+    assert(kernel._2.length === 20 && kernel._3.length === 20)
+    assert(dist._2 === kernel._2)
+    assert(dist._3 === kernel._3)
   }
 
   test("coPurchase handles duplicate group members and unpackable keys") {
